@@ -314,39 +314,52 @@ object Ops {
   def q18MinhashLshPairs(s: SparkSession, dir: String): DataFrame =
     minhashLshPairsOf(documents(s, dir)).orderBy($"id_a", $"id_b")
 
-  /** LSH candidate pairs over any (doc_id, text) relation.
-    *
-    * `maxBucketSize` is the web-scale guard: a template-heavy corpus puts
-    * thousands of near-identical docs into ONE band bucket and the
-    * within-bucket join goes quadratic (the 1M-doc rehearsal measured 17 GB
-    * of spill from exactly this). Buckets above the cap are dropped — any
-    * class that saturates a bucket is better collapsed by EXACT dedup
-    * upstream (see ScaleRehearsal's dedup-then-LSH ordering); the default
-    * keeps exact oracle semantics (uncapped). */
-  def minhashLshPairsOf(docs: DataFrame,
-                        maxBucketSize: Int = Int.MaxValue): DataFrame = {
+  /** (doc_id, band, bkey): every document's 4 band keys (2 signature rows
+    * per band), emitted by one posexplode over the signature row. */
+  private def minhashBandsOf(docs: DataFrame): DataFrame = {
     val bandCols = (0 until MinhashK by 2).map { j =>
       concat_ws(":", col(s"sig_$j"), col(s"sig_${j + 1}"))
     }
-    val bandsAll = minhashSigOf(docs)
+    minhashSigOf(docs)
       .select($"doc_id", posexplode(array(bandCols: _*)))
       .toDF("doc_id", "band", "bkey")
-    val bands =
-      if (maxBucketSize == Int.MaxValue) bandsAll
-      else {
-        val small = bandsAll.groupBy(col("band"), col("bkey"))
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") <= maxBucketSize)
-          .select(col("band").as("sband"), col("bkey").as("sbkey"))
-        bandsAll.join(small,
-            bandsAll("band") === col("sband") && bandsAll("bkey") === col("sbkey"))
-          .select(col("doc_id"), col("band"), col("bkey"))
-      }
+  }
+
+  /** LSH candidate pairs over any (doc_id, text) relation: every pair of
+    * documents that shares a band bucket (the exact set q18's oracle
+    * recomputes, so there is no bucket cap here). Consumers that only need
+    * the components of this graph take [[lshStarEdgesOf]], which spans the
+    * same components with k - 1 edges per bucket instead of k^2/2. */
+  def minhashLshPairsOf(docs: DataFrame): DataFrame = {
+    val bands = minhashBandsOf(docs)
     bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
+  }
+
+  /** LSH star edges (src, dst): for each band bucket, one edge from the
+    * bucket's min doc_id to each other member. Its connected components are
+    * those of [[minhashLshPairsOf]]'s pairs (a star spans the same vertex
+    * set as the bucket's clique), at k - 1 edges per bucket instead of
+    * k^2/2, and min + count over ONE window exchange instead of a band
+    * self-join and a distinct. Edges may repeat across bands.
+    *
+    * `maxBucketSize` is the web-scale guard kept from the clique join, where
+    * a template-heavy corpus put thousands of near-identical docs into ONE
+    * band bucket and the join went quadratic (17 GB of spill in the 1M-doc
+    * rehearsal). Star edges are linear in the bucket, but a saturated bucket
+    * is still one window task, and its class is better collapsed by EXACT
+    * dedup upstream (see [[dedupChain]]). Buckets above the cap are dropped
+    * whole; the default keeps every bucket. */
+  def lshStarEdgesOf(docs: DataFrame, maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val bucket = Window.partitionBy($"band", $"bkey")
+    minhashBandsOf(docs)
+      .select($"doc_id", min($"doc_id").over(bucket).as("root"),
+        count(lit(1)).over(bucket).as("bn"))
+      .filter($"doc_id" =!= $"root" && $"bn" <= maxBucketSize)
+      .select($"root".as("src"), $"doc_id".as("dst"))
   }
 
   val SimhashBits = 16
@@ -423,7 +436,7 @@ object Ops {
     val chunksAll = sh.select(col("doc_id"), hashCol.as("sh"),
         posexplode(array(chunkCols: _*)))
       .toDF("doc_id", "sh", "chunk", "cval")
-    // same web-scale guard as minhashLshPairsOf: a template-heavy corpus
+    // same web-scale guard as lshStarEdgesOf: a template-heavy corpus
     // saturates single (chunk, cval) buckets and the within-bucket join
     // goes quadratic; saturated classes belong to exact dedup upstream
     val chunks =
@@ -746,18 +759,20 @@ object Ops {
     * map-side: the filter costs one projection at any corpus size. */
   /** The production dedup chain as ONE operator — the ordering the 1M-doc
     * rehearsals validated (BASELINE.md): EXACT dedup first (template
-    * classes collapse by orders of magnitude before any pair join), then
-    * capped minhash-LSH over the representatives only, then pointer-doubling
-    * connected components, then min-id representative per component, with
-    * members inheriting their exact-class representative's assignment.
+    * classes collapse by orders of magnitude before any LSH bucket), then
+    * capped minhash-LSH star edges over the representatives only, then
+    * pointer-doubling connected components, whose label is already the
+    * min-id representative of each component, with members inheriting
+    * their exact-class representative's assignment.
     *
     * Input: any (doc_id: long, text: string) relation.
     * Output: (doc_id, canonical_id) — total (every input doc appears once)
     * and idempotent (canonical ids map to themselves).
     *
-    * 100 TB shape: one groupBy for exact classes, the capped LSH bucket
-    * join over the collapsed relation, O(log n) component rounds, one
-    * broadcast-friendly join back. No pair join ever sees the raw corpus. */
+    * 100 TB shape: one window exchange for exact classes, one for the
+    * capped LSH buckets over the collapsed relation, O(log n) component
+    * rounds, one broadcast-friendly join back. No pair join ever sees the
+    * raw corpus. */
   def dedupChain(docs: DataFrame, maxBucketSize: Int = 512): DataFrame = {
     // round 6: exact classes via ONE exchange — min(doc_id) over a window
     // partitioned by the text hash replaces the round-5 agg + join-back
@@ -774,14 +789,11 @@ object Ops {
       .cache()
     val docToRep = base.select($"doc_id", $"rep_id")
     val reps = base.filter($"doc_id" === $"rep_id").select($"doc_id", $"text")
-    val pairs = minhashLshPairsOf(reps, maxBucketSize)
-    val (labels, _) = connectedComponents(reps.select($"doc_id"), pairs.toDF("src", "dst"))
-    // component label -> min member id = the canonical doc
-    val canon = labels
-      .groupBy($"component")
-      .agg(min($"doc_id").as("canonical_id"))
-    val repToCanon = labels.join(canon, "component")
-      .select($"doc_id".as("rep_id"), $"canonical_id")
+    val (labels, _) = connectedComponents(reps.select($"doc_id"),
+      lshStarEdgesOf(reps, maxBucketSize))
+    // min-label propagation converges to the component's min doc_id: the
+    // label IS the canonical doc
+    val repToCanon = labels.select($"doc_id".as("rep_id"), $"component".as("canonical_id"))
     val out = docToRep.join(repToCanon, "rep_id")
       .select($"doc_id", $"canonical_id")
     materializeAndRelease(out, base)
@@ -1071,14 +1083,15 @@ object Ops {
   /** Near-duplicate connected components (q47): the dedup keeper-selection
     * step over the LSH candidate pairs. Every document gets a component id =
     * the smallest doc_id reachable through candidate pairs (singletons map
-    * to themselves). Delegates to [[connectedComponents]] — pointer-doubling
-    * min-label propagation, O(log diameter) rounds, one Spark job per round. */
+    * to themselves). The candidate pairs feed only the components, so the
+    * propagation runs over the LSH star edges ([[lshStarEdgesOf]]), which
+    * span the same components with one edge per bucket member instead of a
+    * clique. Delegates to [[connectedComponents]] — pointer-doubling
+    * min-label propagation, O(log diameter) rounds, each round several
+    * Spark jobs under AQE. */
   def q47NeardupComponents(s: SparkSession, dir: String, maxIters: Int = 64): DataFrame = {
-    // round 6: the pair SET feeds the propagation — q18's declared output
-    // sort (a full range exchange) was paid for nothing here
-    val pairs = minhashLshPairsOf(documents(s, dir)).select(col("id_a"), col("id_b"))
     val nodes = documents(s, dir).select(col("doc_id"))
-    connectedComponents(nodes, pairs.toDF("src", "dst"), maxIters)._1
+    connectedComponents(nodes, lshStarEdgesOf(documents(s, dir)), maxIters)._1
       .orderBy(col("doc_id"))
   }
 
@@ -1090,11 +1103,23 @@ object Ops {
     * chain of n nodes converges in ~log2(n) rounds instead of n (the
     * O(diameter) killer for duplicate-chain corpora at 100 TB).
     *
-    * One Spark job per round: the convergence check rides the same action as
-    * the label materialization via `observe` (max(changed) collected by the
-    * eager localCheckpoint), not a second count() job. `edges` is read once
-    * per round from cache; `comp` is checkpoint-materialized, so the jump
-    * join re-reads bytes, never recomputes lineage.
+    * Before the rounds, each input partition runs a union-find over its own
+    * edges ([[LocalForest]]) and replaces them with (local root, member)
+    * edges, the root being the min id of the local component. Each
+    * partition's forest connects exactly the endpoints its edges connected,
+    * so the union of the forests has the same node set and the same
+    * components as the input — hence the same fixpoint, every node labelled
+    * with its component's min id. Only the diameter shrinks: a component
+    * that lies inside one partition arrives as a star and settles in one
+    * round. Task memory is O(distinct endpoints in the partition).
+    *
+    * One action per round: the convergence check rides the label
+    * materialization via `observe` (max(changed) collected by the eager
+    * localCheckpoint), not a second count(). Under AQE that action still
+    * submits one Spark job per shuffle stage of the round — about 5.5 jobs
+    * per round measured on dedupChain over 2,000 crawl pages. `edges` is
+    * read once per round from cache; `comp` is checkpoint-materialized, so
+    * the jump join re-reads bytes, never recomputes lineage.
     *
     * Returns (labels(doc_id, component), rounds). Non-convergence is an
     * error, never a silent mislabel. */
@@ -1103,8 +1128,16 @@ object Ops {
   def connectedComponents(nodes: DataFrame, edgesIn: DataFrame,
                           maxIters: Int = 64,
                           contractAbove: Long = 1000000L): (DataFrame, Int) = {
-    val pairs = edgesIn.toDF("src", "dst")
-    val edges = pairs.union(pairs.select(col("dst"), col("src")))
+    import edgesIn.sparkSession.implicits._
+    // the forest comes out symmetric (both directions of every edge)
+    val edges = edgesIn.toDF("src", "dst")
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions { it =>
+        val forest = new LocalForest
+        it.foreach { case (a, b) => forest.union(a, b) }
+        forest.edges
+      }
       .toDF("src", "dst").cache()
     // the propagation invariant needs every edge endpoint present in the
     // label table (an absent endpoint would enter step1 with own=null and
@@ -1198,6 +1231,74 @@ object Ops {
 
   private implicit class Dollar(val sc: StringContext) {
     def $(args: Any*): Column = col(sc.parts.mkString)
+  }
+}
+
+/** The per-partition union-find of [[Ops.connectedComponents]]' pre-pass.
+  * `union` folds edges in one at a time; `edges` then emits, in both
+  * directions, one edge from every non-root node to its root — the min id
+  * of its local component — plus a self-loop for a node whose only edges
+  * were self-loops, so every endpoint survives. Ids are interned in a
+  * primitive open-addressing table and the forest lives in int arrays, so
+  * memory is O(distinct endpoints), not O(edges). */
+private[ops] final class LocalForest {
+  private var slots = Array.fill(16)(-1) // hash slot -> node index, -1 = empty
+  private var ids = new Array[Long](8)   // node index -> id
+  private var parent = new Array[Int](8) // node index -> parent index
+  private var n = 0
+
+  private def slotOf(id: Long): Int = {
+    val z = id * 0x9E3779B97F4A7C15L
+    val mask = slots.length - 1
+    var h = (z ^ (z >>> 32)).toInt & mask
+    while (slots(h) >= 0 && ids(slots(h)) != id) h = (h + 1) & mask
+    h
+  }
+
+  private def indexOf(id: Long): Int = {
+    val h = slotOf(id)
+    if (slots(h) >= 0) return slots(h)
+    if (n == ids.length) {
+      ids = java.util.Arrays.copyOf(ids, n * 2)
+      parent = java.util.Arrays.copyOf(parent, n * 2)
+    }
+    ids(n) = id
+    parent(n) = n
+    slots(h) = n
+    n += 1
+    if (n * 2 > slots.length) { // keep the load factor <= 1/2
+      slots = Array.fill(slots.length * 2)(-1)
+      var i = 0
+      while (i < n) { slots(slotOf(ids(i))) = i; i += 1 }
+    }
+    n - 1
+  }
+
+  private def find(i: Int): Int = {
+    var x = i
+    while (parent(x) != x) { // path halving
+      parent(x) = parent(parent(x))
+      x = parent(x)
+    }
+    x
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    val ra = find(indexOf(a))
+    val rb = find(indexOf(b))
+    if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
+  }
+
+  def edges: Iterator[(Long, Long)] = {
+    val root = Array.tabulate(n)(find)
+    val hasMember = new java.util.BitSet(n)
+    root.indices.foreach(i => if (root(i) != i) hasMember.set(root(i)))
+    root.indices.iterator.flatMap { i =>
+      val r = ids(root(i))
+      if (root(i) != i) Iterator((r, ids(i)), (ids(i), r))
+      else if (hasMember.get(i)) Iterator.empty
+      else Iterator.single((r, r))
+    }
   }
 }
 

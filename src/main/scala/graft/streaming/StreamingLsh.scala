@@ -6,19 +6,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.ops.Ops
 
 /** Streaming MinHash-LSH candidate pairs — the incremental twin of the
-  * batch `Ops.minhashLshPairsOf`: as documents arrive on a crawl feed,
-  * each lands in its 4 band buckets and is paired against the bucket's
-  * previous members, so near-dup candidates surface AT INGEST time
-  * instead of in a nightly batch join. Signatures are computed by a
-  * row-local twin of the column pipeline (same shingles, same polyhash,
-  * same permutations — bit-identical), so the streamed pair SET equals
-  * the batch operator's output exactly (q68 pins this under the oracle).
+  * batch `Ops.minhashLshPairsOf` (uncapped candidate pairs): as documents
+  * arrive on a crawl feed, each lands in its 4 band buckets and is paired
+  * against the bucket's previous members, so near-dup candidates surface
+  * AT INGEST time instead of in a nightly batch join. Signatures are
+  * computed by a row-local twin of the column pipeline (same shingles,
+  * same polyhash, same permutations — bit-identical), so with no bucket
+  * above the cap the streamed pair SET equals the batch operator's output
+  * exactly (q68 pins this under the oracle).
   *
   * State per band bucket is the member-id list, capped at
-  * `maxBucketSize` like the batch operator's bucket guard — but where
-  * batch (which sees final bucket sizes) drops saturated buckets wholly,
-  * the stream caps the PREFIX: members beyond the cap neither pair nor
-  * enter state. Uncapped, the semantics coincide.
+  * `maxBucketSize`, which defaults to 512 (see [[DefaultMaxBucketSize]]).
+  * The cap is a PREFIX cap: members beyond it neither pair nor enter
+  * state. So the default does NOT give the exact batch pair set on a feed
+  * with a bucket above 512 members; pass `Int.MaxValue` for that. Nor is
+  * it the batch guard of `Ops.lshStarEdgesOf`, which sees final bucket
+  * sizes and drops a saturated bucket whole.
   */
 object StreamingLsh {
   case class BandedDoc(band_key: String, doc_id: Long)
@@ -82,9 +85,11 @@ object StreamingLsh {
     out.iterator
   }
 
-  /** The production default bucket cap — the batch chain's value
-    * (Ops.dedupChain): a saturated band bucket on a template-heavy feed
-    * would otherwise grow state without bound and pair quadratically. */
+  /** The default bucket cap of [[stream]]: 512, the batch chain's value
+    * (Ops.dedupChain). It was unbounded before round 6; a saturated band
+    * bucket on a template-heavy feed would otherwise grow state without
+    * bound and pair quadratically. Callers that need the exact uncapped
+    * pair set pass `Int.MaxValue`. */
   val DefaultMaxBucketSize = 512
 
   /** Start the streaming pair emitter over parquet (doc_id, text) files.

@@ -103,8 +103,8 @@ object ScaleRehearsal {
     // (a template corpus collapses by orders of magnitude — running LSH on
     // raw docs put thousands of identical docs into single band buckets
     // and the within-bucket join went quadratic: 849 s / 17 GB spill at
-    // 200k docs), then capped LSH over the representatives only, then
-    // components; members inherit their representative's component.
+    // 200k docs), then capped LSH star edges over the representatives only,
+    // then components; members inherit their representative's component.
     val docs = spark.read.parquet(s"$docsDir/documents.parquet")
     val exact = stage("exact-dedup-groups") {
       val g = docs.groupBy(org.apache.spark.sql.functions.xxhash64($"text").as("th"))
@@ -117,13 +117,13 @@ object ScaleRehearsal {
     val nExact = exact.count()
     println(s"exact classes: $nExact (of ${docs.count()} docs)")
     val reps = docs.join(exact.select($"rep_id".as("doc_id")), "doc_id").cache()
-    val nPairs = stage("lsh-pairs-capped(512)") {
-      graft.ops.Ops.minhashLshPairsOf(reps, maxBucketSize = 512).count()
+    val nEdges = stage("lsh-star-edges-capped(512)") {
+      graft.ops.Ops.lshStarEdgesOf(reps, maxBucketSize = 512).count()
     }
-    println(s"lsh candidate pairs over reps: $nPairs")
+    println(s"lsh star edges over reps: $nEdges")
     val (labels, rounds) = stage("neardup-components (q47)") {
-      val pairs = graft.ops.Ops.minhashLshPairsOf(reps, maxBucketSize = 512)
-      graft.ops.Ops.connectedComponents(reps.select($"doc_id"), pairs.toDF("src", "dst"))
+      graft.ops.Ops.connectedComponents(reps.select($"doc_id"),
+        graft.ops.Ops.lshStarEdgesOf(reps, maxBucketSize = 512))
     }
     val nComp = labels.select($"component").distinct().count()
     val totalAssigned = stage("expand-members") {

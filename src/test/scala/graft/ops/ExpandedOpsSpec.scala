@@ -48,9 +48,13 @@ class ExpandedOpsSpec extends AnyFunSuite {
     val n = 64
     val nodes = spark.range(n).toDF("doc_id")
     // worst case for plain min-label propagation: one path graph, min at the
-    // far end — O(diameter)=63 rounds without the jump, ~log2(64)=6 with it
-    val edges = spark.createDataset((0L until (n - 1).toLong).map(i => (i, i + 1)))
+    // far end — O(diameter)=63 rounds without the jump, ~log2(64)=6 with it.
+    // One edge per partition: connectedComponents' per-partition union-find
+    // pre-pass then has nothing to collapse, so the bound tests the jump.
+    val edges = spark.sparkContext
+      .parallelize((0L until (n - 1).toLong).map(i => (i, i + 1)), n - 1)
       .toDF("src", "dst")
+    assert(edges.rdd.getNumPartitions == n - 1)
     val (labels, rounds) = Ops.connectedComponents(nodes, edges)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size == n)
