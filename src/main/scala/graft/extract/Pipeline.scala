@@ -319,20 +319,12 @@ object Pipeline {
     pages.select(col("url"), col("html"), col("lang"),
       pmod(xxhash64(col("url")), lit(numBuckets)).cast("int").as("bucket"))
 
-  /** Full extraction over a pages DataFrame (url, warc_ts, html, text, lang).
-    * `skipBuckets` prunes already-committed buckets before the parse stage. */
-  /** `shuffle = true` co-locates each bucket in one task before the parse so
-    * the bucketed write emits one file per bucket (the production layout for
-    * partition-granular resume at 100TB). `shuffle = false` fuses the parse
-    * into the scan stage — zero exchanges — for pure-throughput paths where
-    * write layout doesn't matter (each task then writes to several bucket
-    * dirs; compaction happens at commit). */
-  /** Per-bucket (docCount, bytes) accumulator: rides the extraction job so
-    * commit-time lineage stats need NO post-write rescan of the output. Safe
-    * because the map stage runs inside the write's result stage — Spark
-    * applies a result task's accumulator updates exactly once per
-    * successfully-committed partition. */
-  class BucketStatsAcc extends org.apache.spark.util.AccumulatorV2[
+  /** Per-bucket (docCount, bytes) accumulator: rides the commit's write job
+    * so lineage stats need NO post-write rescan of the output. Exactly-once
+    * because `extractAndCommit` updates it in a map directly under the write,
+    * inside the write's result stage — Spark applies a result task's
+    * accumulator updates once per successfully-committed partition. */
+  private class BucketStatsAcc extends org.apache.spark.util.AccumulatorV2[
       (Int, Long), Map[Int, (Long, Long)]] {
     private val m = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
     override def isZero: Boolean = m.isEmpty
@@ -353,58 +345,37 @@ object Pipeline {
     override def value: Map[Int, (Long, Long)] = m.toMap
   }
 
+  /** Full extraction over a pages DataFrame (url, warc_ts, html, text, lang).
+    * `skipBuckets` prunes already-committed buckets before the parse stage.
+    *
+    * `shuffle = true` co-locates each bucket in one task before the parse so
+    * the bucketed write emits one file per bucket (the production layout for
+    * partition-granular resume at 100TB). `shuffle = false` fuses the parse
+    * into the scan stage — zero exchanges — for pure-throughput paths where
+    * write layout doesn't matter (each task then writes to several bucket
+    * dirs; compaction happens at commit). */
   def extract(spark: SparkSession, pages: DataFrame,
               numBuckets: Int = DefaultBuckets,
               skipBuckets: Set[Int] = Set.empty,
               shuffle: Boolean = true,
-              opts: ExtractOptions = ExtractOptions(),
-              statsAcc: Option[BucketStatsAcc] = None,
-              shuffleAfterParse: Boolean = false,
-              statsInResultStage: Boolean = false): Dataset[ExtractedRow] = {
-    // statsAcc's exactly-once guarantee relies on the accumulating
-    // mapPartitions running in the RESULT stage (after the repartition
-    // exchange). With shuffle=false (or the parse fused before an output
-    // exchange) it would run in a shuffle-map stage where retried/
-    // speculative tasks double-count and corrupt the lineage manifest.
-    // `statsInResultStage = true` is the caller's promise that the returned
-    // dataset is consumed WITHOUT any further exchange (e.g. the fused
-    // commit: scan -> parse -> partitioned write is one result stage).
-    // shuffleAfterParse structurally breaks the promise regardless of
-    // statsInResultStage: the function itself adds a post-parse exchange, so
-    // the accumulating mapPartitions always lands in a shuffle-map stage.
-    require(statsAcc.isEmpty || !shuffleAfterParse,
-      "statsAcc is incompatible with shuffleAfterParse: the post-parse " +
-        "exchange puts the accumulator in a shuffle-map stage where task " +
-        "retries double-count")
-    require(shuffle || statsInResultStage || statsAcc.isEmpty,
-      "statsAcc requires the input-shuffle mode: accumulator updates are " +
-        "exactly-once only in a result stage (or pass statsInResultStage " +
-        "when the caller guarantees no downstream exchange)")
+              opts: ExtractOptions = ExtractOptions()): Dataset[ExtractedRow] = {
     import spark.implicits._
     val bucketed = withBucket(pages, numBuckets)
     val pruned =
       if (skipBuckets.isEmpty) bucketed
       else bucketed.filter(!$"bucket".isin(skipBuckets.toSeq: _*))
-    // shuffleAfterParse: fuse the parse into the scan stage and exchange the
-    // PARSED rows instead of the raw page bytes — same committed layout (one
-    // task per bucket feeds the write), but the scan stage never stalls on
-    // the exchange and the shuffle carries markdown/text instead of raw html
     val placed =
-      if (shuffle && !shuffleAfterParse) pruned.repartition(numBuckets, $"bucket")
+      if (shuffle) pruned.repartition(numBuckets, $"bucket")
       else pruned
-    val parsed = placed
+    placed
       .as[(String, Array[Byte], String, Int)]
       .mapPartitions { it =>
         // batched per-partition loop: compiled regex/state lives in JVM-static
         // textkit objects, so per-row cost is parse + transforms only
         it.map { case (url, html, lang, bucket) =>
-          val r = extractOne(url, html, lang, bucket, opts)
-          statsAcc.foreach(_.add((r.bucket, r.md_chars)))
-          r
+          extractOne(url, html, lang, bucket, opts)
         }
       }
-    if (shuffle && shuffleAfterParse) parsed.repartition(numBuckets, $"bucket")
-    else parsed
   }
 
   /** Extraction + resumable bucketed write with a lineage manifest.
@@ -454,9 +425,11 @@ object Pipeline {
     // avoidable full scan of the new output
     val statsAcc = new BucketStatsAcc
     spark.sparkContext.register(statsAcc, "graft-bucket-stats")
-    val extracted = extract(spark, pages, numBuckets, skipBuckets = done,
-      shuffle = !fused, statsAcc = Some(statsAcc),
-      statsInResultStage = fused)
+    // the only operator between this map and the write is `observe`, so the
+    // map runs in the write's result stage in both modes (after the bucket
+    // exchange, or fused into the scan stage)
+    val extracted = extract(spark, pages, numBuckets, skipBuckets = done, shuffle = !fused)
+      .map { r => statsAcc.add((r.bucket, r.md_chars)); r }
     // observed metrics ride the job (audit_utils fix-report counters analog,
     // SURVEY §2.4): no second pass, no accumulators to merge by hand
     val obs = org.apache.spark.sql.Observation(s"extract-commit")

@@ -1,9 +1,10 @@
 package graft.model
 
 /** Engine-internal document model, mirroring the DoclingDocument 1.8.0 item
-  * tree the reference walks (see /root/reference/examples/long_report.docling.json
-  * and SURVEY.md §1). Reading order is an explicit `idx` column so it survives
-  * shuffles; all types are Spark-Encoder-friendly case classes.
+  * tree the reference walks (see the reference's
+  * examples/long_report.docling.json and SURVEY.md §1). Reading order is an
+  * explicit `idx` column so it survives shuffles; all types are
+  * Spark-Encoder-friendly case classes.
   */
 case class Bbox(l: Double, t: Double, r: Double, b: Double, origin: String) {
   def area: Double = math.max(0.0, r - l) * math.max(0.0, b - t)

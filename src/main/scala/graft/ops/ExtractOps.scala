@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.{HtmlExtract, DocTransforms, MarkdownRender, Pipeline}
 import graft.textkit._
+import graft.sources.ReferenceExamples
 
 /** Extraction-domain operators exposed as queries. These are the engine's
   * own semantics (HTML parse, transform battery, markdown render, audit,
@@ -583,21 +584,19 @@ object ExtractOps {
     * derived from the reference artifacts (like the q35 fixtures). */
   def referenceGolden(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // artifact directory is a session conf (driver-side, captured into the
-    // closure) so deployments point the parity gate anywhere
-    val base = s.conf.getOption("spark.graft.referenceExamples")
-      .getOrElse("/root/reference/examples")
+    // the artifact directory override is a session conf, read here and
+    // captured into the closure, so deployments point the parity gate anywhere
+    val base = s.conf.getOption(ReferenceExamples.Key)
     s.createDataset(Seq("long_report")).map { name =>
-      val json = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$base/$name.docling.json"))
-      val want = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$base/$name.md"))
+      val json = ReferenceExamples.string(s"$name.docling.json", base)
+      val want = ReferenceExamples.string(s"$name.md", base)
       val doc0 = graft.sources.DoclingJsonIngest.parse(json, s"doc://$name")
       // REAL two-channel repair: the committed docling tree (damaged text
       // layer) against the committed PDF's own glyph geometry — the q48
       // shape on the reference's actual artifacts. Residual non-identical
       // lines vs the golden are classified in GOLDEN_RESIDUE.md (all need
       // the tesseract raster channel or replicate its OCR errors).
-      val pdf = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/$name.pdf"))
+      val pdf = ReferenceExamples.bytes(s"$name.pdf", base)
       val glyphs = graft.extract.PdfDoc.extractGlyphs(pdf)
       val (repaired, report, filled) = Pipeline.repairDocWithTextLayer(doc0, glyphs)
       val (doc, counters) = DocTransforms.applyAll(repaired)

@@ -520,7 +520,7 @@ object Ops {
     // cheap codegen'd plane fold, so at scale the self-join's exchange is
     // reused (computed once) and at small SF the broadcast side recomputes
     // the cheap map; measured faster than cache+checkpoint both ways
-    // (tools/Q23Ab)
+    // (OPTIMIZATION_r06.md §6a2)
     val bucketed = v.withColumn("bucket", sigCols)
     val pairs = bucketed.as("x").join(bucketed.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") =!= col("y.vec_id"))
@@ -650,12 +650,19 @@ object Ops {
           typedLit(codebook(c).toIndexedSeq)).as("dist"),
         lit(c).as("cell"))
     }: _*)
-    // cached: assigned, probes, and the query side all read this relation —
-    // one pruned scan, one slim cached row per vector (no cv/dist columns)
-    val ranked = v.withColumn("sorted", array_sort(cellDists))
+    // assigned, probes, and the query side all read this relation — one
+    // pruned scan, one slim row per vector: its nearest max(nProbe, 1) cells,
+    // nearest first (element 0 is its own cell). Both join sides must reach
+    // the repartition below with the same columns and filters, or their
+    // exchanges differ and neither is reused: each side reads all four
+    // columns, and every filter the join infers already holds here (null
+    // vec_ids, which never pair, go at the scan; `cell` is non-nullable; the
+    // probe side uses explode_outer, as an inner explode infers
+    // size(cells) > 0).
+    val ranked = v.filter(col("vec_id").isNotNull)
+      .withColumn("sorted", array_sort(cellDists))
       .select(col("vec_id"), col("v"), col("nrm"),
-        col("sorted")(0)("cell").as("cell"),
-        expr(s"transform(slice(sorted, 1, $nProbe), x -> x.cell)").as("probe_cells"))
+        expr(s"transform(slice(sorted, 1, ${math.max(nProbe, 1)}), x -> x.cell)").as("cells"))
       // the path is now exchange-free up to the top-k window, so downstream
       // parallelism = this relation's partition count; a small embeddings
       // file scans as ONE partition and would serialize the 100x-larger pair
@@ -665,14 +672,16 @@ object Ops {
       // Round 6: no cache, no release-checkpoint — both join sides sit on
       // this SAME repartition exchange, so ReusedExchange computes the
       // ranked relation once either way, and dropping the cache removes the
-      // fill job and the eager checkpoint that released it (tools/Q27Ab:
-      // lazy 0.62-0.69 s vs cached 0.93-1.28 s at sf0.1).
+      // fill job and the eager checkpoint that released it
+      // (OPTIMIZATION_r06.md §6a2: lazy 0.62-0.69 s vs cached 0.93-1.28 s
+      // at sf0.1).
       .repartition(vecs.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-    val assigned = ranked.select(col("vec_id"), col("cell"), col("v"), col("nrm"))
+    val assigned = ranked.select(col("vec_id"),
+      coalesce(col("cells")(0), lit(-1)).as("cell"), col("v"), col("nrm"))
     // the probe side carries its own query vector — ONE candidate join total
     // (a separate probes->qside join would just re-shuffle the same bytes)
     val probes = ranked.select(col("vec_id").as("q_id"), col("v").as("qv"),
-      col("nrm").as("qnrm"), explode(col("probe_cells")).as("cell"))
+      col("nrm").as("qnrm"), explode_outer(slice(col("cells"), 1, nProbe)).as("cell"))
     val pairs = probes.join(assigned, "cell")
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),

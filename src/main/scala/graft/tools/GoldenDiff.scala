@@ -1,20 +1,23 @@
 package graft.tools
 
+import graft.sources.ReferenceExamples
 import java.nio.file.{Files, Paths}
 
-/** Dev probe: dump the LCS-based line diff between our rendered markdown for
-  * the reference's long_report.docling.json and the committed
-  * long_report.md, to classify the non-identical residue (VERDICT r2 item 1).
-  * Usage: runMain graft.tools.GoldenDiff [outPath]
+/** Dumps the LCS-based line diff between our rendered markdown for the
+  * reference's long_report.docling.json and the committed long_report.md —
+  * the residue GOLDEN_RESIDUE.md classifies (`--repair` first runs the
+  * two-channel repair against long_report.pdf, as q44 does). Artifacts come
+  * from ReferenceExamples (override: -Dspark.graft.referenceExamples=<dir>).
+  * Usage: runMain graft.tools.GoldenDiff [outPath] [--repair]
   */
 object GoldenDiff {
   def main(args: Array[String]): Unit = {
-    val json = Files.readString(Paths.get("/root/reference/examples/long_report.docling.json"))
-    val want = Files.readString(Paths.get("/root/reference/examples/long_report.md"))
+    val json = ReferenceExamples.string("long_report.docling.json")
+    val want = ReferenceExamples.string("long_report.md")
     val ingested = graft.sources.DoclingJsonIngest.parse(json, "doc://long_report")
     val base =
       if (args.contains("--repair")) {
-        val pdf = Files.readAllBytes(Paths.get("/root/reference/examples/long_report.pdf"))
+        val pdf = ReferenceExamples.bytes("long_report.pdf")
         val glyphs = graft.extract.PdfDoc.extractGlyphs(pdf)
         val (repaired, report, filled) =
           graft.extract.Pipeline.repairDocWithTextLayer(ingested, glyphs)

@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import graft.sources.ReferenceExamples
 import graft.model._
 
 /** DoclingJsonExport must be the exact inverse of DoclingJsonIngest:
@@ -61,7 +61,7 @@ class DoclingRoundTripSpec extends AnyFunSuite {
   }
 
   test("the direct-path long_report doc (18 kv items) round-trips") {
-    val pdf = Files.readAllBytes(Paths.get("/root/reference/examples/long_report.pdf"))
+    val pdf = ReferenceExamples.bytes("long_report.pdf")
     val doc = PdfLayout.buildDoc("doc://long_report", pdf)
     assert(doc.items.count(_.kind == ItemKind.KeyValue) >= 10)
     val back = graft.sources.DoclingJsonIngest.parse(
@@ -70,8 +70,7 @@ class DoclingRoundTripSpec extends AnyFunSuite {
   }
 
   test("the reference's own 673-text/16-table/80-picture tree round-trips byte-structurally") {
-    val json = Files.readString(
-      Paths.get("/root/reference/examples/long_report.docling.json"))
+    val json = ReferenceExamples.string("long_report.docling.json")
     val doc = graft.sources.DoclingJsonIngest.parse(json, "doc://long_report")
     val rewritten = graft.sources.DoclingJsonExport.write(doc)
     val reparsed = graft.sources.DoclingJsonIngest.parse(rewritten, "doc://long_report")

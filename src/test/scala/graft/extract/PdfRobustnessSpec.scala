@@ -1,14 +1,13 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import graft.sources.ReferenceExamples
 
 /** Crawl-robustness: a 10^12-document corpus contains truncated, corrupted,
   * and adversarial PDF payloads; extractOne must degrade (fewer/zero items),
   * never throw — a single poison row must not kill a 100 TB task. */
 class PdfRobustnessSpec extends AnyFunSuite {
-  private lazy val real =
-    Files.readAllBytes(Paths.get("/root/reference/examples/long_report.pdf"))
+  private lazy val real = ReferenceExamples.bytes("long_report.pdf")
 
   private def runOne(bytes: Array[Byte]): Unit = {
     val row = Pipeline.extractOne("doc://t", bytes, "ro", 0)

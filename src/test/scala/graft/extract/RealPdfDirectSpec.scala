@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import graft.sources.ReferenceExamples
 
 /** The reference CLI's PRIMARY use case with NO docling JSON: the raw
   * long_report.pdf through the full extractOne pipeline — PdfDoc glyphs ->
@@ -9,10 +9,8 @@ import java.nio.file.{Files, Paths}
   * the from-scratch layout engine standing in for Docling's ML parse, so the
   * bars are floors (coverage/recall), not byte identity. */
 class RealPdfDirectSpec extends AnyFunSuite {
-  private lazy val pdf =
-    Files.readAllBytes(Paths.get("/root/reference/examples/long_report.pdf"))
-  private lazy val want =
-    Files.readString(Paths.get("/root/reference/examples/long_report.md"))
+  private lazy val pdf = ReferenceExamples.bytes("long_report.pdf")
+  private lazy val want = ReferenceExamples.string("long_report.md")
   private lazy val row = Pipeline.extractOne("doc://long_report", pdf, "ro", 0)
 
   test("structure: all 19 pages, a real table battery, headings classified") {
@@ -27,7 +25,7 @@ class RealPdfDirectSpec extends AnyFunSuite {
   }
 
   test("statement-page label/value bands emit as key_value items (round-5 task 5)") {
-    val pdfBytes = Files.readAllBytes(Paths.get("/root/reference/examples/long_report.pdf"))
+    val pdfBytes = ReferenceExamples.bytes("long_report.pdf")
     val doc = PdfLayout.buildDoc("doc://long_report", pdfBytes)
     val kvs = doc.items.filter(_.kind == graft.model.ItemKind.KeyValue)
     assert(kvs.length >= 10 && kvs.length <= 30, s"kv items=${kvs.length}")

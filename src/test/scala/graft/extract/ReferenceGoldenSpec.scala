@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import graft.sources.ReferenceExamples
 
 /** End-to-end parity against the reference's own pinned artifacts:
   * examples/long_report.docling.json (the PRE-fix DoclingDocument: 19 pages,
@@ -19,10 +19,8 @@ import java.nio.file.{Files, Paths}
   * rest.
   */
 class ReferenceGoldenSpec extends AnyFunSuite {
-  private lazy val json =
-    Files.readString(Paths.get("/root/reference/examples/long_report.docling.json"))
-  private lazy val want =
-    Files.readString(Paths.get("/root/reference/examples/long_report.md"))
+  private lazy val json = ReferenceExamples.string("long_report.docling.json")
+  private lazy val want = ReferenceExamples.string("long_report.md")
   private lazy val ingested = graft.sources.DoclingJsonIngest.parse(json, "doc://long_report")
   private lazy val transformed = DocTransforms.applyAll(ingested)
   private lazy val got = MarkdownRender.postProcess(MarkdownRender.render(transformed._1))
@@ -86,7 +84,7 @@ class ReferenceGoldenSpec extends AnyFunSuite {
   // classified one-by-one in GOLDEN_RESIDUE.md — every one either needs the
   // tesseract raster channel or would mean replicating its OCR errors.
   private lazy val pdfGlyphs = graft.extract.PdfDoc.extractGlyphs(
-    Files.readAllBytes(Paths.get("/root/reference/examples/long_report.pdf")))
+    ReferenceExamples.bytes("long_report.pdf"))
   private lazy val repairedRun = Pipeline.repairDocWithTextLayer(ingested, pdfGlyphs)
   private lazy val gotRepaired = MarkdownRender.postProcess(
     MarkdownRender.render(DocTransforms.applyAll(repairedRun._1)._1))

@@ -96,6 +96,38 @@ class SparkPipelineSpec extends AnyFunSuite {
     assert(graft.lineage.Lineage.snapshots(dirF).last._2.map(_.docCount).sum == 32)
   }
 
+  test("bucket stats are exactly-once: manifest equals a rescan of data, both modes, full and resumed") {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val pages = pagesDF(32)
+    val buckets = Pipeline.withBucket(pages, 8).select("bucket").distinct()
+      .collect().map(_.getInt(0)).sorted
+    assert(buckets.length >= 4, s"corpus must spread over buckets: ${buckets.toSeq}")
+    val early = buckets.take(2).toSet
+    def manifest(d: String) = graft.lineage.Lineage.snapshots(d).last._2
+      .map(s => (s.bucket, s.docCount, s.bytes)).toSet
+    def rescan(d: String) = spark.read.parquet(s"$d/data").groupBy("bucket")
+      .agg(count(lit(1)), sum("md_chars")).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    for (fused <- Seq(false, true)) {
+      // every bucket extracted in one run
+      val full = java.nio.file.Files.createTempDirectory("graft-stats-full").toString
+      val (_, docs) = Pipeline.extractAndCommit(spark, pages, full, numBuckets = 8, fused = fused)
+      assert(docs == 32)
+      assert(manifest(full) == rescan(full), s"fused=$fused full run")
+      // an earlier run committed two buckets; the resumed run skips them
+      val resumed = java.nio.file.Files.createTempDirectory("graft-stats-resume").toString
+      val first = pages.join(Pipeline.withBucket(pages, 8)
+        .filter(org.apache.spark.sql.functions.col("bucket").isin(early.toSeq: _*))
+        .select("url"), "url")
+      val (_, docs1) = Pipeline.extractAndCommit(spark, first, resumed, numBuckets = 8, fused = fused)
+      assert(graft.lineage.Lineage.committedBuckets(resumed) == early)
+      val (_, docs2) = Pipeline.extractAndCommit(spark, pages, resumed, numBuckets = 8, fused = fused)
+      assert(docs1 + docs2 == 32, s"fused=$fused docs1=$docs1 docs2=$docs2")
+      assert(manifest(resumed) == rescan(resumed), s"fused=$fused resumed run")
+      assert(manifest(resumed) == manifest(full), s"fused=$fused resumed vs full")
+    }
+  }
+
   test("mixed HTML and PDF payloads flow through one pipeline run") {
     import spark.implicits._
     val htmlPages = (0L until 8L).map(i => graft.sources.SyntheticPages.page(42L, i))

@@ -140,6 +140,26 @@ class PlanSpec extends AnyFunSuite {
     assert("FileScan parquet".r.findAllIn(p).length == 1, p.take(1500))
   }
 
+  test("q27/q49 at-scale candidate join: ONE embeddings scan, the ranked exchange reused") {
+    // round 6 dropped ivfTopK's cache + release checkpoint on the promise
+    // that both candidate-join sides hang off the SAME repartition exchange.
+    // Pin it in the 100TB shape (broadcast off, so the join is a shuffle
+    // join): the ranked relation is scanned once and its exchange reused.
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      for ((name, df) <- Seq("q27" -> Ops.q27CosineIvfTopK(spark, sf),
+                             "q49" -> Ops.q49IvfTrainedTopK(spark, sf))) {
+        df.collect() // finalize the adaptive plan
+        val p = plan(df).split("== Initial Plan ==").head
+        val scans = "FileScan parquet".r.findAllIn(p).length
+        assert(scans == 1, s"$name scans embeddings $scans times:\n${p.take(2500)}")
+        assert(p.contains("ReusedExchange"),
+          s"$name: expected the ranked exchange to be reused:\n${p.take(2500)}")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("sq_dist/dot_product stay inside whole-stage codegen") {
     import spark.implicits._
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
