@@ -10,17 +10,25 @@ import scala.jdk.CollectionConverters._
   *
   *   pages scan (url/html/lang pruned at the reader) -> bucket column
   *   (xxhash64(url) mod B, computed relationally so resume filters prune
-  *   BEFORE the expensive parse) -> repartition on bucket -> mapPartitions
-  *   parse (batched HTML tokenizer) -> typed doc-transform pass (pure
-  *   item-array rewrites, reference order) -> markdown render + post-chain
-  *   -> bucketed write with lineage commit.
+  *   BEFORE the expensive parse) -> repartition on bucket into
+  *   min(B, WriteTasksPerCore x cores) tasks -> mapPartitions parse (batched
+  *   HTML tokenizer) -> typed doc-transform pass (pure item-array rewrites,
+  *   reference order) -> markdown render + post-chain -> bucketed write with
+  *   lineage commit.
   *
   * Shuffle surface: exactly one exchange (the bucket repartition, which is
-  * also the resume/lineage partition). All transforms are row-local; giant
-  * documents cost per-row only, and AQE remains free to coalesce the write.
+  * also the resume/lineage partition). Each bucket lands whole in one task;
+  * a task carries several buckets when buckets outnumber the partitions. All
+  * transforms are row-local; giant documents cost per-row only.
   */
 object Pipeline {
   val DefaultBuckets = 64
+
+  /** Cap on the bucket exchange's partitions per core. Every write task pays
+    * a fixed setup (deserializing the job's Hadoop configuration, generating
+    * its projections), so fewer tasks than buckets amortize it; several
+    * tasks per core let the scheduler even out bucket-heavy tasks. */
+  val WriteTasksPerCore = 4
 
   /** Conversion knobs mirroring the reference CLI defaults
     * (cli.py:88-140): backend auto-probe ON, ocr_mode OFF, glyph
@@ -348,12 +356,14 @@ object Pipeline {
   /** Full extraction over a pages DataFrame (url, warc_ts, html, text, lang).
     * `skipBuckets` prunes already-committed buckets before the parse stage.
     *
-    * `shuffle = true` co-locates each bucket in one task before the parse so
-    * the bucketed write emits one file per bucket (the production layout for
-    * partition-granular resume at 100TB). `shuffle = false` fuses the parse
-    * into the scan stage — zero exchanges — for pure-throughput paths where
-    * write layout doesn't matter (each task then writes to several bucket
-    * dirs; compaction happens at commit). */
+    * `shuffle = true` co-locates each bucket in one task before the parse, so
+    * a bucketed write emits one file per bucket (the layout that makes resume
+    * partition-granular). The exchange has
+    * min(numBuckets, WriteTasksPerCore * defaultParallelism) partitions, where
+    * defaultParallelism is the core count registered when this plan is built
+    * (on a cluster still registering executors, fewer than it will have).
+    * `shuffle = false` runs the parse in the scan stage with no exchange, for
+    * callers that do not write by bucket. */
   def extract(spark: SparkSession, pages: DataFrame,
               numBuckets: Int = DefaultBuckets,
               skipBuckets: Set[Int] = Set.empty,
@@ -365,7 +375,10 @@ object Pipeline {
       if (skipBuckets.isEmpty) bucketed
       else bucketed.filter(!$"bucket".isin(skipBuckets.toSeq: _*))
     val placed =
-      if (shuffle) pruned.repartition(numBuckets, $"bucket")
+      if (shuffle)
+        pruned.repartition(
+          math.min(numBuckets, WriteTasksPerCore * spark.sparkContext.defaultParallelism),
+          $"bucket")
       else pruned
     placed
       .as[(String, Array[Byte], String, Int)]
@@ -381,18 +394,14 @@ object Pipeline {
   /** Extraction + resumable bucketed write with a lineage manifest.
     * Returns (snapshotId, total docs committed in this run).
     *
-    * `fused = true` skips the input bucket exchange entirely: scan -> parse
-    * -> partitioned write runs as ONE result stage (each task appends files
-    * to every bucket dir it sees). The committed layout is identical at
-    * bucket granularity — same bucket dirs, same rows, same manifest, same
-    * partition-granular resume — only the file count per bucket differs
-    * (one per input task instead of one per bucket). The scale default when
-    * write layout is negotiable: no exchange to bottleneck, at the price of
-    * more, smaller files. Stats stay exactly-once because the accumulating
-    * map runs inside the write's result stage in BOTH modes. */
+    * Runs `extract` with the bucket exchange: the write stage has
+    * min(numBuckets, WriteTasksPerCore * defaultParallelism) tasks (cores
+    * registered when the plan is built), each bucket is written by exactly
+    * one of them, so every commit adds one file per bucket dir and a resumed
+    * run skips whole buckets. Stats are exactly-once because the
+    * accumulating map runs inside the write's result stage. */
   def extractAndCommit(spark: SparkSession, pages: DataFrame, outDir: String,
-                       numBuckets: Int = DefaultBuckets,
-                       fused: Boolean = false): (String, Long) = {
+                       numBuckets: Int = DefaultBuckets): (String, Long) = {
     import spark.implicits._
     val done = graft.lineage.Lineage.committedBuckets(outDir)
 
@@ -426,9 +435,8 @@ object Pipeline {
     val statsAcc = new BucketStatsAcc
     spark.sparkContext.register(statsAcc, "graft-bucket-stats")
     // the only operator between this map and the write is `observe`, so the
-    // map runs in the write's result stage in both modes (after the bucket
-    // exchange, or fused into the scan stage)
-    val extracted = extract(spark, pages, numBuckets, skipBuckets = done, shuffle = !fused)
+    // map runs in the write's result stage, after the bucket exchange
+    val extracted = extract(spark, pages, numBuckets, skipBuckets = done)
       .map { r => statsAcc.add((r.bucket, r.md_chars)); r }
     // observed metrics ride the job (audit_utils fix-report counters analog,
     // SURVEY §2.4): no second pass, no accumulators to merge by hand

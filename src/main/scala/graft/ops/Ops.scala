@@ -727,8 +727,9 @@ object Ops {
   /** Paragraph-level exact dedup (q50): the corpus-wide unit-dedup pass web
     * pipelines run before near-dup (the C4/RefinedWeb shape — drop repeated
     * boilerplate paragraphs across the corpus). Unit = fixed 12-word
-    * paragraph; plan = explode + hash groupBy + hash equi-join back — one
-    * shuffle family, never a pair join, so it survives any corpus size. */
+    * paragraph; plan = explode + hash, occurrence counts by a window over
+    * one exchange on the hash, then a per-doc groupBy — never a pair join,
+    * so it survives any corpus size. */
   def q50ParagraphDedup(s: SparkSession, dir: String): DataFrame = {
     val paras = documents(s, dir)
       .select($"doc_id", split($"text", " ").as("w"))

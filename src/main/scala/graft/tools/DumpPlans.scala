@@ -35,8 +35,8 @@ object DumpPlans {
 
     val pages = spark.createDataset((0L until 32L)
       .map(i => graft.sources.SyntheticPages.page(42L, i))).toDF()
-    dump("extraction pipeline (one exchange, pruned scan)",
-      graft.extract.Pipeline.extract(spark, pages, numBuckets = 8).toDF()
+    dump("extraction pipeline (one exchange of min(buckets, 4 x cores) partitions: 32 buckets, 16 tasks)",
+      graft.extract.Pipeline.extract(spark, pages, numBuckets = 32).toDF()
         .select($"url", $"md_chars"))
     dump("q01 pricing summary (partial agg, pruned lineitem scan)",
       graft.ops.Ops.q01PricingSummary(spark, sf))
@@ -44,17 +44,18 @@ object DumpPlans {
       graft.ops.Ops.q02RevenueByNation(spark, sf))
     dump("q13 exact hash (codegen'd polyhash expression)",
       graft.ops.Ops.q13ExactHash(spark, sf))
-    dump("q18 minhash LSH pairs (single-pass posexplode bands: one scan + ReusedExchange)",
+    dump("q18 minhash LSH pairs (row-local signatures, posexplode bands; at this SF one " +
+      "side is broadcast, at scale one scan + ReusedExchange)",
       graft.ops.Ops.q18MinhashLshPairs(spark, sf))
     dump("q20 simhash pairs (pigeonhole chunk equi-join, no BroadcastNestedLoopJoin)",
       graft.ops.Ops.q20SimhashPairs(spark, sf))
-    dump("q27 IVF ANN (broadcast codebook cross join -> cell equi-join, no driver collect)",
+    dump("q27 IVF ANN (row-local nearest-cell ranking over a literal codebook -> cell equi-join)",
       graft.ops.Ops.q27CosineIvfTopK(spark, sf))
     dump("q29 banded 64-bit simhash pairs (production-width Hamming bucket join)",
       graft.ops.Ops.q29Simhash64Pairs(spark, sf))
-    dump("q49 trained IVF (bounded-sample k-means codebook -> cell equi-join)",
+    dump("q49 trained IVF (bounded-sample k-means codebook -> q27's cell equi-join)",
       graft.ops.Ops.q49IvfTrainedTopK(spark, sf))
-    dump("q50 paragraph dedup (explode + hash groupBy + equi-join back, no pair join)",
+    dump("q50 paragraph dedup (explode + hash, occurrence window over one exchange, no join-back)",
       graft.ops.Ops.q50ParagraphDedup(spark, sf))
     graft.ops.Ops.keepPlansForAudit = true
     dump("q25 pruned Jaccard (round 5: ONE full-relation exchange via the " +

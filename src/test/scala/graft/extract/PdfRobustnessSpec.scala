@@ -34,6 +34,42 @@ class PdfRobustnessSpec extends AnyFunSuite {
     }
   }
 
+  /** In-repo seed PDFs, one per reader path: classic xref + plain content
+    * stream, classic xref + Flate content, PDF 1.5 (object stream, Flate,
+    * xref stream with a PNG predictor), and TestPdfs' hand-assembled
+    * xref-stream file. */
+  private lazy val seeds: Seq[(String, Array[Byte])] = {
+    val (plain, doc) = graft.sources.SyntheticPdfPages.pdfDoc(42L, 0L)
+    val (flate, _) = graft.sources.SyntheticPdfPages.pdfDoc(42L, 1L)
+    val lines = doc.pages.toSeq.map(pg => doc.items.toSeq.filter(_.pageNo == pg.pageNo)
+      .map(_.text.take(52)).filter(_.nonEmpty))
+    Seq("classic" -> plain, "classic-flate" -> flate,
+      "pdf-1.5" -> SyntheticPdf.pdfFor15(lines),
+      "xref-stream" -> TestPdfs.buildXrefStreamPdf())
+  }
+
+  test("truncated synthetic seed PDFs at every 1/64 cut point never throw") {
+    for ((name, pdf) <- seeds) {
+      for (k <- 0 until 64)
+        runOne(java.util.Arrays.copyOf(pdf, (pdf.length.toLong * k / 64).toInt))
+      // the uncut seed parses to content, so the cuts above start from it
+      assert(Pipeline.extractOne("doc://t", pdf, "ro", 0).item_count > 0,
+        s"$name seed parsed to no items")
+    }
+  }
+
+  test("bit-flipped synthetic seed PDFs never throw (fixed seed)") {
+    val rnd = new scala.util.Random(42)
+    for ((_, pdf) <- seeds; _ <- 0 until 200) {
+      val mutated = pdf.clone()
+      for (_ <- 0 until 1 + rnd.nextInt(8)) {
+        val i = rnd.nextInt(mutated.length)
+        mutated(i) = (mutated(i) ^ (1 << rnd.nextInt(8))).toByte
+      }
+      runOne(mutated)
+    }
+  }
+
   test("adversarial minimal payloads never throw") {
     val cases = Seq(
       "%PDF-1.5\n%%EOF\n",

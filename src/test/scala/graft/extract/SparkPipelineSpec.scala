@@ -73,30 +73,7 @@ class SparkPipelineSpec extends AnyFunSuite {
     assert(snaps.last._2.map(_.docCount).sum == 32)
   }
 
-  test("fused commit: identical committed rows and manifest stats, resume green") {
-    val dirF = java.nio.file.Files.createTempDirectory("graft-lineage-fused").toString
-    val dirX = java.nio.file.Files.createTempDirectory("graft-lineage-xchg").toString
-    val (_, docsF) = Pipeline.extractAndCommit(spark, pagesDF(32), dirF, numBuckets = 8, fused = true)
-    val (_, docsX) = Pipeline.extractAndCommit(spark, pagesDF(32), dirX, numBuckets = 8)
-    assert(docsF == 32 && docsX == 32)
-    // committed ROWS are identical across modes (layout differs only in
-    // file count per bucket dir)
-    def rows(d: String) = spark.read.parquet(s"$d/data")
-      .select("url", "markdown", "text", "bucket").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
-    assert(rows(dirF) == rows(dirX))
-    // per-bucket manifest stats identical (exactly-once accumulator in the
-    // fused result stage)
-    def stats(d: String) = graft.lineage.Lineage.snapshots(d).last._2
-      .map(s => (s.bucket, s.docCount, s.bytes)).toSet
-    assert(stats(dirF) == stats(dirX))
-    // resume on the fused-committed dir is a no-op
-    val (_, docs2) = Pipeline.extractAndCommit(spark, pagesDF(32), dirF, numBuckets = 8, fused = true)
-    assert(docs2 == 0)
-    assert(graft.lineage.Lineage.snapshots(dirF).last._2.map(_.docCount).sum == 32)
-  }
-
-  test("bucket stats are exactly-once: manifest equals a rescan of data, both modes, full and resumed") {
+  test("bucket stats are exactly-once: manifest equals a rescan of data, full and resumed") {
     import org.apache.spark.sql.functions.{count, lit, sum}
     val pages = pagesDF(32)
     val buckets = Pipeline.withBucket(pages, 8).select("bucket").distinct()
@@ -108,24 +85,59 @@ class SparkPipelineSpec extends AnyFunSuite {
     def rescan(d: String) = spark.read.parquet(s"$d/data").groupBy("bucket")
       .agg(count(lit(1)), sum("md_chars")).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    for (fused <- Seq(false, true)) {
-      // every bucket extracted in one run
-      val full = java.nio.file.Files.createTempDirectory("graft-stats-full").toString
-      val (_, docs) = Pipeline.extractAndCommit(spark, pages, full, numBuckets = 8, fused = fused)
-      assert(docs == 32)
-      assert(manifest(full) == rescan(full), s"fused=$fused full run")
-      // an earlier run committed two buckets; the resumed run skips them
-      val resumed = java.nio.file.Files.createTempDirectory("graft-stats-resume").toString
-      val first = pages.join(Pipeline.withBucket(pages, 8)
-        .filter(org.apache.spark.sql.functions.col("bucket").isin(early.toSeq: _*))
-        .select("url"), "url")
-      val (_, docs1) = Pipeline.extractAndCommit(spark, first, resumed, numBuckets = 8, fused = fused)
-      assert(graft.lineage.Lineage.committedBuckets(resumed) == early)
-      val (_, docs2) = Pipeline.extractAndCommit(spark, pages, resumed, numBuckets = 8, fused = fused)
-      assert(docs1 + docs2 == 32, s"fused=$fused docs1=$docs1 docs2=$docs2")
-      assert(manifest(resumed) == rescan(resumed), s"fused=$fused resumed run")
-      assert(manifest(resumed) == manifest(full), s"fused=$fused resumed vs full")
+    // every bucket extracted in one run
+    val full = java.nio.file.Files.createTempDirectory("graft-stats-full").toString
+    val (_, docs) = Pipeline.extractAndCommit(spark, pages, full, numBuckets = 8)
+    assert(docs == 32)
+    assert(manifest(full) == rescan(full), "full run")
+    // an earlier run committed two buckets; the resumed run skips them
+    val resumed = java.nio.file.Files.createTempDirectory("graft-stats-resume").toString
+    val first = pages.join(Pipeline.withBucket(pages, 8)
+      .filter(org.apache.spark.sql.functions.col("bucket").isin(early.toSeq: _*))
+      .select("url"), "url")
+    val (_, docs1) = Pipeline.extractAndCommit(spark, first, resumed, numBuckets = 8)
+    assert(graft.lineage.Lineage.committedBuckets(resumed) == early)
+    val (_, docs2) = Pipeline.extractAndCommit(spark, pages, resumed, numBuckets = 8)
+    assert(docs1 + docs2 == 32, s"docs1=$docs1 docs2=$docs2")
+    assert(manifest(resumed) == rescan(resumed), "resumed run")
+    assert(manifest(resumed) == manifest(full), "resumed vs full")
+  }
+
+  test("layout: one new file per bucket per commit, full and resumed, tasks carrying several buckets") {
+    // 32 buckets over min(32, 4 x 4 cores) = 16 write tasks (the plan-shape
+    // case pins that count), so tasks hold several buckets each
+    val pages = pagesDF(256)
+    val bucketOf = Pipeline.withBucket(pages, 32).select("url", "bucket").collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(bucketOf.values.toSet == (0 until 32).toSet, "corpus must fill all 32 buckets")
+    def files(d: String): Map[Int, Set[String]] = {
+      val data = new java.io.File(d, "data")
+      Option(data.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.startsWith("bucket=")).map { b =>
+          b.getName.stripPrefix("bucket=").toInt ->
+            b.list().filter(_.endsWith(".parquet")).toSet
+        }.toMap
     }
+    // runs one commit; returns the new parquet files per bucket dir
+    def commit(in: org.apache.spark.sql.DataFrame, dir: String): Map[Int, Int] = {
+      val before = files(dir)
+      Pipeline.extractAndCommit(spark, in, dir, numBuckets = 32)
+      files(dir).map { case (b, fs) => b -> (fs -- before.getOrElse(b, Set.empty)).size }
+    }
+    val full = java.nio.file.Files.createTempDirectory("graft-layout-full").toString
+    val fullAdded = commit(pages, full)
+    assert(fullAdded == (0 until 32).map(_ -> 1).toMap, s"full run new files: $fullAdded")
+    // resume: a first run commits buckets 0-9, the second the other 22
+    val early = (0 until 10).toSet
+    val resumed = java.nio.file.Files.createTempDirectory("graft-layout-resume").toString
+    val firstUrls = bucketOf.collect { case (u, b) if early(b) => u }.toSeq
+    val firstAdded = commit(
+      pages.filter(org.apache.spark.sql.functions.col("url").isin(firstUrls: _*)), resumed)
+    assert(firstAdded == early.map(_ -> 1).toMap, s"first run new files: $firstAdded")
+    val resAdded = commit(pages, resumed)
+    assert(resAdded == (0 until 32).map(b => b -> (if (early(b)) 0 else 1)).toMap,
+      s"resumed run new files: $resAdded")
+    assert(spark.read.parquet(s"$resumed/data").count() == 256)
   }
 
   test("mixed HTML and PDF payloads flow through one pipeline run") {
@@ -153,9 +165,19 @@ class SparkPipelineSpec extends AnyFunSuite {
   }
 
   test("plan shape: single exchange, scan prunes to url/html/lang") {
-    val plan = Pipeline.extract(spark, pagesDF(8), numBuckets = 4)
-      .queryExecution.executedPlan.toString
-    val exchanges = "Exchange".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected exactly 1 shuffle, got $exchanges:\n$plan")
+    assert(spark.sparkContext.defaultParallelism == 4)
+    for (numBuckets <- Seq(2, 8, 32)) {
+      val plan = Pipeline.extract(spark, pagesDF(8), numBuckets = numBuckets)
+        .queryExecution.executedPlan.toString
+      val exchanges = "Exchange".r.findAllIn(plan).length
+      assert(exchanges == 1, s"expected exactly 1 shuffle, got $exchanges:\n$plan")
+      val scan = plan.linesIterator.find(_.contains("LocalTableScan")).getOrElse("")
+      assert(scan.contains("html#") && !scan.contains("text#"), s"unpruned scan: $scan")
+      // a few write tasks per core, not one per bucket: 4 per core x 4 cores
+      val parts = "hashpartitioning\\(bucket#\\d+, (\\d+)\\)".r.findAllMatchIn(plan)
+        .map(_.group(1).toInt).toSeq
+      assert(parts == Seq(math.min(numBuckets, 16)),
+        s"numBuckets=$numBuckets: exchange partitions $parts:\n$plan")
+    }
   }
 }

@@ -140,24 +140,38 @@ class PlanSpec extends AnyFunSuite {
     assert("FileScan parquet".r.findAllIn(p).length == 1, p.take(1500))
   }
 
-  test("q27/q49 at-scale candidate join: ONE embeddings scan, the ranked exchange reused") {
-    // round 6 dropped ivfTopK's cache + release checkpoint on the promise
-    // that both candidate-join sides hang off the SAME repartition exchange.
-    // Pin it in the 100TB shape (broadcast off, so the join is a shuffle
-    // join): the ranked relation is scanned once and its exchange reused.
+  /** In the 100TB shape (broadcast off, so self-joins are shuffle joins)
+    * each query scans embeddings once and its second join side is a
+    * ReusedExchange of the first. */
+  private def assertOneScanReusedAtScale(
+      queries: (String, () => org.apache.spark.sql.DataFrame)*): Unit = {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      for ((name, df) <- Seq("q27" -> Ops.q27CosineIvfTopK(spark, sf),
-                             "q49" -> Ops.q49IvfTrainedTopK(spark, sf))) {
+      for ((name, query) <- queries) {
+        val df = query()
         df.collect() // finalize the adaptive plan
         val p = plan(df).split("== Initial Plan ==").head
         val scans = "FileScan parquet".r.findAllIn(p).length
         assert(scans == 1, s"$name scans embeddings $scans times:\n${p.take(2500)}")
         assert(p.contains("ReusedExchange"),
-          s"$name: expected the ranked exchange to be reused:\n${p.take(2500)}")
+          s"$name: expected the join's exchange to be reused:\n${p.take(2500)}")
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("q27/q49 at-scale candidate join: ONE embeddings scan, the ranked exchange reused") {
+    // round 6 dropped ivfTopK's cache + release checkpoint on the promise
+    // that both candidate-join sides hang off the SAME repartition exchange:
+    // the ranked relation is scanned once and its exchange reused.
+    assertOneScanReusedAtScale(
+      "q27" -> (() => Ops.q27CosineIvfTopK(spark, sf)),
+      "q49" -> (() => Ops.q49IvfTrainedTopK(spark, sf)))
+  }
+
+  test("q23 at-scale bucket self-join: ONE embeddings scan, the bucketed exchange reused") {
+    // q23 dropped its cache on the same promise for its sign-LSH self-join
+    assertOneScanReusedAtScale("q23" -> (() => Ops.q23CosineLshTopK(spark, sf)))
   }
 
   test("sq_dist/dot_product stay inside whole-stage codegen") {
