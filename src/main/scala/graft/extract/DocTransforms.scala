@@ -14,6 +14,58 @@ import graft.textkit._
   */
 object DocTransforms {
 
+  /** `doc` with each table replaced by `f(table)`; a pass that changes
+    * nothing returns `doc` itself, and only changed items are copied. */
+  private def mapTables(doc: Doc)(f: TableData => TableData): Doc = {
+    var items: Array[DocItem] = null
+    var k = 0
+    while (k < doc.items.length) {
+      val item = doc.items(k)
+      if (item.table.nonEmpty) {
+        val t = item.table.get
+        val nt = f(t)
+        if (nt ne t) {
+          if (items == null) items = doc.items.clone()
+          items(k) = item.copy(table = Some(nt))
+        }
+      }
+      k += 1
+    }
+    if (items == null) doc else doc.copy(items = items)
+  }
+
+  /** `t` with each cell for which `want` holds replaced by `f(cell.text)`
+    * where that differs; `onChange` runs once per changed cell. */
+  private def mapCellTexts(t: TableData, want: TableCell => Boolean, f: String => String)
+                          (onChange: => Unit): TableData = {
+    var cells: Array[TableCell] = null
+    var k = 0
+    while (k < t.cells.length) {
+      val cell = t.cells(k)
+      if (want(cell)) {
+        val text = f(cell.text)
+        if (text != cell.text) {
+          onChange
+          if (cells == null) cells = t.cells.clone()
+          cells(k) = cell.copy(text = text)
+        }
+      }
+      k += 1
+    }
+    if (cells == null) t else t.copy(cells = cells)
+  }
+
+  // (startRow, startCol, endRow, endCol) without a key tuple per comparison
+  private val CellOrder: Ordering[TableCell] = new Ordering[TableCell] {
+    def compare(a: TableCell, b: TableCell): Int = {
+      var c = Integer.compare(a.startRow, b.startRow)
+      if (c == 0) c = Integer.compare(a.startCol, b.startCol)
+      if (c == 0) c = Integer.compare(a.endRow, b.endRow)
+      if (c == 0) c = Integer.compare(a.endCol, b.endCol)
+      c
+    }
+  }
+
   /** table_fixes.py:314-337 — header row must tile columns contiguously. */
   def headerColumnGroups(table: TableData): Option[List[(Int, Int)]] = {
     val headerCells = table.cells.filter(_.startRow == 0)
@@ -62,11 +114,16 @@ object DocTransforms {
         }
 
         val updated = merged.map { case ((rowStart, rowEnd, colStart, colEnd), cells) =>
-          val ordered = cells.sortBy(_._2)
-          val texts = ordered.map(_._1.text).filter(t => t != null && t.strip().nonEmpty)
-            .map(_.strip())
-          val mergedText = texts.mkString(" ").strip()
-          val mergedBbox = mergeBboxes(ordered.flatMap(_._1.bbox).toSeq)
+          val ordered = if (cells.length == 1) cells else cells.sortBy(_._2)
+          val mergedText =
+            if (ordered.length == 1) {
+              val t = ordered(0)._1.text
+              if (t == null || t.isBlank) "" else t.strip()
+            } else ordered.map(_._1.text).filter(t => t != null && !t.isBlank)
+              .map(_.strip()).mkString(" ").strip()
+          val mergedBbox =
+            if (ordered.length == 1) ordered(0)._1.bbox
+            else mergeBboxes(ordered.flatMap(_._1.bbox).toSeq)
           TableCell(
             startRow = rowStart, endRow = rowEnd, startCol = colStart, endCol = colEnd,
             rowSpan = rowEnd - rowStart, colSpan = colEnd - colStart,
@@ -78,7 +135,7 @@ object DocTransforms {
             bbox = mergedBbox)
         }.toArray
 
-        val sortedCells = updated.sortBy(c => (c.startRow, c.startCol, c.endRow, c.endCol))
+        val sortedCells = updated.sorted(CellOrder)
         Some(TableData(table.numRows, groups.length, sortedCells))
     }
   }
@@ -86,50 +143,28 @@ object DocTransforms {
   /** table_fixes.py:415-421 */
   def collapseDocTableGroups(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val items = doc.items.map { item =>
-      item.table.flatMap(collapseTableHeaderGroups) match {
-        case Some(newTable) => updated += 1; item.copy(table = Some(newTable))
-        case None => item
+    val out = mapTables(doc) { t =>
+      collapseTableHeaderGroups(t) match {
+        case Some(newTable) => updated += 1; newTable
+        case None => t
       }
     }
-    (doc.copy(items = items), updated)
+    (out, updated)
   }
 
   /** table_fixes.py:586-605 — header label normalization. */
   def normalizeDocTableHeaders(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val items = doc.items.map { item =>
-      item.table match {
-        case Some(t) =>
-          val cells = t.cells.map { cell =>
-            if (cell.startRow != 0) cell
-            else {
-              val cleaned = CellClean.cleanHeaderText(cell.text)
-              if (cleaned != cell.text) { updated += 1; cell.copy(text = cleaned) } else cell
-            }
-          }
-          item.copy(table = Some(t.copy(cells = cells)))
-        case None => item
-      }
-    }
-    (doc.copy(items = items), updated)
+    val out = mapTables(doc)(
+      mapCellTexts(_, _.startRow == 0, CellClean.cleanHeaderText)(updated += 1))
+    (out, updated)
   }
 
   /** table_fixes.py:608-618 — cell-clean chain over all cells. */
   def cleanDocTableCells(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val items = doc.items.map { item =>
-      item.table match {
-        case Some(t) =>
-          val cells = t.cells.map { cell =>
-            val cleaned = CellClean.cleanTableCellText(cell.text)
-            if (cleaned != cell.text) { updated += 1; cell.copy(text = cleaned) } else cell
-          }
-          item.copy(table = Some(t.copy(cells = cells)))
-        case None => item
-      }
-    }
-    (doc.copy(items = items), updated)
+    val out = mapTables(doc)(mapCellTexts(_, _ => true, CellClean.cleanTableCellText)(updated += 1))
+    (out, updated)
   }
 
   /** table_fixes.py:621-669 — per-column dominant-currency vote + rewrite.
@@ -137,56 +172,64 @@ object DocTransforms {
   def normalizeTableCurrencyColumns(table: TableData): (TableData, Int) = {
     val numCols = table.numCols
     if (numCols <= 0) return (table, 0)
-    val counts = Array.fill(numCols)(scala.collection.mutable.LinkedHashMap.empty[String, Int])
-    for (cell <- table.cells) {
-      if (cell.startRow != 0 && cell.endCol - cell.startCol == 1) {
-        val text = Option(cell.text).getOrElse("")
-        Py.search(CellClean.CurrencyToken, text).foreach { m =>
-          val cur = m.group(1)
-          counts(cell.startCol)(cur) = counts(cell.startCol).getOrElse(cur, 0) + 1
+    def voting(cell: TableCell) = cell.startRow != 0 && cell.endCol - cell.startCol == 1
+    // per column: currency -> count in first-seen order, made on first use
+    val counts = new Array[scala.collection.mutable.LinkedHashMap[String, Int]](numCols)
+    var voted = false
+    for (cell <- table.cells if voting(cell)) {
+      // read for every voting cell: one outside the columns fails the pass
+      var counter = counts(cell.startCol)
+      val cur = CellClean.firstCurrencyToken(cell.text)
+      if (cur != null) {
+        if (counter == null) {
+          counter = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+          counts(cell.startCol) = counter
         }
+        counter(cur) = counter.getOrElse(cur, 0) + 1
+        voted = true
       }
     }
-    val dominant: Array[Option[String]] = counts.map { counter =>
-      if (counter.isEmpty) None
+    if (!voted) return (table, 0)
+    val dominant: Array[String] = counts.map { counter =>
+      if (counter == null) null
       else {
         val total = counter.values.sum
         // Python max(items, key=freq): first max wins on tie (insertion order)
         val (currency, freq) = counter.maxBy(_._2)
-        if (total >= 2 && freq.toDouble / total >= 0.7) Some(currency) else None
+        if (total >= 2 && freq.toDouble / total >= 0.7) currency else null
       }
     }
     var updated = 0
-    val cells = table.cells.map { cell =>
-      if (cell.startRow == 0 || cell.endCol - cell.startCol != 1) cell
-      else dominant(cell.startCol) match {
-        case Some(desired) =>
-          val text = Option(cell.text).getOrElse("")
-          Py.search(CellClean.CurrencyToken, text) match {
-            case Some(m) if m.group(1) != desired =>
-              val newText = Py.sub(CellClean.CurrencyToken, desired, text)
-              if (newText != text) { updated += 1; cell.copy(text = newText) } else cell
-            case _ => cell
+    var cells: Array[TableCell] = null
+    var k = 0
+    while (k < table.cells.length) {
+      val cell = table.cells(k)
+      if (voting(cell) && dominant(cell.startCol) != null) {
+        val desired = dominant(cell.startCol)
+        val cur = CellClean.firstCurrencyToken(cell.text)
+        if (cur != null && cur != desired) {
+          val newText = Py.sub(CellClean.CurrencyToken, desired, cell.text)
+          if (newText != cell.text) {
+            updated += 1
+            if (cells == null) cells = table.cells.clone()
+            cells(k) = cell.copy(text = newText)
           }
-        case None => cell
+        }
       }
+      k += 1
     }
-    (table.copy(cells = cells), updated)
+    (if (cells == null) table else table.copy(cells = cells), updated)
   }
 
   /** table_fixes.py:672-678 */
   def normalizeDocTableCurrencies(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val items = doc.items.map { item =>
-      item.table match {
-        case Some(t) =>
-          val (nt, n) = normalizeTableCurrencyColumns(t)
-          updated += n
-          item.copy(table = Some(nt))
-        case None => item
-      }
+    val out = mapTables(doc) { t =>
+      val (nt, n) = normalizeTableCurrencyColumns(t)
+      updated += n
+      nt
     }
-    (doc.copy(items = items), updated)
+    (out, updated)
   }
 
   /** countSuspectTableCells with a cheap digit prefilter: a cell with no
@@ -219,9 +262,10 @@ object DocTransforms {
 
     val toDelete = scala.collection.mutable.Set.empty[Int]
     for (item <- doc.items) {
+      // the geometry is tested before the text predicate: both must hold,
+      // and most text items have no bbox or no picture on their page
       if (item.kind != ItemKind.Table && item.kind != ItemKind.Picture &&
-          item.text != null && item.text.nonEmpty && predicate(item.text) &&
-          item.bbox.nonEmpty) {
+          item.text != null && item.text.nonEmpty && item.bbox.nonEmpty) {
         picturesByPage.get(item.pageNo).foreach { boxes =>
           val h = pageHeights.get(item.pageNo)
           val tb = h.map(item.bbox.get.toTopLeft).getOrElse(item.bbox.get)
@@ -229,7 +273,7 @@ object DocTransforms {
             val apb = h.map(pb.toTopLeft).getOrElse(pb)
             KpiAxis.overlapRatio(tb.l, tb.t, tb.r, tb.b, apb.l, apb.t, apb.r, apb.b) >= ratio
           }
-          if (hit) toDelete += item.idx
+          if (hit && predicate(item.text)) toDelete += item.idx
         }
       }
     }
@@ -257,7 +301,7 @@ object DocTransforms {
         else item
       }
     }
-    (doc.copy(items = items), updated)
+    (if (updated == 0) doc else doc.copy(items = items), updated)
   }
 
   /** Greedy first-unused table pairing by (page, shape), then keyed cell merge.

@@ -179,7 +179,9 @@ object SpacingFix {
                             pictureText: (Int, Bbox) => String,
                             maxAdded: Int = 30): (Doc, Int) = {
     if (maxAdded <= 0) return (doc, 0)
-    val docText = MarkdownRender.renderPlainText(doc).toLowerCase(java.util.Locale.ROOT)
+    // rendered when the first KPI candidate needs it: most pictures have no
+    // KPI text, and then the document's text is never looked at
+    lazy val docText = MarkdownRender.renderPlainText(doc).toLowerCase(java.util.Locale.ROOT)
     var added = 0
     val out = scala.collection.mutable.ArrayBuffer.empty[DocItem]
     var nextIdx = doc.items.map(_.idx).foldLeft(0)(math.max) + 1
@@ -208,7 +210,7 @@ object SpacingFix {
         }
       }
     }
-    (doc.copy(items = out.toArray), added)
+    (if (added == 0) doc else doc.copy(items = out.toArray), added)
   }
 
   /** addPictureKpiCaptions specialization for the pipeline: the picture

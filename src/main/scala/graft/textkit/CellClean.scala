@@ -15,6 +15,8 @@ import Predicates.isSpacedText
 object CellClean {
   private val DatePattern = re("\\d{1,2}[./-]\\d{1,2}[./-]\\d{2,4}")
   private val DateFuzzyPattern = re("\\d{1,3}[./-]\\d{1,2}[./-]\\d{2,4}")
+  // overlapping fuzzy-date matches via a lookahead wrapper (table_fixes.py:445-447)
+  private val DateFuzzyOverlapping = re(s"(?=(${DateFuzzyPattern.pattern}))")
   private val DateSepPattern = re("[./-]")
   private val DupPercent = re("\\b(\\d+(?:[.,]\\d+)?)\\s*%\\s+\\1\\s*%")
   private val SpacedPercent = re("\\b(\\d+(?:[.,]\\d+)?)\\s*%")
@@ -38,6 +40,16 @@ object CellClean {
   private val NegativeSpace = re("(?<!\\w)-\\s+(?=\\d)")
   private val NumericishFull = re("[0-9\\s.,()%+A-Z-]+")
   private val DigitsOnlyAllPattern = re("[\\d\\s./-]+")
+
+  /** group(1) of the first `CurrencyToken` match in text, or null. */
+  def firstCurrencyToken(text: String): String = {
+    if (text == null) return null
+    val ron = indexOfWordToken(text, "RON")
+    val eur = indexOfWordToken(text, "EUR")
+    if (ron < 0 && eur < 0) null
+    else if (eur < 0 || (ron >= 0 && ron < eur)) "RON"
+    else "EUR"
+  }
 
   /** table_fixes.py:59-60 */
   def isNumericish(text: String): Boolean = {
@@ -123,19 +135,21 @@ object CellClean {
     }
   }
 
+  private val CurrencyFragments = Set("R", "E", "N", "ON")
+
   /** table_fixes.py:138-154 */
   def stripTrailingCurrencyFragment(text: String): String = {
-    // tokens.last ends with the last non-space char; {R,E,N,ON} all end in
-    // R/E/N, so anything else exits before tokenizing
-    var k = text.length - 1
-    while (k >= 0 && text.charAt(k) <= ' ') k -= 1
-    if (k < 0) return text
-    val lc = text.charAt(k)
-    if (lc != 'R' && lc != 'E' && lc != 'N') return text
+    // tokens.last is text[s, e): test it in place before tokenizing
+    var e = text.length
+    while (e > 0 && isSplitWs(text.charAt(e - 1))) e -= 1
+    var s = e
+    while (s > 0 && !isSplitWs(text.charAt(s - 1))) s -= 1
+    if (!(e - s == 1 && "REN".indexOf(text.charAt(s)) >= 0) &&
+        !(e - s == 2 && text.startsWith("ON", s))) return text
     val tokens = split(text)
     if (tokens.length < 3) return text
     val lastTok = tokens.last
-    if (!Set("R", "E", "N", "ON").contains(lastTok)) return text
+    if (!CurrencyFragments.contains(lastTok)) return text
     if (lastTok == "ON") {
       if (!tokens.contains("RON")) return text
       if (digitsOnly(tokens(tokens.length - 2)).isEmpty) return text
@@ -151,9 +165,52 @@ object CellClean {
   private def hasCurrencyLetter(text: String): Boolean =
     text.indexOf('R') >= 0 || text.indexOf('E') >= 0
 
+  // the anchored patterns below are `^t1\s+ .. tk$` over k non-\s tokens;
+  // one whose first token starts with \d needs a text that does too
+  private def anchored(text: String, firstDigit: Boolean, tokens: Int): Boolean =
+    (if (firstDigit) isUniDigitAt(text, 0) else text.startsWith("RON") || text.startsWith("EUR")) &&
+      wsTokens(text) == tokens
+
+  // the number of [./-] chars: each date match holds two of them
+  private def dateSepCount(text: String): Int = {
+    var k = 0
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (c == '.' || c == '/' || c == '-') k += 1
+      i += 1
+    }
+    k
+  }
+
+  // whether some char `c` is followed (after = true) or preceded by a \s char
+  private def nextToWs(text: String, c: Char, after: Boolean): Boolean = {
+    var p = text.indexOf(c)
+    while (p >= 0) {
+      val q = if (after) p + 1 else p - 1
+      if (q >= 0 && q < text.length && isUniWs(text.charAt(q))) return true
+      p = text.indexOf(c, p + 1)
+    }
+    false
+  }
+
+  // whether some maximal \s run has a \d on both sides (read forwards)
+  private def digitWsDigit(text: String): Boolean = {
+    val n = text.length
+    var i = 1
+    while (i < n) {
+      if (isUniWs(text.charAt(i)) && Character.isDigit(text.codePointBefore(i))) {
+        while (i < n && isUniWs(text.charAt(i))) i += 1
+        if (isUniDigitAt(text, i)) return true
+      }
+      i += 1
+    }
+    false
+  }
+
   /** table_fixes.py:157-165 */
   def stripCurrencyPrefixDup(text: String): String =
-    if (!hasCurrencyLetter(text)) text
+    if (!hasCurrencyLetter(text) || !anchored(text, firstDigit = true, 3)) text
     else matchAt(CurrencyPrefixDup, text) match {
       case Some(m) if m.end == text.length =>
         val prefix = digitsOnly(m.group(1))
@@ -164,7 +221,7 @@ object CellClean {
 
   /** table_fixes.py:168-172 */
   def stripCurrencyTrailingShortToken(text: String): String =
-    if (!hasCurrencyLetter(text)) text
+    if (!hasCurrencyLetter(text) || !anchored(text, firstDigit = true, 3)) text
     else matchAt(CurrencyTrailingShort, text) match {
       case Some(m) => s"${m.group(2)} ${m.group(1)}"
       case None => text
@@ -172,7 +229,16 @@ object CellClean {
 
   /** table_fixes.py:175-185 */
   def stripDuplicateCurrencySuffix(text: String): String = {
-    if (!hasCurrencyLetter(text)) return text
+    // tokens(0) must be RON or EUR and tokens.last the same: test both in
+    // place before tokenizing
+    var i = 0
+    while (i < text.length && isSplitWs(text.charAt(i))) i += 1
+    var e = text.length
+    while (e > i && isSplitWs(text.charAt(e - 1))) e -= 1
+    if (!(text.startsWith("RON", i) || text.startsWith("EUR", i)) ||
+        (i + 3 < text.length && !isSplitWs(text.charAt(i + 3))) ||
+        e - i < 7 || !text.regionMatches(i, text, e - 3, 3) || !isSplitWs(text.charAt(e - 4)))
+      return text
     val tokens = split(text)
     if (tokens.length < 3) return text
     if (tokens(0) != "RON" && tokens(0) != "EUR") return text
@@ -181,30 +247,47 @@ object CellClean {
     tokens.dropRight(1).mkString(" ")
   }
 
-  private val DigitSpDigit = re("(?<=\\d)\\s+(?=\\d)")
-  private val DigitSpPunct = re("(?<=\\d)\\s+(?=[.,])")
-  private val PunctSpDigit = re("(?<=[.,])\\s+(?=\\d)")
-  private val MultiWs = re("\\s{2,}")
-  /** table_fixes.py:188-195 */
+  /** table_fixes.py:188-195 — the four subs as one scan over the maximal
+    * `\s` runs. A run is never split by a sub (each needs its whole run:
+    * the lookbehind sees a non-`\s` char only at a run's start, the
+    * lookahead only at its end), and removing one run leaves the neighbours
+    * of the others as they were, so each run's fate depends on its two
+    * neighbours and its length alone:
+    *  - `(?<=\d)\s+(?=\d)`, `(?<=\d)\s+(?=[.,])`, `(?<=[.,])\s+(?=\d)`
+    *    delete it (a lookbehind reads one char, a lookahead a code point);
+    *  - `\s{2,}` turns what is left of length >= 2 into one space. */
   def compactNumberSpacing(text: String): String = {
     if (!isNumericish(text)) return text
-    // every sub needs a \s and strip only removes edge whitespace: a
-    // whitespace-free string is unchanged. isWhitespace || isSpaceChar
-    // covers the Unicode White_Space set the regexes' \s uses EXCEPT
-    // U+0085 (NEL, category Cc) — include it explicitly
-    if (!text.exists(c => Character.isWhitespace(c) || Character.isSpaceChar(c) ||
-        c == '\u0085'))
-      return text
-    var compacted = sub(DigitSpDigit, "", text)
-    compacted = sub(DigitSpPunct, "", compacted)
-    compacted = sub(PunctSpDigit, "", compacted)
-    compacted = sub(MultiWs, " ", compacted)
+    val n = text.length
+    var sb: java.lang.StringBuilder = null
+    var last = 0
+    var i = 0
+    while (i < n) {
+      if (!isUniWs(text.charAt(i))) i += 1
+      else {
+        val start = i
+        while (i < n && isUniWs(text.charAt(i))) i += 1
+        val before = if (start > 0) text.charAt(start - 1) else ' '
+        val digitAfter = isUniDigitAt(text, i)
+        val punctAfter = i < n && (text.charAt(i) == '.' || text.charAt(i) == ',')
+        val delete =
+          (Character.isDigit(before) && (digitAfter || punctAfter)) ||
+            ((before == '.' || before == ',') && digitAfter)
+        if (delete || i - start >= 2) {
+          if (sb == null) sb = new java.lang.StringBuilder(n)
+          sb.append(text, last, start)
+          if (!delete) sb.append(' ')
+          last = i
+        }
+      }
+    }
+    val compacted = if (sb == null) text else sb.append(text, last, n).toString
     compacted.strip()
   }
 
   /** table_fixes.py:198-202 */
   def normalizeCurrencySuffix(text: String): String =
-    if (!hasCurrencyLetter(text)) text
+    if (!hasCurrencyLetter(text) || !anchored(text, firstDigit = true, 2)) text
     else matchAt(CurrencySuffix, text) match {
       case Some(m) => s"${m.group(2)} ${m.group(1)}"
       case None => text
@@ -214,10 +297,10 @@ object CellClean {
   def fixMissingCurrencyLetter(text: String): String =
     // both branches need a literal "ON" or "RO" — no 'O', no match
     if (text.indexOf('O') < 0) text
-    else matchAt(CurrencyMissingR, text) match {
+    else (if (anchored(text, firstDigit = true, 2)) matchAt(CurrencyMissingR, text) else None) match {
       case Some(m) => s"RON ${m.group(1)}"
       case None =>
-        if (isNumericish(text) && hasMatch(CurrencyRoToken, text) && !text.contains("RON"))
+        if (!text.contains("RON") && indexOfWordToken(text, "RO") >= 0 && isNumericish(text))
           sub(CurrencyRoToken, "RON", text)
         else text
     }
@@ -225,22 +308,26 @@ object CellClean {
   /** table_fixes.py:214-236 */
   def dedupeRepeatedCurrencyValue(text: String): String = {
     if (!hasCurrencyLetter(text)) return text
-    matchAt(CurrencyRepeatPrefix, text).foreach { m =>
+    // the first pattern has four tokens and starts with RON or EUR, the next
+    // three four tokens and a digit, the last three tokens and a digit
+    if (anchored(text, firstDigit = false, 4)) matchAt(CurrencyRepeatPrefix, text).foreach { m =>
       return s"${m.group(1)} ${m.group(2)}"
     }
-    matchAt(CurrencyRepeatSuffix, text).foreach { m =>
-      return s"${m.group(2)} ${m.group(1)}"
+    if (anchored(text, firstDigit = true, 4)) {
+      matchAt(CurrencyRepeatSuffix, text).foreach { m =>
+        return s"${m.group(2)} ${m.group(1)}"
+      }
+      matchAt(CurrencyExtraPrefix, text).foreach { m =>
+        return s"${m.group(2)} ${m.group(3)}"
+      }
+      matchAt(CurrencyOnMiddle, text).foreach { m =>
+        val prefixDigits = digitsOnly(m.group(1))
+        val valueDigits = digitsOnly(m.group(2))
+        if (prefixDigits.nonEmpty && valueDigits.startsWith(prefixDigits))
+          return s"${m.group(3)} ${m.group(2)}"
+      }
     }
-    matchAt(CurrencyExtraPrefix, text).foreach { m =>
-      return s"${m.group(2)} ${m.group(3)}"
-    }
-    matchAt(CurrencyOnMiddle, text).foreach { m =>
-      val prefixDigits = digitsOnly(m.group(1))
-      val valueDigits = digitsOnly(m.group(2))
-      if (prefixDigits.nonEmpty && valueDigits.startsWith(prefixDigits))
-        return s"${m.group(3)} ${m.group(2)}"
-    }
-    matchAt(CurrencyPrefixOnly, text).foreach { m =>
+    if (anchored(text, firstDigit = true, 3)) matchAt(CurrencyPrefixOnly, text).foreach { m =>
       val prefixDigits = digitsOnly(m.group(1))
       val valueDigits = digitsOnly(m.group(3))
       if (prefixDigits.nonEmpty && !valueDigits.startsWith(prefixDigits))
@@ -251,10 +338,11 @@ object CellClean {
 
   /** table_fixes.py:239-253 — keep 4-digit-year longest date. */
   def dedupeDatesInCell(text: String): String = {
-    if (!anyDigit(text)) return text // a date match needs digits
+    // two date matches need digits and four [./-]; a letter returns text
+    // after the match count anyway
+    if (dateSepCount(text) < 4 || !anyDigit(text) || anyAlpha(text)) return text
     val dates = findAll(DatePattern, text)
     if (dates.length < 2) return text
-    if (anyAlpha(text)) return text
     val scored = dates.map { date =>
       val parts = DateSepPattern.split(date, -1)
       val yearLen = if (parts.nonEmpty) parts.last.length else 0
@@ -280,10 +368,9 @@ object CellClean {
     candidates.sortBy(_._1).last._4
   }
 
-  /** table_fixes.py:445-447 — overlapping matches via lookahead wrapper. */
-  def overlappingDateMatches(pattern: java.util.regex.Pattern, text: String): List[(Int, String)] = {
-    val wrapped = re(s"(?=(${pattern.pattern}))")
-    val m = wrapped.matcher(text)
+  /** table_fixes.py:445-447 — overlapping fuzzy-date matches. */
+  private def fuzzyDateMatches(text: String): List[(Int, String)] = {
+    val m = DateFuzzyOverlapping.matcher(text)
     val out = List.newBuilder[(Int, String)]
     // java.util.regex advances past zero-width matches automatically,
     // matching CPython finditer-over-lookahead behavior.
@@ -311,8 +398,10 @@ object CellClean {
     if (text == null || text.isEmpty) return text
     var normalized = normalizeLigatures(normalizeMojibakeText(text))
     normalized = joinSplit(normalized)
-    if (fullMatch(DeltaPercent, normalized)) return "Δ%"
-    val dateMatches = findIter(DatePattern, normalized)
+    if (deltaLead(normalized) && fullMatch(DeltaPercent, normalized)) return "Δ%"
+    // a date match holds two [./-] chars, the fuzzy branch needs three
+    val seps = dateSepCount(normalized)
+    val dateMatches = if (seps < 2) Nil else findIter(DatePattern, normalized)
     var chosenYearLen = 0
     if (dateMatches.nonEmpty) {
       val chosen = chooseDateMatch(dateMatches)
@@ -324,9 +413,8 @@ object CellClean {
       if (normalized != chosen && fullMatch(DigitsOnlyAllPattern, normalized) && chosenYearLen == 4)
         return chosen
     }
-    if (chosenYearLen < 4 &&
-        normalized.count(_ == '/') + normalized.count(_ == '.') + normalized.count(_ == '-') > 2) {
-      val fuzzyMatches = overlappingDateMatches(DateFuzzyPattern, normalized)
+    if (chosenYearLen < 4 && seps > 2) {
+      val fuzzyMatches = fuzzyDateMatches(normalized)
       if (fuzzyMatches.nonEmpty) {
         val fuzzyChosen = chooseDateMatch(fuzzyMatches)
         val repaired = repairFuzzyDate(fuzzyChosen)
@@ -334,13 +422,18 @@ object CellClean {
           return repaired
       }
     }
-    val words = split(normalized)
-    if (words.length % 2 == 0 && words.nonEmpty) {
-      val mid = words.length / 2
-      if (words.take(mid).sameElements(words.drop(mid))) return words.take(mid).mkString(" ")
-    }
+    // joinSplit's output is single-space separated: its token list is two
+    // equal halves iff the string is "X X" (odd length, ' ' in the middle)
+    val n = normalized.length
+    val mid = n / 2
+    if (n % 2 == 1 && normalized.charAt(mid) == ' ' &&
+        normalized.regionMatches(0, normalized, mid + 1, mid))
+      return normalized.substring(0, mid)
     normalized
   }
+
+  private def deltaLead(s: String): Boolean =
+    s.nonEmpty && { val c = s.charAt(0); c == 'ƒ' || c == '∆' || c == 'Δ' }
 
   /** table_fixes.py:510-515 */
   private def mergeLeadingGroup(m: java.util.regex.Matcher): String = {
@@ -354,29 +447,29 @@ object CellClean {
     if (text == null || text.isEmpty) return text
     var cleaned = normalizeMojibakeText(text)
     cleaned = normalizeLigatures(cleaned).strip()
-    // guards (round 6): each regex step runs only when the characters its
-    // pattern literally requires are present — provably identical output,
-    // and a typical already-clean cell skips most of the chain
-    if (cleaned.nonEmpty) {
-      val c0 = cleaned.charAt(0)
-      if ((c0 == 'ƒ' || c0 == '∆' || c0 == 'Δ') && fullMatch(DeltaPercent, cleaned))
-        return "Δ%"
-    }
-    if (cleaned.indexOf('%') >= 0) {
-      cleaned = sub(DupPercent, "$1%", cleaned)
-      cleaned = sub(SpacedPercent, "$1%", cleaned)
-    }
-    if (cleaned.indexOf('-') >= 0) cleaned = sub(NegativeSpace, "-", cleaned)
-    if (cleaned.indexOf('.') >= 0 && anyDigit(cleaned)) {
+    // guards: each regex step runs only when the text holds what its
+    // pattern needs to match (or, for SpacedPercent, to change the text) —
+    // identical output, and a clean cell skips every regex of the chain
+    if (deltaLead(cleaned) && fullMatch(DeltaPercent, cleaned)) return "Δ%"
+    // DupPercent needs "%\s"; SpacedPercent rewrites a match to itself
+    // unless "\s%" occurs
+    if (nextToWs(cleaned, '%', after = true)) cleaned = sub(DupPercent, "$1%", cleaned)
+    if (nextToWs(cleaned, '%', after = false)) cleaned = sub(SpacedPercent, "$1%", cleaned)
+    if (nextToWs(cleaned, '-', after = true)) cleaned = sub(NegativeSpace, "-", cleaned)
+    // both group patterns need a '.' and a \s run between two digits
+    if (cleaned.indexOf('.') >= 0 && digitWsDigit(cleaned)) {
       cleaned = sub(DupGroup, "$1$2", cleaned)
       cleaned = subFn(LeadingGroup, cleaned)(mergeLeadingGroup)
     }
     cleaned = joinSplit(cleaned)
     if (anyDigit(cleaned)) cleaned = stripChars(cleaned, "[]")
     cleaned = compactNumberSpacing(cleaned)
-    if ((cleaned.indexOf('(') >= 0 || cleaned.indexOf(')') >= 0) && isNumericish(cleaned)) {
-      cleaned = sub(ParensSpaceOpen, "(", cleaned)
-      cleaned = sub(ParensSpaceClose, ")", cleaned)
+    // the paren subs need "(\s" and "\s)"; the first cannot make the second
+    val openWs = nextToWs(cleaned, '(', after = true)
+    val closeWs = nextToWs(cleaned, ')', after = false)
+    if ((openWs || closeWs) && isNumericish(cleaned)) {
+      if (openWs) cleaned = sub(ParensSpaceOpen, "(", cleaned)
+      if (closeWs) cleaned = sub(ParensSpaceClose, ")", cleaned)
     }
     cleaned = normalizeCurrencySuffix(cleaned)
     cleaned = fixMissingCurrencyLetter(cleaned)

@@ -24,7 +24,8 @@ object MarkdownPost {
   private val AxisAllowedPattern = re("^[0-9A-Za-z%./+\\-\\s]+$")
   private val AxisTokenPattern = reI("^(?:\\d{1,4}(?:[.,]\\d+)?%?|[12]\\d{3}|Q[1-4]|9L|L9|mil|mil\\.|RON|EUR|USD|LEI)$")
   private val AxisWordToken = re("[A-Za-z0-9%]+")
-  private val BlockSplit = re("\\n{2,}")
+  // ASCII \s (no UNICODE_CHARACTER_CLASS), as String.replaceAll compiled it
+  private val TrailingWs = java.util.regex.Pattern.compile("\\s+$")
 
   /** replaceAll(PageMarkerPattern, "") without running the alternation at
     * every position: a marker can only start at "<!--", "[//]" or "**", so
@@ -59,14 +60,96 @@ object MarkdownPost {
   private def normalizeHeading(text: String): String =
     joinSplit(text).toLowerCase(Locale.ROOT)
 
+  // ---- line scanning over index ranges ------------------------------------
+  // The passes look at `line.strip()` of each line of `splitLines(part)`;
+  // the helpers below give the same lines and stripped bounds as indices, so
+  // a line is copied only when a check needs it as a String.
+
+  /** First index in [from, to) not stripped by String.strip, or `to`. */
+  private def stripStart(s: String, from: Int, to: Int): Int = {
+    var i = from
+    while (i < to && Character.isWhitespace(s.charAt(i))) i += 1
+    i
+  }
+
+  /** End of `s[from, to)` after String.strip's trailing cut. */
+  private def stripEnd(s: String, from: Int, to: Int): Int = {
+    var j = to
+    while (j > from && Character.isWhitespace(s.charAt(j - 1))) j -= 1
+    j
+  }
+
+  /** End of the lines `splitLines(part)` yields: one final '\n' is dropped. */
+  private def linesEnd(part: String): Int =
+    if (part.nonEmpty && part.charAt(part.length - 1) == '\n') part.length - 1 else part.length
+
+  /** End of the line that starts at `a` (lines cover [0, end)). */
+  private def lineEnd(part: String, a: Int, end: Int): Int = {
+    val b = part.indexOf('\n', a)
+    if (b < 0 || b > end) end else b
+  }
+
+  /** `splitLines(part).filter(keep).mkString("\n")`, where `keep` gets each
+    * line as the range [a, b) and is called in line order. When every line
+    * is kept the result is the part less one final '\n', with no copy of
+    * the lines. */
+  private def filterLines(part: String)(keep: (Int, Int) => Boolean): String = {
+    if (part.isEmpty) return part
+    val end = linesEnd(part)
+    var sb: java.lang.StringBuilder = null
+    var emitted = 0
+    var lines = 0
+    var a = 0
+    var more = true
+    while (more) {
+      val b = lineEnd(part, a, end)
+      if (keep(a, b)) {
+        if (sb != null) {
+          if (emitted > 0) sb.append('\n')
+          sb.append(part, a, b)
+        }
+        emitted += 1
+      } else if (sb == null) {
+        // every earlier line was kept: they are part[0, a - 1)
+        sb = new java.lang.StringBuilder(part.length)
+        if (lines > 0) sb.append(part, 0, a - 1)
+      }
+      lines += 1
+      more = b < end
+      a = b + 1
+    }
+    if (sb != null) sb.toString
+    else if (end == part.length) part
+    else part.substring(0, end)
+  }
+
+  /** The stripped text of the first line in `part` that is not blank, an
+    * image placeholder or a page marker, or null. */
+  private def firstMeaningfulLine(part: String): String = {
+    if (part.isEmpty) return null
+    val end = linesEnd(part)
+    var a = 0
+    while (a <= end) {
+      val b = lineEnd(part, a, end)
+      val sa = stripStart(part, a, b)
+      if (sa < b) {
+        val c = part.charAt(sa)
+        val s = part.substring(sa, stripEnd(part, sa, b))
+        if (!(imageLead(c) && maybeImagePlaceholder(s)) && !maybePageMarker(s)) return s
+      }
+      a = b + 1
+    }
+    null
+  }
+
   /** export_utils.py:44-61 */
   def addVisiblePageMarkers(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
     val stripped = stripPageMarkers(markdown)
     if (!stripped.contains(placeholder)) {
-      if (stripped.strip().isEmpty) return stripped
+      if (stripped.isBlank) return stripped
       return s"**[Page 1]**\n\n${stripped.strip()}"
     }
-    val parts = stripped.split(java.util.regex.Pattern.quote(placeholder), -1).map(_.strip())
+    val parts = splitLiteral(stripped, placeholder).map(_.strip())
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var pageNo = 1
     for (part <- parts if part.nonEmpty) {
@@ -81,23 +164,14 @@ object MarkdownPost {
                           removeImagePlaceholders: Boolean = false,
                           repeatedHeadingRatio: Double = 0.3,
                           minRepeatedHeadingCount: Int = 3): String = {
-    if (markdown.strip().isEmpty) return markdown
+    if (markdown.isBlank) return markdown
     val hasBreaks = markdown.contains(placeholder)
     val rawParts: Array[String] =
-      if (hasBreaks) markdown.split(java.util.regex.Pattern.quote(placeholder), -1)
-      else Array(markdown)
+      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
 
     val firstHeadings: Array[Option[String]] = rawParts.map { part =>
-      var heading: Option[String] = None
-      var done = false
-      for (line <- splitLines(part) if !done) {
-        val s = line.strip()
-        if (s.nonEmpty && !maybeImagePlaceholder(s) && !maybePageMarker(s)) {
-          heading = headingMatch(s).map(_.group(2))
-          done = true
-        }
-      }
-      heading
+      val s = firstMeaningfulLine(part)
+      if (s == null) None else headingMatch(s).map(_.group(2))
     }
 
     val totalPages = rawParts.length
@@ -116,25 +190,26 @@ object MarkdownPost {
 
     val keptOnce = scala.collection.mutable.Set.empty[String]
     val cleanedParts = rawParts.zip(firstHeadings).map { case (part, headingOpt) =>
-      val headingKey = headingOpt.map(normalizeHeading)
-      val linesOut = scala.collection.mutable.ArrayBuffer.empty[String]
+      val headingKey = headingOpt.map(normalizeHeading).orNull
+      val repeated = headingKey != null && frequent.contains(headingKey)
       var removedHeading = false
-      for (line <- splitLines(part)) {
-        val s = line.strip()
-        var emit = true
-        if (removeImagePlaceholders && maybeImagePlaceholder(s)) emit = false
-        else if (!removedHeading && headingOpt.nonEmpty && headingKey.exists(frequent.contains) &&
-                 s.nonEmpty) {
-          headingMatch(s) match {
-            case Some(m) if normalizeHeading(m.group(2)) == headingKey.get =>
-              if (keptOnce.contains(headingKey.get)) { removedHeading = true; emit = false }
-              else keptOnce += headingKey.get
-            case _ =>
-          }
+      filterLines(part) { (a, b) =>
+        val sa = stripStart(part, a, b)
+        if (sa == b) true
+        else {
+          val c = part.charAt(sa)
+          if (removeImagePlaceholders && imageLead(c) &&
+              maybeImagePlaceholder(part.substring(sa, stripEnd(part, sa, b)))) false
+          else if (!removedHeading && repeated && c == '#') {
+            headingMatch(part.substring(sa, stripEnd(part, sa, b))) match {
+              case Some(m) if normalizeHeading(m.group(2)) == headingKey =>
+                if (keptOnce.contains(headingKey)) { removedHeading = true; false }
+                else { keptOnce += headingKey; true }
+              case _ => true
+            }
+          } else true
         }
-        if (emit) linesOut += line
       }
-      linesOut.mkString("\n")
     }
 
     if (!hasBreaks) cleanedParts(0)
@@ -156,27 +231,31 @@ object MarkdownPost {
     val c = s.charAt(0)
     (c == '<' || c == '[' || c == '*') && lookingAt(PageMarkerPattern, s)
   }
-  private def maybeImagePlaceholder(s: String): Boolean = {
-    if (s.isEmpty) return false
-    val c = s.charAt(0)
-    (c == '<' || c < '!' || c > '~') && fullMatchLookingAt(ImagePlaceholderPattern, s)
-  }
+  private def imageLead(c: Char): Boolean = c == '<' || c < '!' || c > '~'
+  private def maybeImagePlaceholder(s: String): Boolean =
+    s.nonEmpty && imageLead(s.charAt(0)) && fullMatchLookingAt(ImagePlaceholderPattern, s)
   private def headingMatch(s: String): Option[java.util.regex.Matcher] =
     if (s.isEmpty || s.charAt(0) != '#') None else matchAt(HeadingPattern, s)
 
   /** export_utils.py:169-182 — one allocation-free scan (round 6): newline,
     * token count (Py.split semantics), letter and uppercase counts all come
-    * from a single pass; the checks themselves are unchanged. */
+    * from a single pass; the heading regex runs last, on what passes the
+    * rest. */
   def isKpiLabel(text: String): Boolean = {
     val stripped = text.strip()
-    if (stripped.isEmpty) return false
-    var i = 0
+    kpiLabelAt(stripped, 0, stripped.length)
+  }
+
+  /** isKpiLabel of s[from, to), a range String.strip leaves as it is. */
+  private def kpiLabelAt(s: String, from: Int, to: Int): Boolean = {
+    if (from >= to) return false
+    var i = from
     var tokens = 0
     var inTok = false
     var letters = 0
     var upper = 0
-    while (i < stripped.length) {
-      val c = stripped.charAt(i)
+    while (i < to) {
+      val c = s.charAt(i)
       if (c == '\n') return false
       if (Py.isSplitWs(c)) inTok = false
       else {
@@ -188,10 +267,10 @@ object MarkdownPost {
       }
       i += 1
     }
-    if (stripped.charAt(0) == '#' && lookingAt(HeadingPattern, stripped)) return false
     if (tokens > 5) return false
     if (letters == 0) return false
-    upper.toDouble / letters >= 0.7
+    if (upper.toDouble / letters < 0.7) return false
+    !(s.charAt(from) == '#' && lookingAt(HeadingPattern, s.substring(from, to)))
   }
 
   /** export_utils.py:185-195 */
@@ -219,44 +298,53 @@ object MarkdownPost {
     firstAlpha.exists(Character.isUpperCase)
   }
 
-  /** export_utils.py:223-260 — greedy KPI label+value merge. */
+  /** export_utils.py:223-260 — greedy KPI label+value merge. The
+    * `\n{2,}` split is a scan for "\n\n" that skips the rest of the run, and
+    * blocks are index ranges: only labels and their candidate values are
+    * copied out. */
   def normalizeKpiBlocks(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
-    if (markdown.strip().isEmpty) return markdown
+    if (markdown.isBlank) return markdown
     val hasBreaks = markdown.contains(placeholder)
     val rawParts: Array[String] =
-      if (hasBreaks) markdown.split(java.util.regex.Pattern.quote(placeholder), -1)
-      else Array(markdown)
+      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
 
     val cleanedParts = rawParts.map { part =>
-      val blocks = BlockSplit.split(part, -1).filter(_.strip().nonEmpty)
-      val outBlocks = scala.collection.mutable.ArrayBuffer.empty[String]
+      // the stripped, non-blank blocks as [starts(k), ends(k))
+      val starts = Array.newBuilder[Int]
+      val ends = Array.newBuilder[Int]
+      val n = part.length
+      var a = 0
+      while (a <= n) {
+        var b = part.indexOf("\n\n", a)
+        if (b < 0) b = n
+        val sa = stripStart(part, a, b)
+        if (sa < b) { starts += sa; ends += stripEnd(part, sa, b) }
+        a = b
+        while (a < n && part.charAt(a) == '\n') a += 1
+        if (b == n) a = n + 1
+      }
+      val bs = starts.result()
+      val be = ends.result()
+      def block(k: Int) = part.substring(bs(k), be(k))
+      val out = new java.lang.StringBuilder(n)
       var i = 0
-      while (i < blocks.length) {
-        val block = blocks(i).strip()
-        var handled = false
-        if (isKpiLabel(block)) {
-          var merged = block
-          var consumed = 1
-          var j = i + 1
-          val limit = math.min(i + 3, blocks.length)
+      while (i < bs.length) {
+        if (out.length > 0) out.append("\n\n")
+        out.append(part, bs(i), be(i))
+        var consumed = 1
+        if (kpiLabelAt(part, bs(i), be(i))) {
           var stop = false
-          while (j < limit && !stop) {
-            val candidate = blocks(j).strip()
+          while (!stop && consumed < 3 && i + consumed < bs.length) {
+            val candidate = block(i + consumed)
             if (isKpiValue(candidate)) {
-              merged = s"$merged ${joinSplit(candidate)}"
+              out.append(' ').append(joinSplit(candidate))
               consumed += 1
             } else stop = true
-            j += 1
-          }
-          if (consumed > 1) {
-            outBlocks += merged
-            i += consumed
-            handled = true
           }
         }
-        if (!handled) { outBlocks += block; i += 1 }
+        i += consumed
       }
-      outBlocks.mkString("\n\n")
+      out.toString
     }
 
     if (!hasBreaks) cleanedParts(0)
@@ -278,84 +366,89 @@ object MarkdownPost {
     false
   }
 
-  /** export_utils.py:282-319 */
+  /** export_utils.py:282-319 — a line is dropped only if isAxisLikeLine
+    * holds, which needs at most 40 chars and a digit; other lines are kept
+    * without being copied out. */
   def removeAxisLikeLines(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
-    if (markdown.strip().isEmpty) return markdown
+    if (markdown.isBlank) return markdown
     val hasBreaks = markdown.contains(placeholder)
     val rawParts: Array[String] =
-      if (hasBreaks) markdown.split(java.util.regex.Pattern.quote(placeholder), -1)
-      else Array(markdown)
+      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
 
     val cleanedParts = rawParts.map { part =>
-      val linesOut = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (line <- splitLines(part)) {
-        val s = line.strip()
-        val keep =
-          if (s.isEmpty) true
-          else if (maybePageMarker(s)) true
+      filterLines(part) { (a, b) =>
+        val sa = stripStart(part, a, b)
+        val sb = stripEnd(part, sa, b)
+        if (sb - sa > 40 || !hasDigit(part, sa, sb)) true
+        else {
+          val s = part.substring(sa, sb)
+          if (maybePageMarker(s)) true
           else if (maybeImagePlaceholder(s)) true
           else if (s.charAt(0) == '#' && lookingAt(HeadingPattern, s)) true
           else if (s.contains("|")) true
           else !isAxisLikeLine(s)
-        if (keep) linesOut += line
+        }
       }
-      linesOut.mkString("\n")
     }
 
     if (!hasBreaks) cleanedParts(0)
     else cleanedParts.mkString(s"\n\n$placeholder\n\n")
   }
 
-  /** export_utils.py:322-379 — drop page-final headings with no follow-up. */
+  private def hasDigit(s: String, from: Int, to: Int): Boolean = {
+    var i = from
+    while (i < to) {
+      if (Character.isDigit(s.charAt(i))) return true
+      i += 1
+    }
+    false
+  }
+
+  /** export_utils.py:322-379 — drop page-final headings with no follow-up.
+    * Each part's last non-blank line is found by scanning back from its end;
+    * a part is copied only when that line is a heading to drop. */
   def removeOrphanHeadings(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
-    if (markdown.strip().isEmpty) return markdown
+    if (markdown.isBlank) return markdown
     val hasBreaks = markdown.contains(placeholder)
     val rawParts: Array[String] =
-      if (hasBreaks) markdown.split(java.util.regex.Pattern.quote(placeholder), -1)
-      else Array(markdown)
+      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
 
     def nextMeaningfulLine(startIndex: Int): Option[String] = {
       var pi = startIndex
       while (pi < rawParts.length) {
-        for (line <- splitLines(rawParts(pi))) {
-          val s = line.strip()
-          if (s.nonEmpty && !maybePageMarker(s) && !maybeImagePlaceholder(s)) return Some(s)
-        }
+        val s = firstMeaningfulLine(rawParts(pi))
+        if (s != null) return Some(s)
         pi += 1
       }
       None
     }
 
-    val cleanedParts = rawParts.zipWithIndex.map { case (partIn, idx) =>
-      var part = partIn
-      val lines = splitLines(part).toBuffer
-      var lastIdx = -1
-      var li = lines.length - 1
-      while (li >= 0 && lastIdx == -1) {
-        if (lines(li).strip().nonEmpty) lastIdx = li
-        li -= 1
+    val cleanedParts = rawParts.zipWithIndex.map { case (part, idx) =>
+      // the last line of splitLines(part) that is not blank: [ls, le)
+      val end = linesEnd(part)
+      var le = end
+      var ls = part.lastIndexOf('\n', le - 1) + 1
+      while (ls > 0 && stripStart(part, ls, le) == le) {
+        le = ls - 1
+        ls = part.lastIndexOf('\n', le - 1) + 1
       }
-      if (lastIdx == -1) part
-      else {
-        val stripped = lines(lastIdx).strip()
-        headingMatch(stripped) match {
-          case Some(m) =>
-            val headingLevel = m.group(1).length
-            nextMeaningfulLine(idx + 1) match {
-              case None =>
-                lines(lastIdx) = ""
-                part = lines.mkString("\n").replaceAll("\\s+$", "")
-              case Some(nextLine) =>
-                val nextMatch = headingMatch(nextLine)
-                val superseding = nextMatch.exists(_.group(1).length <= headingLevel)
-                if (superseding || isHeadingLikeLine(nextLine)) {
-                  lines(lastIdx) = ""
-                  part = lines.mkString("\n").replaceAll("\\s+$", "")
-                }
-            }
-            part
-          case None => part
-        }
+      val sa = stripStart(part, ls, le)
+      if (sa == le || part.charAt(sa) != '#') part
+      else headingMatch(part.substring(sa, stripEnd(part, sa, le))) match {
+        case Some(m) =>
+          val headingLevel = m.group(1).length
+          val orphan = nextMeaningfulLine(idx + 1) match {
+            case None => true
+            case Some(nextLine) =>
+              headingMatch(nextLine).exists(_.group(1).length <= headingLevel) ||
+                isHeadingLikeLine(nextLine)
+          }
+          // the lines joined with that one emptied, then the trailing ASCII
+          // whitespace cut
+          if (orphan)
+            TrailingWs.matcher(part.substring(0, ls) + part.substring(le, end)).replaceAll("")
+          else part
+        case None => part
       }
     }
 
@@ -366,7 +459,7 @@ object MarkdownPost {
   /** audit_utils.py:336-343 */
   def splitMarkdownPages(markdown: String, placeholder: String = PageBreakPlaceholder): List[String] = {
     if (!markdown.contains(placeholder)) return List(markdown)
-    markdown.split(java.util.regex.Pattern.quote(placeholder), -1).toList
+    splitLiteral(markdown, placeholder).toList
       .map(_.strip()).filter(_.nonEmpty)
   }
 

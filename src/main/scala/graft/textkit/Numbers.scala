@@ -10,7 +10,6 @@ object Numbers {
   val NumberPattern = re("(?<!\\w)[+-]?(?:\\d{1,3}(?:[ .]\\d{3})+|\\d+)(?:[.,]\\d+)?%?")
   val DatePattern = re("\\b\\d{1,2}[./-]\\d{1,2}[./-]\\d{2,4}\\b")
   private val WordToken = re("\\w+")
-  private val NonDigit = re("\\D")
 
   /** audit_utils.py:173-174 — casefold + strip underscores.
     * Locale.ROOT lowercase matches casefold for the corpus charset
@@ -54,5 +53,22 @@ object Numbers {
     reference.count(candidate.contains).toDouble / reference.length
   }
 
-  def digitsOnly(value: String): String = sub(NonDigit, "", value)
+  /** `sub(\D, "", value)` as a scan: the `\d` code points of value, in order. */
+  def digitsOnly(value: String): String = {
+    val n = value.length
+    var sb: java.lang.StringBuilder = null
+    var i = 0
+    while (i < n) {
+      val cp = value.codePointAt(i)
+      val w = Character.charCount(cp)
+      if (Character.isDigit(cp)) {
+        if (sb != null) sb.appendCodePoint(cp)
+      } else if (sb == null) {
+        sb = new java.lang.StringBuilder(n)
+        sb.append(value, 0, i)
+      }
+      i += w
+    }
+    if (sb == null) value else sb.toString
+  }
 }

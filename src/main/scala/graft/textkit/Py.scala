@@ -77,6 +77,85 @@ object Py {
     s.substring(i)
   }
 
+  // Exact per-char forms of the UNICODE_CHARACTER_CLASS classes, for the
+  // scanners that stand in for regex steps (java.util.regex.CharPredicates).
+
+  /** `\s`: the White_Space property (Zs, Zl, Zp, U+0009..U+000D, U+0085).
+    * Unlike Character.isWhitespace it holds for U+00A0, U+2007 and U+202F
+    * and not for U+001C..U+001F. No supplementary char is White_Space. */
+  def isUniWs(c: Char): Boolean =
+    (c >= '\t' && c <= '\r') || c == ' ' || c == '\u0085' || (c > '\u0085' && {
+      val t = Character.getType(c)
+      t == Character.SPACE_SEPARATOR || t == Character.LINE_SEPARATOR ||
+        t == Character.PARAGRAPH_SEPARATOR
+    })
+
+  /** `\w` of one code point. */
+  def isUniWord(cp: Int): Boolean =
+    Character.isAlphabetic(cp) || cp == 0x200C || cp == 0x200D || {
+      val t = Character.getType(cp)
+      t == Character.NON_SPACING_MARK || t == Character.ENCLOSING_MARK ||
+        t == Character.COMBINING_SPACING_MARK || t == Character.DECIMAL_DIGIT_NUMBER ||
+        t == Character.CONNECTOR_PUNCTUATION
+    }
+
+  /** `\d` at index i (a whole code point, as a forward match reads it). */
+  def isUniDigitAt(s: String, i: Int): Boolean =
+    i < s.length && Character.isDigit(s.codePointAt(i))
+
+  /** `\w` of the code point ending at index i (false at i == 0). */
+  def isUniWordBefore(s: String, i: Int): Boolean =
+    i > 0 && isUniWord(s.codePointBefore(i))
+
+  /** `\w` of the code point starting at index i (false at the end). */
+  def isUniWordAt(s: String, i: Int): Boolean =
+    i < s.length && isUniWord(s.codePointAt(i))
+
+  /** First index where `\bword\b` matches in s, or -1, for a word of `\w`
+    * chars: an indexOf scan with the two boundary checks instead of a regex
+    * search. */
+  def indexOfWordToken(s: String, word: String): Int = {
+    var p = s.indexOf(word)
+    while (p >= 0) {
+      if (!isUniWordBefore(s, p) && !isUniWordAt(s, p + word.length)) return p
+      p = s.indexOf(word, p + 1)
+    }
+    -1
+  }
+
+  /** Number of maximal non-`\s` runs: a pattern `^t1\s+t2 .. \s+tk$` of
+    * non-`\s` tokens needs exactly k (`$` may precede one final line
+    * terminator, and every line terminator is `\s`). */
+  def wsTokens(s: String): Int = {
+    val n = s.length
+    var tokens = 0
+    var inTok = false
+    var i = 0
+    while (i < n) {
+      val ws = isUniWs(s.charAt(i))
+      if (!ws && !inTok) tokens += 1
+      inTok = !ws
+      i += 1
+    }
+    tokens
+  }
+
+  /** `s.split(Pattern.quote(sep), -1)` without compiling the pattern. */
+  def splitLiteral(s: String, sep: String): Array[String] = {
+    if (sep.isEmpty) return s.split(Pattern.quote(sep), -1)
+    var p = s.indexOf(sep)
+    if (p < 0) return Array(s)
+    val out = Array.newBuilder[String]
+    var last = 0
+    while (p >= 0) {
+      out += s.substring(last, p)
+      last = p + sep.length
+      p = s.indexOf(sep, last)
+    }
+    out += s.substring(last)
+    out.result()
+  }
+
   def isAlphaStr(s: String): Boolean = s.nonEmpty && s.forall(Character.isLetter)
   def isDigitStr(s: String): Boolean = s.nonEmpty && s.forall(Character.isDigit)
   def isAlnumStr(s: String): Boolean = s.nonEmpty && s.forall(Character.isLetterOrDigit)
