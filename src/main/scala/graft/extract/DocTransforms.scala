@@ -232,20 +232,13 @@ object DocTransforms {
     (out, updated)
   }
 
-  /** countSuspectTableCells with a cheap digit prefilter: a cell with no
-    * digit can never be a suspect currency cell (extractCurrencyNumber
-    * requires a number token), so the 15-step clean chain is skipped for
-    * word-only cells — the per-doc hot path at scale. */
-  def countSuspectTableCellsFast(doc: Doc): Int =
-    doc.items.flatMap(_.table).flatMap(_.cells).count { cell =>
-      cell.text != null && cell.text.exists(_.isDigit) &&
-        CellClean.isSuspectCurrencyCell(CellClean.cleanTableCellText(cell.text))
-    }
-
-  /** table_fixes.py:681-692 */
+  /** table_fixes.py:681-692, with a digit prefilter: a cell with no digit
+    * can never be a suspect currency cell (extractCurrencyNumber requires a
+    * number token), so the 15-step clean chain is skipped for word-only
+    * cells. */
   def countSuspectTableCells(doc: Doc): Int =
     doc.items.flatMap(_.table).flatMap(_.cells).count { cell =>
-      cell.text != null && cell.text.nonEmpty &&
+      cell.text != null && Py.anyDigit(cell.text) &&
         CellClean.isSuspectCurrencyCell(CellClean.cleanTableCellText(cell.text))
     }
 
@@ -407,11 +400,6 @@ object DocTransforms {
 
     (base.copy(items = newItems), replaced)
   }
-
-  /** Count of spaced table cells (merge_spaced_table_cells ratio_only path,
-    * table_fixes.py:798-804). */
-  def countSpacedTableCells(doc: Doc): Int =
-    doc.items.flatMap(_.table).flatMap(_.cells).count(c => Predicates.isSpacedText(c.text))
 
   /** Full reference pass order (conversion_utils.py:490-499). Returns the
     * transformed doc plus per-pass change counters for lineage metrics. */

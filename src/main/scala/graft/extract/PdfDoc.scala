@@ -11,7 +11,7 @@ import scala.collection.mutable
   *
   * Supports the classic-PDF subset digital reports use:
   *   - xref-table-driven object loading (incremental updates: later xref
-  *     sections override earlier), regex object scan as the fallback
+  *     sections override earlier), a raw object scan for what it omits
   *   - PDF 1.5 cross-reference STREAMS (/Type /XRef, ISO 32000-1 §7.5.8):
   *     /W-width binary rows, /Index subsections, Flate + PNG/TIFF
   *     /DecodeParms predictors, /Root from the stream dict, type-2 entries
@@ -25,14 +25,32 @@ import scala.collection.mutable
   *   - content interpreter with full matrix state (q Q cm, BT ET,
   *     Td TD Tm T* TL, Tc Tw Tz, Tj ' " TJ with kerning, octal escapes and
   *     hex strings) plus form-XObject recursion (`/Name Do`)
+  *   - damaged files: a file whose page tree parses to no page, or to
+  *     pages with no text, reads as one pseudo-page per content stream,
+  *     bodies after a `stream` keyword that no object claims included (see
+  *     [[Document.sizedPages]])
   *
-  * Emits the same Glyph convention as PdfText (top-left-flipped coords,
-  * spaces advance the pen without emitting a glyph, box spans
-  * baseline-0.2h..+0.8h) so every downstream consumer — SpacingRepair
-  * reconstruction, spatial cell joins — is agnostic to which parser
-  * produced the glyphs.
+  * This is the engine's only content-stream interpreter. Glyph convention:
+  * top-left-flipped coords, spaces advance the pen without emitting a
+  * glyph, the box spans baseline-0.2h..+0.8h.
   */
 object PdfDoc {
+  /** A glyph plus the device-space font size it was shown at (for
+    * PdfLayout's heading classification). */
+  case class SizedGlyph(glyph: Glyph, fontSize: Double)
+
+  /** Rough Helvetica advance widths (per mille of font size) for fonts
+    * without a /Widths entry — enough for gap clustering; exact metrics are
+    * not required because thresholds are relative (median char width). */
+  private def advance(c: Char): Double = c match {
+    case ' ' => 278
+    case 'i' | 'l' | 'j' | '!' | '\'' | '.' | ',' | ':' | ';' | '|' => 240
+    case 'f' | 't' | 'r' | '(' | ')' | '[' | ']' | '/' | '-' => 333
+    case 'm' | 'M' | 'W' | 'w' => 889
+    case c2 if c2.isUpper => 722
+    case _ => 556
+  }
+
   /** Undo a /DecodeParms predictor over decoded stream bytes. PNG predictors
     * (10-15: per-row filter byte, None/Sub/Up/Average/Paeth — PNG spec §6)
     * are what every modern producer wraps xref streams in; 2 is TIFF
@@ -262,6 +280,9 @@ object PdfDoc {
     }
   }
 
+  /** The `stream` keyword that opens a body (EOL next, not `endstream`). */
+  private val StreamKw = java.util.regex.Pattern.compile("(?<!end)stream(?=[\\r\\n])")
+
   /** Digit-string to Int that can never throw: -1 on overflow/garbage. */
   private def safeInt(digits: String): Int = {
     if (digits.isEmpty || digits.length > 10) return -1
@@ -283,13 +304,9 @@ object PdfDoc {
     /** /Encrypt present but locked (real password) or unsupported: encrypted
       * stream bodies degrade to empty rather than decoding garbage. */
     private var encryptedLocked: Boolean = false
-    /** True when the document is encrypted and could NOT be opened with the
-      * empty user password — callers must not fall back to raw byte scans
-      * (they would read ciphertext). */
-    def locked: Boolean = encryptedLocked
-    /** True when /Encrypt is present at all (decryptable or locked) — the
-      * raw-byte-scan fallback must be suppressed either way, since the file
-      * bytes are ciphertext even when WE can decrypt them. */
+    /** True when /Encrypt is present at all (decryptable or locked): no
+      * pseudo-pages then, since the file bytes are ciphertext even when
+      * they can be decrypted. */
     def encrypted: Boolean = encryptedLocked || decryptorOpt.nonEmpty
 
     /** obj number -> file offset, from every classic xref section in file
@@ -304,7 +321,8 @@ object PdfDoc {
         var more = true
         while (more) {
           val hm = header.matcher(s)
-          hm.region(pos, math.min(pos + 64, s.length))
+          // a truncated table leaves pos past the end: region(len, len)
+          hm.region(math.min(pos, s.length), math.min(pos + 64, s.length))
           if (hm.lookingAt()) {
             // corrupt headers/offsets must degrade, never throw: bounds-check
             // every numeric field (a bit-flipped 10-digit offset exceeds Int)
@@ -317,7 +335,7 @@ object PdfDoc {
               val em = entry.matcher(s)
               var epos = pos
               while (k < count) {
-                em.region(epos, math.min(epos + 40, s.length))
+                em.region(math.min(epos, s.length), math.min(epos + 40, s.length))
                 if (em.lookingAt()) {
                   val off = safeInt(em.group(1))
                   if (em.group(3) == "n" && off >= 0 && off < s.length)
@@ -332,6 +350,37 @@ object PdfDoc {
         }
       }
       out.toMap
+    }
+
+    /** Every stream body read from the file (xref-located, found by the raw
+      * object scan, or unclaimed; see [[pseudoPages]]), keyed by body
+      * offset. */
+    private val fileStreams = mutable.TreeMap.empty[Int, PStream]
+
+    /** End of the body streamAt last read. */
+    private var lastBodyEnd = 0
+
+    /** The stream whose `stream` keyword is at `kw`, with dictionary `v`
+      * (anything else reads as an empty one): the body runs /Length bytes
+      * past the keyword's EOL, or up to `endstream`. */
+    private def streamAt(kw: Int, v: P): PStream = {
+      var b = kw + "stream".length
+      if (b < s.length && s.charAt(b) == '\r') b += 1
+      if (b < s.length && s.charAt(b) == '\n') b += 1
+      val d = v match { case d: PDict => d; case _ => PDict(Map.empty) }
+      val end = d.v.get("Length") match {
+        // Long arithmetic: a lying huge /Length must clamp, not wrap
+        case Some(PNum(n)) =>
+          math.min(b.toLong + math.max(0L, n.toLong), s.length.toLong).toInt
+        case _ => s.indexOf("endstream", b) match {
+          case -1 => s.length
+          case e => e
+        }
+      }
+      val st = PStream(d, s.substring(b, end))
+      fileStreams(b) = st
+      lastBodyEnd = end
+      st
     }
 
     /** object number -> parsed object (streams keep raw body). */
@@ -357,22 +406,7 @@ object PdfDoc {
         objPos(num) = at
       }
       def attachStream(v: P, p: ObjParser): P =
-        if (s.startsWith("stream", p.i)) {
-          var b = p.i + "stream".length
-          if (b < s.length && s.charAt(b) == '\r') b += 1
-          if (b < s.length && s.charAt(b) == '\n') b += 1
-          val d = v match { case d: PDict => d; case _ => PDict(Map.empty) }
-          val end = d.v.get("Length") match {
-            // Long arithmetic: a lying huge /Length must clamp, not wrap
-            case Some(PNum(n)) =>
-              math.min(b.toLong + math.max(0L, n.toLong), s.length.toLong).toInt
-            case _ => s.indexOf("endstream", b) match {
-              case -1 => s.length
-              case e => e
-            }
-          }
-          PStream(d, s.substring(b, end))
-        } else v
+        if (s.startsWith("stream", p.i)) streamAt(p.i, v) else v
       val offs = xrefOffsets
       if (offs.nonEmpty) offs.foreach { case (num, off) => parseAt(num, off) }
       // raw object scan — the only source for PDF 1.5+ files (xref STREAMS,
@@ -389,7 +423,8 @@ object PdfDoc {
         var continue = true
         while (continue) {
           val mt = objRe.matcher(s)
-          if (!mt.find(pos)) continue = false
+          // an unterminated last value can leave the parser past the end
+          if (pos > s.length || !mt.find(pos)) continue = false
           else {
             val num = safeInt(mt.group(1))
             val gen = math.max(0, safeInt(mt.group(2)))
@@ -407,10 +442,7 @@ object PdfDoc {
                 objPos(num) = mt.start()
               }
               pos = attached match {
-                case PStream(_, raw) =>
-                  // resume past the raw body (p.i points at "stream")
-                  val bodyStart = s.indexOf("stream", p.i) + "stream".length
-                  bodyStart + raw.length
+                case _: PStream => lastBodyEnd // past the raw body
                 case _ => p.i
               }
             } catch { case _: Exception => pos = mt.end() }
@@ -779,12 +811,43 @@ object PdfDoc {
       } catch { case _: Exception => None }
     }
 
+    /** A pseudo-page's content: the decoded stream, except that a stream
+      * declaring no /Filter whose body opens with a zlib header (a damaged
+      * dictionary) is inflated when it inflates. */
+    private def contentData(p: P): String = deref(p) match {
+      case st: PStream if !st.dict.v.contains("Filter") && st.raw.length >= 2 &&
+          st.raw.charAt(0) == 0x78 && (0x7800 + st.raw.charAt(1)) % 31 == 0 =>
+        val raw = rawOf(st)
+        inflate(raw).getOrElse(raw)
+      case other => streamData(other)
+    }
+
+    /** `pseudo`: a stream read as a page because the file has no usable
+      * page tree (see [[sizedPages]]). */
     case class Page(pageNo: Int, width: Double, height: Double,
                     content: String, resources: Map[String, P],
-                    originX: Double = 0.0, originY: Double = 0.0)
+                    originX: Double = 0.0, originY: Double = 0.0,
+                    pseudo: Boolean = false)
+
+    /** The pages to read, each with its glyphs: the page tree's, unless
+      * no tree page yields a glyph and the file has no /Encrypt (its raw
+      * bytes would be ciphertext). Then the file's content streams are
+      * read as [[pseudoPages]] instead, when the tree has no page at all
+      * or when they yield a glyph (a damaged file whose tree still parses
+      * but whose fonts or contents do not resolve). */
+    lazy val sizedPages: Seq[(Page, Seq[SizedGlyph])] = {
+      val tree = treePages.map(pg => pg -> interpretPageSized(pg))
+      if (encrypted || tree.exists(_._2.nonEmpty)) tree
+      else {
+        val pseudo = pseudoPages.map(pg => pg -> interpretPageSized(pg))
+        if (tree.isEmpty || pseudo.exists(_._2.nonEmpty)) pseudo else tree
+      }
+    }
+
+    def pages: Seq[Page] = sizedPages.map(_._1)
 
     /** Pages in tree order with inherited Resources/MediaBox. */
-    lazy val pages: Seq[Page] = {
+    private def treePages: Seq[Page] = {
       val trailerRoot: Option[P] = {
         val tRe = java.util.regex.Pattern.compile("trailer").matcher(s)
         var root: Option[P] = None
@@ -841,6 +904,29 @@ object PdfDoc {
         dictOf(cat).get("Pages").foreach(p => walk(p, Map.empty, None))
       }
       out.toSeq
+    }
+
+    /** Every content stream in the file as a 612x792 pseudo-page, in file
+      * order. A pseudo-page has no resources: every font name on it reads
+      * as [[latin1Font]]. Streams that declare a /Type or /Subtype (xref,
+      * object, image, form streams) or a /Length1 (font programs) are not
+      * page content. */
+    private def pseudoPages: Seq[Page] = {
+      // bodies after a keyword that no parsed object claimed (a damaged
+      // object header) join them, with no dictionary
+      val kw = StreamKw.matcher(s)
+      while (kw.find()) {
+        // claimed: the keyword opens or lies inside a known body
+        val body = kw.end() + (if (s.startsWith("\r\n", kw.end())) 2 else 1)
+        val claimed = fileStreams.maxBefore(body + 1)
+          .exists { case (b0, st) => kw.start() < b0 + st.raw.length }
+        if (!claimed) streamAt(kw.start(), PWord("null"))
+      }
+      fileStreams.values.filter { st =>
+        !Seq("Type", "Subtype", "Length1").exists(st.dict.v.contains)
+      }.zipWithIndex.map { case (st, k) =>
+        Page(k + 1, 612.0, 792.0, contentData(st), Map.empty, pseudo = true)
+      }.toSeq
     }
 
     // ----------------------------------------------------------- fonts
@@ -980,6 +1066,11 @@ object PdfDoc {
       }
       out.toMap
     }
+
+    /** The font of every name on a pseudo-page (which has no resources):
+      * Latin-1 codes with the built-in advance widths. */
+    private lazy val latin1Font: PFont = new SimpleFont(
+      Array.tabulate(256)(_.toChar.toString), Array.tabulate(256)(c => advance(c.toChar)))
 
     private val fontCache = mutable.HashMap.empty[Int, Option[PFont]]
     /** Build (and cache) the decoder for a font object. */
@@ -1127,7 +1218,7 @@ object PdfDoc {
               if (widths(c) == 0.0)
                 widths(c) =
                   if (missing > 0) missing
-                  else if (toUniArr(c).nonEmpty) PdfText.advanceWidth(toUniArr(c).charAt(0))
+                  else if (toUniArr(c).nonEmpty) advance(toUniArr(c).charAt(0))
                   else 500.0
               c += 1
             }
@@ -1158,8 +1249,8 @@ object PdfDoc {
     /** Like interpretPage but keeps the DEVICE-space font size per glyph
       * (real PDFs scale via Tm — `/F 1 Tf` + `22 0 0 22 x y Tm` is a
       * 22pt glyph) for PdfLayout's heading classification. */
-    def interpretPageSized(page: Page): Seq[PdfText.SizedGlyph] = {
-      val glyphs = mutable.ArrayBuffer.empty[PdfText.SizedGlyph]
+    def interpretPageSized(page: Page): Seq[SizedGlyph] = {
+      val glyphs = mutable.ArrayBuffer.empty[SizedGlyph]
 
       def run(content: String, resources: Map[String, P], ctm0: Mat, depth: Int): Unit = {
         if (depth > 8 || content.isEmpty) return
@@ -1199,7 +1290,7 @@ object PdfDoc {
               val deviceSize = tfs * math.hypot(m(2), m(3))
               val gx0 = math.min(xa, xb) - page.originX
               val gx1 = math.max(xa, xb) - page.originX
-              glyphs += PdfText.SizedGlyph(Glyph(uni,
+              glyphs += SizedGlyph(Glyph(uni,
                 gx0, page.height - (math.max(ya, yb) - page.originY),
                 gx1, page.height - (math.min(ya, yb) - page.originY)), deviceSize)
             }
@@ -1226,7 +1317,10 @@ object PdfDoc {
                 case "Tf" =>
                   operands.takeRight(2).toList match {
                     case List(PName(fn), PNum(sz)) =>
-                      font = fonts.get(fn).flatMap(r => this.font(r)); tfs = sz
+                      font =
+                        if (page.pseudo) Some(latin1Font)
+                        else fonts.get(fn).flatMap(r => this.font(r))
+                      tfs = sz
                     case _ =>
                   }
                 case "Tc" => nums(1).foreach(v => tc = v)
@@ -1375,34 +1469,10 @@ object PdfDoc {
         else "")
   }
 
-  /** Per-page glyphs for a real-world PDF (page-tree order, real page
-    * heights, decoded fonts). Empty map when no page tree parses. */
-  def extractGlyphs(pdf: Array[Byte]): Map[Int, Seq[Glyph]] = {
-    val doc = new Document(pdf)
-    doc.pages.map(pg => pg.pageNo -> doc.interpretPage(pg)).toMap
-  }
-
-  /** Glyphs via the document model when a page tree parses AND produced at
-    * least one glyph; otherwise the legacy minimal-scan path (conforming
-    * minimal PDFs without xref, or page trees whose content streams all
-    * failed to decode — e.g. unsupported filters). A LOCKED encrypted
-    * document (password required / unsupported handler) yields empty with
-    * NO fallback: the raw scan would only read ciphertext. */
-  def extractGlyphsAuto(pdf: Array[Byte],
-                        fallbackPageHeight: Double = 792.0): Map[Int, Seq[Glyph]] = {
-    val docOpt = try Some(new Document(pdf)) catch { case _: Exception => None }
-    val viaModel = docOpt.map { doc =>
-      try doc.pages.map(pg => pg.pageNo -> doc.interpretPage(pg)).toMap
-      catch { case _: Exception => Map.empty[Int, Seq[Glyph]] }
-    }.getOrElse(Map.empty[Int, Seq[Glyph]])
-    if (viaModel.values.exists(_.nonEmpty)) viaModel
-    else if (docOpt.exists(_.encrypted)) Map.empty // raw bytes are ciphertext
-    else PdfText.extractGlyphs(pdf, fallbackPageHeight)
-  }
-
-  /** Page dimensions (pageNo -> (width, height)). */
-  def pageSizes(pdf: Array[Byte]): Map[Int, (Double, Double)] = {
-    val doc = new Document(pdf)
-    doc.pages.map(pg => pg.pageNo -> ((pg.width, pg.height))).toMap
-  }
+  /** Per-page glyphs (see [[Document.sizedPages]]). Empty when the file
+    * does not parse or is locked. */
+  def extractGlyphsAuto(pdf: Array[Byte]): Map[Int, Seq[Glyph]] =
+    try {
+      new Document(pdf).sizedPages.map { case (pg, g) => pg.pageNo -> g.map(_.glyph) }.toMap
+    } catch { case _: Exception => Map.empty }
 }

@@ -2,7 +2,7 @@ package graft.extract
 
 import graft.model._
 import graft.textkit.SpacingRepair
-import graft.extract.PdfText.SizedGlyph
+import graft.extract.PdfDoc.SizedGlyph
 import scala.collection.mutable
 
 /** PDF layout parse: sized glyph runs -> visual lines (y-center clustering)
@@ -303,20 +303,14 @@ object PdfLayout {
     out.toSeq
   }
 
-  def buildDoc(url: String, pdf: Array[Byte], pageHeight: Double = 792.0): Doc = {
-    // real-world PDFs go through the document model (page tree, decoded
-    // fonts, real page sizes); minimal/synthetic PDFs without a parseable
-    // tree fall back to the content-scan path — both feed the same layout
-    val modelPages: Seq[(Int, Double, Double, Seq[SizedGlyph])] =
-      try {
-        val doc = new PdfDoc.Document(pdf)
-        doc.pages.map(pg => (pg.pageNo, pg.width, pg.height, doc.interpretPageSized(pg)))
-      } catch { case _: Exception => Seq.empty }
+  def buildDoc(url: String, pdf: Array[Byte]): Doc = {
+    // page tree (or pseudo-pages), decoded fonts, real page sizes
     val pageInputs: Seq[(Int, Double, Double, Seq[SizedGlyph])] =
-      if (modelPages.nonEmpty) modelPages
-      else PdfText.contentStreams(pdf).zipWithIndex.map { case (cs, pi) =>
-        (pi + 1, 612.0, pageHeight, PdfText.interpretSized(cs, pageHeight))
-      }
+      try {
+        new PdfDoc.Document(pdf).sizedPages.map { case (pg, sized) =>
+          (pg.pageNo, pg.width, pg.height, sized)
+        }
+      } catch { case _: Exception => Seq.empty }
     val items = mutable.ArrayBuffer.empty[DocItem]
     val pages = mutable.ArrayBuffer.empty[PageDim]
     var idx = 0

@@ -99,8 +99,7 @@ object Pipeline {
       spacing_fixed: Int,
       suspect_repaired: Int)
 
-  /** Parse + transform + render one document. Pure; called per row inside
-    * mapPartitions. */
+  /** Payload starts with the `%PDF-` header. */
   private def isPdf(bytes: Array[Byte]): Boolean =
     bytes.length >= 5 && bytes(0) == '%' && bytes(1) == 'P' && bytes(2) == 'D' &&
       bytes(3) == 'F' && bytes(4) == '-'
@@ -140,7 +139,8 @@ object Pipeline {
     if (total > 0) spaced.toDouble / total else 0.0
   }
 
-  /** The reference's full conversion decision flow
+  /** Parse + transform + render one document. Pure; called per row inside
+    * mapPartitions. The reference's full conversion decision flow
     * (conversion_utils.py:290-517), re-expressed per-row:
     *
     *   [a] backend select — page-1 quality probe (auto): a perfect standard
@@ -261,7 +261,7 @@ object Pipeline {
     var suspectRepaired = 0
     if (opts.suspectRepair) {
       val distinctOcr = ocrDoc.filter(o => tablesDiffer(parsed, o))
-      if (distinctOcr.nonEmpty && DocTransforms.countSuspectTableCellsFast(parsed) > 0) {
+      if (distinctOcr.nonEmpty && DocTransforms.countSuspectTableCells(parsed) > 0) {
         val (merged, n) = DocTransforms.mergeTableCellsWithOcr(parsed, distinctOcr.get,
           spacedMode = false)
         parsed = merged

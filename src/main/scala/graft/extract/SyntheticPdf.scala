@@ -1,273 +1,6 @@
 package graft.extract
 
-import graft.textkit.SpacingRepair.Glyph
 import scala.collection.mutable
-
-/** Pure-JVM PDF text extraction: content-stream tokenizer -> positioned
-  * glyph runs -> the 2-means line-reconstruction kernel (north_star bullet
-  * (b): content-stream tokenize, glyph-run clustering into lines, reading-
-  * order sort).
-  *
-  * Supports the uncompressed text subset the synthetic corpus emits (and
-  * any conforming minimal PDF): object scan for stream objects, BT/ET text
-  * blocks, Tf/Td/TD/TL/Tm/T* positioning, Tj/'/TJ show-text with kerning
-  * adjustments, literal strings with escapes, fixed per-char advances from
-  * a built-in Helvetica-like width table. No external libraries.
-  *
-  * Glyph y-coordinates are flipped to top-left origin so downstream bbox
-  * logic matches the HTML path.
-  */
-object PdfText {
-  /** Rough Helvetica advance widths (per mille of font size) — enough for
-    * gap clustering; exact metrics are not required because thresholds are
-    * relative (median char width). */
-  private def advance(c: Char): Double = c match {
-    case ' ' => 278
-    case 'i' | 'l' | 'j' | '!' | '\'' | '.' | ',' | ':' | ';' | '|' => 240
-    case 'f' | 't' | 'r' | '(' | ')' | '[' | ']' | '/' | '-' => 333
-    case 'm' | 'M' | 'W' | 'w' => 889
-    case c2 if c2.isUpper => 722
-    case c2 if c2.isDigit => 556
-    case _ => 556
-  }
-
-  /** Fallback advance for fonts without a /Widths table (PdfDoc). */
-  private[extract] def advanceWidth(c: Char): Double = advance(c)
-
-  private final class Lexer(s: String) {
-    var i = 0
-    def eof: Boolean = i >= s.length
-    def skipWs(): Unit = {
-      while (!eof && (s.charAt(i).isWhitespace || s.charAt(i) == '%')) {
-        if (s.charAt(i) == '%') { while (!eof && s.charAt(i) != '\n') i += 1 }
-        else i += 1
-      }
-    }
-    /** next token: number, name, string, array delim, or operator */
-    def next(): Option[PdfTok] = {
-      skipWs()
-      if (eof) return None
-      val c = s.charAt(i)
-      if (c == '(') {
-        // literal string with escapes and balanced parens
-        val sb = new StringBuilder
-        var depth = 1
-        i += 1
-        while (!eof && depth > 0) {
-          val ch = s.charAt(i)
-          if (ch == '\\' && i + 1 < s.length) {
-            s.charAt(i + 1) match {
-              case 'n' => sb += '\n'; case 'r' => sb += '\r'; case 't' => sb += '\t'
-              case '(' => sb += '('; case ')' => sb += ')'; case '\\' => sb += '\\'
-              case other => sb += other
-            }
-            i += 2
-          } else if (ch == '(') { depth += 1; sb += ch; i += 1 }
-          else if (ch == ')') { depth -= 1; if (depth > 0) sb += ch; i += 1 }
-          else { sb += ch; i += 1 }
-        }
-        Some(PdfStr(sb.result()))
-      } else if (c == '[') { i += 1; Some(PdfArrOpen) }
-      else if (c == ']') { i += 1; Some(PdfArrClose) }
-      else if (c == '/') {
-        val start = i; i += 1
-        while (!eof && !s.charAt(i).isWhitespace && "()[]<>/".indexOf(s.charAt(i)) < 0) i += 1
-        Some(PdfName(s.substring(start + 1, i)))
-      } else if (c == '<' || c == '>') { i += 1; Some(PdfOther(c.toString)) }
-      else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
-        val start = i
-        i += 1
-        while (!eof && (s.charAt(i).isDigit || s.charAt(i) == '.')) i += 1
-        try Some(PdfNum(s.substring(start, i).toDouble))
-        catch { case _: NumberFormatException => Some(PdfOther(s.substring(start, i))) }
-      } else {
-        val start = i
-        while (!eof && !s.charAt(i).isWhitespace && "()[]<>/%".indexOf(s.charAt(i)) < 0) i += 1
-        if (i == start) { i += 1; Some(PdfOther(c.toString)) }
-        else Some(PdfOp(s.substring(start, i)))
-      }
-    }
-  }
-
-  sealed trait PdfTok
-  case class PdfNum(v: Double) extends PdfTok
-  case class PdfStr(v: String) extends PdfTok
-  case class PdfName(v: String) extends PdfTok
-  case class PdfOp(v: String) extends PdfTok
-  case object PdfArrOpen extends PdfTok
-  case object PdfArrClose extends PdfTok
-  case class PdfOther(v: String) extends PdfTok
-
-  /** Inflate a FlateDecode stream body (ISO-8859-1-roundtripped bytes). */
-  private def inflate(body: Array[Byte]): Option[String] = {
-    try {
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(body)
-      val out = new java.io.ByteArrayOutputStream(body.length * 4)
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        // needsDictionary would loop forever (n==0, needsInput false)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None
-        out.write(buf, 0, n)
-      }
-      inf.end()
-      Some(new String(out.toByteArray, java.nio.charset.StandardCharsets.ISO_8859_1))
-    } catch { case _: java.util.zip.DataFormatException => None }
-  }
-
-  /** All content streams in document order (object scan; uncompressed or
-    * FlateDecode). */
-  def contentStreams(pdf: Array[Byte]): List[String] = {
-    val s = new String(pdf, java.nio.charset.StandardCharsets.ISO_8859_1)
-    val out = List.newBuilder[String]
-    var from = 0
-    while (true) {
-      val start = s.indexOf("stream", from)
-      if (start < 0) return out.result()
-      // the object dict precedes the `stream` keyword; check for FlateDecode
-      val dictStart = math.max(s.lastIndexOf("obj", start), from)
-      val dict = s.substring(dictStart, start)
-      val flate = dict.contains("/FlateDecode")
-      val lengthM = java.util.regex.Pattern.compile("/Length\\s+(\\d+)").matcher(dict)
-      val declaredLen = if (lengthM.find()) Some(lengthM.group(1).toInt) else None
-      var body = start + "stream".length
-      if (body < s.length && s.charAt(body) == '\r') body += 1
-      if (body < s.length && s.charAt(body) == '\n') body += 1
-      // prefer the declared length: compressed payloads may contain the
-      // literal bytes "endstream"
-      val end = declaredLen.map(l => math.min(body + l, s.length))
-        .getOrElse(s.indexOf("endstream", body))
-      if (end < 0) return out.result()
-      val raw = s.substring(body, end)
-      if (flate) {
-        // pass bytes unstripped: trailing EOLs before `endstream` are ignored
-        // by the inflater, while stripping could eat legit 0x0A/0x0D deflate
-        // bytes at the end of the compressed payload
-        val bytes = raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-        inflate(bytes).foreach(out += _)
-      } else out += raw
-      val close = s.indexOf("endstream", end)
-      from = (if (close >= 0) close else end) + "endstream".length
-    }
-    out.result()
-  }
-
-  /** A glyph plus the font size it was shown at (for layout/heading
-    * classification). */
-  case class SizedGlyph(glyph: Glyph, fontSize: Double)
-
-  /** Interpret one content stream into glyphs (page-local, PDF bottom-left
-    * coords flipped to top-left using pageHeight). */
-  def interpret(stream: String, pageHeight: Double): Seq[Glyph] =
-    interpretSized(stream, pageHeight).map(_.glyph)
-
-  /** Like interpret, but keeps the active font size per glyph. */
-  def interpretSized(stream: String, pageHeight: Double): Seq[SizedGlyph] = {
-    val glyphs = mutable.ArrayBuffer.empty[SizedGlyph]
-    val lex = new Lexer(stream)
-    var fontSize = 12.0
-    var leading = 0.0
-    var x = 0.0; var y = 0.0          // current text position
-    var lineX = 0.0; var lineY = 0.0  // start-of-line position
-    val stack = mutable.ArrayBuffer.empty[PdfTok]
-    var inArray = false
-    val arrayItems = mutable.ArrayBuffer.empty[PdfTok]
-
-    def showText(text: String): Unit = {
-      for (ch <- text) {
-        val w = advance(ch) / 1000.0 * fontSize
-        val h = fontSize
-        if (ch == ' ') {
-          // spaces advance the pen without a glyph; the 2-means gap
-          // clustering downstream recovers the word breaks
-          x += w
-        } else {
-          // flip to top-left origin; glyph box spans the line height
-          glyphs += SizedGlyph(Glyph(ch.toString, x, pageHeight - (y + h * 0.8), x + w,
-            pageHeight - (y - h * 0.2)), fontSize)
-          x += w
-        }
-      }
-    }
-
-    var tok = lex.next()
-    while (tok.nonEmpty) {
-      tok.get match {
-        case PdfArrOpen => inArray = true; arrayItems.clear()
-        case PdfArrClose => inArray = false
-        case t @ (PdfNum(_) | PdfStr(_) | PdfName(_)) =>
-          if (inArray) arrayItems += t else stack += t
-        case PdfOp(op) =>
-          op match {
-            case "Tf" =>
-              stack.lastOption match {
-                case Some(PdfNum(sz)) => fontSize = sz
-                case _ =>
-              }
-            case "TL" =>
-              stack.lastOption match {
-                case Some(PdfNum(l)) => leading = l
-                case _ =>
-              }
-            case "Td" | "TD" =>
-              (stack.takeRight(2).toList: @unchecked) match {
-                case List(PdfNum(tx), PdfNum(ty)) =>
-                  lineX += tx; lineY += ty
-                  x = lineX; y = lineY
-                  if (op == "TD") leading = -ty
-                case _ =>
-              }
-            case "Tm" =>
-              (stack.takeRight(6).toList: @unchecked) match {
-                case List(PdfNum(_), PdfNum(_), PdfNum(_), PdfNum(_), PdfNum(e), PdfNum(f)) =>
-                  lineX = e; lineY = f; x = e; y = f
-                case _ =>
-              }
-            case "T*" =>
-              lineY -= leading; x = lineX; y = lineY
-            case "Tj" =>
-              stack.lastOption match {
-                case Some(PdfStr(t)) => showText(t)
-                case _ =>
-              }
-            case "'" =>
-              lineY -= leading; x = lineX; y = lineY
-              stack.lastOption match {
-                case Some(PdfStr(t)) => showText(t)
-                case _ =>
-              }
-            case "TJ" =>
-              for (item <- arrayItems) item match {
-                case PdfStr(t) => showText(t)
-                case PdfNum(adj) => x -= adj / 1000.0 * fontSize
-                case _ =>
-              }
-              arrayItems.clear()
-            case "BT" => lineX = 0; lineY = 0; x = 0; y = 0
-            case "ET" | _ => // ignore others (colors, graphics state)
-          }
-          stack.clear()
-        case _ =>
-      }
-      tok = lex.next()
-    }
-    glyphs.toSeq
-  }
-
-  /** Per-page glyphs for a whole PDF. */
-  def extractGlyphs(pdf: Array[Byte], pageHeight: Double = 792.0): Map[Int, Seq[Glyph]] =
-    contentStreams(pdf).zipWithIndex.map { case (cs, idx) =>
-      (idx + 1) -> interpret(cs, pageHeight)
-    }.toMap
-
-  /** Text per page via the reconstruction kernel (lines by y-center
-    * clustering, word gaps by 2-means). */
-  def extractText(pdf: Array[Byte], pageHeight: Double = 792.0): Map[Int, String] =
-    extractGlyphs(pdf, pageHeight).map { case (p, gs) =>
-      p -> graft.textkit.SpacingRepair.reconstructFromChars(gs)
-    }
-}
 
 /** Minimal deterministic PDF writer for the synthetic corpus: one content
   * stream per page, uncompressed, Helvetica, explicit Td line positioning.

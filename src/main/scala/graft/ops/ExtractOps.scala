@@ -566,7 +566,7 @@ object ExtractOps {
           // clean geometry channel: the same phrase as PDF glyphs
           val pdf = graft.extract.SyntheticPdf.pdfFor(Seq(Seq(phrase)))
           val doc = graft.sources.DoclingJsonIngest.parse(json, s"doc://$id")
-          val glyphs = graft.extract.PdfText.extractGlyphs(pdf)
+          val glyphs = graft.extract.PdfDoc.extractGlyphsAuto(pdf)
           val (fixed, report) = Pipeline.repairDoc(doc, glyphs)
           val md = MarkdownRender.render(DocTransforms.applyAll(fixed)._1)
           (id, report.textItems, fixed.items(0).text == phrase,
@@ -597,7 +597,7 @@ object ExtractOps {
       // lines vs the golden are classified in GOLDEN_RESIDUE.md (all need
       // the tesseract raster channel or replicate its OCR errors).
       val pdf = ReferenceExamples.bytes(s"$name.pdf", base)
-      val glyphs = graft.extract.PdfDoc.extractGlyphs(pdf)
+      val glyphs = graft.extract.PdfDoc.extractGlyphsAuto(pdf)
       val (repaired, report, filled) = Pipeline.repairDocWithTextLayer(doc0, glyphs)
       val (doc, counters) = DocTransforms.applyAll(repaired)
       val got = MarkdownRender.postProcess(MarkdownRender.render(doc))
@@ -633,8 +633,9 @@ object ExtractOps {
           val lines = words.grouped(8).map(_.mkString(" ")).toSeq
           val pages = lines.grouped(12).map(_.toSeq).toSeq
           val pdf = graft.extract.SyntheticPdf.pdfFor(pages)
-          val extracted = graft.extract.PdfText.extractText(pdf)
-          val joined = (1 to pages.length).map(extracted(_)).mkString(" ")
+          val glyphs = graft.extract.PdfDoc.extractGlyphsAuto(pdf)
+          val joined = (1 to pages.length)
+            .map(p => SpacingRepair.reconstructFromChars(glyphs(p))).mkString(" ")
           (id, lines.length, pages.length, joined.length, joined == text)
         }
       }

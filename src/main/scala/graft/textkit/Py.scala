@@ -161,7 +161,17 @@ object Py {
   def isAlnumStr(s: String): Boolean = s.nonEmpty && s.forall(Character.isLetterOrDigit)
   def isSpaceStr(s: String): Boolean = s.nonEmpty && s.forall(Character.isWhitespace)
 
-  def anyDigit(s: String): Boolean = s.exists(Character.isDigit)
+  /** By code point, so it agrees with `\d` under UNICODE_CHARACTER_CLASS,
+    * which also matches supplementary-plane digits (U+1D7CF and friends). */
+  def anyDigit(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (Character.isDigit(cp)) return true
+      i += Character.charCount(cp)
+    }
+    false
+  }
   def anyAlpha(s: String): Boolean = s.exists(Character.isLetter)
 
   /** Python re.search -> Option of the Matcher positioned at the first hit. */

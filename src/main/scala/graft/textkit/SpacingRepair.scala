@@ -152,19 +152,6 @@ object SpacingRepair {
       .mkString(" ").strip()
   }
 
-  /** pymupdf_spacing_fix.py:121-135 — word-granularity reconstruction. */
-  def reconstructFromWords(words: Seq[(String, Int, Int, Int)]): String = {
-    if (words.isEmpty) return ""
-    val lines = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), scala.collection.mutable.ArrayBuffer[(Int, String)]]
-    for ((text, blockNo, lineNo, wordNo) <- words)
-      lines.getOrElseUpdate((blockNo, lineNo), scala.collection.mutable.ArrayBuffer.empty) += ((wordNo, text))
-    val outLines = lines.keys.toList.sorted.flatMap { key =>
-      val t = lines(key).sortBy(_._1).map(_._2).mkString(" ").strip()
-      if (t.nonEmpty) Some(t) else None
-    }
-    outLines.mkString(" ").strip()
-  }
-
   /** pymupdf_spacing_fix.py:211-225 */
   def spacingBadness(text: String): Double = {
     val tokens = findAll(WordToken, text)

@@ -18,7 +18,7 @@ object GoldenDiff {
     val base =
       if (args.contains("--repair")) {
         val pdf = ReferenceExamples.bytes("long_report.pdf")
-        val glyphs = graft.extract.PdfDoc.extractGlyphs(pdf)
+        val glyphs = graft.extract.PdfDoc.extractGlyphsAuto(pdf)
         val (repaired, report, filled) =
           graft.extract.Pipeline.repairDocWithTextLayer(ingested, glyphs)
         println(s"repair: spacing=$report cellsFilled=$filled")

@@ -349,9 +349,9 @@ class PdfCryptSpec extends AnyFunSuite {
   }
 
   test("encrypted-but-unlocked docs never fall back to the raw byte scan") {
-    // an encrypted file whose page tree is corrupted yields zero glyphs via
-    // the model; an unreferenced PLAINTEXT decoy stream would be picked up
-    // by the legacy scan — the encrypted flag must suppress it
+    // an encrypted file whose page tree is corrupted yields no page; an
+    // unreferenced PLAINTEXT decoy stream would become a pseudo-page — the
+    // encrypted flag must suppress it
     val base = rc4Pdf("")
     val s = new String(base, ISO_8859_1)
     val corrupted = s.replace("/Type /Pages", "/Type /Pagez") // breaks the tree walk

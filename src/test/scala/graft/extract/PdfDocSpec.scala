@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
 /** Unit pins for the real-world PDF parser (PdfDoc) independent of the
   * reference artifact: xref-driven object loading, WinAnsi + /Differences
@@ -141,7 +141,7 @@ class PdfDocSpec extends AnyFunSuite {
       s"/Filter /FlateDecode /Length ${packed.length} >>\nstream\n$packed\nendstream\nendobj\n"
     sb ++= s"5 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n"
     sb ++= "%%EOF\n"
-    val glyphs = PdfDoc.extractGlyphs(sb.result().getBytes(ISO_8859_1))
+    val glyphs = PdfDoc.extractGlyphsAuto(sb.result().getBytes(ISO_8859_1))
     assert(glyphs.keySet == Set(1))
     assert(glyphs(1).map(_.c).mkString == "hiobjstm") // spaces advance only
     val doc = new PdfDoc.Document(sb.result().getBytes(ISO_8859_1))
@@ -311,19 +311,95 @@ class PdfDocSpec extends AnyFunSuite {
       ss(109) == "fi" && ss(110) == "fl" && ss(228) == "zcaron")
   }
 
-  test("extractGlyphsAuto matches the legacy parser byte-for-byte on synthetic PDFs") {
-    val syn = SyntheticPdf.pdfFor(Seq(Seq("hello world", "second line")),
-      spreadLetterLine = Some((1, 1)))
-    val legacy = PdfText.extractGlyphs(syn)
-    val model = PdfDoc.extractGlyphsAuto(syn)
-    assert(model.keySet == legacy.keySet)
-    for (p <- legacy.keySet) {
-      assert(model(p).length == legacy(p).length, s"page $p glyph count")
-      for ((a, b) <- model(p).zip(legacy(p))) {
-        assert(a.c == b.c)
-        assert(math.abs(a.x0 - b.x0) < 1e-9 && math.abs(a.y0 - b.y0) < 1e-9 &&
-               math.abs(a.x1 - b.x1) < 1e-9 && math.abs(a.y1 - b.y1) < 1e-9, s"$a vs $b")
+  private val vocab = Vector("Analiza", "rezultatelor", "financiare", "Profit", "net",
+    "43", "milioane", "RON", "(nete)", "50%", "1.234,56", "EUR", "Venituri", "T4",
+    "-", "total:", "[a]", "q/b", "a\\b", "Wm", "x;y", "1%", "k)", "(z")
+
+  /** 200 seeded SyntheticPdf documents: 1-3 pages of 1-6 lines of 1-7
+    * words; every odd one spreads one line's letters with TJ kerning. */
+  private def glyphCorpus: Seq[Array[Byte]] = (0 until 200).map { i =>
+    val rnd = new scala.util.Random(i)
+    val pages = Seq.fill(1 + rnd.nextInt(3))(Seq.fill(1 + rnd.nextInt(6))(
+      Seq.fill(1 + rnd.nextInt(7))(vocab(rnd.nextInt(vocab.length))).mkString(" ")))
+    val spread =
+      if (i % 2 == 0) None
+      else {
+        val p = rnd.nextInt(pages.length)
+        Some((p + 1, rnd.nextInt(pages(p).length)))
       }
+    SyntheticPdf.pdfFor(pages, spread)
+  }
+
+  test("extractGlyphsAuto output digest: 200 SyntheticPdf documents") {
+    // computed once; moves only when the interpreter's output does
+    val md = java.security.MessageDigest.getInstance("MD5")
+    var n = 0
+    for (pdf <- glyphCorpus) {
+      val g = PdfDoc.extractGlyphsAuto(pdf)
+      for (p <- g.keys.toSeq.sorted) {
+        md.update(s"p$p\n".getBytes(UTF_8))
+        for (x <- g(p)) {
+          n += 1
+          md.update(s"${x.c}|${x.x0}|${x.y0}|${x.x1}|${x.y1}\n".getBytes(UTF_8))
+        }
+      }
+      md.update(0: Byte)
     }
+    assert(n == 23290)
+    assert(md.digest().map(b => f"${b & 0xff}%02x").mkString == "384d60130ec8a6a9f3bd4aa371fbe7c0")
+  }
+
+  test("no page tree: each content stream is a 612x792 pseudo-page with Latin-1 fonts") {
+    def obj(n: Int, dict: String, body: String) =
+      s"$n 0 obj\n<< $dict/Length ${body.length} >>\nstream\n$body\nendstream\nendobj\n"
+    val pdf = ("%PDF-1.4\n" +
+      obj(1, "", "BT /F1 12 Tf 72 720 Td (Hi \\351) Tj ET") +
+      obj(2, "/Type /XObject /Subtype /Image ", "BT /F1 12 Tf (img) Tj ET") +
+      obj(3, "", "BT /F9 10 Tf 0 0 Td [(a) -500 (b)] TJ ET") +
+      "%%EOF\n").getBytes(ISO_8859_1)
+    val doc = new PdfDoc.Document(pdf)
+    assert(doc.pages.map(p => (p.pageNo, p.width, p.height)) == Seq((1, 612.0, 792.0), (2, 612.0, 792.0)))
+    val g = PdfDoc.extractGlyphsAuto(pdf)
+    assert(g(1).map(_.c).mkString == "Hi\u00e9")
+    val h = g(1).head
+    assert(h.x0 == 72.0 && math.abs(h.x1 - (72 + 0.722 * 12)) < 1e-9)
+    assert(math.abs(h.y0 - (792 - 729.6)) < 1e-9 && math.abs(h.y1 - (792 - 717.6)) < 1e-9)
+    // the space advances by the built-in table's 278 per mille
+    assert(math.abs(g(1)(2).x0 - (72 + (0.722 + 0.24 + 0.278) * 12)) < 1e-9)
+    assert(g(2).map(_.c).mkString == "ab")
+    assert(math.abs(g(2)(1).x0 - (0.556 + 0.5) * 10) < 1e-9)
+  }
+
+  test("a page tree with no text reads as pseudo-pages only when they have text") {
+    def pdf(objs: String*): Array[Byte] = ("%PDF-1.4\n" + objs.zipWithIndex.map {
+      case (o, i) => s"${i + 1} 0 obj\n$o\nendobj\n"
+    }.mkString + "%%EOF\n").getBytes(ISO_8859_1)
+    def stream(body: String) = s"<< /Length ${body.length} >>\nstream\n$body\nendstream"
+    def page(contents: Int, font: Int) = "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 300 200 ] " +
+      s"/Contents $contents 0 R /Resources << /Font << /F1 $font 0 R >> >> >>"
+    val helvetica = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+    // the only page's font object is missing: no tree page has text
+    val dangling = pdf("<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>", page(4, 9),
+      stream("BT /F1 12 Tf 10 150 Td (Hi) Tj ET"))
+    val d = new PdfDoc.Document(dangling)
+    assert(d.pages.map(p => (p.width, p.height, p.pseudo)) == Seq((612.0, 792.0, true)))
+    assert(PdfDoc.extractGlyphsAuto(dangling)(1).map(_.c).mkString == "Hi")
+    // another tree page has text: the tree stands, and the page whose font
+    // does not resolve shows nothing
+    val mixed = pdf("<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Count 2 /Kids [ 3 0 R 4 0 R ] >>", page(5, 9), page(6, 7),
+      stream("BT /F1 12 Tf 10 150 Td (Hi) Tj ET"), stream("BT /F1 12 Tf 10 150 Td (Ok) Tj ET"),
+      helvetica)
+    assert(new PdfDoc.Document(mixed).pages.map(p => (p.width, p.pseudo)) ==
+      Seq((300.0, false), (300.0, false)))
+    val g = PdfDoc.extractGlyphsAuto(mixed)
+    assert(g(1).isEmpty && g(2).map(_.c).mkString == "Ok")
+    // no text anywhere (an image-only page): the tree's pages stand
+    val image = pdf("<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>", page(4, 5),
+      stream("q 300 0 0 200 0 0 cm /Im0 Do Q"), helvetica)
+    assert(new PdfDoc.Document(image).pages.map(p => (p.width, p.height, p.pseudo)) ==
+      Seq((300.0, 200.0, false)))
   }
 }

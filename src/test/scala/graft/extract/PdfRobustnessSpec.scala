@@ -48,10 +48,29 @@ class PdfRobustnessSpec extends AnyFunSuite {
       "xref-stream" -> TestPdfs.buildXrefStreamPdf())
   }
 
+  /** The seed cut at every 1/64 of its length. */
+  private def truncations(pdf: Array[Byte]): Seq[Array[Byte]] =
+    (0 until 64).map(k => java.util.Arrays.copyOf(pdf, (pdf.length.toLong * k / 64).toInt))
+
+  /** 200 mutants per seed with 1-8 flipped bits each, drawn in seed order
+    * from one fixed Random. */
+  private lazy val bitFlips: Seq[Seq[Array[Byte]]] = {
+    val rnd = new scala.util.Random(42)
+    seeds.map { case (_, pdf) =>
+      (0 until 200).map { _ =>
+        val mutated = pdf.clone()
+        for (_ <- 0 until 1 + rnd.nextInt(8)) {
+          val i = rnd.nextInt(mutated.length)
+          mutated(i) = (mutated(i) ^ (1 << rnd.nextInt(8))).toByte
+        }
+        mutated
+      }
+    }
+  }
+
   test("truncated synthetic seed PDFs at every 1/64 cut point never throw") {
     for ((name, pdf) <- seeds) {
-      for (k <- 0 until 64)
-        runOne(java.util.Arrays.copyOf(pdf, (pdf.length.toLong * k / 64).toInt))
+      truncations(pdf).foreach(runOne)
       // the uncut seed parses to content, so the cuts above start from it
       assert(Pipeline.extractOne("doc://t", pdf, "ro", 0).item_count > 0,
         s"$name seed parsed to no items")
@@ -59,15 +78,23 @@ class PdfRobustnessSpec extends AnyFunSuite {
   }
 
   test("bit-flipped synthetic seed PDFs never throw (fixed seed)") {
-    val rnd = new scala.util.Random(42)
-    for ((_, pdf) <- seeds; _ <- 0 until 200) {
-      val mutated = pdf.clone()
-      for (_ <- 0 until 1 + rnd.nextInt(8)) {
-        val i = rnd.nextInt(mutated.length)
-        mutated(i) = (mutated(i) ^ (1 << rnd.nextInt(8))).toByte
-      }
-      runOne(mutated)
+    bitFlips.flatten.foreach(runOne)
+  }
+
+  test("truncated and bit-flipped seeds still yield items at least as often as before") {
+    // floors (seed, truncations with items, bit flips with items): the
+    // counts of the reader this one replaced, which fell back to a regex
+    // stream scan for files without a page tree
+    val floor = Seq(("classic", 52, 177), ("classic-flate", 38, 144), ("pdf-1.5", 42, 60),
+      ("xref-stream", 25, 128))
+    def withItems(ms: Seq[Array[Byte]]): Int =
+      ms.count(Pipeline.extractOne("doc://t", _, "ro", 0).item_count > 0)
+    val got = seeds.zip(bitFlips).map { case ((name, pdf), flips) =>
+      (name, withItems(truncations(pdf)), withItems(flips))
     }
+    assert(got.map(_._1) == floor.map(_._1))
+    for (((name, t, f), (_, t0, f0)) <- got.zip(floor))
+      assert(t >= t0 && f >= f0, s"$name: $t/64 truncations, $f/200 bit flips with items")
   }
 
   test("adversarial minimal payloads never throw") {
@@ -106,8 +133,9 @@ class PdfRobustnessSpec extends AnyFunSuite {
   }
 
   test("glyph extraction on the real PDF is deterministic across calls") {
-    val a = PdfDoc.extractGlyphs(real)
-    val b = PdfDoc.extractGlyphs(real)
+    val a = PdfDoc.extractGlyphsAuto(real)
+    val b = PdfDoc.extractGlyphsAuto(real)
+    assert(a.values.exists(_.nonEmpty)) // a reader that throws reads nothing
     assert(a.keySet == b.keySet)
     for (p <- a.keySet) assert(a(p) == b(p))
   }

@@ -83,7 +83,7 @@ class ReferenceGoldenSpec extends AnyFunSuite {
   // fonts, full-matrix interpreter). The residual non-identical lines are
   // classified one-by-one in GOLDEN_RESIDUE.md — every one either needs the
   // tesseract raster channel or would mean replicating its OCR errors.
-  private lazy val pdfGlyphs = graft.extract.PdfDoc.extractGlyphs(
+  private lazy val pdfGlyphs = graft.extract.PdfDoc.extractGlyphsAuto(
     ReferenceExamples.bytes("long_report.pdf"))
   private lazy val repairedRun = Pipeline.repairDocWithTextLayer(ingested, pdfGlyphs)
   private lazy val gotRepaired = MarkdownRender.postProcess(

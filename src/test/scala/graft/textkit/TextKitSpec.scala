@@ -87,6 +87,14 @@ class CellCleanSpec extends AnyFunSuite {
     }
   }
 
+  test("extract_currency_number: supplementary-plane digits count as \\d") {
+    // U+1D7CF..U+1D7D1 (MATHEMATICAL BOLD DIGIT ONE..THREE): Python's
+    // re.findall(r'\d', ...) matches each one
+    val bold = "\uD835\uDFCF\uD835\uDFD0\uD835\uDFD1"
+    assert(Py.anyDigit(bold))
+    assert(extractCurrencyNumber(s"$bold RON") == Some((Some("RON"), bold)))
+    assert(extractCurrencyNumber(s"1$bold RON") == Some((Some("RON"), s"1$bold")))
+  }
   test("suspect currency: EUR .961.31 true") { assert(isSuspectCurrencyCell("EUR .961.31")) }
   test("suspect currency: EUR 6.961.310 false") { assert(!isSuspectCurrencyCell("EUR 6.961.310")) }
   test("replace numeric: RON 71.371 -> RON 471.371 true") {

@@ -213,6 +213,24 @@ class TransformOracleSpec extends AnyFunSuite {
     })
   }
 
+  test("countSuspectTableCells' digit prefilter is exact") {
+    // the count without the prefilter: every non-empty cell through the
+    // clean chain (table_fixes.py:681-692)
+    def unfiltered(d: Doc): Int = d.items.flatMap(_.table).flatMap(_.cells).count { c =>
+      c.text != null && c.text.nonEmpty &&
+        CellClean.isSuspectCurrencyCell(CellClean.cleanTableCellText(c.text))
+    }
+    val suspectGen: Gen[String] = Gen.frequency(6 -> textOrNull,
+      1 -> Gen.oneOf("EUR .961.31", "RON 71.371", "RON .1", "EUR \uD835\uDFCF.22"))
+    check(Prop.forAll(Gen.listOf(suspectGen)) { texts =>
+      val t = TableData(1, texts.length, texts.zipWithIndex.map { case (x, c) =>
+        cell(0, 1, c, c + 1, x, None) }.toArray)
+      val doc = Doc("u", Array(DocItem(0, ItemKind.Table, Label.Table, ContentLayer.Body, 1, None,
+        "", Some(t))), Array(PageDim(1, 600, 800)))
+      same("countSuspectTableCells", DocTransforms.countSuspectTableCells(doc), unfiltered(doc), texts)
+    })
+  }
+
   test("currency columns fail like the oracle on a voting cell outside the columns") {
     for (text <- Seq("RON 5", "x", null)) {
       val t = TableData(2, 2, Array(cell(1, 2, 3, 4, text, None)))
