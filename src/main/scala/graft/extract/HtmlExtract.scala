@@ -109,12 +109,6 @@ object HtmlExtract {
     parsed.doc.copy(items = out)
   }
 
-  private val BlockTags: Set[String] = Set(
-    "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "ul", "ol",
-    "table", "tr", "td", "th", "thead", "tbody", "section", "article",
-    "header", "footer", "nav", "aside", "main", "figure", "figcaption",
-    "blockquote", "pre", "br", "hr", "title")
-
   private val FurnitureTags: Set[String] = Set("nav", "aside")
   // <title> holds chrome/site furniture, not content — skip like script/style
   private val RawTextTags: Set[String] = Set("script", "style", "title")

@@ -43,15 +43,7 @@ object Pipeline {
         * conversion_utils.py:348-353): convert only those pages. */
       pageRange: Option[(Int, Int)] = None,
       /** max_num_pages analog: convert only the first N pages. */
-      maxPages: Option[Int] = None,
-      /** picture render mode: placeholder (reference default) | referenced
-        * | embedded — see MarkdownRender.ImageMode. */
-      imageMode: String = MarkdownRender.ImageMode.Placeholder,
-      /** use the neighbor-aware Boilerpipe NumWordsRulesClassifier
-        * (HtmlExtract.applyBoilerpipe) instead of the per-block thresholds.
-        * Off by default: the reference semantics (and the probe/OCR config
-        * views) are defined over the threshold path. */
-      boilerpipe: Boolean = false)
+      maxPages: Option[Int] = None)
 
   /** Apply the page_range / max_pages restriction to a parsed tree — the
     * reference passes these to the converter, so it runs BEFORE the trigger
@@ -182,12 +174,7 @@ object Pipeline {
       // instead of re-parsing (applyConfig is an array map)
       val html = new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8)
       detailed = HtmlExtract.parseDetailed(url, html)
-      if (opts.boilerpipe) {
-        // classifier mode: one view, no probe/OCR re-thresholding (those
-        // config knobs are parameters of the threshold path)
-        parsed = restrictPages(HtmlExtract.applyBoilerpipe(detailed), opts)
-        backend = "boilerpipe"
-      } else if (opts.ocrMode == "on") {
+      if (opts.ocrMode == "on") {
         // forced full-page OCR (conversion_utils.py:357-358): the keep-
         // everything parse unconditionally — no probe, no retry bookkeeping,
         // and no standard parse paid first
@@ -200,7 +187,7 @@ object Pipeline {
           HtmlExtract.applyConfig(detailed, std.linkDensityThreshold, std.minContentChars), opts)
         backend = std.name
       }
-      if (!opts.boilerpipe && opts.ocrMode != "on" && opts.backendAuto) {
+      if (opts.ocrMode != "on" && opts.backendAuto) {
         // probe shortcut: scoring is capped at 100 and Python max keeps the
         // first argmax, so a perfect standard page-1 always wins — only
         // sub-100 documents score the aggressive view
@@ -215,7 +202,7 @@ object Pipeline {
           }
         }
       }
-      if (!opts.boilerpipe && opts.ocrMode == "auto") {
+      if (opts.ocrMode == "auto") {
         val text = MarkdownRender.renderPlainText(parsed)
         val charsPerPage = text.length.toDouble / math.max(parsed.pages.length, 1)
         val ratio = spacedCellRatio(parsed)
@@ -270,8 +257,7 @@ object Pipeline {
     }
 
     val (doc, counters) = DocTransforms.applyAll(parsed)
-    val md = MarkdownRender.postProcess(
-      MarkdownRender.render(doc, imageMode = opts.imageMode))
+    val md = MarkdownRender.postProcess(MarkdownRender.render(doc))
     val text = MarkdownRender.renderPlainText(doc)
     ExtractedRow(
       url = url,
@@ -327,30 +313,33 @@ object Pipeline {
     pages.select(col("url"), col("html"), col("lang"),
       pmod(xxhash64(col("url")), lit(numBuckets)).cast("int").as("bucket"))
 
-  /** Per-bucket (docCount, bytes) accumulator: rides the commit's write job
-    * so lineage stats need NO post-write rescan of the output. Exactly-once
-    * because `extractAndCommit` updates it in a map directly under the write,
-    * inside the write's result stage — Spark applies a result task's
-    * accumulator updates once per successfully-committed partition. */
+  /** Totals of one commit's new rows in one bucket. */
+  private case class BucketStats(docs: Long, mdChars: Long, changedCells: Long,
+                                 removedItems: Long) {
+    def +(o: BucketStats): BucketStats = BucketStats(docs + o.docs, mdChars + o.mdChars,
+      changedCells + o.changedCells, removedItems + o.removedItems)
+  }
+
+  /** Per-bucket stats accumulator: rides the commit's write job so lineage
+    * stats need NO post-write rescan of the output. Exactly-once because
+    * `extractAndCommit` updates it in a map directly under the write, inside
+    * the write's result stage — Spark applies a result task's accumulator
+    * updates once per successfully-committed partition. */
   private class BucketStatsAcc extends org.apache.spark.util.AccumulatorV2[
-      (Int, Long), Map[Int, (Long, Long)]] {
-    private val m = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
+      ExtractedRow, Map[Int, BucketStats]] {
+    private val m = scala.collection.mutable.HashMap.empty[Int, BucketStats]
+    private def plus(b: Int, s: BucketStats): Unit = m(b) = m.get(b).fold(s)(_ + s)
     override def isZero: Boolean = m.isEmpty
     override def copy(): BucketStatsAcc = {
-      val c = new BucketStatsAcc; m.foreach { case (k, v) => c.m(k) = v }; c
+      val c = new BucketStatsAcc; c.m ++= m; c
     }
     override def reset(): Unit = m.clear()
-    override def add(v: (Int, Long)): Unit = {
-      val cur = m.getOrElse(v._1, (0L, 0L))
-      m(v._1) = (cur._1 + 1, cur._2 + v._2)
-    }
+    override def add(r: ExtractedRow): Unit =
+      plus(r.bucket, BucketStats(1, r.md_chars, r.changed_cells, r.removed_items))
     override def merge(other: org.apache.spark.util.AccumulatorV2[
-        (Int, Long), Map[Int, (Long, Long)]]): Unit =
-      other.value.foreach { case (b, (n, bytes)) =>
-        val cur = m.getOrElse(b, (0L, 0L))
-        m(b) = (cur._1 + n, cur._2 + bytes)
-      }
-    override def value: Map[Int, (Long, Long)] = m.toMap
+        ExtractedRow, Map[Int, BucketStats]]): Unit =
+      other.value.foreach { case (b, s) => plus(b, s) }
+    override def value: Map[Int, BucketStats] = m.toMap
   }
 
   /** Full extraction over a pages DataFrame (url, warc_ts, html, text, lang).
@@ -402,8 +391,11 @@ object Pipeline {
     * accumulating map runs inside the write's result stage. */
   def extractAndCommit(spark: SparkSession, pages: DataFrame, outDir: String,
                        numBuckets: Int = DefaultBuckets): (String, Long) = {
+    import graft.lineage.Lineage
     import spark.implicits._
-    val done = graft.lineage.Lineage.committedBuckets(outDir)
+    // one manifest read serves both the resume set and the carried-over stats
+    val prevStats = Lineage.latest(outDir).fold(Seq.empty[Lineage.PartitionStat])(_.partitions)
+    val done = prevStats.map(_.bucket).toSet
 
     // crash safety: a previous run may have written bucket files and died
     // before committing the manifest — those buckets will be re-extracted, so
@@ -434,41 +426,21 @@ object Pipeline {
     // avoidable full scan of the new output
     val statsAcc = new BucketStatsAcc
     spark.sparkContext.register(statsAcc, "graft-bucket-stats")
-    // the only operator between this map and the write is `observe`, so the
-    // map runs in the write's result stage, after the bucket exchange
-    val extracted = extract(spark, pages, numBuckets, skipBuckets = done)
-      .map { r => statsAcc.add((r.bucket, r.md_chars)); r }
-    // observed metrics ride the job (audit_utils fix-report counters analog,
-    // SURVEY §2.4): no second pass, no accumulators to merge by hand
-    val obs = org.apache.spark.sql.Observation(s"extract-commit")
-    extracted.toDF()
-      .observe(obs, count(lit(1)).as("docs"), sum($"changed_cells").as("changed_cells"),
-        sum($"removed_items").as("removed_items"), sum($"md_chars").as("md_chars"))
+    extract(spark, pages, numBuckets, skipBuckets = done)
+      .map { r => statsAcc.add(r); r }
       .write.mode("append").partitionBy("bucket").parquet(s"$outDir/data")
-    val observed = obs.get
     val elapsedMs = (System.nanoTime() - t0) / 1000000
 
     // incremental stats: the just-written buckets come from the accumulator,
     // merged with the previous manifest (no rescan of any data at commit)
-    val prevStats: Map[Int, graft.lineage.Lineage.PartitionStat] =
-      graft.lineage.Lineage.snapshots(outDir).lastOption
-        .map(_._2.map(s => s.bucket -> s).toMap).getOrElse(Map.empty)
-        .filter { case (b, _) => done.contains(b) }
-    val newStats = statsAcc.value.toSeq.sortBy(_._1)
-      .map { case (b, (n, bytes)) => graft.lineage.Lineage.PartitionStat(b, n, bytes, elapsedMs) }
-
-    val merged = (prevStats.values ++ newStats).toSeq.sortBy(_.bucket)
-    val newDocs = newStats.map(_.docCount).sum
-    val snapshotId = graft.lineage.Lineage.commit(outDir, numBuckets, merged,
-      inputDesc = {
-        // sum() over zero rows observes as null (key present) — normalize
-        def met(k: String): Long =
-          observed.get(k).flatMap(v => Option(v)).map(_.asInstanceOf[Number].longValue)
-            .getOrElse(0L)
-        pages.schema.map(_.name).mkString(",") +
-          s"; observed: docs=${met("docs")} changed_cells=${met("changed_cells")}" +
-          s" removed_items=${met("removed_items")}"
-      })
-    (snapshotId, newDocs)
+    val newStats = statsAcc.value
+    val total = newStats.values.foldLeft(BucketStats(0, 0, 0, 0))(_ + _)
+    val merged = (prevStats ++ newStats.map { case (b, s) =>
+      Lineage.PartitionStat(b, s.docs, s.mdChars, elapsedMs) }).sortBy(_.bucket)
+    val snapshotId = Lineage.commit(outDir, numBuckets, merged,
+      inputDesc = pages.schema.map(_.name).mkString(",") +
+        s"; observed: docs=${total.docs} changed_cells=${total.changedCells}" +
+        s" removed_items=${total.removedItems}")
+    (snapshotId, total.docs)
   }
 }

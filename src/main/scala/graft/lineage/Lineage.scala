@@ -1,6 +1,10 @@
 package graft.lineage
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import com.fasterxml.jackson.annotation.JsonProperty
+import com.fasterxml.jackson.databind.PropertyNamingStrategies
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Commit-level checkpointing with per-partition lineage rows — the
@@ -15,9 +19,23 @@ import scala.jdk.CollectionConverters._
   * A killed job resumes by reading the latest manifest's committed bucket
   * set and pruning those buckets from the input scan — partition-granular
   * resume, no recomputation of committed work.
+  *
+  * This object is the only code that knows the manifest format: one typed
+  * record, written and read by one Jackson mapper.
   */
 object Lineage {
-  case class PartitionStat(bucket: Int, docCount: Long, bytes: Long, elapsedMs: Long)
+  case class PartitionStat(@JsonProperty("partition_id") bucket: Int, docCount: Long,
+                           bytes: Long, elapsedMs: Long)
+
+  /** One snapshot manifest. On disk: `snapshot_id`, `num_buckets`, `input`,
+    * `partitions[]` of `partition_id`/`doc_count`/`bytes`/`elapsed_ms`. */
+  case class Manifest(snapshotId: Long, numBuckets: Int, input: String,
+                      partitions: Seq[PartitionStat])
+
+  private val mapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .build()
 
   private def lineageDir(outDir: String) = Paths.get(outDir, "_lineage")
 
@@ -34,64 +52,33 @@ object Lineage {
   private def idOf(name: String): Long =
     name.stripPrefix("snapshot-").stripSuffix(".json").toLong
 
-  /** Monotonic snapshot id = max existing + 1 (no wall clock: determinism). */
-  private def nextSnapshotId(outDir: String): Long = {
-    val ids = manifestNames(outDir).map(idOf)
-    if (ids.isEmpty) 1L else ids.max + 1L
-  }
+  private def read(outDir: String, name: String): Manifest =
+    mapper.readValue(lineageDir(outDir).resolve(name).toFile, classOf[Manifest])
 
   def commit(outDir: String, numBuckets: Int, stats: Seq[PartitionStat],
              inputDesc: String): String = {
     val dir = lineageDir(outDir)
     Files.createDirectories(dir)
-    val id = nextSnapshotId(outDir)
-    val rows = stats.map { s =>
-      s"""    {"partition_id": ${s.bucket}, "doc_count": ${s.docCount}, "bytes": ${s.bytes}, "elapsed_ms": ${s.elapsedMs}}"""
-    }.mkString(",\n")
-    val json =
-      s"""{
-         |  "snapshot_id": $id,
-         |  "num_buckets": $numBuckets,
-         |  "input": "${inputDesc.replace("\"", "'")}",
-         |  "partitions": [
-         |$rows
-         |  ]
-         |}""".stripMargin
+    // monotonic snapshot id = max existing + 1 (no wall clock: determinism)
+    val id = manifestNames(outDir).map(idOf).maxOption.fold(1L)(_ + 1L)
     val tmp = dir.resolve(s".snapshot-$id.json.tmp")
-    Files.writeString(tmp, json)
+    Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsString(Manifest(id, numBuckets, inputDesc, stats)))
     // atomic publish: a crash mid-commit leaves no partial manifest
-    Files.move(tmp, dir.resolve(s"snapshot-$id.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, dir.resolve(s"snapshot-$id.json"), StandardCopyOption.ATOMIC_MOVE)
     id.toString
   }
 
+  /** The latest snapshot's manifest (None before the first commit); reads
+    * one manifest file. */
+  def latest(outDir: String): Option[Manifest] =
+    manifestNames(outDir).maxByOption(idOf).map(read(outDir, _))
+
   /** Buckets already committed by the latest snapshot (empty if none). */
-  def committedBuckets(outDir: String): Set[Int] = {
-    val dir = lineageDir(outDir)
-    val manifests = manifestNames(outDir)
-    if (manifests.isEmpty) return Set.empty
-    val latest = manifests.maxBy(idOf)
-    val json = Files.readString(dir.resolve(latest))
-    // minimal parse: partition_id values
-    val m = java.util.regex.Pattern.compile("\"partition_id\":\\s*(\\d+)").matcher(json)
-    val out = Set.newBuilder[Int]
-    while (m.find()) out += m.group(1).toInt
-    out.result()
-  }
+  def committedBuckets(outDir: String): Set[Int] =
+    latest(outDir).fold(Set.empty[Int])(_.partitions.map(_.bucket).toSet)
 
   /** All snapshots with their partition rows, in snapshot-id order. */
-  def snapshots(outDir: String): Seq[(Long, Seq[PartitionStat])] = {
-    val dir = lineageDir(outDir)
-    manifestNames(outDir).sortBy(idOf)
-      .map { name =>
-        val id = idOf(name)
-        val json = Files.readString(dir.resolve(name))
-        val m = java.util.regex.Pattern.compile(
-          "\\{\"partition_id\":\\s*(\\d+),\\s*\"doc_count\":\\s*(\\d+),\\s*\"bytes\":\\s*(\\d+),\\s*\"elapsed_ms\":\\s*(\\d+)\\}").matcher(json)
-        val stats = Seq.newBuilder[PartitionStat]
-        while (m.find()) stats += PartitionStat(m.group(1).toInt, m.group(2).toLong,
-          m.group(3).toLong, m.group(4).toLong)
-        (id, stats.result())
-      }
-  }
+  def snapshots(outDir: String): Seq[(Long, Seq[PartitionStat])] =
+    manifestNames(outDir).sortBy(idOf).map(name => (idOf(name), read(outDir, name).partitions))
 }

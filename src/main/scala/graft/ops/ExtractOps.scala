@@ -1058,20 +1058,9 @@ object ExtractOps {
       .cache()
     val nB = 8
     val outDir = java.nio.file.Files.createTempDirectory("graft-q53").toString
-    // run 1: four buckets extracted, written, committed
-    val run1 = Pipeline.extract(s, pages, numBuckets = nB,
-      skipBuckets = (4 until nB).toSet).toDF().cache()
-    run1.write.mode("append").partitionBy("bucket").parquet(s"$outDir/data")
-    val stats1 = run1.groupBy($"bucket")
-      .agg(count(lit(1)).as("n"), sum(length($"markdown")).cast("long").as("b"))
-      .collect() // bounded by numBuckets, never by corpus size
-      .map(r => graft.lineage.Lineage.PartitionStat(
-        r.getInt(0), r.getLong(1), r.getLong(2), 0L))
-      .toSeq.sortBy(_.bucket)
-    graft.lineage.Lineage.commit(outDir, nB, stats1,
-      "q53 run1 (killed after committing 4 of 8 buckets)")
-    val docs1 = stats1.map(_.docCount).sum
-    run1.unpersist()
+    // run 1: killed after committing 4 of 8 buckets
+    val (_, docs1) = Pipeline.extractAndCommit(s,
+      Pipeline.withBucket(pages, nB).filter($"bucket" < 4), outDir, numBuckets = nB)
     // the next run writes bucket 4 and dies pre-commit: orphaned data files
     Pipeline.extract(s, pages, numBuckets = nB,
       skipBuckets = (0 until nB).toSet - 4).toDF()

@@ -28,7 +28,6 @@ object Ops {
   private def nation(s: SparkSession, dir: String) = s.read.parquet(s"$dir/nation.parquet")
   private def region(s: SparkSession, dir: String) = s.read.parquet(s"$dir/region.parquet")
   private def part(s: SparkSession, dir: String) = s.read.parquet(s"$dir/part.parquet")
-  private def supplier(s: SparkSession, dir: String) = s.read.parquet(s"$dir/supplier.parquet")
   private def events(s: SparkSession, dir: String) = s.read.parquet(s"$dir/events.parquet")
   private def documents(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")
   private def embeddings(s: SparkSession, dir: String) = s.read.parquet(s"$dir/embeddings.parquet")

@@ -189,19 +189,13 @@ object WarcSource {
     }
   }
 
-  /** Open one segment for streaming (local files direct, anything else via
-    * the Hadoop filesystem the path declares). */
-  private def openSegment(path: String): java.io.InputStream = {
-    val uri = new java.net.URI(path)
-    if (uri.getScheme == null)
-      new java.io.FileInputStream(path)
-    else if (uri.getScheme == "file")
-      new java.io.FileInputStream(new java.io.File(uri))
-    else {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      org.apache.hadoop.fs.FileSystem.get(uri, conf)
-        .open(new org.apache.hadoop.fs.Path(uri))
-    }
+  /** Open one segment for streaming. binaryFile's `path` is a Hadoop path
+    * string (spaces and `%` stay literal), so it is parsed as a Hadoop
+    * `Path`, not as a `java.net.URI`. */
+  private def openSegment(path: String, conf: org.apache.hadoop.conf.Configuration)
+      : java.io.InputStream = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(conf).open(p)
   }
 
   /** Split an application/http payload into (status, content-type, body);
@@ -228,6 +222,8 @@ object WarcSource {
     * selecting/defaulting text and lang. */
   def readWarc(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      org.apache.spark.sql.GraftShim.hadoopConf(spark)))
     // round 6: stream each segment from its path instead of routing the
     // whole file through binaryFile's content column — binaryFile prunes
     // the unread content column, and the incremental scanner caps per-task
@@ -235,7 +231,7 @@ object WarcSource {
     spark.read.format("binaryFile").load(pathGlob)
       .select($"path")
       .as[String]
-      .mapPartitions(_.flatMap(p => parseRecordsStream(openSegment(p))))
+      .mapPartitions(_.flatMap(p => parseRecordsStream(openSegment(p, conf.value.value))))
       .filter(r => r.warcType == "response" && r.httpStatus == 200 &&
         r.targetUri.nonEmpty)
       .map(r => (r.targetUri, parseWarcDate(r.date), r.body))

@@ -370,20 +370,3 @@ class HeadMetaSpec extends org.scalatest.funsuite.AnyFunSuite {
     HtmlExtract.headMeta("<html><head><link rel=") // truncated
   }
 }
-
-class BoilerpipeModeSpec extends org.scalatest.funsuite.AnyFunSuite {
-  test("ExtractOptions(boilerpipe = true) routes through the classifier") {
-    val links = (1 to 10).map(k => s"""<a href="/$k">Leg$k</a>""").mkString(" ")
-    // > 40 words: the unconditional-content leaf even right after a link list
-    val para = (1 to 45).map(k => s"cuvant$k").mkString(" ")
-    val html = s"<html><body><div>$links</div><div>$para</div></body></html>"
-    val row = Pipeline.extractOne("doc://bp", html.getBytes("UTF-8"), "ro", 0,
-      Pipeline.ExtractOptions(boilerpipe = true))
-    assert(row.backend == "boilerpipe")
-    assert(row.markdown.contains("cuvant1"))
-    assert(!row.markdown.contains("Leg1")) // link list dropped
-    // default path unchanged
-    val std = Pipeline.extractOne("doc://bp", html.getBytes("UTF-8"), "ro", 0)
-    assert(std.backend != "boilerpipe")
-  }
-}

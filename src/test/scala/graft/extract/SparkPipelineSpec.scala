@@ -74,7 +74,7 @@ class SparkPipelineSpec extends AnyFunSuite {
   }
 
   test("bucket stats are exactly-once: manifest equals a rescan of data, full and resumed") {
-    import org.apache.spark.sql.functions.{count, lit, sum}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
     val pages = pagesDF(32)
     val buckets = Pipeline.withBucket(pages, 8).select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted
@@ -85,11 +85,26 @@ class SparkPipelineSpec extends AnyFunSuite {
     def rescan(d: String) = spark.read.parquet(s"$d/data").groupBy("bucket")
       .agg(count(lit(1)), sum("md_chars")).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    // the latest snapshot's observed counts equal a rescan of the rows its
+    // commit added: those outside the buckets committed before it
+    val Observed = raw".*; observed: docs=(\d+) changed_cells=(\d+) removed_items=(\d+)".r
+    def checkObserved(d: String, before: Set[Int], label: String): (Long, Long, Long) = {
+      val Observed(docs, changed, removed) = graft.lineage.Lineage.latest(d).get.input
+      val newRows = spark.read.parquet(s"$d/data")
+        .filter(!col("bucket").isin(before.toSeq: _*))
+        .agg(count(lit(1)), coalesce(sum("changed_cells"), lit(0L)),
+          coalesce(sum("removed_items"), lit(0L)))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).head
+      assert((docs.toLong, changed.toLong, removed.toLong) == newRows, label)
+      newRows
+    }
     // every bucket extracted in one run
     val full = java.nio.file.Files.createTempDirectory("graft-stats-full").toString
     val (_, docs) = Pipeline.extractAndCommit(spark, pages, full, numBuckets = 8)
     assert(docs == 32)
     assert(manifest(full) == rescan(full), "full run")
+    val (_, changed, removed) = checkObserved(full, Set.empty, "full run")
+    assert(changed > 0 && removed > 0, "the corpus must exercise both counters")
     // an earlier run committed two buckets; the resumed run skips them
     val resumed = java.nio.file.Files.createTempDirectory("graft-stats-resume").toString
     val first = pages.join(Pipeline.withBucket(pages, 8)
@@ -97,8 +112,10 @@ class SparkPipelineSpec extends AnyFunSuite {
       .select("url"), "url")
     val (_, docs1) = Pipeline.extractAndCommit(spark, first, resumed, numBuckets = 8)
     assert(graft.lineage.Lineage.committedBuckets(resumed) == early)
+    checkObserved(resumed, Set.empty, "first commit")
     val (_, docs2) = Pipeline.extractAndCommit(spark, pages, resumed, numBuckets = 8)
     assert(docs1 + docs2 == 32, s"docs1=$docs1 docs2=$docs2")
+    checkObserved(resumed, early, "resumed commit")
     assert(manifest(resumed) == rescan(resumed), "resumed run")
     assert(manifest(resumed) == manifest(full), "resumed vs full")
   }

@@ -95,4 +95,21 @@ class WarcSourceSpec extends AnyFunSuite {
     assert(rs.head.warcType == "warcinfo" && rs.head.httpStatus == 0)
     assert(rs(1).httpStatus == 404) // readWarc's filter drops both
   }
+
+  test("readWarc reads segments under directory names with a space or a percent escape") {
+    val spark = graft.extract.SparkTestSession.spark
+    val root = java.nio.file.Files.createTempDirectory("graft-warc-dirs")
+    for (name <- Seq("warc plain dir", "warc%41pct dir")) {
+      val dir = java.nio.file.Files.createDirectories(root.resolve(name))
+      java.nio.file.Files.write(dir.resolve("seg-0.warc"), WarcSource.writeWarc(
+        Seq(rec("https://w.example/0", "<p>plain</p>")), gzip = false))
+      java.nio.file.Files.write(dir.resolve("seg-1.warc.gz"), WarcSource.writeWarc(
+        Seq(rec("https://w.example/1", "<p>gz</p>")), gzip = true))
+      val rows = WarcSource.readWarc(spark, dir.resolve("seg-*").toString)
+        .collect().map(r => (r.getString(0), new String(r.getAs[Array[Byte]](2), "UTF-8")))
+        .sortBy(_._1).toSeq
+      assert(rows == Seq("https://w.example/0" -> "<p>plain</p>",
+        "https://w.example/1" -> "<p>gz</p>"), name)
+    }
+  }
 }
