@@ -313,6 +313,14 @@ object Pipeline {
     pages.select(col("url"), col("html"), col("lang"),
       pmod(xxhash64(col("url")), lit(numBuckets)).cast("int").as("bucket"))
 
+  /** Deletes a directory and everything under it. */
+  private[graft] def deleteTree(dir: String): Unit = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => java.nio.file.Files.deleteIfExists(f))
+    finally walk.close()
+  }
+
   /** Totals of one commit's new rows in one bucket. */
   private case class BucketStats(docs: Long, mdChars: Long, changedCells: Long,
                                  removedItems: Long) {
@@ -408,13 +416,7 @@ object Pipeline {
           val name = p.getFileName.toString
           if (name.startsWith("bucket=")) {
             val b = name.stripPrefix("bucket=").toInt
-            if (!done.contains(b)) {
-              // uncommitted leftovers: remove recursively
-              val walk = java.nio.file.Files.walk(p)
-              try walk.sorted(java.util.Comparator.reverseOrder())
-                .forEach(f => java.nio.file.Files.deleteIfExists(f))
-              finally walk.close()
-            }
+            if (!done.contains(b)) deleteTree(p.toString) // uncommitted leftovers
           }
         }
       } finally stream.close()

@@ -865,6 +865,7 @@ object ExtractOps {
       .orderBy($"user_id", $"session_start")
     val result = out.localCheckpoint()
     ev.unpersist()
+    Pipeline.deleteTree(base)
     result
   }
 
@@ -903,6 +904,7 @@ object ExtractOps {
       .orderBy($"id_a", $"id_b")
     val result = out.localCheckpoint()
     docs.unpersist()
+    Pipeline.deleteTree(base)
     result
   }
 
@@ -957,6 +959,7 @@ object ExtractOps {
     val result = out.localCheckpoint()
     expected.unpersist()
     read.unpersist()
+    Pipeline.deleteTree(base)
     result
   }
 
@@ -1001,6 +1004,7 @@ object ExtractOps {
       .orderBy($"url")
     val result = out.localCheckpoint()
     pages.unpersist()
+    Pipeline.deleteTree(base)
     result
   }
 
@@ -1074,8 +1078,10 @@ object ExtractOps {
     val distinctUrls = data.select($"url").distinct().count()
     val nSnapshots = graft.lineage.Lineage.snapshots(outDir).length.toLong
     pages.unpersist()
-    Seq((committed, distinctUrls, docs1 + docs2, docs3, nSnapshots))
+    val summary = Seq((committed, distinctUrls, docs1 + docs2, docs3, nSnapshots))
       .toDF("committed_docs", "distinct_urls", "docs_run12", "docs_run3", "snapshots")
+    Pipeline.deleteTree(outDir)
+    summary
   }
 
   /** q54: page-range / max-pages scan pruning + the three picture render

@@ -770,8 +770,8 @@ object Ops {
     * rehearsals validated (BASELINE.md): EXACT dedup first (template
     * classes collapse by orders of magnitude before any LSH bucket), then
     * capped minhash-LSH star edges over the representatives only, then
-    * pointer-doubling connected components, whose label is already the
-    * min-id representative of each component, with members inheriting
+    * connected components ([[connectedComponents]]), whose label is already
+    * the min-id representative of each component, with members inheriting
     * their exact-class representative's assignment.
     *
     * Input: any (doc_id: long, text: string) relation.
@@ -779,10 +779,12 @@ object Ops {
     * and idempotent (canonical ids map to themselves).
     *
     * 100 TB shape: one window exchange for exact classes, one for the
-    * capped LSH buckets over the collapsed relation, O(log n) component
-    * rounds, one broadcast-friendly join back. No pair join ever sees the
-    * raw corpus. */
-  def dedupChain(docs: DataFrame, maxBucketSize: Int = 512): DataFrame = {
+    * capped LSH buckets over the collapsed relation, then components: one
+    * union-find task while the star-edge forest holds at most 10^6 edges,
+    * O(log n) pointer-doubling rounds above that; one broadcast-friendly
+    * join back. No pair join ever sees the raw corpus. */
+  def dedupChain(docs: DataFrame, maxBucketSize: Int = 512,
+                 localBelow: Long = 1000000L): DataFrame = {
     // round 6: exact classes via ONE exchange — min(doc_id) over a window
     // partitioned by the text hash replaces the round-5 agg + join-back
     // (which scanned and hashed the corpus twice; the partial aggregate
@@ -799,7 +801,7 @@ object Ops {
     val docToRep = base.select($"doc_id", $"rep_id")
     val reps = base.filter($"doc_id" === $"rep_id").select($"doc_id", $"text")
     val (labels, _) = connectedComponents(reps.select($"doc_id"),
-      lshStarEdgesOf(reps, maxBucketSize))
+      lshStarEdgesOf(reps, maxBucketSize), localBelow = localBelow)
     // min-label propagation converges to the component's min doc_id: the
     // label IS the canonical doc
     val repToCanon = labels.select($"doc_id".as("rep_id"), $"component".as("canonical_id"))
@@ -1095,9 +1097,10 @@ object Ops {
     * to themselves). The candidate pairs feed only the components, so the
     * propagation runs over the LSH star edges ([[lshStarEdgesOf]]), which
     * span the same components with one edge per bucket member instead of a
-    * clique. Delegates to [[connectedComponents]] — pointer-doubling
-    * min-label propagation, O(log diameter) rounds, each round several
-    * Spark jobs under AQE. */
+    * clique. Delegates to [[connectedComponents]]: one union-find task
+    * while the star-edge forest holds at most 10^6 edges (every scale
+    * factor here), pointer-doubling min-label propagation above that —
+    * O(log diameter) rounds, each round several Spark jobs under AQE. */
   def q47NeardupComponents(s: SparkSession, dir: String, maxIters: Int = 64): DataFrame = {
     val nodes = documents(s, dir).select(col("doc_id"))
     connectedComponents(nodes, lshStarEdgesOf(documents(s, dir)), maxIters)._1
@@ -1122,6 +1125,15 @@ object Ops {
     * that lies inside one partition arrives as a star and settles in one
     * round. Task memory is O(distinct endpoints in the partition).
     *
+    * One count() then materializes the cached forest. If it holds at most
+    * `localBelow` edges, no round runs: the forest is coalesced into one
+    * task, whose [[LocalForest]] labels every endpoint with its component's
+    * min id — exactly the rounds' fixpoint — and nodes without an edge keep
+    * their own id. That task holds O(distinct endpoints) <= 2 * localBelow
+    * ids, and the result comes back with 0 rounds. Larger graphs run the
+    * rounds below, whose contraction (`contractAbove`) is what keeps a
+    * 10^12-edge relation tractable.
+    *
     * One action per round: the convergence check rides the label
     * materialization via `observe` (max(changed) collected by the eager
     * localCheckpoint), not a second count(). Under AQE that action still
@@ -1136,17 +1148,14 @@ object Ops {
 
   def connectedComponents(nodes: DataFrame, edgesIn: DataFrame,
                           maxIters: Int = 64,
-                          contractAbove: Long = 1000000L): (DataFrame, Int) = {
+                          contractAbove: Long = 1000000L,
+                          localBelow: Long = 1000000L): (DataFrame, Int) = {
     import edgesIn.sparkSession.implicits._
     // the forest comes out symmetric (both directions of every edge)
     val edges = edgesIn.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)]
-      .mapPartitions { it =>
-        val forest = new LocalForest
-        it.foreach { case (a, b) => forest.union(a, b) }
-        forest.edges
-      }
+      .mapPartitions(LocalForest.of(_).edges)
       .toDF("src", "dst").cache()
     // the propagation invariant needs every edge endpoint present in the
     // label table (an absent endpoint would enter step1 with own=null and
@@ -1156,6 +1165,17 @@ object Ops {
     val allNodes = nodes.select(col(nodes.columns.head).as("doc_id"))
       .union(edges.select(col("src").as("doc_id")))
       .distinct()
+    val forestEdges = edges.count() // materializes the cache
+    if (forestEdges <= localBelow) {
+      val labels = edges.coalesce(1).as[(Long, Long)]
+        .mapPartitions(LocalForest.of(_).labels)
+        .toDF("l_id", "label")
+      val comp = allNodes.join(labels, col("doc_id") === col("l_id"), "left")
+        .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("component"))
+        .localCheckpoint()
+      edges.unpersist()
+      return (comp, 0)
+    }
     var comp = allNodes.select(col("doc_id"), col("doc_id").as("component"))
       .localCheckpoint()
     // Edge contraction (round 5): once both endpoints share a label, an
@@ -1170,7 +1190,7 @@ object Ops {
     // therefore the result) is identical either way — pinned by
     // CcContractionSpec at threshold 0.
     var curEdges = edges
-    var edgeCount = -1L // unknown until first contraction check
+    var edgeCount = forestEdges
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -1200,7 +1220,6 @@ object Ops {
         .map(_.asInstanceOf[Number].intValue()).getOrElse(0) == 0
       iter += 1
       if (!converged) {
-        if (edgeCount < 0) edgeCount = curEdges.count() // first round only
         if (edgeCount > contractAbove) {
           val l1 = comp.select(col("doc_id").as("e_s"), col("component").as("cs"))
           val l2 = comp.select(col("doc_id").as("e_d"), col("component").as("cd"))
@@ -1243,8 +1262,10 @@ object Ops {
   }
 }
 
-/** The per-partition union-find of [[Ops.connectedComponents]]' pre-pass.
-  * `union` folds edges in one at a time; `edges` then emits, in both
+/** The union-find of [[Ops.connectedComponents]]: per partition in its
+  * pre-pass, over the whole forest in its one-task finish. `union` folds
+  * edges in one at a time; `labels` then emits each endpoint with its
+  * component's min id, and `edges` emits, in both
   * directions, one edge from every non-root node to its root — the min id
   * of its local component — plus a self-loop for a node whose only edges
   * were self-loops, so every endpoint survives. Ids are interned in a
@@ -1298,6 +1319,10 @@ private[ops] final class LocalForest {
     if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
   }
 
+  /** (id, min id of its component) for every endpoint seen, roots included. */
+  def labels: Iterator[(Long, Long)] =
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+
   def edges: Iterator[(Long, Long)] = {
     val root = Array.tabulate(n)(find)
     val hasMember = new java.util.BitSet(n)
@@ -1308,6 +1333,14 @@ private[ops] final class LocalForest {
       else if (hasMember.get(i)) Iterator.empty
       else Iterator.single((r, r))
     }
+  }
+}
+
+private[ops] object LocalForest {
+  def of(edges: Iterator[(Long, Long)]): LocalForest = {
+    val forest = new LocalForest
+    edges.foreach { case (a, b) => forest.union(a, b) }
+    forest
   }
 }
 

@@ -48,7 +48,8 @@ object DedupOracle {
 
 /** dedupChain (star edges per band bucket, local union-find, label as
   * canonical id) against the clique-pair chain it replaced, and
-  * connectedComponents against a driver union-find. */
+  * connectedComponents against a driver union-find — each both through the
+  * label rounds (localBelow = 0) and through the one-task finish. */
 class DedupChainDiffSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -92,11 +93,13 @@ class DedupChainDiffSpec extends AnyFunSuite {
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val before = spark.conf.get(key)
     try {
-      for (coalesce <- Seq("true", "false"); cap <- Seq(8, Int.MaxValue)) {
+      for (coalesce <- Seq("true", "false"); cap <- Seq(8, Int.MaxValue); rounds <- Seq(true, false)) {
         spark.conf.set(key, coalesce)
-        val got = Ops.dedupChain(docs, maxBucketSize = cap).as[(Long, Long)].collect().toMap
+        val out = if (rounds) Ops.dedupChain(docs, maxBucketSize = cap, localBelow = 0L)
+          else Ops.dedupChain(docs, maxBucketSize = cap)
+        val got = out.as[(Long, Long)].collect().toMap
         val want = DedupOracle.cliqueChain(corpus, cap)
-        assert(got == want, s"coalesce=$coalesce cap=$cap")
+        assert(got == want, s"coalesce=$coalesce cap=$cap rounds=$rounds")
       }
     } finally spark.conf.set(key, before)
     // the cap matters on this corpus: uncapped, the template class is one class
@@ -117,13 +120,37 @@ class DedupChainDiffSpec extends AnyFunSuite {
       // nodes: a sample of the pool (the rest are endpoint-only) plus isolated ids
       val nodes = pool.filter(_ => rnd.nextBoolean()) ++ Vector(-seed.toLong, 10L * seed + 1)
       val slices = 4 + seed % 4
-      val (labels, _) = Ops.connectedComponents(nodes.toDF("doc_id"),
-        spark.sparkContext.parallelize(edges, slices).toDF("src", "dst"))
-      val rows = labels.as[(Long, Long)].collect()
-      val got = rows.toMap
-      assert(rows.length == got.size, s"seed $seed: a node labelled twice")
-      assert(got == DedupOracle.components(nodes, edges), s"seed $seed")
+      val edgeDf = spark.sparkContext.parallelize(edges, slices).toDF("src", "dst")
+      val want = DedupOracle.components(nodes, edges)
+      val runs = Seq(
+        "rounds" -> Ops.connectedComponents(nodes.toDF("doc_id"), edgeDf, localBelow = 0L),
+        "local" -> Ops.connectedComponents(nodes.toDF("doc_id"), edgeDf))
+      for ((path, (labels, rounds)) <- runs) {
+        assert((rounds == 0) == (path == "local"), s"seed $seed $path: $rounds rounds")
+        val rows = labels.as[(Long, Long)].collect()
+        val got = rows.toMap
+        assert(rows.length == got.size, s"seed $seed $path: a node labelled twice")
+        assert(got == want, s"seed $seed $path")
+      }
     }
+  }
+
+  test("one-task finish: at localBelow = forest edge count 0 rounds, one less rounds, same labels") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val edges = Vector.fill(200)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+    val nodes = (0L until 160L).toVector
+    // one input partition: the pre-pass forest is this driver forest
+    val forestEdges = LocalForest.of(edges.iterator).edges.size.toLong
+    def run(localBelow: Long) = Ops.connectedComponents(nodes.toDF("doc_id"),
+      spark.sparkContext.parallelize(edges, 1).toDF("src", "dst"), localBelow = localBelow)
+    val (atCount, r0) = run(forestEdges)
+    val (belowCount, r1) = run(forestEdges - 1)
+    assert(r0 == 0, s"took $r0 rounds at localBelow = $forestEdges")
+    assert(r1 >= 1, s"took $r1 rounds at localBelow = ${forestEdges - 1}")
+    val a = atCount.as[(Long, Long)].collect().toMap
+    assert(a == belowCount.as[(Long, Long)].collect().toMap)
+    assert(a == DedupOracle.components(nodes, edges))
   }
 
   test("a chain inside one partition collapses in the local pre-pass: 2 rounds") {
@@ -131,7 +158,7 @@ class DedupChainDiffSpec extends AnyFunSuite {
     val n = 64L
     val edges = spark.sparkContext.parallelize((0L until n - 1).map(i => (i + 1, i)), 1)
     val (labels, rounds) = Ops.connectedComponents(spark.range(n).toDF("doc_id"),
-      edges.toDF("src", "dst"))
+      edges.toDF("src", "dst"), localBelow = 0L)
     assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L))
     assert(rounds == 2, s"took $rounds rounds") // one to settle, one to observe no change
   }
@@ -151,5 +178,8 @@ class DedupChainDiffSpec extends AnyFunSuite {
     val roots = want.values.toSet
     assert(toRoot.forall { case (x, r) => want(x) == r && roots(r) })
     assert(toRoot.size == want.size - roots.size)
+    val labels = f.labels.toVector
+    assert(labels.size == want.size, "an endpoint labelled twice or not at all")
+    assert(labels.toMap == want)
   }
 }

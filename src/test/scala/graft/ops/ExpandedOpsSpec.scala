@@ -50,12 +50,13 @@ class ExpandedOpsSpec extends AnyFunSuite {
     // worst case for plain min-label propagation: one path graph, min at the
     // far end — O(diameter)=63 rounds without the jump, ~log2(64)=6 with it.
     // One edge per partition: connectedComponents' per-partition union-find
-    // pre-pass then has nothing to collapse, so the bound tests the jump.
+    // pre-pass then has nothing to collapse, and localBelow = 0 keeps the
+    // rounds, so the bound tests the jump.
     val edges = spark.sparkContext
       .parallelize((0L until (n - 1).toLong).map(i => (i, i + 1)), n - 1)
       .toDF("src", "dst")
     assert(edges.rdd.getNumPartitions == n - 1)
-    val (labels, rounds) = Ops.connectedComponents(nodes, edges)
+    val (labels, rounds) = Ops.connectedComponents(nodes, edges, localBelow = 0L)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size == n)
     assert(got.values.forall(_ == 0L), "chain must collapse to component 0")
@@ -70,7 +71,7 @@ class ExpandedOpsSpec extends AnyFunSuite {
     val edges = spark.createDataset(Seq(
       (0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 0L),
       (7L, 5L), (7L, 9L))).toDF("src", "dst")
-    val (labels, _) = Ops.connectedComponents(nodes, edges)
+    val (labels, _) = Ops.connectedComponents(nodes, edges, localBelow = 0L)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L,
       5L -> 5L, 6L -> 6L, 7L -> 5L, 8L -> 8L, 9L -> 5L))

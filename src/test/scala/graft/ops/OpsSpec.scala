@@ -272,7 +272,8 @@ class CcContractionSpec extends org.scalatest.funsuite.AnyFunSuite {
       : (Map[Long, Long], Int) = {
     import spark.implicits._
     val (labels, rounds) = graft.ops.Ops.connectedComponents(
-      nodes.toDF("doc_id"), edges.toDF("src", "dst"), contractAbove = thresh)
+      nodes.toDF("doc_id"), edges.toDF("src", "dst"), contractAbove = thresh,
+      localBelow = 0L)
     (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
   }
 
