@@ -277,8 +277,10 @@ object DocTransforms {
   def removeDateOnlyTextInsidePictures(doc: Doc, ratio: Double = 0.6): (Doc, Int) =
     removeTextInsidePictures(doc, KpiAxis.dateOnly, ratio)
 
+  /** date_cleanup.py:54-70, whose axis battery is export_utils'
+    * _is_axis_like_line (MarkdownPost.isAxisLikeLine). */
   def removeAxisTextInsidePictures(doc: Doc, ratio: Double = 0.6): (Doc, Int) =
-    removeTextInsidePictures(doc, KpiAxis.axisLike, ratio)
+    removeTextInsidePictures(doc, MarkdownPost.isAxisLikeLine, ratio)
 
   /** whitespace_fix.py:23-38 */
   def normalizeDocTextWhitespace(doc: Doc): (Doc, Int) = {

@@ -1469,10 +1469,23 @@ object PdfDoc {
         else "")
   }
 
-  /** Per-page glyphs (see [[Document.sizedPages]]). Empty when the file
-    * does not parse or is locked. */
-  def extractGlyphsAuto(pdf: Array[Byte]): Map[Int, Seq[Glyph]] =
+  /** One page of a read file: its number, its size and its sized glyphs. */
+  case class PageRead(pageNo: Int, width: Double, height: Double, glyphs: Seq[SizedGlyph])
+
+  /** The file's pages with their glyphs (see [[Document.sizedPages]]): the
+    * one read behind `PdfLayout.buildDoc` and [[extractGlyphsAuto]]. Empty
+    * when the file does not parse or is locked; never throws. */
+  def readPages(pdf: Array[Byte]): Seq[PageRead] =
     try {
-      new Document(pdf).sizedPages.map { case (pg, g) => pg.pageNo -> g.map(_.glyph) }.toMap
-    } catch { case _: Exception => Map.empty }
+      new Document(pdf).sizedPages.map { case (pg, g) =>
+        PageRead(pg.pageNo, pg.width, pg.height, g)
+      }
+    } catch { case _: Exception => Seq.empty }
+
+  /** Per-page glyphs of pages already read. */
+  def glyphsOf(pages: Seq[PageRead]): Map[Int, Seq[Glyph]] =
+    pages.map(p => p.pageNo -> p.glyphs.map(_.glyph)).toMap
+
+  /** Per-page glyphs of a file; empty when it does not parse or is locked. */
+  def extractGlyphsAuto(pdf: Array[Byte]): Map[Int, Seq[Glyph]] = glyphsOf(readPages(pdf))
 }

@@ -303,18 +303,17 @@ object PdfLayout {
     out.toSeq
   }
 
-  def buildDoc(url: String, pdf: Array[Byte]): Doc = {
-    // page tree (or pseudo-pages), decoded fonts, real page sizes
-    val pageInputs: Seq[(Int, Double, Double, Seq[SizedGlyph])] =
-      try {
-        new PdfDoc.Document(pdf).sizedPages.map { case (pg, sized) =>
-          (pg.pageNo, pg.width, pg.height, sized)
-        }
-      } catch { case _: Exception => Seq.empty }
+  /** Reads and lays out a PDF file; an unreadable file gives a Doc with no
+    * page. */
+  def buildDoc(url: String, pdf: Array[Byte]): Doc = layout(url, PdfDoc.readPages(pdf))
+
+  /** Lays out pages already read (page tree or pseudo-pages, decoded fonts,
+    * real page sizes). */
+  def layout(url: String, pageInputs: Seq[PdfDoc.PageRead]): Doc = {
     val items = mutable.ArrayBuffer.empty[DocItem]
     val pages = mutable.ArrayBuffer.empty[PageDim]
     var idx = 0
-    for ((pageNo, pageW, pageH, sized) <- pageInputs) {
+    for (PdfDoc.PageRead(pageNo, pageW, pageH, sized) <- pageInputs) {
       pages += PageDim(pageNo, pageW, pageH)
       for (lines <- xRegions(linesOf(sized))) {
       // table bands: maximal runs of consecutive lines sharing a >=2-column

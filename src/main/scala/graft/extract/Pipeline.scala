@@ -38,6 +38,9 @@ object Pipeline {
       backendAuto: Boolean = true,
       ocrMode: String = "off",
       spacingFix: Boolean = true,
+      /** Has no effect: the suspect-cell OCR merge needs a second table read
+        * and no payload yields one (see [[extractOne]]). Kept so existing
+        * callers compile unchanged. */
       suspectRepair: Boolean = true,
       /** page_range=(a,b), 1-based inclusive (cli.py:19-31,
         * conversion_utils.py:348-353): convert only those pages. */
@@ -72,6 +75,9 @@ object Pipeline {
   /** SPACED_CELL_RATIO_THRESHOLD, conversion_utils.py:70 */
   val SpacedRatioOcrTrigger = 0.04
 
+  /** One extracted document. `suspect_repaired` is always 0: no payload
+    * yields the second table read the suspect-cell merge needs (see
+    * [[extractOne]]); the column stays so the output schema is unchanged. */
   case class ExtractedRow(
       url: String,
       bucket: Int,
@@ -108,14 +114,6 @@ object Pipeline {
     head.contains("\"schema_name\"")
   }
 
-  /** True when any table payload differs by reference between the two docs
-    * (derived config views share table items, so this is O(items)). */
-  private def tablesDiffer(a: Doc, b: Doc): Boolean = {
-    val ta = a.items.iterator.flatMap(_.table).toArray
-    val tb = b.items.iterator.flatMap(_.table).toArray
-    ta.length != tb.length || ta.zip(tb).exists { case (x, y) => !(x eq y) }
-  }
-
   /** spaced_ratio over non-TOC table cells (conversion_utils.py:367-372):
     * the reference derives it from audit_doc_vs_markdown's counters, which
     * skip TOC-like tables (audit_utils.py:296-302) — a TOC-heavy document
@@ -132,19 +130,29 @@ object Pipeline {
   }
 
   /** Parse + transform + render one document. Pure; called per row inside
-    * mapPartitions. The reference's full conversion decision flow
-    * (conversion_utils.py:290-517), re-expressed per-row:
+    * mapPartitions. The reference's conversion decision flow
+    * (conversion_utils.py:290-517), re-expressed per-row. Each payload kind
+    * takes one branch and reads its bytes once:
     *
-    *   [a] backend select — page-1 quality probe (auto): a perfect standard
-    *       score short-circuits (argmax with first-wins ties can't change),
-    *       so the second parse is paid only for damaged documents.
-    *   [c] OCR auto-retry on chars_per_page < 200 or spaced_ratio >= 0.04,
-    *       accepted when it halves the spaced ratio or recovers >1.2x text.
-    *   [d] spacing-fix routing — detect damaged pages, repair flagged
-    *       cells/items from glyph geometry (PDF payloads carry glyphs).
-    *   [e] suspect-cell repair — lazily OCR-parse and merge when suspect
-    *       currency cells survive.
+    *   docling JSON — ingest the externally-parsed tree (no glyph channel
+    *       rides along, so no spacing repair).
+    *   HTML — one parse serves every config view:
+    *     [a] backend select — page-1 quality probe (auto): a perfect
+    *         standard score short-circuits (argmax with first-wins ties
+    *         can't change), so the aggressive view is derived only for
+    *         damaged documents.
+    *     [c] OCR auto-retry on chars_per_page < 200 or spaced_ratio >= 0.04,
+    *         accepted when it halves the spaced ratio or recovers >1.2x text.
+    *   PDF — one read of the file's pages feeds the layout and
+    *     [d] spacing-fix routing — detect damaged pages, repair flagged
+    *         cells/items from the same read's glyphs (`repairDoc`).
     *   [f] structural/cleaning passes in reference order + markdown render.
+    *
+    * The reference's suspect-cell OCR merge (conversion_utils.py:480-488)
+    * needs a second, different table read, and no payload yields one: the
+    * HTML OCR view shares the parse's table items, so the merge could
+    * replace nothing. It runs on ingested two-channel trees through
+    * `DocTransforms.mergeTableCellsWithOcr` (q37) instead.
     */
   def extractOne(url: String, htmlBytes: Array[Byte], lang: String,
                  bucket: Int, opts: ExtractOptions = ExtractOptions()): ExtractedRow = {
@@ -154,107 +162,75 @@ object Pipeline {
     var backend = "pdf-layout"
     var ocrRetried = false
     var ocrAccepted = false
-    var parsed: Doc = null
-    var ocrDoc: Option[Doc] = None
-    var glyphs: Map[Int, Seq[graft.textkit.SpacingRepair.Glyph]] = Map.empty
-
-    var detailed: HtmlExtract.Parsed = null
-    if (isDoclingJson(htmlBytes)) {
-      // externally-parsed tree (reference --export-json payload): ingest and
-      // run the same transform battery; glyph repair applies only when a
-      // glyph channel rides along (repairDoc), so routing detection still
-      // runs but repair is a no-op here
-      parsed = restrictPages(graft.sources.DoclingJsonIngest.parse(
-        new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8), url), opts)
-      backend = "docling-json"
-    } else if (!isPdf(htmlBytes)) {
-      // ONE parse serves every config: the standard/aggressive/ocr views
-      // differ only in the boilerplate thresholding of captured block meta,
-      // so the probe and the OCR retry re-derive views allocation-light
-      // instead of re-parsing (applyConfig is an array map)
-      val html = new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8)
-      detailed = HtmlExtract.parseDetailed(url, html)
-      if (opts.ocrMode == "on") {
-        // forced full-page OCR (conversion_utils.py:357-358): the keep-
-        // everything parse unconditionally — no probe, no retry bookkeeping,
-        // and no standard parse paid first
-        parsed = restrictPages(HtmlExtract.applyConfig(detailed,
-          OcrParseConfig.linkDensityThreshold, OcrParseConfig.minContentChars), opts)
-        backend = OcrParseConfig.name
-      } else {
-        val std = SpacingFix.Backends.head
-        parsed = restrictPages(
-          HtmlExtract.applyConfig(detailed, std.linkDensityThreshold, std.minContentChars), opts)
-        backend = std.name
-      }
-      if (opts.ocrMode != "on" && opts.backendAuto) {
-        // probe shortcut: scoring is capped at 100 and Python max keeps the
-        // first argmax, so a perfect standard page-1 always wins — only
-        // sub-100 documents score the aggressive view
-        val stdScore = SpacingFix.probePage1Score(parsed)
-        if (stdScore < 100) {
-          val agg = SpacingFix.Backends(1)
-          val aggDoc = restrictPages(
-            HtmlExtract.applyConfig(detailed, agg.linkDensityThreshold, agg.minContentChars), opts)
-          if (SpacingFix.probePage1Score(aggDoc) > stdScore) {
-            parsed = aggDoc
-            backend = agg.name
-          }
-        }
-      }
-      if (opts.ocrMode == "auto") {
-        val text = MarkdownRender.renderPlainText(parsed)
-        val charsPerPage = text.length.toDouble / math.max(parsed.pages.length, 1)
-        val ratio = spacedCellRatio(parsed)
-        if (charsPerPage < CharsPerPageOcrTrigger || ratio >= SpacedRatioOcrTrigger) {
-          ocrRetried = true
-          val ocr = restrictPages(HtmlExtract.applyConfig(detailed,
-            OcrParseConfig.linkDensityThreshold, OcrParseConfig.minContentChars), opts)
-          ocrDoc = Some(ocr)
-          val ocrRatio = spacedCellRatio(ocr)
-          // acceptance: conversion_utils.py:387-398
-          if (ocrRatio < ratio * 0.5) { parsed = ocr; ocrAccepted = true }
-          else if (MarkdownRender.renderPlainText(ocr).length > text.length * 1.2) {
-            parsed = ocr; ocrAccepted = true
-          }
-        }
-      }
-    } else {
-      parsed = restrictPages(PdfLayout.buildDoc(url, htmlBytes), opts)
-      // OCR retry is a no-op for the PDF path: our parse IS the glyph read,
-      // so recovery happens through [d]'s glyph reconstruction instead;
-      // glyphs are extracted lazily there, only for flagged documents
-    }
-
-    // [d] spacing-fix routing (conversion_utils.py:400-478); glyph
-    // extraction is paid only for documents with flagged pages
     var spacingFixed = 0
-    if (opts.spacingFix && isPdf(htmlBytes)) {
-      val pagesToFix = SpacingFix.detectSpacingPages(parsed)
-      if (!pagesToFix.exists(_.isEmpty)) {
-        glyphs = PdfDoc.extractGlyphsAuto(htmlBytes)
-        val (fixed, report) = SpacingFix.fixSpacedItems(parsed, glyphs, pagesToFix)
-        parsed = fixed
-        spacingFixed = report.tableCells + report.textItems
-      }
-    }
 
-    // [e] suspect-cell OCR repair (conversion_utils.py:480-488). The merge
-    // can only fire when the OCR channel is a genuinely DIFFERENT read: for
-    // HTML payloads the OCR view is a relabeling of the same parse, so its
-    // table cells are reference-identical and shouldReplaceNumericCell(t, t)
-    // is false for every cell — a provable no-op we skip instead of paying
-    // (an external two-channel tree goes through repairDoc + merge instead)
-    var suspectRepaired = 0
-    if (opts.suspectRepair) {
-      val distinctOcr = ocrDoc.filter(o => tablesDiffer(parsed, o))
-      if (distinctOcr.nonEmpty && DocTransforms.countSuspectTableCells(parsed) > 0) {
-        val (merged, n) = DocTransforms.mergeTableCellsWithOcr(parsed, distinctOcr.get,
-          spacedMode = false)
-        parsed = merged
-        suspectRepaired = n
+    val parsed: Doc =
+      if (isDoclingJson(htmlBytes)) {
+        backend = "docling-json"
+        restrictPages(graft.sources.DoclingJsonIngest.parse(
+          new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8), url), opts)
+      } else if (isPdf(htmlBytes)) {
+        // OCR retry is a no-op for the PDF path: our parse IS the glyph read,
+        // so recovery happens through [d]'s glyph reconstruction instead
+        val pages = PdfDoc.readPages(htmlBytes)
+        val laidOut = restrictPages(PdfLayout.layout(url, pages), opts)
+        if (!opts.spacingFix) laidOut
+        else {
+          // [d] spacing-fix routing (conversion_utils.py:400-478); the glyph
+          // map is built only for documents with flagged pages
+          val (fixed, report) = repairDoc(laidOut, PdfDoc.glyphsOf(pages))
+          spacingFixed = report.tableCells + report.textItems
+          fixed
+        }
+      } else {
+        // the standard/aggressive/ocr views differ only in the boilerplate
+        // thresholding of captured block meta, so the probe and the OCR
+        // retry derive views allocation-light (applyConfig is an array map)
+        val detailed = HtmlExtract.parseDetailed(url,
+          new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8))
+        def view(cfg: SpacingFix.ParseConfig): Doc = restrictPages(
+          HtmlExtract.applyConfig(detailed, cfg.linkDensityThreshold, cfg.minContentChars), opts)
+        if (opts.ocrMode == "on") {
+          // forced full-page OCR (conversion_utils.py:357-358): the keep-
+          // everything view unconditionally — no probe, no retry bookkeeping
+          backend = OcrParseConfig.name
+          view(OcrParseConfig)
+        } else {
+          val std = SpacingFix.Backends.head
+          var doc = view(std)
+          backend = std.name
+          if (opts.backendAuto) {
+            // probe shortcut: scoring is capped at 100 and Python max keeps
+            // the first argmax, so a perfect standard page-1 always wins —
+            // only sub-100 documents score the aggressive view
+            val stdScore = SpacingFix.probePage1Score(doc)
+            if (stdScore < 100) {
+              val agg = SpacingFix.Backends(1)
+              val aggDoc = view(agg)
+              if (SpacingFix.probePage1Score(aggDoc) > stdScore) {
+                doc = aggDoc
+                backend = agg.name
+              }
+            }
+          }
+          if (opts.ocrMode == "auto") {
+            val text = MarkdownRender.renderPlainText(doc)
+            val charsPerPage = text.length.toDouble / math.max(doc.pages.length, 1)
+            val ratio = spacedCellRatio(doc)
+            if (charsPerPage < CharsPerPageOcrTrigger || ratio >= SpacedRatioOcrTrigger) {
+              ocrRetried = true
+              val ocr = view(OcrParseConfig)
+              // acceptance: conversion_utils.py:387-398
+              if (spacedCellRatio(ocr) < ratio * 0.5 ||
+                  MarkdownRender.renderPlainText(ocr).length > text.length * 1.2) {
+                doc = ocr
+                ocrAccepted = true
+              }
+            }
+          }
+          doc
+        }
       }
-    }
 
     val (doc, counters) = DocTransforms.applyAll(parsed)
     val md = MarkdownRender.postProcess(MarkdownRender.render(doc))
@@ -279,15 +255,16 @@ object Pipeline {
       ocr_retried = ocrRetried,
       ocr_accepted = ocrAccepted,
       spacing_fixed = spacingFixed,
-      suspect_repaired = suspectRepaired)
+      suspect_repaired = 0)
   }
 
-  /** Repair stage for externally-parsed item trees — the reference's actual
-    * shape: a Docling-style tree whose text layer diverges from the page's
-    * glyph geometry (conversion_utils.py:445-478). Our own PDF parse is
-    * glyph-direct, so this entry point is where ingested trees (e.g. docling
-    * JSON) get the same routing + reconstruction. */
-  def repairDoc(doc: Doc, glyphs: Map[Int, Seq[graft.textkit.SpacingRepair.Glyph]])
+  /** Spacing-fix routing + glyph reconstruction (conversion_utils.py:400-478):
+    * detect damaged pages, then repair their flagged cells/items from the
+    * page glyphs. `glyphs` is evaluated only when some page is flagged.
+    * Runs on the PDF branch of [[extractOne]] and on externally-parsed
+    * trees (e.g. docling JSON) whose text layer diverges from the page's
+    * glyph geometry — the reference's actual shape. */
+  def repairDoc(doc: Doc, glyphs: => Map[Int, Seq[graft.textkit.SpacingRepair.Glyph]])
       : (Doc, SpacingFix.Report) = {
     val pages = SpacingFix.detectSpacingPages(doc)
     if (pages.exists(_.isEmpty)) (doc, SpacingFix.Report(0, 0, 0))

@@ -227,34 +227,19 @@ object SpacingFix {
     }
   }
 
-  /** Backend auto-probe (conversion_utils.py:180-228): parse the document
-    * under each candidate configuration, score the page-1 markdown, pick the
-    * argmax (first wins ties, mirroring Python max). */
+  /** One backend view: the boilerplate thresholds `HtmlExtract.applyConfig`
+    * applies to a parse. */
   case class ParseConfig(name: String, linkDensityThreshold: Double, minContentChars: Int)
   val Backends: Seq[ParseConfig] = Seq(
     ParseConfig("standard", 0.4, 8),
     ParseConfig("aggressive", 0.25, 16))
 
-  /** Slice the HTML to its first page wrapper — the probe converts only
-    * page 1 (conversion_utils.py:180-228 uses page_range=(1,1)), and our
-    * single-pass parser produces identical page-1 items from the prefix. */
-  def pageOneSlice(html: String): String = {
-    def secondMarker(marker: String): Int = {
-      val first = html.indexOf(marker)
-      if (first < 0) -1 else html.indexOf(marker, first + marker.length)
-    }
-    val idx = Seq(secondMarker("class=\"page\""), secondMarker("class='page'"))
-      .filter(_ >= 0).sorted.headOption.getOrElse(-1)
-    if (idx < 0) html
-    else {
-      val tagStart = html.lastIndexOf('<', idx)
-      if (tagStart <= 0) html else html.substring(0, tagStart)
-    }
-  }
-
+  /** Backend auto-probe (conversion_utils.py:180-228): one parse, each
+    * candidate config a view of it scored on page 1 by [[probePage1Score]]
+    * (the reference converts page_range=(1,1)), the rule
+    * `Pipeline.extractOne` applies; the argmax wins, first on ties. */
   def probeBackend(url: String, html: String): (String, Map[String, Int]) = {
-    // one config-independent parse of page 1; each config is a derived view
-    val detailed = HtmlExtract.parseDetailed(url, pageOneSlice(html))
+    val detailed = HtmlExtract.parseDetailed(url, html)
     val scores = Backends.map { cfg =>
       cfg.name -> probePage1Score(
         HtmlExtract.applyConfig(detailed, cfg.linkDensityThreshold, cfg.minContentChars))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.{HtmlExtract, DocTransforms, MarkdownRender, Pipeline}
 import graft.textkit._
@@ -147,10 +147,32 @@ object ExtractOps {
     prev(b.length)
   }
 
-  /** Lossless-extraction invariant shared by q30/q43/q45: every source-text
-    * token must appear in the rendered markdown. */
+  /** Lossless-extraction invariant: every source-text token must appear in
+    * the rendered markdown. */
   private def coveredUdf = udf((md: String, srcText: String) =>
     Numbers.coverage(Numbers.tokenize(srcText), Numbers.tokenize(md).toSet) == 1.0)
+
+  /** The pipeline over `pages` (url, html, text, lang and any extra
+    * columns), each output row joined to its source row: selects `cols`
+    * (over the extracted row, `src_text` and the extra columns) and then
+    * `covered`, ordered by url. `pages` is cached for the two reads and
+    * released once the result is materialized. Shared by q30, q43, q45,
+    * q55 and q59. */
+  private def extractCovered(s: SparkSession, pages: DataFrame, numBuckets: Int = 16)
+                            (cols: Column*): DataFrame = {
+    val cached = pages.cache()
+    val out = Pipeline.extract(s, cached, numBuckets).toDF()
+      .join(cached.drop("html", "lang").withColumnRenamed("text", "src_text"), "url")
+      .select(cols :+ coveredUdf(col("markdown"), col("src_text")).as("covered"): _*)
+      .orderBy(col("url"))
+    Ops.materializeAndRelease(out, cached)
+  }
+
+  /** SyntheticPdf pages of a driver text: lines of 8 words, pages of 12
+    * lines — the geometry the PDF queries' closed forms assume (q42, q43,
+    * q54, q55, q59). */
+  private def pdfPagesOf(text: String): Seq[Seq[String]] =
+    text.split(" ").grouped(8).map(_.mkString(" ")).toSeq.grouped(12).map(_.toSeq).toSeq
 
   /** Flagship: full extraction pipeline over the documents table wrapped in
     * HTML. One shuffle (bucket repartition), parse in mapPartitions; the
@@ -163,19 +185,12 @@ object ExtractOps {
         (s"doc://$id", htmlFromText(id, text, lang).getBytes("UTF-8"), text, lang)
       }
       .toDF("url", "html", "text", "lang")
-      .cache() // feeds both the extract input and the src-text join side
-    val coveredU = coveredUdf
     // scale-adaptive parse parallelism (round 6): 16 buckets capped the
     // parse stage at 16 tasks on a 32-core session; the bucket column is
     // dropped from the output, so the result is bucket-count-independent
-    Pipeline.extract(s, pages,
-        numBuckets = math.max(16, s.sparkContext.defaultParallelism))
-      .toDF()
-      .join(pages.select($"url", $"text".as("src_text")), "url")
-      .select($"url", $"page_count", $"item_count", $"table_count",
-        length($"src_text").as("src_chars"),
-        coveredU($"markdown", $"src_text").as("covered"))
-      .orderBy($"url")
+    extractCovered(s, pages, numBuckets = math.max(16, s.sparkContext.defaultParallelism))(
+      $"url", $"page_count", $"item_count", $"table_count",
+      length($"src_text").as("src_chars"))
   }
 
   /** Audit metrics over driver documents (HTML wrap -> parse -> transforms ->
@@ -530,14 +545,8 @@ object ExtractOps {
         (s"doc://$id", doclingJsonFromText(id, text).getBytes("UTF-8"), text, lang)
       }
       .toDF("url", "html", "text", "lang")
-      .cache() // feeds both the extract input and the src-text join side
-    val coveredU = coveredUdf
-    Pipeline.extract(s, pages, numBuckets = 16).toDF()
-      .join(pages.select($"url", $"text".as("src_text")), "url")
-      .select($"url", $"backend", $"page_count", $"item_count", $"table_count",
-        $"markdown".contains("| RON 158.065.856 |").as("collapsed_pair"),
-        coveredU($"markdown", $"src_text").as("covered"))
-      .orderBy($"url")
+    extractCovered(s, pages)($"url", $"backend", $"page_count", $"item_count",
+      $"table_count", $"markdown".contains("| RON 158.065.856 |").as("collapsed_pair"))
   }
 
   /** Two-channel distributed repair (q48) — the reference's REAL shape: a
@@ -629,14 +638,12 @@ object ExtractOps {
       .select($"doc_id", $"text").as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
-          val words = text.split(" ")
-          val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-          val pages = lines.grouped(12).map(_.toSeq).toSeq
+          val pages = pdfPagesOf(text)
           val pdf = graft.extract.SyntheticPdf.pdfFor(pages)
           val glyphs = graft.extract.PdfDoc.extractGlyphsAuto(pdf)
           val joined = (1 to pages.length)
             .map(p => SpacingRepair.reconstructFromChars(glyphs(p))).mkString(" ")
-          (id, lines.length, pages.length, joined.length, joined == text)
+          (id, pages.map(_.length).sum, pages.length, joined.length, joined == text)
         }
       }
       .toDF("doc_id", "n_lines", "n_pages", "extracted_chars", "roundtrip_ok")
@@ -650,19 +657,10 @@ object ExtractOps {
     import s.implicits._
     val pages = srcDocs(s, dir).as[(Long, String, String)]
       .map { case (id, text, lang) =>
-        val words = text.split(" ")
-        val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-        val pdfPages = lines.grouped(12).map(_.toSeq).toSeq
-        (s"doc://$id", graft.extract.SyntheticPdf.pdfFor(pdfPages), text, lang)
+        (s"doc://$id", graft.extract.SyntheticPdf.pdfFor(pdfPagesOf(text)), text, lang)
       }
       .toDF("url", "html", "text", "lang")
-      .cache() // feeds both the extract input and the src-text join side
-    val coveredU = coveredUdf
-    Pipeline.extract(s, pages, numBuckets = 16).toDF()
-      .join(pages.select($"url", $"text".as("src_text")), "url")
-      .select($"url", $"page_count", $"item_count",
-        coveredU($"markdown", $"src_text").as("covered"))
-      .orderBy($"url")
+    extractCovered(s, pages)($"url", $"page_count", $"item_count")
   }
 
   /** q55: the q43 pipeline over MODERN (PDF 1.5) files — dict objects
@@ -675,19 +673,10 @@ object ExtractOps {
     import s.implicits._
     val pages = srcDocs(s, dir).as[(Long, String, String)]
       .map { case (id, text, lang) =>
-        val words = text.split(" ")
-        val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-        val pdfPages = lines.grouped(12).map(_.toSeq).toSeq
-        (s"doc://$id", graft.extract.SyntheticPdf.pdfFor15(pdfPages), text, lang)
+        (s"doc://$id", graft.extract.SyntheticPdf.pdfFor15(pdfPagesOf(text)), text, lang)
       }
       .toDF("url", "html", "text", "lang")
-      .cache() // feeds both the extract input and the src-text join side
-    val coveredU = coveredUdf
-    Pipeline.extract(s, pages, numBuckets = 16).toDF()
-      .join(pages.select($"url", $"text".as("src_text")), "url")
-      .select($"url", $"page_count", $"item_count",
-        coveredU($"markdown", $"src_text").as("covered"))
-      .orderBy($"url")
+    extractCovered(s, pages)($"url", $"page_count", $"item_count")
   }
 
   /** q59: the ENCRYPTED real-world corpus shape under the oracle — the same
@@ -699,29 +688,16 @@ object ExtractOps {
     import s.implicits._
     val pages = srcDocs(s, dir).as[(Long, String, String)]
       .map { case (id, text, lang) =>
-        val words = text.split(" ")
-        val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-        val pdfPages = lines.grouped(12).map(_.toSeq).toSeq
         val cipher = (id % 3) match {
           case 0 => "rc4"
           case 1 => "aesv2"
           case _ => "aesv3"
         }
-        (s"doc://$id", graft.extract.SyntheticPdf.pdfForEncrypted(pdfPages, cipher, id),
+        (s"doc://$id", graft.extract.SyntheticPdf.pdfForEncrypted(pdfPagesOf(text), cipher, id),
           text, lang, cipher)
       }
       .toDF("url", "html", "text", "lang", "cipher")
-      .cache()
-    val coveredU = coveredUdf
-    val out = Pipeline.extract(s, pages.select($"url", $"html", $"text", $"lang"),
-        numBuckets = 16).toDF()
-      .join(pages.select($"url", $"text".as("src_text"), $"cipher"), "url")
-      .select($"url", $"cipher", $"page_count", $"item_count",
-        coveredU($"markdown", $"src_text").as("covered"))
-      .orderBy($"url")
-    val result = out.localCheckpoint()
-    pages.unpersist()
-    result
+    extractCovered(s, pages)($"url", $"cipher", $"page_count", $"item_count")
   }
 
   /** q60: the Boilerpipe NumWordsRulesClassifier end-to-end. Each doc's html
@@ -805,6 +781,18 @@ object ExtractOps {
       .orderBy($"url")
   }
 
+  /** Writes `df` as the one file `$base/src/$name.parquet`: the next
+    * micro-batch of a file stream source (q66, q68). */
+  private def writeStreamFile(df: DataFrame, base: String, name: String): Unit = {
+    val tmp = s"$base/tmp-$name"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val files = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
+    val part = try files.filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+      finally files.close()
+    java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$base/src/$name.parquet"))
+    Thread.sleep(5) // distinct mod times: FileStreamSource replays in order
+  }
+
   /** q66: gap-based sessionization — flatMapGroupsWithState (custom state +
     * event-time timeout) vs the relational batch twin. The event table is
     * replayed as ts-ordered file micro-batches plus a far-future sentinel
@@ -823,20 +811,12 @@ object ExtractOps {
     // two ts-range files (ordered micro-batches), then the sentinel file
     val mid = ev.agg(expr("percentile_approx(cast(ts as double), 0.5)"))
       .collect()(0).getDouble(0)
-    def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = s"$base/tmp-$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$base/src/$name.parquet"))
-      Thread.sleep(5) // distinct mod times: FileStreamSource replays in order
-    }
-    writeOne(ev.filter($"ts".cast("double") <= mid), "f0")
-    writeOne(ev.filter($"ts".cast("double") > mid), "f1")
+    writeStreamFile(ev.filter($"ts".cast("double") <= mid), base, "f0")
+    writeStreamFile(ev.filter($"ts".cast("double") > mid), base, "f1")
     val sentinels = ev.groupBy($"user_id")
       .agg((max($"ts".cast("double")) + 864000).cast("timestamp").as("ts"))
       .select(lit(-1L).as("event_id"), $"user_id", $"ts", lit(0.0).as("value"))
-    writeOne(sentinels, "f2")
+    writeStreamFile(sentinels, base, "f2")
     val query = graft.streaming.Sessionize.stream(
       s, s"$base/src", s"$base/out", s"$base/chk", gapMinutes)
     query.awaitTermination()
@@ -880,15 +860,7 @@ object ExtractOps {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
     val docs = s.read.parquet(s"$dir/documents.parquet")
       .select($"doc_id", $"text").cache()
-    def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = s"$base/tmp-$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$base/src/$name.parquet"))
-      Thread.sleep(5)
-    }
-    for (k <- 0 until 3) writeOne(docs.filter($"doc_id" % 3 === k), s"f$k")
+    for (k <- 0 until 3) writeStreamFile(docs.filter($"doc_id" % 3 === k), base, s"f$k")
     val query = graft.streaming.StreamingLsh.stream(
       s, s"$base/src", s"$base/out", s"$base/chk")
     query.awaitTermination()
@@ -963,15 +935,6 @@ object ExtractOps {
     result
   }
 
-  /** q53: kill-and-resume lineage invariant as a driver query. Run 1 extracts
-    * and commits buckets 0..3, then a second run "dies" after writing bucket
-    * 4's data files but BEFORE its manifest commit (the crash-orphan state).
-    * Run 2 resumes: it must delete the uncommitted bucket-4 orphans, extract
-    * exactly the four uncommitted buckets, and commit. Run 3 must be a no-op.
-    * The summary row's closed forms catch every failure mode: lost rows or
-    * surviving duplicates break committed_docs/distinct_urls (= doc count),
-    * re-extraction of committed buckets breaks docs_run12, a non-idempotent
-    * resume breaks docs_run3, a missing commit breaks snapshots. */
   /** q57: streaming extraction parity (round-5 verdict task 6). The same
     * corpus is extracted twice — once through the batch pipeline, once
     * through StreamingExtract's foreachBatch sink over a 4-file source
@@ -1052,6 +1015,15 @@ object ExtractOps {
     result
   }
 
+  /** q53: kill-and-resume lineage invariant as a driver query. Run 1 extracts
+    * and commits buckets 0..3, then a second run "dies" after writing bucket
+    * 4's data files but BEFORE its manifest commit (the crash-orphan state).
+    * Run 2 resumes: it must delete the uncommitted bucket-4 orphans, extract
+    * exactly the four uncommitted buckets, and commit. Run 3 must be a no-op.
+    * The summary row's closed forms catch every failure mode: lost rows or
+    * surviving duplicates break committed_docs/distinct_urls (= doc count),
+    * re-extraction of committed buckets breaks docs_run12, a non-idempotent
+    * resume breaks docs_run3, a missing commit breaks snapshots. */
   def lineageResume(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pages = srcDocs(s, dir).as[(Long, String, String)]
@@ -1097,10 +1069,7 @@ object ExtractOps {
     srcDocs(s, dir).as[(Long, String, String)]
       .mapPartitions { it =>
         it.map { case (id, text, lang) =>
-          val words = text.split(" ")
-          val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-          val pdfPages = lines.grouped(12).map(_.toSeq).toSeq
-          val pdf = graft.extract.SyntheticPdf.pdfFor(pdfPages)
+          val pdf = graft.extract.SyntheticPdf.pdfFor(pdfPagesOf(text))
           def pageCount(opts: Pipeline.ExtractOptions): Int =
             Pipeline.extractOne(s"doc://$id", pdf, lang, 0, opts).page_count
           val full = pageCount(Pipeline.ExtractOptions())

@@ -176,8 +176,8 @@ object Ops {
       .agg(min($"doc_id").as("keeper"), count(lit(1)).as("n_copies"))
       .orderBy($"text_hash")
 
-  /** Distinct word-3-gram sets per doc (shared by jaccard + fingerprint). */
-  /** Distinct word-3-gram shingles over any (doc_id, text) relation. */
+  /** Distinct word-3-gram shingles over any (doc_id, text) relation (shared
+    * by jaccard + fingerprint). */
   private def ngrams3Of(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -189,16 +189,16 @@ object Ops {
   private def ngrams3(s: SparkSession, dir: String): DataFrame =
     ngrams3Of(documents(s, dir))
 
+  /** Plan-audit hook (DumpPlans, ExplainQueries): skip the localCheckpoint
+    * so the full physical plan stays visible instead of a Scan ExistingRDD
+    * stub. Caches are intentionally NOT released in audit mode. */
+  private[graft] var keepPlansForAudit: Boolean = false
+
   /** Eagerly materialize `out` (localCheckpoint partitions are GC'd by the
     * ContextCleaner once the result is unreferenced — cached plans are NOT),
     * then release the shared intermediates so repeated invocations within a
     * long-lived session don't accumulate executor storage. */
-  /** Plan-audit hook (DumpPlans only): skip the localCheckpoint so the full
-    * physical plan stays visible instead of a Scan ExistingRDD stub. Caches
-    * are intentionally NOT released in audit mode. */
-  private[graft] var keepPlansForAudit: Boolean = false
-
-  private def materializeAndRelease(out: DataFrame, caches: DataFrame*): DataFrame = {
+  private[ops] def materializeAndRelease(out: DataFrame, caches: DataFrame*): DataFrame = {
     if (keepPlansForAudit) return out
     val result = out.localCheckpoint()
     caches.foreach(_.unpersist())
@@ -268,9 +268,9 @@ object Ops {
     out.result()
   }
 
-  /** Unordered minhash signature core shared by q17/q18. */
-  /** MinHash signatures over any (doc_id, text) relation — row-local
-    * (zero exchanges; the explode shape cost two full-relation shuffles). */
+  /** MinHash signatures over any (doc_id, text) relation, the unordered
+    * core shared by q17/q18 — row-local (zero exchanges; the explode shape
+    * cost two full-relation shuffles). */
   def minhashSigOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id").cast("long"), col("text"))
@@ -541,7 +541,6 @@ object Ops {
           .as("avg_sq_norm"))
       .orderBy($"label")
 
-
   /** Scale-path near-dup: drop non-discriminative shingles (doc-freq > cap)
     * before the pair join — the standard bound on join blowup for shared-
     * vocabulary corpora. Same relational shape as q15, skew-pruned. */
@@ -611,7 +610,6 @@ object Ops {
       .groupBy($"user_id")
       .agg(sum($"pn").as("n_events"), round(sum($"psum"), 4).as("sum_value"))
       .orderBy($"user_id")
-
 
   /** Deterministic IVF codebook: cell c, dim d -> an LCG-derived rational in
     * [-0.5, 0.5] with a power-of-two denominator, so every component is an
@@ -756,16 +754,31 @@ object Ops {
     * quality signals (duplicate-word fraction, most-common-trigram share) —
     * all row-local aggregation, no shuffle beyond the per-doc groupBy. */
   def q51RepetitionStats(s: SparkSession, dir: String): DataFrame = {
-    q51Impl(s, dir)
+    // round 6: the per-doc word stats are row-local scalars — ride them
+    // through the trigram aggregation (first() per group; constant within
+    // a doc) instead of a second corpus scan joined back on doc_id
+    val tri = documents(s, dir)
+      .select($"doc_id", split($"text", " ").as("w"))
+      .filter(size($"w") >= 3)
+      .select($"doc_id",
+        size($"w").as("nw"), size(array_distinct($"w")).as("dw"),
+        explode(expr(
+          "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("ng"))
+      .groupBy($"doc_id", $"ng")
+      .agg(count(lit(1)).as("c"), first($"nw").as("nw"), first($"dw").as("dw"))
+      .groupBy($"doc_id")
+      .agg(max($"c").as("top_trigram_n"), sum($"c").as("trigram_total"),
+        first($"nw").as("n_words"), first($"dw").as("distinct_words"))
+    tri
+      .select($"doc_id", $"n_words", $"distinct_words",
+        round(lit(1.0) - $"distinct_words".cast("double") / $"n_words", 6)
+          .as("dup_word_ratio"),
+        $"top_trigram_n", $"trigram_total",
+        round($"top_trigram_n".cast("double") / $"trigram_total", 6)
+          .as("top_trigram_ratio"))
+      .orderBy($"doc_id")
   }
 
-  /** Gopher/C4-class KEEP/DROP quality filter (q56): the end-to-end
-    * training-data gate built from row-local signals — token-count bounds,
-    * mean word length band, type-token-ratio floor — with a deterministic
-    * first-failing-rule drop reason. Every signal is an exact integer ratio
-    * (mean word length = (chars - (n-1)) / n over single-space text, like
-    * q10) so the DuckDB oracle reproduces the doubles bit-exactly. Entirely
-    * map-side: the filter costs one projection at any corpus size. */
   /** The production dedup chain as ONE operator — the ordering the 1M-doc
     * rehearsals validated (BASELINE.md): EXACT dedup first (template
     * classes collapse by orders of magnitude before any LSH bucket), then
@@ -970,6 +983,13 @@ object Ops {
       .orderBy($"canonical_url")
   }
 
+  /** Gopher/C4-class KEEP/DROP quality filter (q56): the end-to-end
+    * training-data gate built from row-local signals — token-count bounds,
+    * mean word length band, type-token-ratio floor — with a deterministic
+    * first-failing-rule drop reason. Every signal is an exact integer ratio
+    * (mean word length = (chars - (n-1)) / n over single-space text, like
+    * q10) so the DuckDB oracle reproduces the doubles bit-exactly. Entirely
+    * map-side: the filter costs one projection at any corpus size. */
   def q56QualityFilter(s: SparkSession, dir: String,
                        minTokens: Int = 30, maxTokens: Int = 5000,
                        minWordLen: Double = 3.0, maxWordLen: Double = 10.0,
@@ -992,32 +1012,6 @@ object Ops {
         ($"drop_reason" === "").as("keep"), $"drop_reason")
       .orderBy($"doc_id")
 
-  private def q51Impl(s: SparkSession, dir: String): DataFrame = {
-    // round 6: the per-doc word stats are row-local scalars — ride them
-    // through the trigram aggregation (first() per group; constant within
-    // a doc) instead of a second corpus scan joined back on doc_id
-    val tri = documents(s, dir)
-      .select($"doc_id", split($"text", " ").as("w"))
-      .filter(size($"w") >= 3)
-      .select($"doc_id",
-        size($"w").as("nw"), size(array_distinct($"w")).as("dw"),
-        explode(expr(
-          "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("ng"))
-      .groupBy($"doc_id", $"ng")
-      .agg(count(lit(1)).as("c"), first($"nw").as("nw"), first($"dw").as("dw"))
-      .groupBy($"doc_id")
-      .agg(max($"c").as("top_trigram_n"), sum($"c").as("trigram_total"),
-        first($"nw").as("n_words"), first($"dw").as("distinct_words"))
-    tri
-      .select($"doc_id", $"n_words", $"distinct_words",
-        round(lit(1.0) - $"distinct_words".cast("double") / $"n_words", 6)
-          .as("dup_word_ratio"),
-        $"top_trigram_n", $"trigram_total",
-        round($"top_trigram_n".cast("double") / $"trigram_total", 6)
-          .as("top_trigram_ratio"))
-      .orderBy($"doc_id")
-  }
-
   /** Trained-IVF ANN (q49): the PRODUCTION path end-to-end — a k-means
     * codebook refined from the data (deterministic: init = first `cells`
     * sample vectors by vec_id, fixed Lloyd iterations over a bounded
@@ -1036,7 +1030,6 @@ object Ops {
   def q29Simhash64Pairs(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
     simhashBandedPairs(simhash64Core(s, dir).withColumnRenamed("simhash64", "simhash"),
       col("simhash"), bits = 64, maxDist = maxDist)
-
 
   /** 64-bit SimHash (the production width; q19's 16-bit variant exists for
     * oracle portability). Four derived hash views contribute 16 genuinely

@@ -11,11 +11,6 @@ import Py._
   */
 object KpiAxis {
   private val DateOnlyPattern = re("^\\d{2}[./-]\\d{2}[./-]\\d{4}$")
-  private val AxisAllowedPattern = re("^[0-9A-Za-z%./+\\-\\s]+$")
-  // date_cleanup.py:15-18 — note the reference's own copy has an escaping quirk
-  // (`mil\\.?` inside a raw string); the effective alternatives match ours.
-  private val AxisTokenPattern = reI("^(?:\\d{1,4}(?:[.,]\\d+)?%?|[12]\\d{3}|Q[1-4]|9L|L9|mil|mil\\.|RON|EUR|USD|LEI)$")
-  private val AxisWordToken = re("[A-Za-z0-9%]+")
 
   private val NumToken = re("\\d{1,3}(?:[.,]\\d{3})+(?:[.,]\\d+)?|\\d+(?:[.,]\\d+)?")
   private val CurrencyToken = reI("\\b(?:RON|EUR|USD|LEI)\\b")
@@ -26,20 +21,6 @@ object KpiAxis {
 
   /** date_cleanup.py:50-51 */
   def dateOnly(text: String): Boolean = hasMatch(DateOnlyPattern, text.strip())
-
-  /** date_cleanup.py:54-70 (same battery as export_utils._is_axis_like_line) */
-  def axisLike(text: String): Boolean = {
-    val stripped = text.strip()
-    if (stripped.isEmpty || stripped.length > 40) return false
-    if (!AxisAllowedPattern.matcher(stripped).lookingAt()) return false
-    val tokens = findAll(AxisWordToken, stripped)
-    if (tokens.isEmpty || tokens.length > 6) return false
-    val numericTokens = tokens.count(anyDigit)
-    if (numericTokens == 0) return false
-    if (tokens.forall(t => fullMatch(AxisTokenPattern, t))) return true
-    if (numericTokens >= tokens.length - 1 && stripped.length <= 20) return true
-    false
-  }
 
   /** picture_kpi_extract.py:137-161 — chart-axis tick detector. */
   def isAxisLikePicture(text: String): Boolean = {

@@ -79,6 +79,19 @@ class ConversionFlowSpec extends AnyFunSuite {
     assert(r.markdown.contains("Rezultate consolidate"))
   }
 
+  test("[d] a flagged PDF read once equals the two-read chain buildDoc -> repairDoc") {
+    // crawl-mix seed 5, document 488: a PDF 1.5 rewrite with a flagged page
+    val (url, pdf) = OutputDigestSpec.crawlDoc(5L, 488)
+    assert(new String(pdf, 0, 8, "ISO-8859-1").startsWith("%PDF-1.5"))
+    val laidOut = PdfLayout.buildDoc(url, pdf)
+    assert(!SpacingFix.detectSpacingPages(laidOut).exists(_.isEmpty), "fixture must flag a page")
+    val (repaired, _) = Pipeline.repairDoc(laidOut, PdfDoc.extractGlyphsAuto(pdf))
+    val (doc, _) = DocTransforms.applyAll(repaired)
+    val r = Pipeline.extractOne(url, pdf, "ro", 0)
+    assert(r.markdown == MarkdownRender.postProcess(MarkdownRender.render(doc)))
+    assert(r.text == MarkdownRender.renderPlainText(doc))
+  }
+
   test("[d] repairDoc fixes an externally-parsed damaged tree from clean glyphs " +
       "(reference invariant: needs_spacing_fix == false after repair)") {
     // the reference's real case: the text layer (Docling) is damaged, the

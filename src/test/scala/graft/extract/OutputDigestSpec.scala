@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * drifting; these constants were computed once and do not move unless the
   * engine's output does. */
 class OutputDigestSpec extends AnyFunSuite {
+  import OutputDigestSpec.crawlDoc
+
   private def digest(docs: Seq[(String, Array[Byte])]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     for ((url, bytes) <- docs) {
@@ -22,6 +24,19 @@ class OutputDigestSpec extends AnyFunSuite {
     md.digest().map(b => f"${b & 0xff}%02x").mkString
   }
 
+  test("extractOne output digest: 400 SyntheticPages documents, seed 42") {
+    val docs = (0 until 400).map { i => val p = SyntheticPages.page(42L, i.toLong); (p.url, p.html) }
+    assert(digest(docs) == "da0569540f9b6cf3f9ccde79407f7f8a")
+  }
+
+  test("extractOne output digest: 240 crawl-mix documents (giant, templates, PDFs), seed 42") {
+    val docs = (0 until 240).map(crawlDoc(42L, _))
+    assert(docs.count(d => new String(d._2, 0, 8, UTF_8).startsWith("%PDF-1.5")) == 12)
+    assert(digest(docs) == "ebedb752ff9c1dd0dc048479129a5dea")
+  }
+}
+
+object OutputDigestSpec {
   /** Page lines of a generated document for the PDF 1.5 writer: text items
     * wrapped at 52 characters, one line per table row. */
   private def linesOf(doc: Doc): Seq[Seq[String]] =
@@ -41,7 +56,7 @@ class OutputDigestSpec extends AnyFunSuite {
   /** The skewed crawl mix: skew pages (i = 0 is the 100x giant), with
     * i % 10 in {5, 8} replaced by PDFs — odd ones Flate-compressed classic
     * files, i % 20 == 8 rewritten in the PDF 1.5 layout. */
-  private def crawlDoc(seed: Long, i: Int): (String, Array[Byte]) =
+  def crawlDoc(seed: Long, i: Int): (String, Array[Byte]) =
     if (i % 10 == 5 || i % 10 == 8) {
       val (classic, doc) = SyntheticPdfPages.pdfDoc(seed, i.toLong)
       (SyntheticPdfPages.url(i.toLong),
@@ -50,15 +65,4 @@ class OutputDigestSpec extends AnyFunSuite {
       val p = SyntheticPages.skewPage(seed, i.toLong)
       (p.url, p.html)
     }
-
-  test("extractOne output digest: 400 SyntheticPages documents, seed 42") {
-    val docs = (0 until 400).map { i => val p = SyntheticPages.page(42L, i.toLong); (p.url, p.html) }
-    assert(digest(docs) == "da0569540f9b6cf3f9ccde79407f7f8a")
-  }
-
-  test("extractOne output digest: 240 crawl-mix documents (giant, templates, PDFs), seed 42") {
-    val docs = (0 until 240).map(crawlDoc(42L, _))
-    assert(docs.count(d => new String(d._2, 0, 8, UTF_8).startsWith("%PDF-1.5")) == 12)
-    assert(digest(docs) == "ebedb752ff9c1dd0dc048479129a5dea")
-  }
 }

@@ -22,7 +22,7 @@ object SparkTestSession {
 /** Distributed end-to-end: the pipeline over the synthetic pages table must
   * reproduce the committed goldens byte-for-byte per url, and resume must
   * skip committed buckets. */
-class SparkPipelineSpec extends AnyFunSuite {
+class SparkPipelineSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private def goldens(): Map[String, (String, String)] = {
@@ -55,7 +55,7 @@ class SparkPipelineSpec extends AnyFunSuite {
   }
 
   test("lineage: second run resumes and skips committed buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lineage").toString
+    val dir = tempDir("graft-lineage")
     val (snap1, docs1) = Pipeline.extractAndCommit(spark, pagesDF(32), dir, numBuckets = 8)
     assert(docs1 == 32)
     val committed = graft.lineage.Lineage.committedBuckets(dir)
@@ -99,14 +99,14 @@ class SparkPipelineSpec extends AnyFunSuite {
       newRows
     }
     // every bucket extracted in one run
-    val full = java.nio.file.Files.createTempDirectory("graft-stats-full").toString
+    val full = tempDir("graft-stats-full")
     val (_, docs) = Pipeline.extractAndCommit(spark, pages, full, numBuckets = 8)
     assert(docs == 32)
     assert(manifest(full) == rescan(full), "full run")
     val (_, changed, removed) = checkObserved(full, Set.empty, "full run")
     assert(changed > 0 && removed > 0, "the corpus must exercise both counters")
     // an earlier run committed two buckets; the resumed run skips them
-    val resumed = java.nio.file.Files.createTempDirectory("graft-stats-resume").toString
+    val resumed = tempDir("graft-stats-resume")
     val first = pages.join(Pipeline.withBucket(pages, 8)
       .filter(org.apache.spark.sql.functions.col("bucket").isin(early.toSeq: _*))
       .select("url"), "url")
@@ -141,12 +141,12 @@ class SparkPipelineSpec extends AnyFunSuite {
       Pipeline.extractAndCommit(spark, in, dir, numBuckets = 32)
       files(dir).map { case (b, fs) => b -> (fs -- before.getOrElse(b, Set.empty)).size }
     }
-    val full = java.nio.file.Files.createTempDirectory("graft-layout-full").toString
+    val full = tempDir("graft-layout-full")
     val fullAdded = commit(pages, full)
     assert(fullAdded == (0 until 32).map(_ -> 1).toMap, s"full run new files: $fullAdded")
     // resume: a first run commits buckets 0-9, the second the other 22
     val early = (0 until 10).toSet
-    val resumed = java.nio.file.Files.createTempDirectory("graft-layout-resume").toString
+    val resumed = tempDir("graft-layout-resume")
     val firstUrls = bucketOf.collect { case (u, b) if early(b) => u }.toSeq
     val firstAdded = commit(
       pages.filter(org.apache.spark.sql.functions.col("url").isin(firstUrls: _*)), resumed)

@@ -6,12 +6,12 @@ import Lineage.{Manifest, PartitionStat}
 
 /** The manifest codec: what `commit` writes reads back unchanged, and
   * manifests in the earlier hand-written layout stay readable. */
-class LineageSpec extends AnyFunSuite {
+class LineageSpec extends AnyFunSuite with graft.TempDirs {
   private def manifestFile(dir: String, id: Long): Path =
     Path.of(dir, "_lineage", s"snapshot-$id.json")
 
   test("an input with a quote and a backslash round-trips as valid JSON") {
-    val dir = Files.createTempDirectory("graft-lineage-esc").toString
+    val dir = tempDir("graft-lineage-esc")
     val input = """url,html; from "C:\xdata\new" """ + "tab\tend"
     val stats = Seq(PartitionStat(3, 2, 10, 5))
     assert(Lineage.latest(dir).isEmpty)
@@ -27,7 +27,7 @@ class LineageSpec extends AnyFunSuite {
   test("manifests in the earlier hand-written layout read back the same") {
     // byte-for-byte what the string-interpolated writer produced for these
     // two commits (the second commit's empty `partitions` included a blank line)
-    val dir = Files.createTempDirectory("graft-lineage-old").toString
+    val dir = tempDir("graft-lineage-old")
     Files.createDirectories(Path.of(dir, "_lineage"))
     Files.writeString(manifestFile(dir, 1),
       """{

@@ -80,14 +80,14 @@ class ExpandedOpsSpec extends AnyFunSuite {
 
 /** Streaming extraction: the batch conversion flow over a streaming source
   * must produce exactly the batch result (same rows, same markdown). */
-class StreamingExtractSpec extends org.scalatest.funsuite.AnyFunSuite {
+class StreamingExtractSpec extends org.scalatest.funsuite.AnyFunSuite with graft.TempDirs {
   lazy val spark = SparkTestSession.spark
 
   test("streamed extraction equals batch extraction row-for-row") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft-stream-pages").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ckpt").toString
+    val src = tempDir("graft-stream-pages")
+    val out = tempDir("graft-stream-out")
+    val ckpt = tempDir("graft-stream-ckpt")
     val pages = spark.createDataset((0L until 64L)
       .map(i => graft.sources.SyntheticPages.page(42L, i))).toDF()
     pages.repartition(4).write.mode("overwrite").parquet(src)

@@ -108,16 +108,16 @@ class OpsSpec extends AnyFunSuite {
   }
 }
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   test("streaming windowed agg equals the batch result") {
     val sf = "/root/testdata/sf0.001"
     // the streaming file source wants a directory; stage the parquet into one
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = tempDir("graft-stream")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
-      dir.resolve("events.parquet"))
-    val q = graft.streaming.EventStream.stream(spark, dir.toString, "stream_out")
+      java.nio.file.Paths.get(dir, "events.parquet"))
+    val q = graft.streaming.EventStream.stream(spark, dir, "stream_out")
     q.awaitTermination(60000)
     val streamed = spark.sql(
       "SELECT * FROM stream_out ORDER BY hour_start, event_type").collect()
@@ -129,13 +129,13 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming exact dedup equals batch distinct, duplicates included in the feed") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
+    val dir = tempDir("graft-stream-dedup")
     val events = spark.read.parquet(s"$sf/events.parquet")
     // feed = events UNION a replayed slice (exact duplicate rows, the
     // at-least-once-ingest shape streaming dedup exists for)
     events.union(events.limit(200)).repartition(6)
-      .write.mode("overwrite").parquet(dir.toString)
-    val q = graft.streaming.EventStream.dedupStream(spark, dir.toString, "dedup_out")
+      .write.mode("overwrite").parquet(dir)
+    val q = graft.streaming.EventStream.dedupStream(spark, dir, "dedup_out")
     q.awaitTermination(60000)
     val streamed = spark.sql("SELECT event_id FROM dedup_out").as[Long].collect().sorted
     val batch = events.select($"event_id").distinct().as[Long].collect().sorted
@@ -192,12 +192,12 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
 }
 
 /** Oracle-divergence regression: short documents in the n-gram family. */
-class ShortDocSpec extends org.scalatest.funsuite.AnyFunSuite {
+class ShortDocSpec extends org.scalatest.funsuite.AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.extract.SparkTestSession.spark
 
   test("docs under the shingle width produce no n-grams (matching the oracle)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-shortdocs").toString
+    val dir = tempDir("graft-shortdocs")
     Seq((1L, "solo", "en", "s", 4L), (2L, "two words", "en", "s", 9L),
         (3L, "three word doc", "en", "s", 14L),
         (4L, "a proper four token document right here now", "en", "s", 43L))
@@ -351,7 +351,7 @@ class SessionizeSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-class StreamingLshSpec extends org.scalatest.funsuite.AnyFunSuite {
+class StreamingLshSpec extends org.scalatest.funsuite.AnyFunSuite with graft.TempDirs {
   private lazy val spark = graft.extract.SparkTestSession.spark
 
   test("row-local signature twin is bit-identical to the column pipeline") {
@@ -371,7 +371,7 @@ class StreamingLshSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("prefix cap: members beyond the cap neither pair nor enter state") {
     // 5 identical docs through a cap-2 stream: only the first 2 pair
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("slsh").toString
+    val base = tempDir("slsh")
     val text = (1 to 12).map(k => s"w$k").mkString(" ")
     (0L until 5L).map(i => (i, text)).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$base/src")
@@ -387,7 +387,7 @@ class StreamingLshSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("production default cap is the batch chain's 512; re-arrivals do not re-pair") {
     import spark.implicits._
     assert(graft.streaming.StreamingLsh.DefaultMaxBucketSize == 512)
-    val base = java.nio.file.Files.createTempDirectory("slsh-re").toString
+    val base = tempDir("slsh-re")
     val text = (1 to 12).map(k => s"re$k").mkString(" ")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
     def writeOne(ids: Seq[Long], name: String): Unit = {

@@ -5,7 +5,7 @@ import graft.sources.WarcSource
 
 /** WARC (ISO 28500) source: record framing, HTTP payload split, gzip
   * members, hostile truncation. */
-class WarcSourceSpec extends AnyFunSuite {
+class WarcSourceSpec extends AnyFunSuite with graft.TempDirs {
   private def rec(url: String, html: String, tsMs: Long = 1700000000000L) =
     (url, new java.sql.Timestamp(tsMs), html.getBytes("UTF-8"))
 
@@ -98,7 +98,7 @@ class WarcSourceSpec extends AnyFunSuite {
 
   test("readWarc reads segments under directory names with a space or a percent escape") {
     val spark = graft.extract.SparkTestSession.spark
-    val root = java.nio.file.Files.createTempDirectory("graft-warc-dirs")
+    val root = java.nio.file.Paths.get(tempDir("graft-warc-dirs"))
     for (name <- Seq("warc plain dir", "warc%41pct dir")) {
       val dir = java.nio.file.Files.createDirectories(root.resolve(name))
       java.nio.file.Files.write(dir.resolve("seg-0.warc"), WarcSource.writeWarc(

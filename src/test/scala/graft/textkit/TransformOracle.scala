@@ -12,7 +12,9 @@ import TextNormalize.{normalizeLigatures, normalizeMojibakeText}
 // current passes against these on generated input; they are test code only
 // and must not be changed to follow the engine. They call the shared
 // helpers (Py, TextNormalize, KpiAxis, Whitespace) that the rewrite left
-// as they were; Numbers.digitsOnly, which it did change, is copied here.
+// as they were; Numbers.digitsOnly, which it did change, is copied here, and
+// so is KpiAxis.axisLike, which the engine replaced by
+// MarkdownPost.isAxisLikeLine.
 
 object OracleCellClean {
   private val NonDigit = re("\\D")
@@ -691,6 +693,28 @@ object OracleMarkdownPost {
 
 }
 
+object OracleKpiAxis {
+  private val AxisAllowedPattern = re("^[0-9A-Za-z%./+\\-\\s]+$")
+  // date_cleanup.py:15-18 — note the reference's own copy has an escaping quirk
+  // (`mil\\.?` inside a raw string); the effective alternatives match ours.
+  private val AxisTokenPattern = reI("^(?:\\d{1,4}(?:[.,]\\d+)?%?|[12]\\d{3}|Q[1-4]|9L|L9|mil|mil\\.|RON|EUR|USD|LEI)$")
+  private val AxisWordToken = re("[A-Za-z0-9%]+")
+
+  /** date_cleanup.py:54-70 (same battery as export_utils._is_axis_like_line) */
+  def axisLike(text: String): Boolean = {
+    val stripped = text.strip()
+    if (stripped.isEmpty || stripped.length > 40) return false
+    if (!AxisAllowedPattern.matcher(stripped).lookingAt()) return false
+    val tokens = findAll(AxisWordToken, stripped)
+    if (tokens.isEmpty || tokens.length > 6) return false
+    val numericTokens = tokens.count(anyDigit)
+    if (numericTokens == 0) return false
+    if (tokens.forall(t => fullMatch(AxisTokenPattern, t))) return true
+    if (numericTokens >= tokens.length - 1 && stripped.length <= 20) return true
+    false
+  }
+}
+
 object OracleDocTransforms {
   /** table_fixes.py:314-337 — header row must tile columns contiguously. */
   def headerColumnGroups(table: TableData): Option[List[(Int, Int)]] = {
@@ -902,7 +926,7 @@ object OracleDocTransforms {
     removeTextInsidePictures(doc, KpiAxis.dateOnly, ratio)
 
   def removeAxisTextInsidePictures(doc: Doc, ratio: Double = 0.6): (Doc, Int) =
-    removeTextInsidePictures(doc, KpiAxis.axisLike, ratio)
+    removeTextInsidePictures(doc, OracleKpiAxis.axisLike, ratio)
 
   /** whitespace_fix.py:23-38 */
   def normalizeDocTextWhitespace(doc: Doc): (Doc, Int) = {

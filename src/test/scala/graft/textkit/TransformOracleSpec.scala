@@ -369,4 +369,30 @@ class TransformOracleSpec extends AnyFunSuite {
           OracleMarkdownPost.isHeadingLikeLine(s), s)
     })
   }
+
+  // axis-alphabet lines: tick numbers, years, quarter and unit tokens joined
+  // by the separators the allowed class admits, now and then a character
+  // outside that class or a digit outside [0-9]
+  private val axisTokenGen: Gen[String] = Gen.frequency(
+    6 -> numberGen,
+    4 -> Gen.oneOf("2024", "2025", "1899", "Q1", "Q4", "Q5", "9L", "L9", "mil", "mil.", "MIL",
+      "RON", "eur", "USD", "LEI", "%", "12%", "x", "ab", "profit", "mii"),
+    1 -> Gen.oneOf("|", "é", "\u00A0", "#", ":", "(", "_"),
+    1 -> digitGen)
+  private val axisLineGen: Gen[String] = for {
+    n <- Gen.chooseNum(0, 8)
+    toks <- Gen.listOfN(n, axisTokenGen)
+    seps <- Gen.listOfN(n, Gen.frequency(8 -> Gen.const(" "), 2 -> sepGen,
+      1 -> Gen.oneOf(".", "/", "-", "+")))
+  } yield toks.zip(seps).map { case (t, sep) => sep + t }.mkString
+
+  test("the picture-axis predicate matches the frozen KpiAxis.axisLike") {
+    var axisLike = 0
+    check(Prop.forAll(Gen.frequency(4 -> axisLineGen, 1 -> lineGen)) { s =>
+      val got = MarkdownPost.isAxisLikeLine(s)
+      if (got) axisLike += 1
+      same("axisLike", got, OracleKpiAxis.axisLike(s), s)
+    })
+    assert(axisLike > Cases / 10, s"only $axisLike axis-like lines generated")
+  }
 }
