@@ -118,12 +118,7 @@ object ExtractOps {
     * markdown. Closed-form oracle on the doc_id class. */
   def kpiCaptions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", htmlWithKpiPicture(id, text, lang).getBytes("UTF-8"), text, lang)
-      }
-      .toDF("url", "html", "text", "lang")
-    Pipeline.extract(s, pages, numBuckets = 16).toDF()
+    Pipeline.extract(s, htmlPages(s, dir, htmlWithKpiPicture), numBuckets = 16).toDF()
       .select($"url", $"item_count",
         $"markdown".contains(KpiCaptionText).as("caption_added"))
       .orderBy($"url")
@@ -131,6 +126,26 @@ object ExtractOps {
 
   private def srcDocs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"), col("lang"))
+
+  /** The pages table (url, html, text, lang) of the driver documents, each
+    * wrapped in HTML by `wrap(doc_id, text, lang)`. */
+  private def htmlPages(s: SparkSession, dir: String,
+                        wrap: (Long, String, String) => String = htmlFromText): DataFrame = {
+    import s.implicits._
+    srcDocs(s, dir).as[(Long, String, String)]
+      .map { case (id, text, lang) =>
+        (s"doc://$id", wrap(id, text, lang).getBytes("UTF-8"), text, lang)
+      }
+      .toDF("url", "html", "text", "lang")
+  }
+
+  /** Runs `body` over a fresh `graft-$name` temp directory and deletes the
+    * directory afterwards, also when `body` fails; `body` must materialize
+    * whatever it returns. */
+  private def withScratchDir[A](name: String)(body: String => A): A = {
+    val base = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    try body(base) finally Pipeline.deleteTree(base)
+  }
 
   /** Longest common subsequence over lines — the byte-identical-line parity
     * metric shared by q44 and ReferenceGoldenSpec (one copy so the spec's
@@ -179,16 +194,11 @@ object ExtractOps {
     * `covered` invariant re-audits every output against its source text. */
   def extractDocuments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = srcDocs(s, dir)
-      .as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", htmlFromText(id, text, lang).getBytes("UTF-8"), text, lang)
-      }
-      .toDF("url", "html", "text", "lang")
-    // scale-adaptive parse parallelism (round 6): 16 buckets capped the
-    // parse stage at 16 tasks on a 32-core session; the bucket column is
-    // dropped from the output, so the result is bucket-count-independent
-    extractCovered(s, pages, numBuckets = math.max(16, s.sparkContext.defaultParallelism))(
+    // scale-adaptive parse parallelism: 16 buckets would cap the parse stage
+    // at 16 tasks on a 32-core session; the bucket column is dropped from
+    // the output, so the result is bucket-count-independent
+    extractCovered(s, htmlPages(s, dir),
+        numBuckets = math.max(16, s.sparkContext.defaultParallelism))(
       $"url", $"page_count", $"item_count", $"table_count",
       length($"src_text").as("src_chars"))
   }
@@ -783,7 +793,7 @@ object ExtractOps {
 
   /** Writes `df` as the one file `$base/src/$name.parquet`: the next
     * micro-batch of a file stream source (q66, q68). */
-  private def writeStreamFile(df: DataFrame, base: String, name: String): Unit = {
+  private[graft] def writeStreamFile(df: DataFrame, base: String, name: String): Unit = {
     val tmp = s"$base/tmp-$name"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
@@ -802,51 +812,51 @@ object ExtractOps {
   def streamingSessions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val gapMinutes = 30
-    val base = java.nio.file.Files.createTempDirectory("graft-q66").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
-    val ev = s.read.parquet(s"$dir/events.parquet")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .select($"event_id", $"user_id", $"ts", $"value")
-      .cache()
-    // two ts-range files (ordered micro-batches), then the sentinel file
-    val mid = ev.agg(expr("percentile_approx(cast(ts as double), 0.5)"))
-      .collect()(0).getDouble(0)
-    writeStreamFile(ev.filter($"ts".cast("double") <= mid), base, "f0")
-    writeStreamFile(ev.filter($"ts".cast("double") > mid), base, "f1")
-    val sentinels = ev.groupBy($"user_id")
-      .agg((max($"ts".cast("double")) + 864000).cast("timestamp").as("ts"))
-      .select(lit(-1L).as("event_id"), $"user_id", $"ts", lit(0.0).as("value"))
-    writeStreamFile(sentinels, base, "f2")
-    val query = graft.streaming.Sessionize.stream(
-      s, s"$base/src", s"$base/out", s"$base/chk", gapMinutes)
-    query.awaitTermination()
-    // sentinel-started sessions CAN surface via event-time timeout (the
-    // per-user sentinel ts differ, so early ones fall behind the global
-    // watermark) — a harness artifact, excluded by the sentinel floor
-    val maxRealTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0)
-    val streamed = s.read.parquet(s"$base/out")
-      .filter($"session_start" <= lit(maxRealTs))
-      .select($"user_id", $"session_start", $"session_end",
-        $"n_events".as("s_n"), $"sum_value".as("s_sum"))
-    val batch = graft.streaming.Sessionize.batchSessions(ev, gapMinutes)
-    val nb = batch.count()
-    val ns = streamed.count()
-    // session identity = (user, start, end); counts exact, sums within
-    // float tolerance (the fold accumulates in event-time order, batch
-    // sum() in partition order — same set, different fp association)
-    val out = batch.join(streamed, Seq("user_id", "session_start", "session_end"), "left")
-      .select($"user_id",
-        $"session_start".cast("timestamp_ntz").as("session_start"),
-        $"session_end".cast("timestamp_ntz").as("session_end"),
-        $"n_events", $"sum_value",
-        ($"s_n" === $"n_events" &&
-          abs($"s_sum" - $"sum_value") < 0.001 &&
-          lit(nb == ns)).as("stream_match"))
-      .orderBy($"user_id", $"session_start")
-    val result = out.localCheckpoint()
-    ev.unpersist()
-    Pipeline.deleteTree(base)
-    result
+    withScratchDir("q66") { base =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
+      val ev = s.read.parquet(s"$dir/events.parquet")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .select($"event_id", $"user_id", $"ts", $"value")
+        .cache()
+      // two ts-range files (ordered micro-batches), then the sentinel file
+      val mid = ev.agg(expr("percentile_approx(cast(ts as double), 0.5)"))
+        .collect()(0).getDouble(0)
+      writeStreamFile(ev.filter($"ts".cast("double") <= mid), base, "f0")
+      writeStreamFile(ev.filter($"ts".cast("double") > mid), base, "f1")
+      val sentinels = ev.groupBy($"user_id")
+        .agg((max($"ts".cast("double")) + 864000).cast("timestamp").as("ts"))
+        .select(lit(-1L).as("event_id"), $"user_id", $"ts", lit(0.0).as("value"))
+      writeStreamFile(sentinels, base, "f2")
+      val query = graft.streaming.Sessionize.stream(
+        s, s"$base/src", s"$base/out", s"$base/chk", gapMinutes)
+      query.awaitTermination()
+      // sentinel-started sessions CAN surface via event-time timeout (the
+      // per-user sentinel ts differ, so early ones fall behind the global
+      // watermark) — a harness artifact, excluded by the sentinel floor
+      val maxRealTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0)
+      val streamed = s.read.parquet(s"$base/out")
+        .filter($"session_start" <= lit(maxRealTs))
+        .select($"user_id", $"session_start", $"session_end",
+          $"n_events".as("s_n"), $"sum_value".as("s_sum"))
+      val batch = graft.streaming.Sessionize.batchSessions(ev, gapMinutes)
+      val nb = batch.count()
+      val ns = streamed.count()
+      // session identity = (user, start, end); counts exact, sums within
+      // float tolerance (the fold accumulates in event-time order, batch
+      // sum() in partition order — same set, different fp association)
+      val out = batch.join(streamed, Seq("user_id", "session_start", "session_end"), "left")
+        .select($"user_id",
+          $"session_start".cast("timestamp_ntz").as("session_start"),
+          $"session_end".cast("timestamp_ntz").as("session_end"),
+          $"n_events", $"sum_value",
+          ($"s_n" === $"n_events" &&
+            abs($"s_sum" - $"sum_value") < 0.001 &&
+            lit(nb == ns)).as("stream_match"))
+        .orderBy($"user_id", $"session_start")
+      val result = out.localCheckpoint()
+      ev.unpersist()
+      result
+    }
   }
 
   /** q68: streaming LSH candidate pairs == batch LSH candidate pairs. The
@@ -856,28 +866,28 @@ object ExtractOps {
     * scratch in SQL. */
   def streamingLshPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-q68").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
-    val docs = s.read.parquet(s"$dir/documents.parquet")
-      .select($"doc_id", $"text").cache()
-    for (k <- 0 until 3) writeStreamFile(docs.filter($"doc_id" % 3 === k), base, s"f$k")
-    val query = graft.streaming.StreamingLsh.stream(
-      s, s"$base/src", s"$base/out", s"$base/chk")
-    query.awaitTermination()
-    val streamed = s.read.parquet(s"$base/out")
-      .select($"id_a", $"id_b").distinct()
-    val batch = graft.ops.Ops.minhashLshPairsOf(docs)
-    val nb = batch.count()
-    val ns = streamed.count()
-    val out = batch
-      .join(streamed.withColumn("m", lit(true)), Seq("id_a", "id_b"), "left")
-      .select($"id_a", $"id_b",
-        (coalesce($"m", lit(false)) && lit(nb == ns)).as("stream_match"))
-      .orderBy($"id_a", $"id_b")
-    val result = out.localCheckpoint()
-    docs.unpersist()
-    Pipeline.deleteTree(base)
-    result
+    withScratchDir("q68") { base =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+        .select($"doc_id", $"text").cache()
+      for (k <- 0 until 3) writeStreamFile(docs.filter($"doc_id" % 3 === k), base, s"f$k")
+      val query = graft.streaming.StreamingLsh.stream(
+        s, s"$base/src", s"$base/out", s"$base/chk")
+      query.awaitTermination()
+      val streamed = s.read.parquet(s"$base/out")
+        .select($"id_a", $"id_b").distinct()
+      val batch = graft.ops.Ops.minhashLshPairsOf(docs)
+      val nb = batch.count()
+      val ns = streamed.count()
+      val out = batch
+        .join(streamed.withColumn("m", lit(true)), Seq("id_a", "id_b"), "left")
+        .select($"id_a", $"id_b",
+          (coalesce($"m", lit(false)) && lit(nb == ns)).as("stream_match"))
+        .orderBy($"id_a", $"id_b")
+      val result = out.localCheckpoint()
+      docs.unpersist()
+      result
+    }
   }
 
   /** q62: WARC ingestion round trip — the Common-Crawl container format as
@@ -889,86 +899,81 @@ object ExtractOps {
     * successful extraction. */
   def warcIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-q62").toString
-    val expected = srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"https://crawl.example/doc/$id",
-          new java.sql.Timestamp(1700000000000L + id * 60000L),
-          htmlFromText(id, text, lang).getBytes("UTF-8"))
-      }
-      .toDF("url", "warc_ts", "html")
-      .cache()
-    // sink: one WARC segment per partition (the crawl-segment layout);
-    // even partitions gzip, odd stay plain — both read paths exercised
-    expected.repartition(4)
-      .as[(String, java.sql.Timestamp, Array[Byte])]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val recs = it.toSeq
-        if (recs.nonEmpty) {
-          val gz = pid % 2 == 0
-          val bytes = graft.sources.WarcSource.writeWarc(recs, gz)
-          val ext = if (gz) "warc.gz" else "warc"
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$base/seg-$pid.$ext"), bytes)
+    withScratchDir("q62") { base =>
+      val expected = srcDocs(s, dir).as[(Long, String, String)]
+        .map { case (id, text, lang) =>
+          (s"https://crawl.example/doc/$id",
+            new java.sql.Timestamp(1700000000000L + id * 60000L),
+            htmlFromText(id, text, lang).getBytes("UTF-8"))
         }
-        Iterator.single(recs.size)
-      }.collect() // 4 partition counts, bounded by partition count
-    val read = graft.sources.WarcSource.readWarc(s, s"$base/*").cache()
-    val extracted = Pipeline.extract(s,
-      read.select($"url", $"html", lit("ro").as("lang")),
-      numBuckets = 8).toDF().select($"url", $"page_count")
-    val out = expected
-      .select($"url", $"warc_ts".as("ts0"), xxhash64($"html").as("h0"))
-      .join(read.select($"url", $"warc_ts", xxhash64($"html").as("h1")),
-        Seq("url"), "left")
-      .join(extracted, Seq("url"), "left")
-      .select($"url",
-        ($"h0" <=> $"h1").as("html_roundtrip"),
-        ($"ts0" <=> $"warc_ts").as("ts_roundtrip"),
-        (coalesce($"page_count", lit(0)) > 0).as("extracted_ok"))
-      .orderBy($"url")
-    val result = out.localCheckpoint()
-    expected.unpersist()
-    read.unpersist()
-    Pipeline.deleteTree(base)
-    result
+        .toDF("url", "warc_ts", "html")
+        .cache()
+      // sink: one WARC segment per partition (the crawl-segment layout);
+      // even partitions gzip, odd stay plain — both read paths exercised
+      expected.repartition(4)
+        .as[(String, java.sql.Timestamp, Array[Byte])]
+        .mapPartitions { it =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val recs = it.toSeq
+          if (recs.nonEmpty) {
+            val gz = pid % 2 == 0
+            val bytes = graft.sources.WarcSource.writeWarc(recs, gz)
+            val ext = if (gz) "warc.gz" else "warc"
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(s"$base/seg-$pid.$ext"), bytes)
+          }
+          Iterator.single(recs.size)
+        }.collect() // 4 partition counts, bounded by partition count
+      val read = graft.sources.WarcSource.readWarc(s, s"$base/*").cache()
+      val extracted = Pipeline.extract(s,
+        read.select($"url", $"html", lit("ro").as("lang")),
+        numBuckets = 8).toDF().select($"url", $"page_count")
+      val out = expected
+        .select($"url", $"warc_ts".as("ts0"), xxhash64($"html").as("h0"))
+        .join(read.select($"url", $"warc_ts", xxhash64($"html").as("h1")),
+          Seq("url"), "left")
+        .join(extracted, Seq("url"), "left")
+        .select($"url",
+          ($"h0" <=> $"h1").as("html_roundtrip"),
+          ($"ts0" <=> $"warc_ts").as("ts_roundtrip"),
+          (coalesce($"page_count", lit(0)) > 0).as("extracted_ok"))
+        .orderBy($"url")
+      val result = out.localCheckpoint()
+      expected.unpersist()
+      read.unpersist()
+      result
+    }
   }
 
-  /** q57: streaming extraction parity (round-5 verdict task 6). The same
-    * corpus is extracted twice — once through the batch pipeline, once
-    * through StreamingExtract's foreachBatch sink over a 4-file source
+  /** q57: streaming extraction parity. The same corpus is extracted twice —
+    * once through the batch pipeline, once through StreamingExtract's
+    * foreachBatch sink over a 4-file source
     * drained in >= 2 micro-batches (maxFilesPerTrigger=2) — and the streamed
     * table must hold every url exactly once with markdown byte-identical to
     * the batch output. Both invariants have closed forms (TRUE per url) that
     * break if the streaming path loses, duplicates, or diverges on any doc. */
   def streamingParity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", htmlFromText(id, text, lang).getBytes("UTF-8"), text, lang)
-      }
-      .toDF("url", "html", "text", "lang")
-      .cache()
-    val base = java.nio.file.Files.createTempDirectory("graft-q57").toString
-    pages.repartition(4).write.parquet(s"$base/src")
-    val query = graft.streaming.StreamingExtract.stream(
-      s, s"$base/src", s"$base/out", s"$base/chk", numBuckets = 8)
-    query.awaitTermination()
-    val streamed = s.read.parquet(s"$base/out/data")
-    val streamCnt = streamed.groupBy($"url")
-      .agg(count(lit(1)).as("n_stream"), max(xxhash64($"markdown")).as("h_stream"))
-    val batchH = Pipeline.extract(s, pages, numBuckets = 8).toDF()
-      .select($"url", xxhash64($"markdown").as("h_batch"))
-    val out = batchH.join(streamCnt, Seq("url"), "left")
-      .select($"url",
-        (coalesce($"n_stream", lit(0L)) === 1).as("streamed_once"),
-        ($"h_stream" <=> $"h_batch").as("md_match"))
-      .orderBy($"url")
-    val result = out.localCheckpoint()
-    pages.unpersist()
-    Pipeline.deleteTree(base)
-    result
+    val pages = htmlPages(s, dir).cache()
+    withScratchDir("q57") { base =>
+      pages.repartition(4).write.parquet(s"$base/src")
+      val query = graft.streaming.StreamingExtract.stream(
+        s, s"$base/src", s"$base/out", s"$base/chk", numBuckets = 8)
+      query.awaitTermination()
+      val streamed = s.read.parquet(s"$base/out/data")
+      val streamCnt = streamed.groupBy($"url")
+        .agg(count(lit(1)).as("n_stream"), max(xxhash64($"markdown")).as("h_stream"))
+      val batchH = Pipeline.extract(s, pages, numBuckets = 8).toDF()
+        .select($"url", xxhash64($"markdown").as("h_batch"))
+      val out = batchH.join(streamCnt, Seq("url"), "left")
+        .select($"url",
+          (coalesce($"n_stream", lit(0L)) === 1).as("streamed_once"),
+          ($"h_stream" <=> $"h_batch").as("md_match"))
+        .orderBy($"url")
+      val result = out.localCheckpoint()
+      pages.unpersist()
+      result
+    }
   }
 
   /** q58: the typed UDAF (AuditAggregator over exploded items) must equal
@@ -1026,34 +1031,28 @@ object ExtractOps {
     * resume breaks docs_run3, a missing commit breaks snapshots. */
   def lineageResume(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", htmlFromText(id, text, lang).getBytes("UTF-8"), text, lang)
-      }
-      .toDF("url", "html", "text", "lang")
-      .cache()
+    val pages = htmlPages(s, dir).cache()
     val nB = 8
-    val outDir = java.nio.file.Files.createTempDirectory("graft-q53").toString
-    // run 1: killed after committing 4 of 8 buckets
-    val (_, docs1) = Pipeline.extractAndCommit(s,
-      Pipeline.withBucket(pages, nB).filter($"bucket" < 4), outDir, numBuckets = nB)
-    // the next run writes bucket 4 and dies pre-commit: orphaned data files
-    Pipeline.extract(s, pages, numBuckets = nB,
-      skipBuckets = (0 until nB).toSet - 4).toDF()
-      .write.mode("append").partitionBy("bucket").parquet(s"$outDir/data")
-    // run 2 resumes (must clean the orphan, extract buckets 4..7 only)
-    val (_, docs2) = Pipeline.extractAndCommit(s, pages, outDir, numBuckets = nB)
-    // run 3: everything committed -> no-op
-    val (_, docs3) = Pipeline.extractAndCommit(s, pages, outDir, numBuckets = nB)
-    val data = s.read.parquet(s"$outDir/data")
-    val committed = data.count()
-    val distinctUrls = data.select($"url").distinct().count()
-    val nSnapshots = graft.lineage.Lineage.snapshots(outDir).length.toLong
-    pages.unpersist()
-    val summary = Seq((committed, distinctUrls, docs1 + docs2, docs3, nSnapshots))
-      .toDF("committed_docs", "distinct_urls", "docs_run12", "docs_run3", "snapshots")
-    Pipeline.deleteTree(outDir)
-    summary
+    withScratchDir("q53") { outDir =>
+      // run 1: killed after committing 4 of 8 buckets
+      val (_, docs1) = Pipeline.extractAndCommit(s,
+        Pipeline.withBucket(pages, nB).filter($"bucket" < 4), outDir, numBuckets = nB)
+      // the next run writes bucket 4 and dies pre-commit: orphaned data files
+      Pipeline.extract(s, pages, numBuckets = nB,
+        skipBuckets = (0 until nB).toSet - 4).toDF()
+        .write.mode("append").partitionBy("bucket").parquet(s"$outDir/data")
+      // run 2 resumes (must clean the orphan, extract buckets 4..7 only)
+      val (_, docs2) = Pipeline.extractAndCommit(s, pages, outDir, numBuckets = nB)
+      // run 3: everything committed -> no-op
+      val (_, docs3) = Pipeline.extractAndCommit(s, pages, outDir, numBuckets = nB)
+      val data = s.read.parquet(s"$outDir/data")
+      val committed = data.count()
+      val distinctUrls = data.select($"url").distinct().count()
+      val nSnapshots = graft.lineage.Lineage.snapshots(outDir).length.toLong
+      pages.unpersist()
+      Seq((committed, distinctUrls, docs1 + docs2, docs3, nSnapshots))
+        .toDF("committed_docs", "distinct_urls", "docs_run12", "docs_run3", "snapshots")
+    }
   }
 
   /** q54: page-range / max-pages scan pruning + the three picture render

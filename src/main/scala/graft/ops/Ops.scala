@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.PolyHash.polyhash
@@ -15,9 +15,10 @@ import graft.functions.PolyHash.polyhash
   *    are low-cardinality -> tiny shuffles.
   *  - joins: dimension tables (region/nation/customer at ratio scale) are
   *    broadcast; fact-fact joins shuffle on the join key once.
-  *  - dedup/minhash/simhash: explode-then-aggregate shapes with map-side
-  *    combine; candidate pairs come from LSH band buckets, never a cross
-  *    join.
+  *  - dedup/minhash/simhash: exact dedup is one window exchange over the
+  *    text hash; signatures are row-local kernels over each document's
+  *    distinct trigram hashes (no exchange); candidate pairs come from LSH
+  *    band buckets, never a cross join.
   *  - ANN: brute-force top-k is the small-side baseline; the LSH-bucketed
   *    variant is the scale path (bucket join instead of cross join).
   */
@@ -241,17 +242,21 @@ object Ops {
   val MinhashP = 2147483647L // 2^31-1
   def minhashA(j: Int): Long = 2L * j + 3
   def minhashB(j: Int): Long = 5L * j + 7
+  val SimhashBits = 16
 
-  /** Row-local distinct-trigram hash kernel (round 6). Every signature in
-    * the family (minhash, simhash 16/64) is a pure function of ONE
-    * document's text, yet the explode -> distinct -> groupBy(doc_id) shape
-    * paid TWO full-relation exchanges to compute it (guide §2.4: remove
-    * shuffles outright). One JVM pass per row replaces both. Bit-exact with
-    * the column shape: split keeps trailing empties (Spark split = limit
-    * -1), distinct is on the trigram STRING (a hash collision keeps its
-    * multiplicity, exactly like hashing after `.distinct()` on strings),
-    * and every fold is integer arithmetic. Returns null when the text has
-    * < 3 tokens (the column shape's filter produced no row). */
+  /** Members above which an LSH band bucket is dropped whole: the default
+    * of [[dedupChain]] and of the streaming pair emitter. A template class
+    * that survives exact dedup would otherwise make one bucket hot. */
+  val LshMaxBucketSize = 512
+
+  /** The polyhash of each distinct word trigram of one document: the input
+    * of every signature kernel (minhash, simhash 16/64), which are pure
+    * functions of one document's text, so computing them per row costs no
+    * exchange. It matches the oracle's column shape: split keeps trailing
+    * empties (Spark split = limit -1), distinct is on the trigram STRING (a
+    * hash collision keeps its multiplicity, like hashing after `.distinct()`
+    * on strings), and every fold is integer arithmetic. Returns null when
+    * the text has < 3 tokens (the column shape's filter yields no row). */
   private[graft] def trigramHashes(text: String): Array[Long] = {
     if (text == null) return null
     val w = text.split(" ", -1)
@@ -268,35 +273,88 @@ object Ops {
     out.result()
   }
 
-  /** MinHash signatures over any (doc_id, text) relation, the unordered
-    * core shared by q17/q18 — row-local (zero exchanges; the explode shape
-    * cost two full-relation shuffles). */
-  def minhashSigOf(docs: DataFrame): DataFrame = {
+  /** MinHash kernel: per permutation j, the min over a document's distinct
+    * trigram hashes of (a_j * h + b_j) mod p. */
+  private[graft] def minhashOf(hs: Array[Long]): Array[Long] = {
+    val sig = Array.fill(MinhashK)(Long.MaxValue)
+    var x = 0
+    while (x < hs.length) {
+      val h = hs(x)
+      var j = 0
+      while (j < MinhashK) {
+        val v = (minhashA(j) * h + minhashB(j)) % MinhashP // h >= 0: % == pmod
+        if (v < sig(j)) sig(j) = v
+        j += 1
+      }
+      x += 1
+    }
+    sig
+  }
+
+  /** Simhash vote over `views` derived 64-bit values per hash, `bitsPer`
+    * low bits each: bit (k * bitsPer + j) is set iff bit j of view k is set
+    * for more than half of the document's distinct trigram hashes. */
+  private def simhashVote(hs: Array[Long], views: Int, bitsPer: Int)
+                         (view: (Long, Int) => Long): Long = {
+    val ones = new Array[Int](views * bitsPer)
+    var x = 0
+    while (x < hs.length) {
+      var k = 0
+      while (k < views) {
+        val v = view(hs(x), k)
+        var j = 0
+        while (j < bitsPer) {
+          ones(k * bitsPer + j) += ((v >> j) & 1L).toInt
+          j += 1
+        }
+        k += 1
+      }
+      x += 1
+    }
+    var sim = 0L
+    var b = 0
+    while (b < ones.length) {
+      if (2L * ones(b) > hs.length) sim |= 1L << b
+      b += 1
+    }
+    sim
+  }
+
+  /** 16-bit simhash kernel (q19/q20): the vote over the hashes' low bits. */
+  private[graft] def simhash16Of(hs: Array[Long]): Long =
+    simhashVote(hs, 1, SimhashBits)((h, _) => h)
+
+  /** 64-bit simhash kernel (q28/q29): four derived views of each hash
+    * contribute their low 16 bits each. polyhash < 2^30 keeps its high bits
+    * constant, so the bits come from the low 16 of each view. */
+  private[graft] def simhash64Of(hs: Array[Long]): Long =
+    simhashVote(hs, 4, 16) { (h, k) =>
+      // floorMod matches pmod; (2k+3)*h + (7k+11) < 2^34: no overflow
+      java.lang.Math.floorMod((2L * k + 3) * h + (7L * k + 11), MinhashP)
+    }
+
+  /** The per-document skeleton of every signature: one row `sign(doc_id,
+    * trigramHashes(text))` per document, none when the text has < 3 tokens.
+    * Row-local, so a signature costs no exchange. */
+  private def perDocSignature[R: Encoder](docs: DataFrame)
+                                         (sign: (Long, Array[Long]) => R): Dataset[R] = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val hs = trigramHashes(text)
-          if (hs == null) Iterator.empty
-          else {
-            val sig = Array.fill(MinhashK)(Long.MaxValue)
-            var x = 0
-            while (x < hs.length) {
-              val h = hs(x)
-              var j = 0
-              while (j < MinhashK) {
-                val v = (minhashA(j) * h + minhashB(j)) % MinhashP // h >= 0: % == pmod
-                if (v < sig(j)) sig(j) = v
-                j += 1
-              }
-              x += 1
-            }
-            Iterator.single((id, sig(0), sig(1), sig(2), sig(3), sig(4), sig(5), sig(6), sig(7)))
-          }
-        }
-      }
-      .toDF(("doc_id" +: (0 until MinhashK).map(j => s"sig_$j")): _*)
+      .mapPartitions(_.flatMap { case (id, text) =>
+        val hs = trigramHashes(text)
+        if (hs == null) Iterator.empty else Iterator.single(sign(id, hs))
+      })
+  }
+
+  /** MinHash signatures (doc_id, sig_0..sig_7) over any (doc_id, text)
+    * relation, the unordered core shared by q17/q18. */
+  def minhashSigOf(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    perDocSignature(docs) { (id, hs) =>
+      val sig = minhashOf(hs)
+      (id, sig(0), sig(1), sig(2), sig(3), sig(4), sig(5), sig(6), sig(7))
+    }.toDF(("doc_id" +: (0 until MinhashK).map(j => s"sig_$j")): _*)
   }
 
   private def minhashSig(s: SparkSession, dir: String): DataFrame =
@@ -308,8 +366,7 @@ object Ops {
 
   /** LSH candidate pairs: 4 bands x 2 rows — bucket join, not cross join.
     * Bands are emitted via one posexplode over the signature row, so the
-    * whole signature pipeline (scan -> shingle -> hash -> agg) runs ONCE
-    * (round-1 built them as a 4-way union that recomputed it 4x). */
+    * signature pipeline runs once, not once per band. */
   def q18MinhashLshPairs(s: SparkSession, dir: String): DataFrame =
     minhashLshPairsOf(documents(s, dir)).orderBy($"id_a", $"id_b")
 
@@ -361,42 +418,10 @@ object Ops {
       .select($"root".as("src"), $"doc_id".as("dst"))
   }
 
-  val SimhashBits = 16
-
-  /** Unordered simhash core shared by q19/q20 — row-local (round 6): the
-    * per-bit +-1 vote over a doc's distinct trigram hashes is a one-pass
-    * fold per row; vote_j > 0 <=> 2*ones_j > n. Zero exchanges where the
-    * explode shape had two. */
+  /** Unordered 16-bit simhash core shared by q19/q20. */
   private def simhashCore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    documents(s, dir).select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val hs = trigramHashes(text)
-          if (hs == null) Iterator.empty
-          else {
-            val ones = new Array[Int](SimhashBits)
-            var x = 0
-            while (x < hs.length) {
-              val h = hs(x)
-              var j = 0
-              while (j < SimhashBits) {
-                ones(j) += ((h >> j) & 1L).toInt
-                j += 1
-              }
-              x += 1
-            }
-            var sim = 0L
-            var j = 0
-            while (j < SimhashBits) {
-              if (2L * ones(j) > hs.length) sim |= 1L << j
-              j += 1
-            }
-            Iterator.single((id, sim))
-          }
-        }
-      }
+    perDocSignature(documents(s, dir))((id, hs) => (id, simhash16Of(hs)))
       .toDF("doc_id", "simhash")
   }
 
@@ -418,37 +443,20 @@ object Ops {
     * widths. `bits` must be divisible by maxDist+1 chunks only approximately:
     * chunk boundaries are ceil-split so all bits are covered. */
   private[ops] def simhashBandedPairs(sh: DataFrame, hashCol: Column,
-                                      bits: Int, maxDist: Int,
-                                      maxBucketSize: Int = Int.MaxValue): DataFrame = {
+                                      bits: Int, maxDist: Int): DataFrame = {
     val nChunks = maxDist + 1
     val width = (bits + nChunks - 1) / nChunks
     val mask = (1L << width) - 1
     val chunkCols = (0 until nChunks).map { c =>
       shiftright(hashCol, c * width).bitwiseAND(lit(mask))
     }
-    // round 6: the signature relation is row-local (zero exchanges), so the
-    // eager localCheckpoint that round 5 used to avoid recomputing the
-    // trigram-explode + vote aggregation is gone. At scale the chunk
-    // self-join is a shuffle join and ReusedExchange runs the signature
-    // subtree once; at small SF the planner broadcasts one side and the
-    // cheap row-local map runs twice — exactly when that is affordable.
-    val chunksAll = sh.select(col("doc_id"), hashCol.as("sh"),
+    // the signature relation is row-local, so no checkpoint guards it: at
+    // scale the chunk self-join is a shuffle join and ReusedExchange runs
+    // the signature subtree once; at small SF the planner broadcasts one
+    // side and the cheap row-local map runs twice
+    val chunks = sh.select(col("doc_id"), hashCol.as("sh"),
         posexplode(array(chunkCols: _*)))
       .toDF("doc_id", "sh", "chunk", "cval")
-    // same web-scale guard as lshStarEdgesOf: a template-heavy corpus
-    // saturates single (chunk, cval) buckets and the within-bucket join
-    // goes quadratic; saturated classes belong to exact dedup upstream
-    val chunks =
-      if (maxBucketSize == Int.MaxValue) chunksAll
-      else {
-        val small = chunksAll.groupBy(col("chunk"), col("cval"))
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") <= maxBucketSize)
-          .select(col("chunk").as("schunk"), col("cval").as("scval"))
-        chunksAll.join(small,
-            chunksAll("chunk") === col("schunk") && chunksAll("cval") === col("scval"))
-          .select(col("doc_id"), col("sh"), col("chunk"), col("cval"))
-      }
     chunks.as("x").join(chunks.as("y"),
         col("x.chunk") === col("y.chunk") && col("x.cval") === col("y.cval") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -796,15 +804,12 @@ object Ops {
     * union-find task while the star-edge forest holds at most 10^6 edges,
     * O(log n) pointer-doubling rounds above that; one broadcast-friendly
     * join back. No pair join ever sees the raw corpus. */
-  def dedupChain(docs: DataFrame, maxBucketSize: Int = 512,
+  def dedupChain(docs: DataFrame, maxBucketSize: Int = LshMaxBucketSize,
                  localBelow: Long = 1000000L): DataFrame = {
-    // round 6: exact classes via ONE exchange — min(doc_id) over a window
-    // partitioned by the text hash replaces the round-5 agg + join-back
-    // (which scanned and hashed the corpus twice; the partial aggregate
-    // below the agg's exchange blocks exchange reuse) and the separate
-    // reps join (a third scan). The cached relation keeps text only on
-    // representative rows, so cache size scales with the COLLAPSED class
-    // count, not the corpus.
+    // exact classes via ONE exchange: min(doc_id) over a window partitioned
+    // by the text hash, so the corpus is scanned and hashed once. The cached
+    // relation keeps text only on representative rows, so cache size scales
+    // with the COLLAPSED class count, not the corpus.
     val base = docs
       .select($"doc_id", $"text", polyhash($"text").as("th"))
       .withColumn("rep_id", min($"doc_id").over(Window.partitionBy($"th")))
@@ -1038,49 +1043,10 @@ object Ops {
   def q28Simhash64(s: SparkSession, dir: String): DataFrame =
     simhash64Core(s, dir).orderBy($"doc_id")
 
-  /** Row-local 64-bit simhash (round 6): per doc, 4 derived views of each
-    * distinct trigram hash contribute 16 bits each; bit b is set iff
-    * 2*ones_b > n. The round-4/5 shape aggregated 24 packed 21-bit vote
-    * lanes through a full-relation groupBy exchange (plus the distinct
-    * exchange feeding it) and needed a >2^21-trigram overflow guard; the
-    * per-row int-counter fold has neither the exchanges nor the overflow
-    * bound (counts are plain per-doc ints), and computes identical values. */
+  /** Unordered 64-bit simhash core shared by q28/q29. */
   private def simhash64Core(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    documents(s, dir).select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val hs = trigramHashes(text)
-          if (hs == null) Iterator.empty
-          else {
-            val ones = new Array[Int](64)
-            var x = 0
-            while (x < hs.length) {
-              val h = hs(x)
-              var k = 0
-              while (k < 4) {
-                // floorMod matches pmod; (2k+3)*h + (7k+11) < 2^34: no overflow
-                val view = java.lang.Math.floorMod((2L * k + 3) * h + (7L * k + 11), MinhashP)
-                var j = 0
-                while (j < 16) {
-                  ones(k * 16 + j) += ((view >> j) & 1L).toInt
-                  j += 1
-                }
-                k += 1
-              }
-              x += 1
-            }
-            var sim = 0L
-            var b = 0
-            while (b < 64) {
-              if (2L * ones(b) > hs.length) sim |= 1L << b
-              b += 1
-            }
-            Iterator.single((id, sim))
-          }
-        }
-      }
+    perDocSignature(documents(s, dir))((id, hs) => (id, simhash64Of(hs)))
       .toDF("doc_id", "simhash64")
   }
 

@@ -222,13 +222,22 @@ object WarcSource {
     * selecting/defaulting text and lang. */
   def readWarc(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.GraftShim.hadoopConf(spark)))
-    // round 6: stream each segment from its path instead of routing the
-    // whole file through binaryFile's content column — binaryFile prunes
-    // the unread content column, and the incremental scanner caps per-task
-    // memory at record size, not segment size (guide §5)
-    spark.read.format("binaryFile").load(pathGlob)
+    val hadoopConf = org.apache.spark.sql.GraftShim.hadoopConf(spark)
+    val conf = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf))
+    // the glob is expanded here: handed to the file source as is, it is
+    // first probed as a literal streaming-sink directory, which logs a
+    // FileNotFoundException. A glob that matches nothing still goes to the
+    // source, which fails on it.
+    val glob = new org.apache.hadoop.fs.Path(pathGlob)
+    val matched = Option(glob.getFileSystem(hadoopConf).globStatus(glob))
+      .map(_.map(_.getPath.toString).toSeq).getOrElse(Nil)
+    val segments = if (matched.isEmpty) Seq(pathGlob) else matched
+    // stream each segment from its path instead of routing the whole file
+    // through binaryFile's content column — binaryFile prunes the unread
+    // content column, and the incremental scanner caps per-task memory at
+    // record size, not segment size
+    spark.read.format("binaryFile").load(segments: _*)
       .select($"path")
       .as[String]
       .mapPartitions(_.flatMap(p => parseRecordsStream(openSegment(p, conf.value.value))))

@@ -9,14 +9,13 @@ import graft.ops.Ops
   * batch `Ops.minhashLshPairsOf` (uncapped candidate pairs): as documents
   * arrive on a crawl feed, each lands in its 4 band buckets and is paired
   * against the bucket's previous members, so near-dup candidates surface
-  * AT INGEST time instead of in a nightly batch join. Signatures are
-  * computed by a row-local twin of the column pipeline (same shingles,
-  * same polyhash, same permutations — bit-identical), so with no bucket
-  * above the cap the streamed pair SET equals the batch operator's output
-  * exactly (q68 pins this under the oracle).
+  * AT INGEST time instead of in a nightly batch join. Signatures come from
+  * the batch path's own kernel (`Ops.minhashOf` over `Ops.trigramHashes`),
+  * so with no bucket above the cap the streamed pair SET equals the batch
+  * operator's output exactly (q68 pins this under the oracle).
   *
   * State per band bucket is the member-id list, capped at
-  * `maxBucketSize`, which defaults to 512 (see [[DefaultMaxBucketSize]]).
+  * `maxBucketSize`, which defaults to `Ops.LshMaxBucketSize` (512).
   * The cap is a PREFIX cap: members beyond it neither pair nor enter
   * state. So the default does NOT give the exact batch pair set on a feed
   * with a bucket above 512 members; pass `Int.MaxValue` for that. Nor is
@@ -27,35 +26,6 @@ object StreamingLsh {
   case class BandedDoc(band_key: String, doc_id: Long)
   case class CandidatePair(id_a: Long, id_b: Long)
 
-  /** Row-local minhash signature — bit-identical to Ops.minhashSigOf
-    * (distinct word-3-grams -> polyhash -> min over the LCG permutations).
-    * None when the text has fewer than 3 tokens (no shingle, no signature —
-    * same as the batch groupBy producing no row). */
-  def minhashSigLocal(text: String): Option[Array[Long]] = {
-    // limit -1 keeps trailing empty tokens, matching Spark's split(col, " ")
-    // (a plain String.split(" ") drops them and diverges on trailing spaces)
-    val w = text.split(" ", -1)
-    if (w.length < 3) return None
-    val seen = scala.collection.mutable.HashSet.empty[String]
-    val sig = Array.fill(Ops.MinhashK)(Long.MaxValue)
-    var i = 0
-    while (i + 2 < w.length) {
-      val ng = w(i) + " " + w(i + 1) + " " + w(i + 2)
-      if (seen.add(ng)) {
-        val h = graft.functions.PolyHash.hashString(ng)
-        var j = 0
-        while (j < Ops.MinhashK) {
-          val v = java.lang.Math.floorMod(Ops.minhashA(j) * h + Ops.minhashB(j),
-            Ops.MinhashP)
-          if (v < sig(j)) sig(j) = v
-          j += 1
-        }
-      }
-      i += 1
-    }
-    Some(sig)
-  }
-
   /** The 4 band keys of a signature (bandIdx : sig_2j : sig_2j+1) —
     * string-identical to the batch operator's band columns. */
   def bandKeys(sig: Array[Long]): Seq[String] =
@@ -65,9 +35,8 @@ object StreamingLsh {
       bandKey: String, docs: Iterator[BandedDoc],
       state: GroupState[Seq[Long]]): Iterator[CandidatePair] = {
     var members = state.getOption.getOrElse(Seq.empty)
-    // O(1) membership: the Seq state probed with `contains` was O(n) per
-    // arrival — quadratic in a hot bucket (round-6 hardening; the batch
-    // operator hit the same wall in round 4)
+    // O(1) membership: probing the Seq state with `contains` is O(n) per
+    // arrival, quadratic in a hot bucket
     val seen = scala.collection.mutable.HashSet.empty[Long]
     seen ++= members
     val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
@@ -85,12 +54,11 @@ object StreamingLsh {
     out.iterator
   }
 
-  /** The default bucket cap of [[stream]]: 512, the batch chain's value
-    * (Ops.dedupChain). It was unbounded before round 6; a saturated band
-    * bucket on a template-heavy feed would otherwise grow state without
-    * bound and pair quadratically. Callers that need the exact uncapped
+  /** The default bucket cap of [[stream]], the batch chain's: without it a
+    * saturated band bucket on a template-heavy feed grows state without
+    * bound and pairs quadratically. Callers that need the exact uncapped
     * pair set pass `Int.MaxValue`. */
-  val DefaultMaxBucketSize = 512
+  val DefaultMaxBucketSize: Int = Ops.LshMaxBucketSize
 
   /** Start the streaming pair emitter over parquet (doc_id, text) files.
     * Emitted pairs may repeat across bands/batches — candidates are a SET
@@ -107,8 +75,8 @@ object StreamingLsh {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        minhashSigLocal(Option(text).getOrElse("")).toSeq
-          .flatMap(sig => bandKeys(sig).map(k => BandedDoc(k, id)))
+        val hs = Ops.trigramHashes(text)
+        if (hs == null) Nil else bandKeys(Ops.minhashOf(hs)).map(k => BandedDoc(k, id))
       }
       .groupByKey(_.band_key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(

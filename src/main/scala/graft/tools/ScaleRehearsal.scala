@@ -4,15 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
-/** 100x-scale rehearsal (round-4 verdict task 7): one end-to-end run at
-  * >=1M synthetic docs through extract -> commit (lineage) -> paragraph
-  * dedup -> minhash-LSH near-dup components, recording wall time, shuffle
-  * spill, peak execution memory, and component-propagation round count.
+/** 100x-scale rehearsal: one end-to-end run at >=1M synthetic docs
+  * through extract -> commit (lineage) -> paragraph dedup -> the near-dup
+  * chain (`Ops.dedupChain`), recording per stage wall time, shuffle spill,
+  * peak execution memory and heap.
   *
-  * Round-5 addition (`skew` arg): a pathological corpus — 0.01% giant
-  * (100x) documents, 20% exact-template classes, 10% near-dup-template
-  * cliques (SyntheticPages.skewPage) — with per-stage straggler factors
-  * (max/median task duration) recorded, since a giant document is a row
+  * With `skew`, the corpus is pathological — 0.01% giant (100x) documents,
+  * 20% exact-template classes, 10% near-dup-template cliques
+  * (SyntheticPages.skewPage) — and the per-stage straggler factor
+  * (max/median task duration) matters, since a giant document is a row
   * AQE cannot split.
   *
   * Usage: runMain graft.tools.ScaleRehearsal [docs] [skew]
@@ -99,41 +99,17 @@ object ScaleRehearsal {
     }
     println(s"paragraph-dedup rows: $nDedup")
 
-    // near-dup at scale runs in the PRODUCTION order: exact dedup first
-    // (a template corpus collapses by orders of magnitude — running LSH on
-    // raw docs put thousands of identical docs into single band buckets
-    // and the within-bucket join went quadratic: 849 s / 17 GB spill at
-    // 200k docs), then capped LSH star edges over the representatives only,
-    // then components; members inherit their representative's component.
+    // near-dup at scale is the production chain itself: exact dedup first
+    // (running LSH on the raw template corpus put thousands of identical
+    // docs into single band buckets: 849 s / 17 GB spill at 200k docs),
+    // then capped LSH star edges over the representatives, then components
     val docs = spark.read.parquet(s"$docsDir/documents.parquet")
-    val exact = stage("exact-dedup-groups") {
-      val g = docs.groupBy(org.apache.spark.sql.functions.xxhash64($"text").as("th"))
-        .agg(org.apache.spark.sql.functions.min($"doc_id").as("rep_id"),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("members"))
-        .cache()
-      g.count(); g
+    val canon = stage("dedup-chain") {
+      graft.ops.Ops.dedupChain(docs)
     }
-    val nExact = exact.count()
-    println(s"exact classes: $nExact (of ${docs.count()} docs)")
-    val reps = docs.join(exact.select($"rep_id".as("doc_id")), "doc_id").cache()
-    val nEdges = stage("lsh-star-edges-capped(512)") {
-      graft.ops.Ops.lshStarEdgesOf(reps, maxBucketSize = 512).count()
-    }
-    println(s"lsh star edges over reps: $nEdges")
-    val (labels, rounds) = stage("neardup-components (q47)") {
-      graft.ops.Ops.connectedComponents(reps.select($"doc_id"),
-        graft.ops.Ops.lshStarEdgesOf(reps, maxBucketSize = 512))
-    }
-    val nComp = labels.select($"component").distinct().count()
-    val totalAssigned = stage("expand-members") {
-      exact.join(labels, exact("rep_id") === labels("doc_id"))
-        .select($"component", $"members").groupBy($"component")
-        .agg(org.apache.spark.sql.functions.sum($"members").as("n"))
-        .agg(org.apache.spark.sql.functions.sum($"n")).collect()(0).getLong(0)
-    }
-    println(f"components: rounds=$rounds distinct=$nComp docs_assigned=$totalAssigned " +
-      f"peak_heap=${peakHeap / (1 << 20)} MiB")
+    val nCanon = canon.select($"canonical_id").distinct().count()
+    println(s"canonical classes: $nCanon (of ${canon.count()} docs) " +
+      s"peak_heap=${peakHeap / (1 << 20)} MiB")
     spark.stop()
   }
 }

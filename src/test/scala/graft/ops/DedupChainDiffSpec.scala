@@ -2,7 +2,6 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.extract.SparkTestSession
-import graft.streaming.StreamingLsh
 
 /** Driver-side reference for the dedup graph: a union-find whose label is
   * the min id of each component, and the dedup chain as it was built before
@@ -23,10 +22,10 @@ object DedupOracle {
     parent.keys.map(x => x -> find(x)).toMap
   }
 
-  /** (band, key) -> member rep ids, from the driver-side signature twin. */
+  /** (band, key) -> member rep ids, from the frozen minhash fold. */
   def buckets(reps: Map[Long, String]): Map[(Int, Long, Long), Seq[Long]] =
     reps.toSeq.flatMap { case (id, text) =>
-      StreamingLsh.minhashSigLocal(text).toSeq.flatMap { sig =>
+      SignatureOracle.minhashSigLocal(text).toSeq.flatMap { sig =>
         (0 until Ops.MinhashK / 2).map(b => ((b, sig(2 * b), sig(2 * b + 1)), id))
       }
     }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }

@@ -362,7 +362,7 @@ class StreamingLshSpec extends org.scalatest.funsuite.AnyFunSuite with graft.Tem
       .map(r => r.getLong(0) -> (1 to graft.ops.Ops.MinhashK).map(i => r.getLong(i)).toSeq)
       .toMap
     val fromLocal = docs.as[(Long, String)].collect().flatMap { case (id, text) =>
-      graft.streaming.StreamingLsh.minhashSigLocal(text).map(sig => id -> sig.toSeq)
+      SignatureOracle.minhashSigLocal(text).map(sig => id -> sig.toSeq)
     }.toMap
     assert(fromColumns.keySet == fromLocal.keySet)
     for ((id, sig) <- fromColumns) assert(fromLocal(id) == sig, s"doc $id")
@@ -390,14 +390,8 @@ class StreamingLshSpec extends org.scalatest.funsuite.AnyFunSuite with graft.Tem
     val base = tempDir("slsh-re")
     val text = (1 to 12).map(k => s"re$k").mkString(" ")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
-    def writeOne(ids: Seq[Long], name: String): Unit = {
-      val tmp = s"$base/tmp-$name"
-      ids.map(i => (i, text)).toDF("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$base/src/$name.parquet"))
-    }
+    def writeOne(ids: Seq[Long], name: String): Unit =
+      ExtractOps.writeStreamFile(ids.map(i => (i, text)).toDF("doc_id", "text"), base, name)
     writeOne(Seq(0L, 1L), "a")
     writeOne(Seq(0L, 2L), "b") // doc 0 re-arrives in a later batch
     val q = graft.streaming.StreamingLsh.stream(
