@@ -357,12 +357,9 @@ object Ops {
     }.toDF(("doc_id" +: (0 until MinhashK).map(j => s"sig_$j")): _*)
   }
 
-  private def minhashSig(s: SparkSession, dir: String): DataFrame =
-    minhashSigOf(documents(s, dir))
-
   /** MinHash signatures over distinct word-3-gram shingles. */
   def q17MinhashSignatures(s: SparkSession, dir: String): DataFrame =
-    minhashSig(s, dir).orderBy($"doc_id")
+    minhashSigOf(documents(s, dir)).orderBy($"doc_id")
 
   /** LSH candidate pairs: 4 bands x 2 rows — bucket join, not cross join.
     * Bands are emitted via one posexplode over the signature row, so the
