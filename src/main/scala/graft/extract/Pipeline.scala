@@ -1,8 +1,20 @@
 package graft.extract
 
 import graft.model._
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** The end-to-end extraction pipeline as Catalyst-planned stages
@@ -13,8 +25,8 @@ import scala.jdk.CollectionConverters._
   *   BEFORE the expensive parse) -> repartition on bucket into
   *   min(B, WriteTasksPerCore x cores) tasks -> mapPartitions parse (batched
   *   HTML tokenizer) -> typed doc-transform pass (pure item-array rewrites,
-  *   reference order) -> markdown render + post-chain -> bucketed write with
-  *   lineage commit.
+  *   reference order) -> markdown render + post-chain -> per-task Parquet
+  *   write of each bucket's file -> lineage commit.
   *
   * Shuffle surface: exactly one exchange (the bucket repartition, which is
   * also the resume/lineage partition). Each bucket lands whole in one task;
@@ -25,9 +37,9 @@ object Pipeline {
   val DefaultBuckets = 64
 
   /** Cap on the bucket exchange's partitions per core. Every write task pays
-    * a fixed setup (deserializing the job's Hadoop configuration, generating
-    * its projections), so fewer tasks than buckets amortize it; several
-    * tasks per core let the scheduler even out bucket-heavy tasks. */
+    * a fixed setup (deserializing the task, generating its projections,
+    * opening its shuffle reads), so fewer tasks than buckets amortize it;
+    * several tasks per core let the scheduler even out bucket-heavy tasks. */
   val WriteTasksPerCore = 4
 
   /** Conversion knobs mirroring the reference CLI defaults
@@ -292,48 +304,110 @@ object Pipeline {
 
   /** Deletes a directory and everything under it. */
   private[graft] def deleteTree(dir: String): Unit = {
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
+    val walk = Files.walk(Paths.get(dir))
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
     finally walk.close()
   }
 
-  /** Totals of one commit's new rows in one bucket. */
-  private case class BucketStats(docs: Long, mdChars: Long, changedCells: Long,
-                                 removedItems: Long) {
-    def +(o: BucketStats): BucketStats = BucketStats(docs + o.docs, mdChars + o.mdChars,
-      changedCells + o.changedCells, removedItems + o.removedItems)
+  /** What a commit's write tasks need to write ExtractedRows without their
+    * `bucket` column: the encoder's serializer expressions for the other
+    * fields, and the Parquet writer configuration that Spark's own Parquet
+    * write sets for that schema and session (row schema, compression codec,
+    * legacy format, timestamp type, field ids). Built once on the driver;
+    * the closure ships a dozen keys, not the session's Hadoop
+    * configuration. */
+  private[extract] case class BucketWriterSetup(serializer: Seq[Expression],
+                                               conf: Map[String, String])
+
+  private[extract] def bucketWriterSetup(spark: SparkSession): BucketWriterSetup = {
+    val enc = ExpressionEncoder[ExtractedRow]()
+    val (fields, exprs) = enc.schema.zip(enc.serializer).filter(_._1.name != "bucket").unzip
+    val job = Job.getInstance(new Configuration(false))
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, StructType(fields))
+    BucketWriterSetup(exprs, job.getConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap)
   }
 
-  /** Per-bucket stats accumulator: rides the commit's write job so lineage
-    * stats need NO post-write rescan of the output. Exactly-once because
-    * `extractAndCommit` updates it in a map directly under the write, inside
-    * the write's result stage — Spark applies a result task's accumulator
-    * updates once per successfully-committed partition. */
-  private class BucketStatsAcc extends org.apache.spark.util.AccumulatorV2[
-      ExtractedRow, Map[Int, BucketStats]] {
-    private val m = scala.collection.mutable.HashMap.empty[Int, BucketStats]
-    private def plus(b: Int, s: BucketStats): Unit = m(b) = m.get(b).fold(s)(_ + s)
-    override def isZero: Boolean = m.isEmpty
-    override def copy(): BucketStatsAcc = {
-      val c = new BucketStatsAcc; c.m ++= m; c
+  /** parquet-hadoop's writer over a java.nio file, fed by Spark's own
+    * InternalRow write support. */
+  private class RowWriterBuilder(file: Path)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](new LocalOutputFile(file)) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
+  }
+
+  /** One write task's share of a commit: writes `rows` into
+    * `dataDir/bucket=N/part-<snapshot><codec ext>.parquet`, one file per
+    * bucket the rows hold, and returns one
+    * `(bucket, docs, md_chars, changed_cells, removed_items, elapsed_ms)`
+    * per bucket written. A bucket's `elapsed_ms` is the time spent pulling,
+    * extracting and writing its rows, plus closing and publishing its file.
+    *
+    * Each bucket's writer fills a hidden `.part-<snapshot>-<attempt>.tmp`
+    * (Spark's reader skips names starting with `.`); once `rows` is done,
+    * each is closed and atomically moved onto its final name, replacing
+    * the file a retried or speculative attempt may have published. If
+    * anything throws, the task deletes its temp files and rethrows. One
+    * writer stays open per bucket, so a task buffers up to one row group per
+    * bucket it holds. */
+  private[extract] def writeBuckets(rows: Iterator[ExtractedRow], dataDir: String,
+      snapshot: Long, attempt: Long, setup: BucketWriterSetup)
+      : Iterator[(Int, Long, Long, Long, Long, Long)] = {
+    val conf = new Configuration(false)
+    setup.conf.foreach { case (k, v) => conf.set(k, v) }
+    val codec = CompressionCodecName.fromConf(conf.get(ParquetOutputFormat.COMPRESSION))
+    val toRow = new ExpressionEncoder.Serializer[ExtractedRow](setup.serializer)
+    final class Bucket(val id: Int) {
+      val dir: Path = Paths.get(dataDir, s"bucket=$id")
+      Files.createDirectories(dir)
+      val tmp: Path = dir.resolve(s".part-$snapshot-$attempt.tmp")
+      val writer: ParquetWriter[InternalRow] = new RowWriterBuilder(tmp).withConf(conf)
+        .withCompressionCodec(codec).withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+      var closed = false
+      var docs, mdChars, changedCells, removedItems, nanos = 0L
+      def close(): Unit = if (!closed) { closed = true; writer.close() }
     }
-    override def reset(): Unit = m.clear()
-    override def add(r: ExtractedRow): Unit =
-      plus(r.bucket, BucketStats(1, r.md_chars, r.changed_cells, r.removed_items))
-    override def merge(other: org.apache.spark.util.AccumulatorV2[
-        ExtractedRow, Map[Int, BucketStats]]): Unit =
-      other.value.foreach { case (b, s) => plus(b, s) }
-    override def value: Map[Int, BucketStats] = m.toMap
+    val open = scala.collection.mutable.LinkedHashMap.empty[Int, Bucket]
+    try {
+      var t0 = System.nanoTime()
+      while (rows.hasNext) {
+        val r = rows.next()
+        val b = open.getOrElseUpdate(r.bucket, new Bucket(r.bucket))
+        b.writer.write(toRow(r))
+        b.docs += 1
+        b.mdChars += r.md_chars
+        b.changedCells += r.changed_cells
+        b.removedItems += r.removed_items
+        val t1 = System.nanoTime()
+        b.nanos += t1 - t0
+        t0 = t1
+      }
+      open.values.map { b =>
+        val t1 = System.nanoTime()
+        b.close()
+        Files.move(b.tmp, b.dir.resolve(s"part-$snapshot${codec.getExtension}.parquet"),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        (b.id, b.docs, b.mdChars, b.changedCells, b.removedItems,
+          (b.nanos + System.nanoTime() - t1) / 1000000)
+      }.toList.iterator
+    } catch {
+      case e: Throwable =>
+        for (b <- open.values) {
+          try b.close() catch { case s: Throwable => e.addSuppressed(s) }
+          Files.deleteIfExists(b.tmp)
+        }
+        throw e
+    }
   }
 
   /** Full extraction over a pages DataFrame (url, warc_ts, html, text, lang).
     * `skipBuckets` prunes already-committed buckets before the parse stage.
     *
     * `shuffle = true` co-locates each bucket in one task before the parse, so
-    * a bucketed write emits one file per bucket (the layout that makes resume
-    * partition-granular). The exchange has
-    * min(numBuckets, WriteTasksPerCore * defaultParallelism) partitions, where
+    * the task that extracts a bucket can write its one file (the layout that
+    * makes resume partition-granular, see [[extractAndCommit]]). The
+    * exchange has min(numBuckets, WriteTasksPerCore * defaultParallelism)
+    * partitions, where
     * defaultParallelism is the core count registered when this plan is built
     * (on a cluster still registering executors, fewer than it will have).
     * `shuffle = false` runs the parse in the scan stage with no exchange, for
@@ -370,24 +444,34 @@ object Pipeline {
     *
     * Runs `extract` with the bucket exchange: the write stage has
     * min(numBuckets, WriteTasksPerCore * defaultParallelism) tasks (cores
-    * registered when the plan is built), each bucket is written by exactly
-    * one of them, so every commit adds one file per bucket dir and a resumed
-    * run skips whole buckets. Stats are exactly-once because the
-    * accumulating map runs inside the write's result stage. */
+    * registered when the plan is built), and each bucket is written by
+    * exactly one of them ([[writeBuckets]]), so every commit adds one file,
+    * `data/bucket=N/part-<snapshot id>.snappy.parquet` under the default
+    * codec, per bucket it extracts, and a resumed run skips whole buckets.
+    * Each task returns its buckets' stats and the driver collects them:
+    * one result per partition, so the stats are exactly-once and the
+    * commit never reads back the data it wrote.
+    *
+    * `outDir` must be a local or POSIX-mounted path that the driver and
+    * every executor see: the manifests, the orphan cleanup and the data
+    * files are all written through java.nio, with no Hadoop FileSystem. */
   def extractAndCommit(spark: SparkSession, pages: DataFrame, outDir: String,
                        numBuckets: Int = DefaultBuckets): (String, Long) = {
     import graft.lineage.Lineage
     import spark.implicits._
-    // one manifest read serves both the resume set and the carried-over stats
-    val prevStats = Lineage.latest(outDir).fold(Seq.empty[Lineage.PartitionStat])(_.partitions)
+    // one manifest read serves the resume set, the carried-over stats and
+    // the id this commit's manifest will get (Lineage.commit's rule)
+    val latest = Lineage.latest(outDir)
+    val prevStats = latest.fold(Seq.empty[Lineage.PartitionStat])(_.partitions)
     val done = prevStats.map(_.bucket).toSet
+    val snapshot = latest.fold(1L)(_.snapshotId + 1)
 
     // crash safety: a previous run may have written bucket files and died
     // before committing the manifest — those buckets will be re-extracted, so
-    // their orphaned files must go first or append would duplicate rows
-    val dataDir = java.nio.file.Paths.get(outDir, "data")
-    if (java.nio.file.Files.exists(dataDir)) {
-      val stream = java.nio.file.Files.list(dataDir)
+    // their orphaned files must go first or they would duplicate rows
+    val dataDir = Paths.get(outDir, "data").toAbsolutePath
+    if (Files.exists(dataDir)) {
+      val stream = Files.list(dataDir)
       try {
         stream.iterator().asScala.foreach { p =>
           val name = p.getFileName.toString
@@ -399,27 +483,22 @@ object Pipeline {
       } finally stream.close()
     }
 
-    val t0 = System.nanoTime()
-    // per-bucket stats accumulate ON the write job itself (BucketStatsAcc) —
-    // commit never reads back $outDir/data, which at 100 TB would be an
-    // avoidable full scan of the new output
-    val statsAcc = new BucketStatsAcc
-    spark.sparkContext.register(statsAcc, "graft-bucket-stats")
-    extract(spark, pages, numBuckets, skipBuckets = done)
-      .map { r => statsAcc.add(r); r }
-      .write.mode("append").partitionBy("bucket").parquet(s"$outDir/data")
-    val elapsedMs = (System.nanoTime() - t0) / 1000000
+    val setup = bucketWriterSetup(spark)
+    val data = dataDir.toString
+    val written = extract(spark, pages, numBuckets, skipBuckets = done)
+      .mapPartitions(rows => writeBuckets(rows, data, snapshot,
+        org.apache.spark.TaskContext.get().taskAttemptId(), setup))
+      .collect()
+    require(written.map(_._1).distinct.length == written.length,
+      s"a bucket was written by more than one task: ${written.map(_._1).sorted.toSeq}")
 
-    // incremental stats: the just-written buckets come from the accumulator,
-    // merged with the previous manifest (no rescan of any data at commit)
-    val newStats = statsAcc.value
-    val total = newStats.values.foldLeft(BucketStats(0, 0, 0, 0))(_ + _)
-    val merged = (prevStats ++ newStats.map { case (b, s) =>
-      Lineage.PartitionStat(b, s.docs, s.mdChars, elapsedMs) }).sortBy(_.bucket)
+    val merged = (prevStats ++ written.map { case (b, docs, mdChars, _, _, ms) =>
+      Lineage.PartitionStat(b, docs, mdChars, ms) }).sortBy(_.bucket)
+    val docs = written.map(_._2).sum
     val snapshotId = Lineage.commit(outDir, numBuckets, merged,
       inputDesc = pages.schema.map(_.name).mkString(",") +
-        s"; observed: docs=${total.docs} changed_cells=${total.changedCells}" +
-        s" removed_items=${total.removedItems}")
-    (snapshotId, total.docs)
+        s"; observed: docs=$docs changed_cells=${written.map(_._4).sum}" +
+        s" removed_items=${written.map(_._5).sum}")
+    (snapshotId, docs)
   }
 }

@@ -68,48 +68,54 @@ object ScaleRehearsal {
     }
 
     val base = java.nio.file.Files.createTempDirectory("graft-rehearsal").toString
-    val pagesDir = s"$base/pages"
-    val outDir = s"$base/committed"
-    val docsDir = s"$base/docs"
+    // the corpus, its committed copy and the documents table all live under
+    // base, which goes whether the run finishes or not
+    try {
+      val pagesDir = s"$base/pages"
+      val outDir = s"$base/committed"
+      val docsDir = s"$base/docs"
 
-    stage(if (skew) "gen-corpus(SKEW)" else "gen-corpus") {
-      spark.createDataset(spark.sparkContext.parallelize(0L until n.toLong, 512)
-        .map(i =>
-          if (skew) graft.sources.SyntheticPages.skewPage(42L, i)
-          else graft.sources.SyntheticPages.page(42L, i))).toDF()
-        .write.mode("overwrite").parquet(pagesDir)
-    }
-    val pages = spark.read.parquet(pagesDir)
-    val committed = stage("extract+commit") {
-      graft.extract.Pipeline.extractAndCommit(spark, pages, outDir, numBuckets = 512)
-    }
-    println(s"committed: snapshot=${committed._1} docs=${committed._2}")
+      stage(if (skew) "gen-corpus(SKEW)" else "gen-corpus") {
+        spark.createDataset(spark.sparkContext.parallelize(0L until n.toLong, 512)
+          .map(i =>
+            if (skew) graft.sources.SyntheticPages.skewPage(42L, i)
+            else graft.sources.SyntheticPages.page(42L, i))).toDF()
+          .write.mode("overwrite").parquet(pagesDir)
+      }
+      val pages = spark.read.parquet(pagesDir)
+      val committed = stage("extract+commit") {
+        graft.extract.Pipeline.extractAndCommit(spark, pages, outDir, numBuckets = 512)
+      }
+      println(s"committed: snapshot=${committed._1} docs=${committed._2}")
 
-    // documents-shaped table from the committed output so the dedup/ANN
-    // battery runs its production shapes unmodified
-    stage("documents-table") {
-      spark.read.parquet(s"$outDir/data")
-        .select(
-          org.apache.spark.sql.functions.xxhash64($"url").as("doc_id"),
-          $"text", $"lang")
-        .write.mode("overwrite").parquet(s"$docsDir/documents.parquet")
-    }
-    val nDedup = stage("paragraph-dedup (q50)") {
-      graft.ops.Ops.q50ParagraphDedup(spark, docsDir).count()
-    }
-    println(s"paragraph-dedup rows: $nDedup")
+      // documents-shaped table from the committed output so the dedup/ANN
+      // battery runs its production shapes unmodified
+      stage("documents-table") {
+        spark.read.parquet(s"$outDir/data")
+          .select(
+            org.apache.spark.sql.functions.xxhash64($"url").as("doc_id"),
+            $"text", $"lang")
+          .write.mode("overwrite").parquet(s"$docsDir/documents.parquet")
+      }
+      val nDedup = stage("paragraph-dedup (q50)") {
+        graft.ops.Ops.q50ParagraphDedup(spark, docsDir).count()
+      }
+      println(s"paragraph-dedup rows: $nDedup")
 
-    // near-dup at scale is the production chain itself: exact dedup first
-    // (running LSH on the raw template corpus put thousands of identical
-    // docs into single band buckets: 849 s / 17 GB spill at 200k docs),
-    // then capped LSH star edges over the representatives, then components
-    val docs = spark.read.parquet(s"$docsDir/documents.parquet")
-    val canon = stage("dedup-chain") {
-      graft.ops.Ops.dedupChain(docs)
+      // near-dup at scale is the production chain itself: exact dedup first
+      // (running LSH on the raw template corpus put thousands of identical
+      // docs into single band buckets: 849 s / 17 GB spill at 200k docs),
+      // then capped LSH star edges over the representatives, then components
+      val docs = spark.read.parquet(s"$docsDir/documents.parquet")
+      val canon = stage("dedup-chain") {
+        graft.ops.Ops.dedupChain(docs)
+      }
+      val nCanon = canon.select($"canonical_id").distinct().count()
+      println(s"canonical classes: $nCanon (of ${canon.count()} docs) " +
+        s"peak_heap=${peakHeap / (1 << 20)} MiB")
+    } finally {
+      spark.stop()
+      graft.extract.Pipeline.deleteTree(base)
     }
-    val nCanon = canon.select($"canonical_id").distinct().count()
-    println(s"canonical classes: $nCanon (of ${canon.count()} docs) " +
-      s"peak_heap=${peakHeap / (1 << 20)} MiB")
-    spark.stop()
   }
 }

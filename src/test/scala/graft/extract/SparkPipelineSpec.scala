@@ -1,8 +1,10 @@
 package graft.extract
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.Base64
+import scala.jdk.CollectionConverters._
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -34,6 +36,18 @@ class SparkPipelineSpec extends AnyFunSuite with graft.TempDirs {
     }.toMap
     finally src.close()
   }
+
+  /** The committed table as `spark.read.parquet` sees it: ExtractedRow's
+    * fields without `bucket`, then the `bucket` partition column. */
+  private val CommittedSchema = StructType(
+    Seq("url", "markdown", "text", "lang").map(StructField(_, StringType)) ++
+    Seq("page_count", "item_count", "table_count", "changed_cells", "removed_items")
+      .map(StructField(_, IntegerType)) ++
+    Seq("md_chars", "html_bytes").map(StructField(_, LongType)) ++
+    Seq(StructField("backend", StringType)) ++
+    Seq("ocr_retried", "ocr_accepted").map(StructField(_, BooleanType)) ++
+    Seq("spacing_fixed", "suspect_repaired").map(StructField(_, IntegerType)) ++
+    Seq(StructField("bucket", IntegerType)))
 
   private def pagesDF(n: Int) = {
     import spark.implicits._
@@ -135,10 +149,20 @@ class SparkPipelineSpec extends AnyFunSuite with graft.TempDirs {
             b.list().filter(_.endsWith(".parquet")).toSet
         }.toMap
     }
+    // entries under data/ that no commit should leave: checksum side files,
+    // a commit protocol's staging tree and success marker
+    def strays(d: String): Seq[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d, "data"))
+      try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".crc") || n == "_temporary" || n == "_SUCCESS").toList
+      finally walk.close()
+    }
     // runs one commit; returns the new parquet files per bucket dir
     def commit(in: org.apache.spark.sql.DataFrame, dir: String): Map[Int, Int] = {
       val before = files(dir)
       Pipeline.extractAndCommit(spark, in, dir, numBuckets = 32)
+      assert(strays(dir).isEmpty, s"stray entries under $dir/data: ${strays(dir)}")
+      assert(spark.read.parquet(s"$dir/data").schema == CommittedSchema)
       files(dir).map { case (b, fs) => b -> (fs -- before.getOrElse(b, Set.empty)).size }
     }
     val full = tempDir("graft-layout-full")
@@ -155,6 +179,23 @@ class SparkPipelineSpec extends AnyFunSuite with graft.TempDirs {
     assert(resAdded == (0 until 32).map(b => b -> (if (early(b)) 0 else 1)).toMap,
       s"resumed run new files: $resAdded")
     assert(spark.read.parquet(s"$resumed/data").count() == 256)
+  }
+
+  test("per-bucket elapsed_ms: the bucket holding a giant document exceeds the median bucket") {
+    import spark.implicits._
+    // skewPage(i) is a 100x giant for i % 10000 == 0: document 0 here
+    val pages = spark.createDataset((0L until 64L).map(i =>
+      graft.sources.SyntheticPages.skewPage(42L, i))).toDF()
+    val giant = Pipeline.withBucket(pages, 8).filter($"url" === graft.sources.SyntheticPages
+      .skewPage(42L, 0L).url).select("bucket").as[Int].head()
+    val dir = tempDir("graft-elapsed")
+    Pipeline.extractAndCommit(spark, pages, dir, numBuckets = 8)
+    val elapsed = graft.lineage.Lineage.latest(dir).get.partitions
+      .map(p => p.bucket -> p.elapsedMs).toMap
+    assert(elapsed.size == 8, s"every bucket committed: $elapsed")
+    val others = elapsed.removed(giant).values.toSeq.sorted
+    val median = others(others.length / 2)
+    assert(elapsed(giant) > median, s"giant bucket $giant: $elapsed")
   }
 
   test("mixed HTML and PDF payloads flow through one pipeline run") {

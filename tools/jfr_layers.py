@@ -9,6 +9,17 @@ Reads the recording's jdk.ExecutionSample events through
 for each layer, the share of executor-thread samples whose stack holds one of
 the layer's frames. Layers nest (a cell-clean sample also counts towards
 `transforms` and `extract_one`), so the shares do not add up to 100%.
+It then counts the recording's jdk.ProcessStart events on executor threads
+per command: Hadoop's local filesystem without its native library starts a
+`chmod` process for every file and directory it creates.
+
+`parquet_write` and `writer_open` are the commit's bucket writers
+(parquet-hadoop's ParquetWriter). `hadoop_conf_deserialize` is not the
+commit, which ships no Hadoop configuration: on html_commit it is
+perfbench's untimed output check, whose listing of 64 bucket directories
+runs as a Spark job with one task per directory (Spark lists more than 32
+paths in parallel). Executor-thread processes likewise include the ones
+perfbench's corpus build starts during set-up.
 
 Recipe (from the repository root):
   1. build the benchmark once, so the compiler JVM is not the one recorded:
@@ -53,10 +64,8 @@ LAYERS = [
     ("post.kpi_blocks", r"graft\.textkit\.MarkdownPost\$", r"normalizeKpiBlocks"),
     ("post.orphan_headings", r"graft\.textkit\.MarkdownPost\$", r"removeOrphanHeadings"),
     ("post.axis_lines", r"graft\.textkit\.MarkdownPost\$", r"removeAxisLikeLines"),
-    ("parquet_write", r"org\.apache\.spark\.sql\.execution\.datasources\.parquet\.ParquetOutputWriter",
-     r"write"),
-    ("writer_open", r"org\.apache\.spark\.sql\.execution\.datasources\.parquet\.ParquetOutputWriter",
-     r"<init>"),
+    ("parquet_write", r"org\.apache\.parquet\.hadoop\.ParquetWriter", r"write"),
+    ("writer_open", r"org\.apache\.parquet\.hadoop\.ParquetWriter", r"<init>"),
     ("hadoop_conf_deserialize", r"org\.apache\.hadoop\.conf\.Configuration", r"readFields"),
     ("scan", r"org\.apache\.spark\.sql\.execution\.datasources\.FileScanRDD\$\$anon\$1", r".*"),
 ]
@@ -145,6 +154,22 @@ def main():
     for layer, _, _ in LAYERS:
         share = hits[layer] / total if total else 0.0
         print(f"{layer:28s} {share * 100:6.1f}%  {hits[layer]:7d}")
+
+    proc = subprocess.Popen(
+        ["jfr", "print", "--json", "--stack-depth", "1", "--events", "jdk.ProcessStart",
+         a.recording], stdout=subprocess.PIPE, text=True)
+    started = {}
+    for ev in events(proc.stdout):
+        vals = ev.get("values") or {}
+        name = ((vals.get("eventThread") or {}).get("javaName")) or ""
+        if EXECUTOR_THREADS.match(name):
+            command = (vals.get("command") or "").split(" ", 1)[0].rsplit("/", 1)[-1]
+            started[command] = started.get(command, 0) + 1
+    if proc.wait() != 0:
+        sys.exit(f"jfr print failed with exit code {proc.returncode}")
+    print(f"executor-thread process starts: {sum(started.values())}")
+    for command, n in sorted(started.items(), key=lambda kv: -kv[1]):
+        print(f"{command:28s} {n:7d}")
 
 
 if __name__ == "__main__":
