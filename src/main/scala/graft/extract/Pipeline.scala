@@ -328,7 +328,10 @@ object Pipeline {
   }
 
   /** parquet-hadoop's writer over a java.nio file, fed by Spark's own
-    * InternalRow write support. */
+    * InternalRow write support. [[writeBuckets]] turns dictionary encoding
+    * off for `url`, `markdown` and `text`: every value in them is unique, so
+    * a dictionary only costs the hashing of each value before the writer
+    * falls back to plain encoding. `lang` and `backend` keep it. */
   private class RowWriterBuilder(file: Path)
       extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](new LocalOutputFile(file)) {
     override protected def self(): RowWriterBuilder = this
@@ -362,7 +365,9 @@ object Pipeline {
       Files.createDirectories(dir)
       val tmp: Path = dir.resolve(s".part-$snapshot-$attempt.tmp")
       val writer: ParquetWriter[InternalRow] = new RowWriterBuilder(tmp).withConf(conf)
-        .withCompressionCodec(codec).withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+        .withCompressionCodec(codec).withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+        .withDictionaryEncoding("url", false).withDictionaryEncoding("markdown", false)
+        .withDictionaryEncoding("text", false).build()
       var closed = false
       var docs, mdChars, changedCells, removedItems, nanos = 0L
       def close(): Unit = if (!closed) { closed = true; writer.close() }

@@ -8,16 +8,19 @@ import java.nio.{ByteBuffer, CharBuffer}
   * /root/reference/src/pdf_to_markdown_docling/text_normalize.py:5-74.
   */
 object TextNormalize {
-  private val RomanianDiacritics = "ăâîșțĂÂÎȘȚ".toSet
-  private val AllowedLatin1 = "âîÂÎ".toSet
+  private val RomanianDiacritics = "ăâîșțĂÂÎȘȚ"
   private val LigatureMap = List(
     "ﬁ" -> "fi", "ﬂ" -> "fl", "ﬀ" -> "ff", "ﬃ" -> "ffi", "ﬄ" -> "ffl")
 
   // CP1252 positions with no assigned character. CPython's cp1252 codec
   // refuses to encode these (our strict-encode mirror must too); the JDK's
   // windows-1252 encoder would silently pass them through as C1 bytes.
-  private val Cp1252Undefined: Set[Char] =
-    Set(0x81.toChar, 0x8D.toChar, 0x8F.toChar, 0x90.toChar, 0x9D.toChar)
+  private def isCp1252Undefined(c: Char): Boolean =
+    c == '\u0081' || c == '\u008D' || c == '\u008F' || c == '\u0090' || c == '\u009D'
+
+  private val Attempts = Seq(
+    (Charset.forName("windows-1252"), true),
+    (StandardCharsets.ISO_8859_1, false))
 
   /** text_normalize.py:16-26 */
   def mojibakeScore(text: String): Int = {
@@ -27,19 +30,29 @@ object TextNormalize {
       val ch = text.charAt(i)
       val code = ch.toInt
       if (code >= 0x80 && code <= 0x9F) score += 3
-      else if (code >= 0xC0 && code <= 0xFF && !AllowedLatin1.contains(ch)) score += 1
-      if (ch == '�') score += 4
+      // Latin-1 letters, except the four Romanian ones (â î Â Î)
+      else if (code >= 0xC0 && code <= 0xFF && code != 0xE2 && code != 0xEE &&
+        code != 0xC2 && code != 0xCE) score += 1
+      else if (code == 0xFFFD) score += 4
       i += 1
     }
     score
   }
 
-  private def romanianDiacriticCount(text: String): Int =
-    text.count(RomanianDiacritics.contains)
+  private[textkit] def romanianDiacriticCount(text: String): Int = {
+    var count = 0
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (c >= '\u00C2' && RomanianDiacritics.indexOf(c) >= 0) count += 1
+      i += 1
+    }
+    count
+  }
 
   /** Strict `text.encode(enc).decode('utf-8')` round trip, None on failure. */
   private def roundTrip(text: String, charset: Charset, cp1252Mode: Boolean): Option[String] = {
-    if (cp1252Mode && text.exists(Cp1252Undefined.contains)) return None
+    if (cp1252Mode && text.exists(isCp1252Undefined)) return None
     try {
       val encoder: CharsetEncoder = charset.newEncoder()
         .onMalformedInput(CodingErrorAction.REPORT)
@@ -64,10 +77,7 @@ object TextNormalize {
     var best = text
     var bestScore = baseScore
 
-    val attempts = List(
-      (Charset.forName("windows-1252"), true),
-      (StandardCharsets.ISO_8859_1, false))
-    for ((cs, cpMode) <- attempts) {
+    for ((cs, cpMode) <- Attempts) {
       roundTrip(text, cs, cpMode) match {
         case Some(candidate) if candidate != text =>
           val candScore = mojibakeScore(candidate)

@@ -1,6 +1,8 @@
 package graft.extract
 
 import java.nio.file.{Files, Paths}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -54,5 +56,20 @@ class BucketWriterSpec extends AnyFunSuite with graft.TempDirs {
     }
     assert(e.getMessage == "row 7 failed")
     assert(listing(dir).isEmpty, s"left behind: ${listing(dir)}")
+  }
+
+  test("url, markdown and text are written without a dictionary; lang keeps one") {
+    val dir = tempDir("graft-writer-dict")
+    val data = Paths.get(dir, "data").toString
+    Pipeline.writeBuckets(rows.iterator, data, 5L, 0L, setup).toList
+    val file = Paths.get(data, "bucket=0", "part-5.snappy.parquet")
+    val reader = ParquetFileReader.open(new LocalInputFile(file))
+    val dictionary =
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.hasDictionaryPage).toMap
+      finally reader.close()
+    assert(dictionary("url") == false && dictionary("markdown") == false &&
+      dictionary("text") == false, dictionary)
+    assert(dictionary("lang"), dictionary)
   }
 }

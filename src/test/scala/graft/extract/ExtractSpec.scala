@@ -138,6 +138,26 @@ class HtmlExtractSpec extends AnyFunSuite {
     assert(t.numRows == 2 && t.numCols == 2)
   }
 
+  test("a rowspan past the last row is clipped there and a colspan at 1000") {
+    def html(rowSpan: Int, colSpan: Int) =
+      s"<table><tr><td rowspan=$rowSpan colspan=$colSpan>x</td><td>y</td></tr>" +
+        "<tr><td>z</td></tr></table>"
+    def extract(h: String) = Pipeline.extractOne("u", h.getBytes("UTF-8"), "ro", 0)
+    extract(html(2, 1)) // load and warm the chain
+    val t0 = System.nanoTime()
+    val row = extract(html(65534, 5000))
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(ms < 1000, s"$ms ms")
+    assert(row.markdown.linesIterator.count(_.startsWith("|")) == 3, row.markdown.take(300))
+    val t = HtmlExtract.parse("u", html(65534, 5000)).items.head.table.get
+    assert(t.numRows == 2 && t.numCols == 1001)
+    val x = t.cells.find(_.text == "x").get
+    assert(x.rowSpan == 2 && x.endRow == 2 && x.colSpan == 1000)
+    assert(t.cells.find(_.text == "z").get.startCol == 1000)
+    // 1000 phantom rows before the clip
+    assert(HtmlExtract.parse("u", html(1000, 1)).items.head.table.get.numRows == 2)
+  }
+
   test("link-density boilerplate: short link farm dropped from body") {
     val doc = HtmlExtract.parse("u",
       "<p><a href=\"/a\">citeste</a> <a href=\"/b\">mai</a> <a href=\"/c\">mult</a></p>" +

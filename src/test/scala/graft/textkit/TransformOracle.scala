@@ -1014,3 +1014,107 @@ object OracleDocTransforms {
     }
   }
 }
+
+// Frozen copies of the backend probe's scorer and of the mojibake repair's
+// scores as they stood before they became single scanners without boxed
+// Set[Char] lookups; TextScanOracleSpec runs the engine against them.
+
+object OracleQuality {
+  private def isNoiseLine(line: String): Boolean =
+    line.isEmpty || line.startsWith("<!-- image") || line.startsWith("<!-- page break") ||
+      line.startsWith("#")
+
+  def scoreMarkdown(text: String): Quality.QualityReport = {
+    val lines = splitLines(text).map(_.strip())
+
+    val shortLines = lines.count { line =>
+      line.nonEmpty && line.replace(" ", "").length <= 4 && anyAlpha(line)
+    }
+
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    for (line <- lines if line.length >= 6 && !isNoiseLine(line)) {
+      val k = line.toLowerCase(java.util.Locale.ROOT)
+      counts(k) = counts.getOrElse(k, 0) + 1
+    }
+    val repeatedLines = counts.count(_._2 >= 3)
+
+    val controlChars = text.count(ch => ch.toInt < 32 && ch != '\n' && ch != '\t')
+
+    val score = 100 - 5 * shortLines - 2 * repeatedLines - controlChars
+    Quality.QualityReport(math.max(score, 0), shortLines, repeatedLines, controlChars)
+  }
+}
+
+object OracleTextNormalize {
+  import java.nio.charset.{Charset, CharsetEncoder, CodingErrorAction, CharacterCodingException, StandardCharsets}
+  import java.nio.{ByteBuffer, CharBuffer}
+
+  private val RomanianDiacritics = "ăâîșțĂÂÎȘȚ".toSet
+  private val AllowedLatin1 = "âîÂÎ".toSet
+
+  private val Cp1252Undefined: Set[Char] =
+    Set(0x81.toChar, 0x8D.toChar, 0x8F.toChar, 0x90.toChar, 0x9D.toChar)
+
+  def mojibakeScore(text: String): Int = {
+    var score = 0
+    var i = 0
+    while (i < text.length) {
+      val ch = text.charAt(i)
+      val code = ch.toInt
+      if (code >= 0x80 && code <= 0x9F) score += 3
+      else if (code >= 0xC0 && code <= 0xFF && !AllowedLatin1.contains(ch)) score += 1
+      if (ch == '�') score += 4
+      i += 1
+    }
+    score
+  }
+
+  def romanianDiacriticCount(text: String): Int =
+    text.count(RomanianDiacritics.contains)
+
+  private def roundTrip(text: String, charset: Charset, cp1252Mode: Boolean): Option[String] = {
+    if (cp1252Mode && text.exists(Cp1252Undefined.contains)) return None
+    try {
+      val encoder: CharsetEncoder = charset.newEncoder()
+        .onMalformedInput(CodingErrorAction.REPORT)
+        .onUnmappableCharacter(CodingErrorAction.REPORT)
+      val bytes: ByteBuffer = encoder.encode(CharBuffer.wrap(text))
+      val decoder = StandardCharsets.UTF_8.newDecoder()
+        .onMalformedInput(CodingErrorAction.REPORT)
+        .onUnmappableCharacter(CodingErrorAction.REPORT)
+      Some(decoder.decode(bytes).toString)
+    } catch {
+      case _: CharacterCodingException => None
+    }
+  }
+
+  def normalizeMojibakeText(text: String): String = {
+    if (text == null || text.length < 4) return text
+    val baseScore = mojibakeScore(text)
+    if (baseScore == 0) return text
+
+    val baseDiacritics = romanianDiacriticCount(text)
+    var best = text
+    var bestScore = baseScore
+
+    val attempts = List(
+      (Charset.forName("windows-1252"), true),
+      (StandardCharsets.ISO_8859_1, false))
+    for ((cs, cpMode) <- attempts) {
+      roundTrip(text, cs, cpMode) match {
+        case Some(candidate) if candidate != text =>
+          val candScore = mojibakeScore(candidate)
+          if (candScore < bestScore) {
+            val candDiacritics = romanianDiacriticCount(candidate)
+            val lengthOk = candidate.length >= math.max(4, (text.length * 0.9).toInt)
+            if (!(candDiacritics < baseDiacritics + 1 && candScore >= 2) && lengthOk) {
+              best = candidate
+              bestScore = candScore
+            }
+          }
+        case _ =>
+      }
+    }
+    best
+  }
+}

@@ -11,10 +11,20 @@ the layer's frames. Layers nest (a cell-clean sample also counts towards
 `transforms` and `extract_one`), so the shares do not add up to 100%.
 It then counts the recording's jdk.ProcessStart events on executor threads
 per command: Hadoop's local filesystem without its native library starts a
-`chmod` process for every file and directory it creates.
+`chmod` process for every file and directory it creates. Last, it prints the
+JIT compile time over the recording, from jdk.CompilerStatistics (the last
+event's totalTimeSpent minus the first's): ExecutionSample never samples the
+compiler threads, yet their CPU counts in a run's cpu_ms_per_doc. The figure
+sums the elapsed time of every compilation over all compiler threads, so it
+bounds their CPU from above (a compiler thread waiting for a core still
+counts).
 
 `parquet_write` and `writer_open` are the commit's bucket writers
-(parquet-hadoop's ParquetWriter). `hadoop_conf_deserialize` is not the
+(parquet-hadoop's ParquetWriter). `parquet_dictionary` is parquet's
+dictionary encoders, including the fallback writer that drops a dictionary
+for plain encoding, in any Parquet write. `probe` is the backend probe
+(page-1 render and `quality_score`); `mojibake` is the whitespace pass's
+mojibake repair. `hadoop_conf_deserialize` is not the
 commit, which ships no Hadoop configuration: on html_commit it is
 perfbench's untimed output check, whose listing of 64 bucket directories
 runs as a Spark job with one task per directory (Spark lists more than 32
@@ -64,8 +74,13 @@ LAYERS = [
     ("post.kpi_blocks", r"graft\.textkit\.MarkdownPost\$", r"normalizeKpiBlocks"),
     ("post.orphan_headings", r"graft\.textkit\.MarkdownPost\$", r"removeOrphanHeadings"),
     ("post.axis_lines", r"graft\.textkit\.MarkdownPost\$", r"removeAxisLikeLines"),
+    ("probe", r"graft\.extract\.SpacingFix\$", r"probePage1Score"),
+    ("quality_score", r"graft\.textkit\.Quality\$", r"scoreMarkdown"),
+    ("mojibake", r"graft\.textkit\.TextNormalize\$", r"normalizeMojibakeText"),
     ("parquet_write", r"org\.apache\.parquet\.hadoop\.ParquetWriter", r"write"),
     ("writer_open", r"org\.apache\.parquet\.hadoop\.ParquetWriter", r"<init>"),
+    ("parquet_dictionary",
+     r"org\.apache\.parquet\.column\.values\.(dictionary\..*|fallback\.FallbackValuesWriter)", r".*"),
     ("hadoop_conf_deserialize", r"org\.apache\.hadoop\.conf\.Configuration", r"readFields"),
     ("scan", r"org\.apache\.spark\.sql\.execution\.datasources\.FileScanRDD\$\$anon\$1", r".*"),
 ]
@@ -170,6 +185,31 @@ def main():
     print(f"executor-thread process starts: {sum(started.values())}")
     for command, n in sorted(started.items(), key=lambda kv: -kv[1]):
         print(f"{command:28s} {n:7d}")
+
+    proc = subprocess.Popen(
+        ["jfr", "print", "--json", "--events", "jdk.CompilerStatistics", a.recording],
+        stdout=subprocess.PIPE, text=True)
+    spent = [millis((ev.get("values") or {}).get("totalTimeSpent")) for ev in events(proc.stdout)]
+    if proc.wait() != 0:
+        sys.exit(f"jfr print failed with exit code {proc.returncode}")
+    spent = [t for t in spent if t is not None]
+    if len(spent) >= 2:
+        print(f"JIT compile time over the recording: {spent[-1] - spent[0]:.0f} ms, summed over "
+              f"compiler threads ({len(spent)} jdk.CompilerStatistics events)")
+    else:
+        print("JIT compile time: fewer than two jdk.CompilerStatistics events")
+
+
+def millis(value):
+    """A jfr JSON duration in ms: a number of ms, or an ISO-8601 string such
+    as "PT12.5S" or "PT1M2.5S"."""
+    if isinstance(value, (int, float)):
+        return float(value)
+    m = re.fullmatch(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?", value or "")
+    if not m:
+        return None
+    h, mi, sec = (float(g) if g else 0.0 for g in m.groups())
+    return ((h * 60 + mi) * 60 + sec) * 1000.0
 
 
 if __name__ == "__main__":
