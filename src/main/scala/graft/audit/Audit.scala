@@ -50,31 +50,7 @@ object Audit {
     val headingCountPdf = doc.items.count(i => Label.HeadingLabels.contains(i.label))
     val headingCountMd = MarkdownPost.markdownHeadingCount(markdown)
 
-    var spacedCells = 0L; var totalCells = 0L
-    var spacedTextItems = 0L; var multiSpaceTextItems = 0L; var totalTextItems = 0L
-    for (item <- doc.items) {
-      item.table match {
-        case Some(t) =>
-          if (!isTocLikeTable(t)) {
-            for (cell <- t.cells) {
-              totalCells += 1
-              if (Predicates.isSpacedText(cell.text)) spacedCells += 1
-            }
-          }
-        case None if item.kind != ItemKind.Picture =>
-          val text = item.text
-          if (text != null && text.nonEmpty) {
-            totalTextItems += 1
-            val multi = Predicates.isMultiSpaceText(text)
-            if (multi) multiSpaceTextItems += 1
-            val spaced = Predicates.isSpacedText(text)
-            val collapsed = Predicates.isCollapsedText(text)
-            if ((spaced || collapsed) && !(multi && !spaced && !collapsed))
-              spacedTextItems += 1
-          }
-        case None => // picture: carries region text for the caption pass only
-      }
-    }
+    val damage = AuditAggregator.damage(doc.items)
 
     AuditMetrics(
       url = doc.url,
@@ -85,9 +61,9 @@ object Audit {
       tableCellsPdf = tableCellsPdf,
       headingCountPdf = headingCountPdf, headingCountMd = headingCountMd,
       pdfTextLength = pdfText.length, mdTextLength = markdown.length,
-      spacedTableCells = spacedCells, totalTableCells = totalCells,
-      spacedTextItems = spacedTextItems, multiSpaceTextItems = multiSpaceTextItems,
-      totalTextItems = totalTextItems)
+      spacedTableCells = damage.spacedCells, totalTableCells = damage.totalCells,
+      spacedTextItems = damage.spacedTextItems, multiSpaceTextItems = damage.multiSpaceTextItems,
+      totalTextItems = damage.totalTextItems)
   }
 
   /** audit_utils.py:346-379 — per-page audits; markdown pages are positionally

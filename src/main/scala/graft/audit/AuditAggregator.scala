@@ -5,11 +5,12 @@ import org.apache.spark.sql.expressions.Aggregator
 import graft.model._
 import graft.textkit.Predicates
 
-/** Typed UDAF over exploded doc items: the spacing/damage counters of
-  * AuditMetrics as an associative fold (audit_utils.py:290-315 is a loop
-  * with commutative counter updates, so zero/reduce/merge/finish maps
-  * directly). Used where items arrive exploded (relational shape) instead of
-  * as a whole Doc per row.
+/** The spacing/damage counters of AuditMetrics as one per-item step,
+  * [[add]] (audit_utils.py:290-315 is a loop with commutative counter
+  * updates). [[damage]] folds it over one document's items, for the audit
+  * and the OCR trigger; [[agg]] is the same step as a typed UDAF over
+  * exploded items (relational shape), so zero/reduce/merge/finish maps
+  * directly.
   */
 object AuditAggregator {
   case class ItemSlice(isTable: Boolean, tocLike: Boolean,
@@ -25,6 +26,8 @@ object AuditAggregator {
       spacedTextItems: Long, multiSpaceTextItems: Long,
       totalTextItems: Long, tableCount: Long)
 
+  /** One item's audit inputs. A null text reads as "", so a null cell
+    * counts as a cell but never as a spaced one. */
   def fromItem(item: DocItem): ItemSlice = item.table match {
     case Some(t) => ItemSlice(isTable = true, tocLike = Audit.isTocLikeTable(t),
       cellTexts = t.cells.map(c => Option(c.text).getOrElse("")), text = "")
@@ -33,30 +36,40 @@ object AuditAggregator {
       text = if (item.kind == ItemKind.Picture) "" else Option(item.text).getOrElse(""))
   }
 
+  /** Adds one item's counts to `b`. */
+  def add(b: Buf, s: ItemSlice): Buf = {
+    if (s.isTable) {
+      b.tableCount += 1
+      if (!s.tocLike) {
+        for (text <- s.cellTexts) {
+          b.totalCells += 1
+          if (Predicates.isSpacedText(text)) b.spacedCells += 1
+        }
+      }
+    } else if (s.text.nonEmpty) {
+      b.totalTextItems += 1
+      val multi = Predicates.isMultiSpaceText(s.text)
+      if (multi) b.multiSpaceTextItems += 1
+      val spaced = Predicates.isSpacedText(s.text)
+      val collapsed = Predicates.isCollapsedText(s.text)
+      if ((spaced || collapsed) && !(multi && !spaced && !collapsed))
+        b.spacedTextItems += 1
+    }
+    b
+  }
+
+  /** The doc-local fold of [[add]] over `items`. */
+  def damage(items: IterableOnce[DocItem]): Buf = {
+    val b = Buf(0, 0, 0, 0, 0, 0)
+    items.iterator.foreach(item => add(b, fromItem(item)))
+    b
+  }
+
   val agg: Aggregator[ItemSlice, Buf, DamageCounters] =
     new Aggregator[ItemSlice, Buf, DamageCounters] {
       def zero: Buf = Buf(0, 0, 0, 0, 0, 0)
 
-      def reduce(b: Buf, s: ItemSlice): Buf = {
-        if (s.isTable) {
-          b.tableCount += 1
-          if (!s.tocLike) {
-            for (text <- s.cellTexts) {
-              b.totalCells += 1
-              if (Predicates.isSpacedText(text)) b.spacedCells += 1
-            }
-          }
-        } else if (s.text.nonEmpty) {
-          b.totalTextItems += 1
-          val multi = Predicates.isMultiSpaceText(s.text)
-          if (multi) b.multiSpaceTextItems += 1
-          val spaced = Predicates.isSpacedText(s.text)
-          val collapsed = Predicates.isCollapsedText(s.text)
-          if ((spaced || collapsed) && !(multi && !spaced && !collapsed))
-            b.spacedTextItems += 1
-        }
-        b
-      }
+      def reduce(b: Buf, s: ItemSlice): Buf = add(b, s)
 
       def merge(a: Buf, b: Buf): Buf = Buf(
         a.spacedCells + b.spacedCells, a.totalCells + b.totalCells,

@@ -242,10 +242,14 @@ object DocTransforms {
         CellClean.isSuspectCurrencyCell(CellClean.cleanTableCellText(cell.text))
     }
 
+  /** Share of a text item's bbox area a picture must cover for the item to
+    * count as inside it (date_cleanup.py:73-126 / :129-182). */
+  private val InsidePictureRatio = 0.6
+
   /** date_cleanup.py:73-126 / :129-182 — delete text items overlapping
-    * picture bboxes (>= ratio of the text bbox area). Shared geometry core. */
-  private def removeTextInsidePictures(doc: Doc, predicate: String => Boolean,
-                                       ratio: Double): (Doc, Int) = {
+    * picture bboxes (>= InsidePictureRatio of the text bbox area). Shared
+    * geometry core. */
+  private def removeTextInsidePictures(doc: Doc, predicate: String => Boolean): (Doc, Int) = {
     val picturesByPage = doc.items
       .filter(i => i.kind == ItemKind.Picture && i.bbox.nonEmpty)
       .groupBy(_.pageNo)
@@ -264,7 +268,7 @@ object DocTransforms {
           val tb = h.map(item.bbox.get.toTopLeft).getOrElse(item.bbox.get)
           val hit = boxes.exists { pb =>
             val apb = h.map(pb.toTopLeft).getOrElse(pb)
-            KpiAxis.overlapRatio(tb.l, tb.t, tb.r, tb.b, apb.l, apb.t, apb.r, apb.b) >= ratio
+            KpiAxis.overlapRatio(tb.l, tb.t, tb.r, tb.b, apb.l, apb.t, apb.r, apb.b) >= InsidePictureRatio
           }
           if (hit && predicate(item.text)) toDelete += item.idx
         }
@@ -274,13 +278,13 @@ object DocTransforms {
     else (doc.copy(items = doc.items.filterNot(i => toDelete.contains(i.idx))), toDelete.size)
   }
 
-  def removeDateOnlyTextInsidePictures(doc: Doc, ratio: Double = 0.6): (Doc, Int) =
-    removeTextInsidePictures(doc, KpiAxis.dateOnly, ratio)
+  def removeDateOnlyTextInsidePictures(doc: Doc): (Doc, Int) =
+    removeTextInsidePictures(doc, KpiAxis.dateOnly)
 
   /** date_cleanup.py:54-70, whose axis battery is export_utils'
     * _is_axis_like_line (MarkdownPost.isAxisLikeLine). */
-  def removeAxisTextInsidePictures(doc: Doc, ratio: Double = 0.6): (Doc, Int) =
-    removeTextInsidePictures(doc, MarkdownPost.isAxisLikeLine, ratio)
+  def removeAxisTextInsidePictures(doc: Doc): (Doc, Int) =
+    removeTextInsidePictures(doc, MarkdownPost.isAxisLikeLine)
 
   /** whitespace_fix.py:23-38 */
   def normalizeDocTextWhitespace(doc: Doc): (Doc, Int) = {

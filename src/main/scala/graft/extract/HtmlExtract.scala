@@ -69,6 +69,20 @@ object HtmlExtract {
     parsed.doc.copy(items = items)
   }
 
+  /** One parse config: the boilerplate thresholds [[applyConfig]] applies. */
+  final case class ParseConfig(name: String, linkDensityThreshold: Double, minContentChars: Int)
+
+  /** The three configs, defined here and nowhere else. Standard and
+    * aggressive are the two backends the auto-probe scores
+    * (conversion_utils.py:180-228); ocr keeps every block, the analog of the
+    * forced full-page OCR re-read that recovers text the first pass dropped
+    * (conversion_utils.py:357-398). */
+  object ParseConfig {
+    val Standard = ParseConfig("standard", 0.4, 8)
+    val Aggressive = ParseConfig("aggressive", 0.25, 16)
+    val Ocr = ParseConfig("ocr", 2.0, 0)
+  }
+
   /** The published Boilerpipe NumWordsRulesClassifier (Kohlschütter et al.,
     * WSDM 2011 — "Boilerplate Detection using Shallow Text Features",
     * decision tree trained on word count + link density of the previous/
@@ -538,11 +552,12 @@ object HtmlExtract {
     }
   }
 
-  /** Parse one HTML document into a Doc. Deterministic, allocation-light. */
-  def parse(url: String, html: String,
-            linkDensityThreshold: Double = 0.4,
-            minContentChars: Int = 8): Doc =
-    applyConfig(parseDetailed(url, html), linkDensityThreshold, minContentChars)
+  /** Parse one HTML document into its standard view. Deterministic,
+    * allocation-light. */
+  def parse(url: String, html: String): Doc = {
+    val cfg = ParseConfig.Standard
+    applyConfig(parseDetailed(url, html), cfg.linkDensityThreshold, cfg.minContentChars)
+  }
 
   /** Config-independent parse: text blocks keep their pre-boiler label; the
     * boilerplate inputs ride in the meta array (see [[applyConfig]]). */

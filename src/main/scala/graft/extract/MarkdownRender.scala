@@ -80,14 +80,16 @@ object MarkdownRender {
       case _ => "<!-- image -->"
     }
 
+  /** Whether an item is exported at all: body layer and an export label
+    * (conversion_utils.py:169-177). */
+  private def exported(item: DocItem): Boolean =
+    item.contentLayer == ContentLayer.Body && Label.ExportLabels.contains(item.label)
+
   /** Render one item to its markdown block (None = item not exported).
     * `pictureOrdinal` is the 0-based reading-order picture counter used by
     * the referenced image mode. */
-  def renderItem(item: DocItem, exportLabels: Set[String],
-                 imageMode: String = ImageMode.Placeholder,
-                 pictureOrdinal: Int = 0): Option[String] = {
-    if (item.contentLayer != ContentLayer.Body) return None
-    if (!exportLabels.contains(item.label)) return None
+  private def renderItem(item: DocItem, imageMode: String, pictureOrdinal: Int): Option[String] = {
+    if (!exported(item)) return None
     item.kind match {
       case ItemKind.Picture => Some(renderPicture(item, imageMode, pictureOrdinal))
       case ItemKind.Table => item.table.map(renderTable).filter(_.nonEmpty)
@@ -114,8 +116,7 @@ object MarkdownRender {
     * examples/long_report.md: chart-internal text items emit as one line);
     * non-text children (e.g. section_header chart titles) keep their own
     * blocks. */
-  def render(doc: Doc, exportLabels: Set[String] = Label.ExportLabels,
-             imageMode: String = ImageMode.Placeholder): String = {
+  def render(doc: Doc, imageMode: String = ImageMode.Placeholder): String = {
     val sb = new StringBuilder
     var lastPage = -1
     var first = true
@@ -141,7 +142,7 @@ object MarkdownRender {
       val joinable = item.parentIdx >= 0 && item.kind == ItemKind.Text &&
         item.label == Label.Text
       if (!joinable || item.parentIdx != joinParent) flushJoin()
-      renderItem(item, exportLabels, imageMode, picOrdinal).foreach { block =>
+      renderItem(item, imageMode, picOrdinal).foreach { block =>
         if (joinable) {
           if (joinBuf.nonEmpty) joinBuf += ' '
           joinBuf ++= block
@@ -163,10 +164,10 @@ object MarkdownRender {
   /** Plain-text export used as the audit's PDF-side text
     * (doc.export_to_text analog): exported text content plus table cell
     * text, one block per line group. */
-  def renderPlainText(doc: Doc, exportLabels: Set[String] = Label.ExportLabels): String = {
+  def renderPlainText(doc: Doc): String = {
     val out = new StringBuilder
     for (item <- doc.items) {
-      if (item.contentLayer == ContentLayer.Body && exportLabels.contains(item.label)) {
+      if (exported(item)) {
         item.kind match {
           case ItemKind.Picture => ()
           case ItemKind.KeyValue =>
@@ -196,10 +197,11 @@ object MarkdownRender {
   }
 
   /** The reference's markdown post-chain in exact order
-    * (conversion_utils.py:276-284). */
-  def postProcess(markdown: String, removeImagePlaceholders: Boolean = true): String = {
+    * (conversion_utils.py:276-284), which always removes image
+    * placeholders. */
+  def postProcess(markdown: String): String = {
     var md = MarkdownPost.addVisiblePageMarkers(markdown)
-    md = MarkdownPost.reduceMarkdownNoise(md, removeImagePlaceholders = removeImagePlaceholders)
+    md = MarkdownPost.reduceMarkdownNoise(md, removeImagePlaceholders = true)
     md = MarkdownPost.normalizeKpiBlocks(md)
     md = MarkdownPost.removeOrphanHeadings(md)
     md = MarkdownPost.removeAxisLikeLines(md)

@@ -79,10 +79,6 @@ object Pipeline {
       pages = doc.pages.filter(p => wanted(p.pageNo)))
   }
 
-  /** The "OCR" parse config for HTML payloads: keep everything (no
-    * boilerplate thresholds), the analog of a forced full-page OCR re-read
-    * that recovers text the first pass dropped. */
-  val OcrParseConfig: SpacingFix.ParseConfig = SpacingFix.ParseConfig("ocr", 2.0, 0)
   val CharsPerPageOcrTrigger = 200.0
   /** SPACED_CELL_RATIO_THRESHOLD, conversion_utils.py:70 */
   val SpacedRatioOcrTrigger = 0.04
@@ -130,15 +126,10 @@ object Pipeline {
     * the reference derives it from audit_doc_vs_markdown's counters, which
     * skip TOC-like tables (audit_utils.py:296-302) — a TOC-heavy document
     * must not spuriously trip the OCR retry or skew the halved-ratio
-    * acceptance rule. */
+    * acceptance rule. The audit's damage fold over the table items only. */
   private def spacedCellRatio(doc: Doc): Double = {
-    var spaced = 0L; var total = 0L
-    for (t <- doc.items.flatMap(_.table) if !graft.audit.Audit.isTocLikeTable(t);
-         c <- t.cells) {
-      total += 1
-      if (graft.textkit.Predicates.isSpacedText(c.text)) spaced += 1
-    }
-    if (total > 0) spaced.toDouble / total else 0.0
+    val d = graft.audit.AuditAggregator.damage(doc.items.iterator.filter(_.table.nonEmpty))
+    if (d.totalCells > 0) d.spacedCells.toDouble / d.totalCells else 0.0
   }
 
   /** Parse + transform + render one document. Pure; called per row inside
@@ -200,13 +191,13 @@ object Pipeline {
         // retry derive views allocation-light (applyConfig is an array map)
         val detailed = HtmlExtract.parseDetailed(url,
           new String(htmlBytes, java.nio.charset.StandardCharsets.UTF_8))
-        def view(cfg: SpacingFix.ParseConfig): Doc = restrictPages(
+        def view(cfg: HtmlExtract.ParseConfig): Doc = restrictPages(
           HtmlExtract.applyConfig(detailed, cfg.linkDensityThreshold, cfg.minContentChars), opts)
         if (opts.ocrMode == "on") {
           // forced full-page OCR (conversion_utils.py:357-358): the keep-
           // everything view unconditionally — no probe, no retry bookkeeping
-          backend = OcrParseConfig.name
-          view(OcrParseConfig)
+          backend = HtmlExtract.ParseConfig.Ocr.name
+          view(HtmlExtract.ParseConfig.Ocr)
         } else {
           val std = SpacingFix.Backends.head
           var doc = view(std)
@@ -231,7 +222,7 @@ object Pipeline {
             val ratio = spacedCellRatio(doc)
             if (charsPerPage < CharsPerPageOcrTrigger || ratio >= SpacedRatioOcrTrigger) {
               ocrRetried = true
-              val ocr = view(OcrParseConfig)
+              val ocr = view(HtmlExtract.ParseConfig.Ocr)
               // acceptance: conversion_utils.py:387-398
               if (spacedCellRatio(ocr) < ratio * 0.5 ||
                   MarkdownRender.renderPlainText(ocr).length > text.length * 1.2) {
@@ -316,10 +307,10 @@ object Pipeline {
     * legacy format, timestamp type, field ids). Built once on the driver;
     * the closure ships a dozen keys, not the session's Hadoop
     * configuration. */
-  private[extract] case class BucketWriterSetup(serializer: Seq[Expression],
-                                               conf: Map[String, String])
+  private[graft] case class BucketWriterSetup(serializer: Seq[Expression],
+                                             conf: Map[String, String])
 
-  private[extract] def bucketWriterSetup(spark: SparkSession): BucketWriterSetup = {
+  private[graft] def bucketWriterSetup(spark: SparkSession): BucketWriterSetup = {
     val enc = ExpressionEncoder[ExtractedRow]()
     val (fields, exprs) = enc.schema.zip(enc.serializer).filter(_._1.name != "bucket").unzip
     val job = Job.getInstance(new Configuration(false))
@@ -353,7 +344,7 @@ object Pipeline {
     * anything throws, the task deletes its temp files and rethrows. One
     * writer stays open per bucket, so a task buffers up to one row group per
     * bucket it holds. */
-  private[extract] def writeBuckets(rows: Iterator[ExtractedRow], dataDir: String,
+  private[graft] def writeBuckets(rows: Iterator[ExtractedRow], dataDir: String,
       snapshot: Long, attempt: Long, setup: BucketWriterSetup)
       : Iterator[(Int, Long, Long, Long, Long, Long)] = {
     val conf = new Configuration(false)
@@ -465,11 +456,11 @@ object Pipeline {
     import graft.lineage.Lineage
     import spark.implicits._
     // one manifest read serves the resume set, the carried-over stats and
-    // the id this commit's manifest will get (Lineage.commit's rule)
+    // the id this commit's data files and manifest both get
     val latest = Lineage.latest(outDir)
     val prevStats = latest.fold(Seq.empty[Lineage.PartitionStat])(_.partitions)
     val done = prevStats.map(_.bucket).toSet
-    val snapshot = latest.fold(1L)(_.snapshotId + 1)
+    val snapshot = Lineage.nextSnapshotId(latest)
 
     // crash safety: a previous run may have written bucket files and died
     // before committing the manifest — those buckets will be re-extracted, so
@@ -500,10 +491,11 @@ object Pipeline {
     val merged = (prevStats ++ written.map { case (b, docs, mdChars, _, _, ms) =>
       Lineage.PartitionStat(b, docs, mdChars, ms) }).sortBy(_.bucket)
     val docs = written.map(_._2).sum
-    val snapshotId = Lineage.commit(outDir, numBuckets, merged,
-      inputDesc = pages.schema.map(_.name).mkString(",") +
+    Lineage.commit(outDir, Lineage.Manifest(snapshot, numBuckets,
+      pages.schema.map(_.name).mkString(",") +
         s"; observed: docs=$docs changed_cells=${written.map(_._4).sum}" +
-        s" removed_items=${written.map(_._5).sum}")
-    (snapshotId, docs)
+        s" removed_items=${written.map(_._5).sum}",
+      merged))
+    (snapshot.toString, docs)
   }
 }

@@ -16,6 +16,15 @@ import graft.textkit.SpacingRepair.Glyph
 object SpacingFix {
   case class Report(tableCells: Int, textItems: Int, pagesProcessed: Int)
 
+  /** Points a cell or item bbox is widened by before its glyphs are
+    * clipped; a truncated-looking text re-queries at 3x
+    * (pymupdf_spacing_fix.py:228-258,365-513). */
+  private val Pad = 1.0
+
+  /** Most KPI captions attached to one document
+    * (picture_kpi_extract.py:196-250). */
+  private val MaxKpiCaptions = 30
+
   /** conversion_utils.py:400-426 — None means "all pages" (unknown page). */
   def detectSpacingPages(doc: Doc): Option[Set[Int]] = {
     var hasUnknown = false
@@ -52,10 +61,9 @@ object SpacingFix {
 
   /** pymupdf_spacing_fix.py:228-258 — re-query with 3x padding when the text
     * looks truncated mid-word. */
-  private def expandSuffix(glyphs: Seq[Glyph], bbox: Bbox, pad: Double,
-                           baseText: String): String = {
+  private def expandSuffix(glyphs: Seq[Glyph], bbox: Bbox, baseText: String): String = {
     if (!SpacingRepair.needsSuffixCompletion(baseText)) return baseText
-    val widened = reconstruct(glyphs, bbox, pad * 3.0)
+    val widened = reconstruct(glyphs, bbox, Pad * 3.0)
     if (widened.nonEmpty && SpacingRepair.shouldReplaceText(baseText, widened, tableMode = true))
       widened
     else baseText
@@ -64,7 +72,7 @@ object SpacingFix {
   /** Repair pass. `pageGlyphs` maps pageNo -> positioned glyphs (top-left
     * origin, same coordinate space as item bboxes). */
   def fixSpacedItems(doc: Doc, pageGlyphs: Map[Int, Seq[Glyph]],
-                     pagesToFix: Option[Set[Int]], pad: Double = 1.0): (Doc, Report) = {
+                     pagesToFix: Option[Set[Int]]): (Doc, Report) = {
     if (pagesToFix.exists(_.isEmpty)) return (doc, Report(0, 0, 0))
     var tableReplaced = 0
     var textReplaced = 0
@@ -83,15 +91,15 @@ object SpacingFix {
                 else {
                   val bb = pageHeights.get(item.pageNo)
                     .map(cell.bbox.get.toTopLeft).getOrElse(cell.bbox.get)
-                  var reconstructed = reconstruct(glyphs, bb, pad)
+                  var reconstructed = reconstruct(glyphs, bb, Pad)
                   if (reconstructed.nonEmpty)
-                    reconstructed = expandSuffix(glyphs, bb, pad, reconstructed)
+                    reconstructed = expandSuffix(glyphs, bb, reconstructed)
                   if (reconstructed.nonEmpty &&
                       SpacingRepair.shouldReplaceText(cell.text, reconstructed, tableMode = true)) {
                     tableReplaced += 1
                     cell.copy(text = reconstructed)
                   } else if (SpacingRepair.needsSuffixCompletion(cell.text)) {
-                    val widened = expandSuffix(glyphs, bb, pad, cell.text)
+                    val widened = expandSuffix(glyphs, bb, cell.text)
                     if (widened != cell.text &&
                         SpacingRepair.shouldReplaceText(cell.text, widened, tableMode = true)) {
                       tableReplaced += 1
@@ -110,7 +118,7 @@ object SpacingFix {
             case Some(glyphs) =>
               val bb = pageHeights.get(item.pageNo)
                 .map(item.bbox.get.toTopLeft).getOrElse(item.bbox.get)
-              val reconstructed = reconstruct(glyphs, bb, pad)
+              val reconstructed = reconstruct(glyphs, bb, Pad)
               if (reconstructed.nonEmpty &&
                   SpacingRepair.shouldReplaceText(item.text, reconstructed)) {
                 textReplaced += 1
@@ -133,8 +141,7 @@ object SpacingFix {
     * currency value, reconstruct the cell region's glyphs and accept by the
     * same rules the OCR merge uses (_should_replace_numeric_cell,
     * table_fixes.py:548-583; non-spaced non-empty for empty cells). */
-  def fillCellsFromGlyphs(doc: Doc, pageGlyphs: Map[Int, Seq[Glyph]],
-                          pad: Double = 1.0): (Doc, Int) = {
+  def fillCellsFromGlyphs(doc: Doc, pageGlyphs: Map[Int, Seq[Glyph]]): (Doc, Int) = {
     var filled = 0
     val pageHeights = doc.pageHeights
     val items = doc.items.map { item =>
@@ -153,11 +160,11 @@ object SpacingFix {
               val empty = base.trim.isEmpty
               val bb = pageHeights.get(item.pageNo)
                 .map(cell.bbox.get.toTopLeft).getOrElse(cell.bbox.get)
-              var rec = reconstruct(glyphs, bb, pad)
+              var rec = reconstruct(glyphs, bb, Pad)
               // detector bboxes can undershoot a lone glyph (a "-" dash sits
               // a point or two outside): for EMPTY cells only, retry with a
               // wider clip before giving up
-              if (empty && rec.isEmpty) rec = reconstruct(glyphs, bb, pad * 3)
+              if (empty && rec.isEmpty) rec = reconstruct(glyphs, bb, Pad * 3)
               val accept =
                 if (empty)
                   rec.nonEmpty && rec.length <= 80 && !Predicates.isSpacedText(rec)
@@ -175,10 +182,7 @@ object SpacingFix {
 
   /** picture_kpi_extract.py:196-250 — attach KPI-like picture text as
     * captions (max 30/doc, skipped when already present in the doc text). */
-  def addPictureKpiCaptions(doc: Doc,
-                            pictureText: (Int, Bbox) => String,
-                            maxAdded: Int = 30): (Doc, Int) = {
-    if (maxAdded <= 0) return (doc, 0)
+  def addPictureKpiCaptions(doc: Doc, pictureText: (Int, Bbox) => String): (Doc, Int) = {
     // rendered when the first KPI candidate needs it: most pictures have no
     // KPI text, and then the document's text is never looked at
     lazy val docText = MarkdownRender.renderPlainText(doc).toLowerCase(java.util.Locale.ROOT)
@@ -192,7 +196,7 @@ object SpacingFix {
       // tree a picture's caption is the immediately following caption item
       val hasCaption = pos + 1 < doc.items.length &&
         doc.items(pos + 1).label == Label.Caption
-      if (added < maxAdded && item.kind == ItemKind.Picture && item.bbox.nonEmpty &&
+      if (added < MaxKpiCaptions && item.kind == ItemKind.Picture && item.bbox.nonEmpty &&
           !hasCaption) {
         var raw = pictureText(item.pageNo, item.bbox.get)
         if (raw != null && raw.nonEmpty) {
@@ -217,22 +221,19 @@ object SpacingFix {
     * item's own text field carries the region text (parsed from the
     * data-picture-text channel). Active only when some picture has text —
     * the KPI_OCR-enabled analog. */
-  def addPictureKpiCaptionsFromItems(doc: Doc, maxAdded: Int = 30): (Doc, Int) = {
+  def addPictureKpiCaptionsFromItems(doc: Doc): (Doc, Int) = {
     if (!doc.items.exists(i => i.kind == ItemKind.Picture && i.text != null && i.text.nonEmpty))
       (doc, 0)
     else {
       val byKey = doc.items.filter(_.kind == ItemKind.Picture)
         .map(i => (i.pageNo, i.bbox) -> Option(i.text).getOrElse("")).toMap
-      addPictureKpiCaptions(doc, (p, b) => byKey.getOrElse((p, Some(b)), ""), maxAdded)
+      addPictureKpiCaptions(doc, (p, b) => byKey.getOrElse((p, Some(b)), ""))
     }
   }
 
-  /** One backend view: the boilerplate thresholds `HtmlExtract.applyConfig`
-    * applies to a parse. */
-  case class ParseConfig(name: String, linkDensityThreshold: Double, minContentChars: Int)
-  val Backends: Seq[ParseConfig] = Seq(
-    ParseConfig("standard", 0.4, 8),
-    ParseConfig("aggressive", 0.25, 16))
+  /** The backend views the probe scores, in tie-break order. */
+  val Backends: Seq[HtmlExtract.ParseConfig] =
+    Seq(HtmlExtract.ParseConfig.Standard, HtmlExtract.ParseConfig.Aggressive)
 
   /** Backend auto-probe (conversion_utils.py:180-228): one parse, each
     * candidate config a view of it scored on page 1 by [[probePage1Score]]
@@ -250,8 +251,8 @@ object SpacingFix {
 
   /** Page-1 markdown quality of an already-parsed view. */
   def probePage1Score(doc: Doc): Int = {
-    val page1 = doc.copy(items = doc.items.filter(
-      _.pageNo == doc.pages.headOption.map(_.pageNo).getOrElse(1)))
+    val firstPage = if (doc.pages.isEmpty) 1 else doc.pages(0).pageNo
+    val page1 = doc.copy(items = doc.items.filter(_.pageNo == firstPage))
     Quality.scoreMarkdown(MarkdownRender.render(page1)).score
   }
 }

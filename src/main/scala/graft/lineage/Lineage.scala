@@ -55,18 +55,20 @@ object Lineage {
   private def read(outDir: String, name: String): Manifest =
     mapper.readValue(lineageDir(outDir).resolve(name).toFile, classOf[Manifest])
 
-  def commit(outDir: String, numBuckets: Int, stats: Seq[PartitionStat],
-             inputDesc: String): String = {
+  /** The id the next commit after `latest` gets: monotonic, the latest
+    * id + 1, or 1 before the first commit (no wall clock: determinism). A
+    * commit's data files and its manifest both carry it. */
+  def nextSnapshotId(latest: Option[Manifest]): Long = latest.fold(1L)(_.snapshotId + 1)
+
+  /** Publishes `manifest` as `snapshot-<its id>.json`. */
+  def commit(outDir: String, manifest: Manifest): Unit = {
     val dir = lineageDir(outDir)
     Files.createDirectories(dir)
-    // monotonic snapshot id = max existing + 1 (no wall clock: determinism)
-    val id = manifestNames(outDir).map(idOf).maxOption.fold(1L)(_ + 1L)
+    val id = manifest.snapshotId
     val tmp = dir.resolve(s".snapshot-$id.json.tmp")
-    Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(Manifest(id, numBuckets, inputDesc, stats)))
+    Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(manifest))
     // atomic publish: a crash mid-commit leaves no partial manifest
     Files.move(tmp, dir.resolve(s"snapshot-$id.json"), StandardCopyOption.ATOMIC_MOVE)
-    id.toString
   }
 
   /** The latest snapshot's manifest (None before the first commit); reads

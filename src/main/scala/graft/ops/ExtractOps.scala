@@ -1037,10 +1037,14 @@ object ExtractOps {
       // run 1: killed after committing 4 of 8 buckets
       val (_, docs1) = Pipeline.extractAndCommit(s,
         Pipeline.withBucket(pages, nB).filter($"bucket" < 4), outDir, numBuckets = nB)
-      // the next run writes bucket 4 and dies pre-commit: orphaned data files
-      Pipeline.extract(s, pages, numBuckets = nB,
-        skipBuckets = (0 until nB).toSet - 4).toDF()
-        .write.mode("append").partitionBy("bucket").parquet(s"$outDir/data")
+      // the next run writes bucket 4 with the commit's own bucket writer and
+      // dies pre-commit: an orphaned data file under the id it would commit
+      val setup = Pipeline.bucketWriterSetup(s)
+      val orphanId = graft.lineage.Lineage.nextSnapshotId(graft.lineage.Lineage.latest(outDir))
+      Pipeline.extract(s, pages, numBuckets = nB, skipBuckets = (0 until nB).toSet - 4)
+        .mapPartitions(rows => Pipeline.writeBuckets(rows, s"$outDir/data", orphanId,
+          org.apache.spark.TaskContext.get().taskAttemptId(), setup))
+        .collect()
       // run 2 resumes (must clean the orphan, extract buckets 4..7 only)
       val (_, docs2) = Pipeline.extractAndCommit(s, pages, outDir, numBuckets = nB)
       // run 3: everything committed -> no-op

@@ -27,77 +27,16 @@ object WarcSource {
       warcType: String, targetUri: String, date: String,
       httpStatus: Int, httpContentType: String, body: Array[Byte])
 
-  private def isGzip(b: Array[Byte]): Boolean =
-    b.length >= 2 && (b(0) & 0xFF) == 0x1F && (b(1) & 0xFF) == 0x8B
-
-  private def gunzipAll(b: Array[Byte]): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(b), 1 << 16)
-    val out = new java.io.ByteArrayOutputStream(b.length * 4)
-    val buf = new Array[Byte](1 << 16)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
-
-  /** Parse every record of one WARC file (gzip-sniffed). Malformed tails
-    * degrade to the records parsed so far — a truncated crawl segment must
-    * not kill the partition. */
-  def parseRecords(fileBytes: Array[Byte]): Seq[WarcRecord] = {
-    val bytes = try {
-      if (isGzip(fileBytes)) gunzipAll(fileBytes) else fileBytes
-    } catch { case _: Exception => fileBytes }
-    val s = new String(bytes, ISO_8859_1)
-    val out = scala.collection.mutable.ArrayBuffer.empty[WarcRecord]
-    var pos = 0
-    var ok = true
-    while (ok) {
-      val start = s.indexOf("WARC/", pos)
-      if (start < 0) ok = false
-      else {
-        val headerEnd = s.indexOf("\r\n\r\n", start)
-        if (headerEnd < 0) ok = false
-        else {
-          val headers = s.substring(start, headerEnd).split("\r\n").drop(1)
-            .flatMap { line =>
-              val k = line.indexOf(':')
-              if (k < 0) None else Some(line.substring(0, k).trim.toLowerCase ->
-                line.substring(k + 1).trim)
-            }.toMap
-          val len = headers.get("content-length").flatMap(_.toIntOption).getOrElse(-1)
-          val payloadStart = headerEnd + 4
-          // Long bound: a hostile near-Int.MaxValue length would overflow
-          // payloadStart + len to negative, and indexOf from a negative
-          // position restarts at 0 — an infinite loop, not just a bad slice
-          if (len < 0 || payloadStart.toLong + len > s.length) ok = false // truncated
-          else {
-            val payload = bytes.slice(payloadStart, payloadStart + len)
-            val (status, cType, body) = httpParts(payload,
-              headers.getOrElse("content-type", ""))
-            out += WarcRecord(
-              warcType = headers.getOrElse("warc-type", ""),
-              targetUri = headers.getOrElse("warc-target-uri", ""),
-              date = headers.getOrElse("warc-date", ""),
-              httpStatus = status, httpContentType = cType, body = body)
-            pos = payloadStart + len
-          }
-        }
-      }
-    }
-    out.toSeq
-  }
-
-  /** Streaming record scanner (round 6): parses records incrementally from
-    * a (possibly gzipped) stream, so per-task memory is bounded by the
-    * LARGEST RECORD instead of 3-5x the whole decompressed segment (the
-    * whole-buffer path above gunzips the segment to one array and then
-    * makes a full String copy — multi-GiB per task on Common Crawl's 1 GiB
-    * segments). Same record semantics as [[parseRecords]]: scan for the
-    * literal "WARC/", headers to \r\n\r\n, Content-Length payload; any
-    * malformed/truncated point degrades to the records parsed so far.
-    * Headers are additionally capped at 4 MiB (a spec-conforming header is
-    * a few hundred bytes; an unbounded one would defeat the memory bound).
-    * The stream is closed when the iterator ends. */
+  /** The record parser: parses records incrementally from a (possibly
+    * gzipped, per-record or whole-file) stream, so per-task memory is
+    * bounded by the largest record, not by the decompressed segment. Scan
+    * for the literal "WARC/", headers to \r\n\r\n, Content-Length
+    * payload; any malformed or truncated point degrades to the records
+    * parsed so far, so a truncated crawl segment cannot kill the partition.
+    * Headers are capped at 4 MiB (a spec-conforming header is a few hundred
+    * bytes), and a payload buffer grows only as its bytes arrive
+    * ([[readPayload]]), so a record costs the bytes it holds, whatever
+    * Content-Length claims. The stream is closed when the iterator ends. */
   def parseRecordsStream(raw: java.io.InputStream): Iterator[WarcRecord] = {
     val MaxHeaderBytes = 4 << 20
     val bis = new java.io.BufferedInputStream(raw, 1 << 16)
@@ -151,24 +90,12 @@ object WarcSource {
             if (state < 4) hb = in.read()
           }
           if (state < 4) { finish(); return }
-          val headerStr = new String(hdr.toByteArray, 0, hdr.size - 4, ISO_8859_1)
-          val headers = headerStr.split("\r\n").drop(1)
-            .flatMap { line =>
-              val k = line.indexOf(':')
-              if (k < 0) None else Some(line.substring(0, k).trim.toLowerCase ->
-                line.substring(k + 1).trim)
-            }.toMap
+          val headers = headerMap(new String(hdr.toByteArray, 0, hdr.size - 4, ISO_8859_1))
           val len = headers.get("content-length").flatMap(_.toIntOption).getOrElse(-1)
           if (len < 0) { finish(); return }
           // [3] exactly len payload bytes; EOF before that = truncated tail
-          val payload = new Array[Byte](len)
-          var off = 0
-          var n = 0
-          while (off < len && n >= 0) {
-            n = in.read(payload, off, len - off)
-            if (n > 0) off += n
-          }
-          if (off < len) { finish(); return }
+          val payload = readPayload(in, len)
+          if (payload == null) { finish(); return }
           val (status, cType, body) = httpParts(payload,
             headers.getOrElse("content-type", ""))
           nextRec = WarcRecord(
@@ -187,6 +114,32 @@ object WarcSource {
         val r = nextRec; nextRec = null; r
       }
     }
+  }
+
+  /** A record's header fields, keyed by lower-cased name; the first line
+    * (the `WARC/` version) and lines without a ':' are skipped. */
+  private def headerMap(block: String): Map[String, String] =
+    block.split("\r\n").iterator.drop(1).flatMap { line =>
+      val k = line.indexOf(':')
+      if (k < 0) None
+      else Some(line.substring(0, k).trim.toLowerCase -> line.substring(k + 1).trim)
+    }.toMap
+
+  /** Exactly `len` bytes of `in`, or null when the stream ends first. The
+    * buffer starts at min(len, 64 KiB) and doubles, up to `len`, only when
+    * full, so a header that claims more than the stream holds costs about
+    * the bytes that are there, not `len`. */
+  private def readPayload(in: java.io.InputStream, len: Int): Array[Byte] = {
+    var buf = new Array[Byte](math.min(len, 1 << 16))
+    var off = 0
+    var n = 0
+    while (off < len && n >= 0) {
+      if (off == buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.min(len.toLong, 2L * buf.length).toInt)
+      n = in.read(buf, off, buf.length - off)
+      if (n > 0) off += n
+    }
+    if (off < len) null else buf
   }
 
   /** Open one segment for streaming. binaryFile's `path` is a Hadoop path

@@ -13,6 +13,12 @@ import java.util.Locale
 object MarkdownPost {
   val PageBreakPlaceholder = "<!-- page break -->"
 
+  /** A first-of-page heading counts as repeated when it opens at least
+    * MinRepeatedHeadingCount pages and at least RepeatedHeadingRatio of all
+    * pages (export_utils.py:88-166, the reference's defaults). */
+  private val RepeatedHeadingRatio = 0.3
+  private val MinRepeatedHeadingCount = 3
+
   private val HtmlPageMarker = "<!--\\s*page:\\s*(\\d+)\\s*-->"
   private val MdPageMarker = "\\[//\\]:\\s*#\\s*\\(\\s*page:\\s*(\\d+)\\s*\\)"
   private val VisiblePageMarker = "\\*\\*\\s*\\[page(?::)?\\s*\\d+\\]\\s*\\*\\*"
@@ -56,6 +62,18 @@ object MarkdownPost {
     if (sb == null) markdown
     else { sb.append(markdown, last, n); sb.toString }
   }
+
+  private val PageJoin = s"\n\n$PageBreakPlaceholder\n\n"
+
+  /** The page parts a pass works on (the markdown itself when it has no
+    * page break). */
+  private def pagesOf(markdown: String): Array[String] =
+    splitLiteral(markdown, PageBreakPlaceholder)
+
+  /** Inverse of [[pagesOf]] on a pass's cleaned parts; a single part is
+    * returned as it is, not copied. */
+  private def joinPages(parts: Array[String]): String =
+    if (parts.length == 1) parts(0) else parts.mkString(PageJoin)
 
   private def normalizeHeading(text: String): String =
     joinSplit(text).toLowerCase(Locale.ROOT)
@@ -143,31 +161,26 @@ object MarkdownPost {
   }
 
   /** export_utils.py:44-61 */
-  def addVisiblePageMarkers(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
+  def addVisiblePageMarkers(markdown: String): String = {
     val stripped = stripPageMarkers(markdown)
-    if (!stripped.contains(placeholder)) {
+    if (!stripped.contains(PageBreakPlaceholder)) {
       if (stripped.isBlank) return stripped
       return s"**[Page 1]**\n\n${stripped.strip()}"
     }
-    val parts = splitLiteral(stripped, placeholder).map(_.strip())
+    val parts = splitLiteral(stripped, PageBreakPlaceholder).map(_.strip())
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var pageNo = 1
     for (part <- parts if part.nonEmpty) {
       out += s"**[Page $pageNo]**\n\n$part"
       pageNo += 1
     }
-    out.mkString(s"\n\n$placeholder\n\n")
+    out.mkString(PageJoin)
   }
 
   /** export_utils.py:88-166 — repeated first-of-page heading removal. */
-  def reduceMarkdownNoise(markdown: String, placeholder: String = PageBreakPlaceholder,
-                          removeImagePlaceholders: Boolean = false,
-                          repeatedHeadingRatio: Double = 0.3,
-                          minRepeatedHeadingCount: Int = 3): String = {
+  def reduceMarkdownNoise(markdown: String, removeImagePlaceholders: Boolean = false): String = {
     if (markdown.isBlank) return markdown
-    val hasBreaks = markdown.contains(placeholder)
-    val rawParts: Array[String] =
-      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
+    val rawParts = pagesOf(markdown)
 
     val firstHeadings: Array[Option[String]] = rawParts.map { part =>
       val s = firstMeaningfulLine(part)
@@ -183,8 +196,8 @@ object MarkdownPost {
           val k = normalizeHeading(h)
           counts(k) = counts.getOrElse(k, 0) + 1
         }
-        val threshold = math.max(minRepeatedHeadingCount,
-          (totalPages * repeatedHeadingRatio + 0.999).toInt)
+        val threshold = math.max(MinRepeatedHeadingCount,
+          (totalPages * RepeatedHeadingRatio + 0.999).toInt)
         counts.filter(_._2 >= threshold).keySet.toSet
       }
 
@@ -212,13 +225,10 @@ object MarkdownPost {
       }
     }
 
-    if (!hasBreaks) cleanedParts(0)
-    else cleanedParts.mkString(s"\n\n$placeholder\n\n")
+    joinPages(cleanedParts)
   }
 
   private def lookingAt(p: java.util.regex.Pattern, s: String): Boolean =
-    p.matcher(s).lookingAt()
-  private def fullMatchLookingAt(p: java.util.regex.Pattern, s: String): Boolean =
     p.matcher(s).lookingAt()
 
   // first-char guards (round 6): every alternative of PageMarkerPattern
@@ -233,7 +243,7 @@ object MarkdownPost {
   }
   private def imageLead(c: Char): Boolean = c == '<' || c < '!' || c > '~'
   private def maybeImagePlaceholder(s: String): Boolean =
-    s.nonEmpty && imageLead(s.charAt(0)) && fullMatchLookingAt(ImagePlaceholderPattern, s)
+    s.nonEmpty && imageLead(s.charAt(0)) && lookingAt(ImagePlaceholderPattern, s)
   private def headingMatch(s: String): Option[java.util.regex.Matcher] =
     if (s.isEmpty || s.charAt(0) != '#') None else matchAt(HeadingPattern, s)
 
@@ -302,11 +312,9 @@ object MarkdownPost {
     * `\n{2,}` split is a scan for "\n\n" that skips the rest of the run, and
     * blocks are index ranges: only labels and their candidate values are
     * copied out. */
-  def normalizeKpiBlocks(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
+  def normalizeKpiBlocks(markdown: String): String = {
     if (markdown.isBlank) return markdown
-    val hasBreaks = markdown.contains(placeholder)
-    val rawParts: Array[String] =
-      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
+    val rawParts = pagesOf(markdown)
 
     val cleanedParts = rawParts.map { part =>
       // the stripped, non-blank blocks as [starts(k), ends(k))
@@ -347,8 +355,7 @@ object MarkdownPost {
       out.toString
     }
 
-    if (!hasBreaks) cleanedParts(0)
-    else cleanedParts.mkString(s"\n\n$placeholder\n\n")
+    joinPages(cleanedParts)
   }
 
   /** export_utils.py:263-279 */
@@ -369,11 +376,9 @@ object MarkdownPost {
   /** export_utils.py:282-319 — a line is dropped only if isAxisLikeLine
     * holds, which needs at most 40 chars and a digit; other lines are kept
     * without being copied out. */
-  def removeAxisLikeLines(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
+  def removeAxisLikeLines(markdown: String): String = {
     if (markdown.isBlank) return markdown
-    val hasBreaks = markdown.contains(placeholder)
-    val rawParts: Array[String] =
-      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
+    val rawParts = pagesOf(markdown)
 
     val cleanedParts = rawParts.map { part =>
       filterLines(part) { (a, b) =>
@@ -391,8 +396,7 @@ object MarkdownPost {
       }
     }
 
-    if (!hasBreaks) cleanedParts(0)
-    else cleanedParts.mkString(s"\n\n$placeholder\n\n")
+    joinPages(cleanedParts)
   }
 
   private def hasDigit(s: String, from: Int, to: Int): Boolean = {
@@ -407,11 +411,9 @@ object MarkdownPost {
   /** export_utils.py:322-379 — drop page-final headings with no follow-up.
     * Each part's last non-blank line is found by scanning back from its end;
     * a part is copied only when that line is a heading to drop. */
-  def removeOrphanHeadings(markdown: String, placeholder: String = PageBreakPlaceholder): String = {
+  def removeOrphanHeadings(markdown: String): String = {
     if (markdown.isBlank) return markdown
-    val hasBreaks = markdown.contains(placeholder)
-    val rawParts: Array[String] =
-      if (hasBreaks) splitLiteral(markdown, placeholder) else Array(markdown)
+    val rawParts = pagesOf(markdown)
 
     def nextMeaningfulLine(startIndex: Int): Option[String] = {
       var pi = startIndex
@@ -452,14 +454,13 @@ object MarkdownPost {
       }
     }
 
-    if (!hasBreaks) cleanedParts(0)
-    else cleanedParts.mkString(s"\n\n$placeholder\n\n")
+    joinPages(cleanedParts)
   }
 
   /** audit_utils.py:336-343 */
-  def splitMarkdownPages(markdown: String, placeholder: String = PageBreakPlaceholder): List[String] = {
-    if (!markdown.contains(placeholder)) return List(markdown)
-    splitLiteral(markdown, placeholder).toList
+  def splitMarkdownPages(markdown: String): List[String] = {
+    if (!markdown.contains(PageBreakPlaceholder)) return List(markdown)
+    splitLiteral(markdown, PageBreakPlaceholder).toList
       .map(_.strip()).filter(_.nonEmpty)
   }
 

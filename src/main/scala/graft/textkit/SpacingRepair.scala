@@ -29,8 +29,20 @@ object SpacingRepair {
   private val Vowels = "aeiouAEIOUăâîĂÂÎ".toSet
   private val WordToken = re("\\w+")
 
-  def medianOr(values: Seq[Double], default: Double = 1.0): Double =
-    if (values.isEmpty) default else median(values)
+  /** The reconstruction's fixed ratios, the reference's defaults
+    * (pymupdf_spacing_fix.py:138-208): a glyph starts a new line when its
+    * y-center is more than LineRatio median glyph heights off the line's; a
+    * gap is a word break past GapRatio median char widths when the 2-means
+    * finds no split; a space glyph counts when at least SpaceWidthRatio
+    * median char widths wide. */
+  private val LineRatio = 0.6
+  private val GapRatio = 0.35
+  private val SpaceWidthRatio = 0.6
+
+  /** The median, or 1.0 for no values: the reference's median default,
+    * ahead of the 2-means in pymupdf_spacing_fix.py. */
+  def medianOr(values: Seq[Double]): Double =
+    if (values.isEmpty) 1.0 else median(values)
 
   /** pymupdf_spacing_fix.py:49-75 — Lloyd's k=2 over gap widths. */
   def gapThreshold(gaps: List[Double], medianCharWidth: Double, fallbackRatio: Double): Double = {
@@ -58,10 +70,10 @@ object SpacingRepair {
   /** Cluster glyphs into visual lines by y-center tolerance
     * (pymupdf_spacing_fix.py:149-158). Returns lines in reading order, each
     * with its glyphs sorted by x. */
-  def clusterLines(charsIn: Seq[Glyph], lineRatio: Double = 0.6): Seq[Seq[Glyph]] = {
+  def clusterLines(charsIn: Seq[Glyph]): Seq[Seq[Glyph]] = {
     if (charsIn.isEmpty) return Seq.empty
     val heights = charsIn.map(_.height)
-    val lineTol = medianOr(heights) * lineRatio
+    val lineTol = medianOr(heights) * LineRatio
     // stable sort by (yCenter, x0), mirroring Python list.sort on tuples
     val chars = charsIn.sortBy(g => (g.yCenter, g.x0))
     final class Line(val y: Double) {
@@ -79,15 +91,14 @@ object SpacingRepair {
   /** Assemble one visual line: 2-means gap threshold decides word breaks;
     * explicit space glyphs count when wide enough
     * (pymupdf_spacing_fix.py:161-206). */
-  def assembleLine(items: Seq[Glyph], gapRatio: Double = 0.35,
-                   spaceWidthRatio: Double = 0.6): String = {
+  def assembleLine(items: Seq[Glyph]): String = {
     val nonSpaceWidths = items.filter(g => !isSpaceStr(g.c)).map(_.width)
     val medianCharWidth = medianOr(nonSpaceWidths)
     val gaps = (1 until items.length).toList
       .map(i => items(i).x0 - items(i - 1).x1)
       .filter(_ >= 0)
-    val threshold = gapThreshold(gaps, medianCharWidth, gapRatio)
-    emitLine(items, medianCharWidth, threshold, spaceWidthRatio)
+    val threshold = gapThreshold(gaps, medianCharWidth, GapRatio)
+    emitLine(items, medianCharWidth, threshold)
   }
 
   /** Direct-path line assembly (PdfLayout, no-docling PDF read): identical
@@ -100,20 +111,19 @@ object SpacingRepair {
     * two-column prose). A positive floor guards the all-overlap degenerate
     * case (combining diacritics at one x would otherwise push the midpoint
     * below the letter gaps and space every letter). */
-  def assembleLineDirect(items: Seq[Glyph], gapRatio: Double = 0.35,
-                         spaceWidthRatio: Double = 0.6): String = {
+  def assembleLineDirect(items: Seq[Glyph]): String = {
     val nonSpaceWidths = items.filter(g => !isSpaceStr(g.c)).map(_.width)
     val medianCharWidth = medianOr(nonSpaceWidths)
     val gaps = (1 until items.length).toList
       .map(i => items(i).x0 - items(i - 1).x1)
-    val t0 = gapThreshold(gaps, medianCharWidth, gapRatio)
+    val t0 = gapThreshold(gaps, medianCharWidth, GapRatio)
     val threshold =
-      if (t0 <= medianCharWidth * 0.1) medianCharWidth * gapRatio else t0
-    emitLine(items, medianCharWidth, threshold, spaceWidthRatio)
+      if (t0 <= medianCharWidth * 0.1) medianCharWidth * GapRatio else t0
+    emitLine(items, medianCharWidth, threshold)
   }
 
   private def emitLine(items: Seq[Glyph], medianCharWidth: Double,
-                       threshold: Double, spaceWidthRatio: Double): String = {
+                       threshold: Double): String = {
     val out = new StringBuilder
     var prev: Option[Glyph] = None
     var pendingSpace = false
@@ -123,13 +133,13 @@ object SpacingRepair {
         pendingSpace = true
         pendingSpaceWidth = math.max(pendingSpaceWidth, g.width)
       } else if (prev.isEmpty) {
-        if (pendingSpace && pendingSpaceWidth >= medianCharWidth * spaceWidthRatio) out += ' '
+        if (pendingSpace && pendingSpaceWidth >= medianCharWidth * SpaceWidthRatio) out += ' '
         pendingSpace = false; pendingSpaceWidth = 0.0
         out ++= g.c
         prev = Some(g)
       } else {
         if (pendingSpace) {
-          if (pendingSpaceWidth >= medianCharWidth * spaceWidthRatio) out += ' '
+          if (pendingSpaceWidth >= medianCharWidth * SpaceWidthRatio) out += ' '
           pendingSpace = false; pendingSpaceWidth = 0.0
         } else {
           val gap = g.x0 - prev.get.x1
@@ -143,11 +153,10 @@ object SpacingRepair {
   }
 
   /** pymupdf_spacing_fix.py:138-208 — cluster glyphs into lines, re-space. */
-  def reconstructFromChars(charsIn: Seq[Glyph], gapRatio: Double = 0.35,
-                           lineRatio: Double = 0.6, spaceWidthRatio: Double = 0.6): String = {
+  def reconstructFromChars(charsIn: Seq[Glyph]): String = {
     if (charsIn.isEmpty) return ""
-    clusterLines(charsIn, lineRatio)
-      .map(items => assembleLine(items, gapRatio, spaceWidthRatio))
+    clusterLines(charsIn)
+      .map(assembleLine)
       .filter(_.nonEmpty)
       .mkString(" ").strip()
   }

@@ -15,7 +15,9 @@ class LineageSpec extends AnyFunSuite with graft.TempDirs {
     val input = """url,html; from "C:\xdata\new" """ + "tab\tend"
     val stats = Seq(PartitionStat(3, 2, 10, 5))
     assert(Lineage.latest(dir).isEmpty)
-    Lineage.commit(dir, 4, stats, input)
+    val first = Lineage.nextSnapshotId(Lineage.latest(dir))
+    assert(first == 1)
+    Lineage.commit(dir, Manifest(first, 4, input, stats))
     // any JSON reader sees the same text, not only this codec
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(manifestFile(dir, 1).toFile)
@@ -56,7 +58,9 @@ class LineageSpec extends AnyFunSuite with graft.TempDirs {
     assert(Lineage.latest(dir).contains(Manifest(2, 8,
       "url,html,lang; observed: docs=4 changed_cells=0 removed_items=1", stats)))
     // the next commit numbers past them
-    assert(Lineage.commit(dir, 8, stats, "next") == "3")
+    val next = Lineage.nextSnapshotId(Lineage.latest(dir))
+    assert(next == 3)
+    Lineage.commit(dir, Manifest(next, 8, "next", stats))
     assert(Lineage.snapshots(dir).map(_._1) == Seq(1L, 2L, 3L))
   }
 }

@@ -4,17 +4,20 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.WarcSource
 
 /** WARC (ISO 28500) source: record framing, HTTP payload split, gzip
-  * members, hostile truncation. */
+  * members, hostile truncation and lengths, parity with [[WarcOracle]]. */
 class WarcSourceSpec extends AnyFunSuite with graft.TempDirs {
   private def rec(url: String, html: String, tsMs: Long = 1700000000000L) =
     (url, new java.sql.Timestamp(tsMs), html.getBytes("UTF-8"))
+
+  private def parse(bytes: Array[Byte]): Seq[WarcSource.WarcRecord] =
+    WarcSource.parseRecordsStream(new java.io.ByteArrayInputStream(bytes)).toSeq
 
   test("plain round trip: framing, HTTP split, status/date/uri") {
     val bytes = WarcSource.writeWarc(Seq(
       rec("https://a.example/1", "<html><body>unu</body></html>"),
       rec("https://a.example/2", "<html><body>doi</body></html>", 1700000060000L)),
       gzip = false)
-    val rs = WarcSource.parseRecords(bytes)
+    val rs = parse(bytes)
     assert(rs.length == 2)
     assert(rs.map(_.targetUri) == Seq("https://a.example/1", "https://a.example/2"))
     assert(rs.forall(_.warcType == "response"))
@@ -27,14 +30,14 @@ class WarcSourceSpec extends AnyFunSuite with graft.TempDirs {
     val bytes = WarcSource.writeWarc(Seq(rec("https://g.example/x", "<p>gz</p>")),
       gzip = true)
     assert((bytes(0) & 0xFF) == 0x1F && (bytes(1) & 0xFF) == 0x8B)
-    val rs = WarcSource.parseRecords(bytes)
+    val rs = parse(bytes)
     assert(rs.length == 1 && new String(rs.head.body, "UTF-8") == "<p>gz</p>")
   }
 
   test("a body containing 'WARC/1.0' does not inject a phantom record") {
     val tricky = "<html>WARC/1.0\r\nWARC-Type: response\r\n\r\n</html>"
     val bytes = WarcSource.writeWarc(Seq(rec("https://t.example/x", tricky)), gzip = false)
-    val rs = WarcSource.parseRecords(bytes)
+    val rs = parse(bytes)
     assert(rs.length == 1 && new String(rs.head.body, "UTF-8") == tricky)
   }
 
@@ -43,20 +46,18 @@ class WarcSourceSpec extends AnyFunSuite with graft.TempDirs {
       rec("https://a.example/1", "<p>" + ("x" * 200) + "</p>"),
       rec("https://a.example/2", "<p>two</p>")), gzip = false)
     for (cut <- 0 to bytes.length by 7) {
-      val rs = WarcSource.parseRecords(bytes.take(cut))
+      val rs = parse(bytes.take(cut))
       assert(rs.length <= 2)
     }
     // corrupt gzip header: degrades (falls back to raw scan, finds nothing)
     val junk = Array[Byte](0x1F.toByte, 0x8B.toByte, 9, 9, 9)
-    assert(WarcSource.parseRecords(junk).isEmpty)
+    assert(parse(junk).isEmpty)
   }
 
   test("streaming scanner matches the whole-buffer parser record-for-record") {
-    def stream(bytes: Array[Byte]) = WarcSource.parseRecordsStream(
-      new java.io.ByteArrayInputStream(bytes)).toSeq
     def same(bytes: Array[Byte]): Unit = {
-      val a = WarcSource.parseRecords(bytes)
-      val b = stream(bytes)
+      val a = WarcOracle.parseRecords(bytes)
+      val b = parse(bytes)
       assert(a.length == b.length)
       for ((x, y) <- a.zip(b)) {
         assert(x.warcType == y.warcType && x.targetUri == y.targetUri &&
@@ -83,6 +84,27 @@ class WarcSourceSpec extends AnyFunSuite with graft.TempDirs {
     assert(it.hasNext && it.next().targetUri == "https://s.example/0")
   }
 
+  test("a Content-Length past the end of the stream costs the bytes present, not the claim") {
+    // a 40-byte record that claims a ~2 GiB payload: sized from the header,
+    // the payload buffer alone would be 2 GiB
+    val hostile = ("WARC/1.0\r\nContent-Length: " + (Int.MaxValue - 1) + "\r\n\r\n")
+      .getBytes("ISO-8859-1")
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    assert(parse(hostile).isEmpty) // loads the classes the parse uses
+    val before = mx.getCurrentThreadAllocatedBytes
+    val rs = parse(hostile)
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(rs.isEmpty)
+    assert(allocated < (1L << 20), s"$allocated bytes allocated")
+    // the same claim ahead of a real payload still yields the record after
+    // a growing read: a short tail degrades, an exact one parses
+    val body = "x" * 200000
+    val whole = WarcSource.writeWarc(Seq(rec("https://big.example/", body)), gzip = false)
+    assert(parse(whole).map(r => new String(r.body, "UTF-8")) == Seq(body))
+    assert(parse(whole.dropRight(5)).isEmpty)
+  }
+
   test("non-response and non-200 records are filtered by the reader contract") {
     // hand-build a warcinfo record + a 404 response
     val warcinfo = "WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Type: application/warc-fields\r\nContent-Length: 10\r\n\r\nrobots: ok\r\n\r\n"
@@ -90,7 +112,7 @@ class WarcSourceSpec extends AnyFunSuite with graft.TempDirs {
       val http = "HTTP/1.1 404 Not Found\r\nContent-Type: text/html\r\nContent-Length: 4\r\n\r\ngone"
       s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://x/404\r\nWARC-Date: 2025-01-01T00:00:00Z\r\nContent-Type: application/http;msgtype=response\r\nContent-Length: ${http.length}\r\n\r\n$http\r\n\r\n"
     }
-    val rs = WarcSource.parseRecords((warcinfo + notFound).getBytes("ISO-8859-1"))
+    val rs = parse((warcinfo + notFound).getBytes("ISO-8859-1"))
     assert(rs.length == 2)
     assert(rs.head.warcType == "warcinfo" && rs.head.httpStatus == 0)
     assert(rs(1).httpStatus == 404) // readWarc's filter drops both
