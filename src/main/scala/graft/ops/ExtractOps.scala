@@ -172,10 +172,15 @@ object ExtractOps {
     * (over the extracted row, `src_text` and the extra columns) and then
     * `covered`, ordered by url. `pages` is cached for the two reads and
     * released once the result is materialized. Shared by q30, q43, q45,
-    * q55 and q59. */
-  private def extractCovered(s: SparkSession, pages: DataFrame, numBuckets: Int = 16)
-                            (cols: Column*): DataFrame = {
+    * q55 and q59.
+    *
+    * Scale-adaptive parse parallelism: 16 buckets would cap the parse stage
+    * at 16 tasks on a 32-core session, so the bucket count is the larger of
+    * 16 and the session's default parallelism. The bucket column is not in
+    * the output, so the result does not depend on the count. */
+  private def extractCovered(s: SparkSession, pages: DataFrame)(cols: Column*): DataFrame = {
     val cached = pages.cache()
+    val numBuckets = math.max(16, s.sparkContext.defaultParallelism)
     val out = Pipeline.extract(s, cached, numBuckets).toDF()
       .join(cached.drop("html", "lang").withColumnRenamed("text", "src_text"), "url")
       .select(cols :+ coveredUdf(col("markdown"), col("src_text")).as("covered"): _*)
@@ -194,11 +199,7 @@ object ExtractOps {
     * `covered` invariant re-audits every output against its source text. */
   def extractDocuments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // scale-adaptive parse parallelism: 16 buckets would cap the parse stage
-    // at 16 tasks on a 32-core session; the bucket column is dropped from
-    // the output, so the result is bucket-count-independent
-    extractCovered(s, htmlPages(s, dir),
-        numBuckets = math.max(16, s.sparkContext.defaultParallelism))(
+    extractCovered(s, htmlPages(s, dir))(
       $"url", $"page_count", $"item_count", $"table_count",
       length($"src_text").as("src_chars"))
   }
@@ -355,12 +356,14 @@ object ExtractOps {
       .orderBy($"cell_id")
   }
 
+  private val WorstPagesPerDoc = 5 // q36's pages per document, as in the oracle SQL
+
   /** Worst-pages top-k over driver documents: pages of 12 words + 3 unique
     * sentinels; sentinels are dropped from the RENDERED side on damaged
     * pages ((doc_id + page) % 3 == 0), so per-page token coverage is exactly
     * (w_p + kept) / (w_p + 3) — closed form. Exercises the renderer, the
     * positional markdown page zip, and the audit window rank. */
-  def worstPages(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def worstPages(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val audits = srcDocs(s, dir).select($"doc_id", $"text").as[(Long, String)]
@@ -375,7 +378,7 @@ object ExtractOps {
       }.toDF()
     val w = Window.partitionBy($"url").orderBy($"tokenCoverage".asc, $"pageNo".asc)
     audits.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
+      .filter($"rank" <= WorstPagesPerDoc)
       .select($"url", $"pageNo".as("page_no"),
         round($"tokenCoverage", 6).as("token_coverage"), $"rank")
       .orderBy($"url", $"rank")

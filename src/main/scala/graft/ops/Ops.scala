@@ -33,6 +33,27 @@ object Ops {
   private def documents(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")
   private def embeddings(s: SparkSession, dir: String) = s.read.parquet(s"$dir/embeddings.parquet")
 
+  // ---- battery thresholds: each is the value the oracle SQL
+  // (SparkEntry.oracleSql) hard-codes, unless its comment says otherwise
+  private val K = 5                   // neighbours per query vector: q21, q23, q27, q49
+  private val JaccardThreshold = 0.08 // word-trigram Jaccard floor: q15, q25
+  private val MaxDocFreq = 50         // q25 drops trigrams in more documents than this
+  private val MaxHamming = 3          // simhash pair bound: q20 (16 bits), q29 (64 bits)
+  private val NearDupCosine = 0.35    // q22's cosine floor
+  private val LshPlanes = 6           // q23's sign-LSH hyperplanes
+  private val Salts = 16              // q26's salts: they bound task state, not the result
+  private val EmbeddingDim = 64       // q23's planes and the IVF codebook
+  private val IvfCells = 16           // IVF cells, fixed or trained: q27, q49
+  private val IvfProbes = 2           // nearest cells each IVF query probes
+  private val IvfIters = 5            // q49's Lloyd iterations over a sample of
+  private val IvfSample = 4096        //   this many vectors, all that reach the driver
+  private val MinTokens = 30          // q56's Gopher/C4-class gate: token-count bounds,
+  private val MaxTokens = 5000
+  private val MinWordLen = 3.0        //   mean word length band,
+  private val MaxWordLen = 10.0
+  private val MinTtr = 0.35           //   type-token-ratio floor
+  private val MaxCcRounds = 64        // connectedComponents fails past it; no result depends on it
+
   // ---- relational core ----------------------------------------------------
 
   /** TPC-H Q1-shaped pricing summary. Map-side partial agg; 6-group output. */
@@ -177,18 +198,31 @@ object Ops {
       .agg(min($"doc_id").as("keeper"), count(lit(1)).as("n_copies"))
       .orderBy($"text_hash")
 
-  /** Distinct word-3-gram shingles over any (doc_id, text) relation (shared
-    * by jaccard + fingerprint). */
-  private def ngrams3Of(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 3) // sequence(0, negative) would DESCEND in Spark
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("ng"))
+  /** One row per word trigram of the word array `w` (q15, q25, q51); callers
+    * filter `size(w) >= 3` first, as `sequence(0, negative)` would DESCEND. */
+  private def wordTrigrams: Column = explode(expr(
+    "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"))
+
+  /** Distinct word-3-gram shingles of the documents (q15). */
+  private def ngrams3(s: SparkSession, dir: String): DataFrame =
+    documents(s, dir)
+      .select($"doc_id", split($"text", " ").as("w"))
+      .filter(size($"w") >= 3)
+      .select($"doc_id", wordTrigrams.as("ng"))
       .distinct()
 
-  private def ngrams3(s: SparkSession, dir: String): DataFrame =
-    ngrams3Of(documents(s, dir))
+  /** q15's and q25's tail: (id_a, id_b, jaccard) of the `inter` pairs (id_a,
+    * id_b, n_inter) whose rounded n_inter / (n_a + n_b - n_inter) reaches
+    * `JaccardThreshold`, with the n_* taken from `sizes` (doc_id, n_ng). */
+  private def jaccardPairs(inter: DataFrame, sizes: DataFrame): DataFrame =
+    inter
+      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_ng", "n_a"), "id_a")
+      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_ng", "n_b"), "id_b")
+      .withColumn("jaccard", round($"n_inter".cast("double") /
+        ($"n_a" + $"n_b" - $"n_inter"), 6))
+      .filter($"jaccard" >= JaccardThreshold)
+      .select($"id_a", $"id_b", $"jaccard")
+      .orderBy($"id_a", $"id_b")
 
   /** Plan-audit hook (DumpPlans, ExplainQueries): skip the localCheckpoint
     * so the full physical plan stays visible instead of a Scan ExistingRDD
@@ -208,29 +242,21 @@ object Ops {
 
   /** N-gram Jaccard near-dup pairs (relational set-overlap formulation:
     * shuffle on ngram, never a cross join). */
-  def q15NgramJaccardPairs(s: SparkSession, dir: String, threshold: Double = 0.08): DataFrame = {
+  def q15NgramJaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val ng = ngrams3(s, dir).cache()
     val sizes = ng.groupBy($"doc_id").agg(count(lit(1)).as("n_ng"))
     val inter = ng.as("x").join(ng.as("y"), col("x.ng") === col("y.ng") &&
         col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val out = inter
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_ng", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_ng", "n_b"), "id_b")
-      .withColumn("jaccard", round($"n_inter".cast("double") /
-        ($"n_a" + $"n_b" - $"n_inter"), 6))
-      .filter($"jaccard" >= threshold)
-      .select($"id_a", $"id_b", $"jaccard")
-      .orderBy($"id_a", $"id_b")
-    materializeAndRelease(out, ng)
+    materializeAndRelease(jaccardPairs(inter, sizes), ng)
   }
 
   /** Winnowing-style document fingerprint: min 4-token-shingle hash. */
   def q16Fingerprint(s: SparkSession, dir: String): DataFrame =
     documents(s, dir)
       .select($"doc_id", split($"text", " ").as("w"))
-      .filter(size($"w") >= 4) // mirror the oracle's guard; see ngrams3
+      .filter(size($"w") >= 4) // mirror the oracle's guard; see wordTrigrams
       .select($"doc_id", explode(expr(
         "transform(sequence(0, size(w)-4), i -> concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3]))")).as("sh"))
       .groupBy($"doc_id")
@@ -427,21 +453,20 @@ object Ops {
   def q19Simhash(s: SparkSession, dir: String): DataFrame =
     simhashCore(s, dir).orderBy($"doc_id")
 
-  /** SimHash near-dup pairs by Hamming distance <= maxDist.
+  /** SimHash near-dup pairs by Hamming distance <= `MaxHamming`.
     * Pigeonhole banding instead of an O(n^2) self-join: split the hash into
-    * maxDist+1 disjoint chunks — any pair within Hamming maxDist agrees on at
-    * least one chunk — and equi-join on (chunk index, chunk value), then
+    * MaxHamming+1 disjoint chunks — any pair within that distance agrees on
+    * at least one chunk — and equi-join on (chunk index, chunk value), then
     * verify the exact distance. Identical output to the naive cross join;
     * shuffle is a bucket join, which is the 100 TB shape. */
-  def q20SimhashPairs(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
-    simhashBandedPairs(simhashCore(s, dir), $"simhash", bits = SimhashBits, maxDist = maxDist)
+  def q20SimhashPairs(s: SparkSession, dir: String): DataFrame =
+    simhashBandedPairs(simhashCore(s, dir), $"simhash", bits = SimhashBits)
 
   /** Banded Hamming pair search shared by the 16-bit (q20) and 64-bit (q29)
-    * widths. `bits` must be divisible by maxDist+1 chunks only approximately:
-    * chunk boundaries are ceil-split so all bits are covered. */
-  private[ops] def simhashBandedPairs(sh: DataFrame, hashCol: Column,
-                                      bits: Int, maxDist: Int): DataFrame = {
-    val nChunks = maxDist + 1
+    * widths. `bits` must be divisible by MaxHamming+1 chunks only
+    * approximately: chunk boundaries are ceil-split so all bits are covered. */
+  private def simhashBandedPairs(sh: DataFrame, hashCol: Column, bits: Int): DataFrame = {
+    val nChunks = MaxHamming + 1
     val width = (bits + nChunks - 1) / nChunks
     val mask = (1L << width) - 1
     val chunkCols = (0 until nChunks).map { c =>
@@ -459,7 +484,7 @@ object Ops {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
         bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
-      .filter(col("hamming") <= maxDist)
+      .filter(col("hamming") <= MaxHamming)
       .distinct()
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -477,26 +502,33 @@ object Ops {
   private def nrmCol: Column =
     sqrt(graft.functions.VecMath.dotProduct(col("v"), col("v")))
 
-  /** Brute-force cosine top-k (the correctness baseline for ANN). */
-  def q21CosineTopK(s: SparkSession, dir: String, k: Int = 5, limitIds: Int = 200): DataFrame = {
-    val v = vecsD(s, dir).withColumn("nrm", nrmCol)
-    val queries = v.filter($"vec_id" < limitIds)
-    val pairs = queries.as("x").join(v.as("y"), col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("neighbor_id"),
-        round(dotCol / (col("x.nrm") * col("y.nrm")), 4).as("sim"))
+  /** The ranking tail of every top-k query: over (vec_id, neighbor_id, sim)
+    * candidates, each vec_id's `K` best by sim, neighbor_id breaking ties,
+    * with their 1-based `rank`, ordered by (vec_id, rank). */
+  private def topK(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy($"vec_id").orderBy($"sim".desc, $"neighbor_id".asc)
     pairs.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
+      .filter($"rank" <= K)
       .orderBy($"vec_id", $"rank")
   }
 
+  /** Brute-force cosine top-k of the first `limitIds` vec_ids against all
+    * vectors (the correctness baseline for ANN). */
+  def q21CosineTopK(s: SparkSession, dir: String, limitIds: Int = 200): DataFrame = {
+    val v = vecsD(s, dir).withColumn("nrm", nrmCol)
+    val queries = v.filter($"vec_id" < limitIds)
+    topK(queries.as("x").join(v.as("y"), col("x.vec_id") =!= col("y.vec_id"))
+      .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("neighbor_id"),
+        round(dotCol / (col("x.nrm") * col("y.nrm")), 4).as("sim")))
+  }
+
   /** Near-duplicate embedding pairs above a cosine threshold. */
-  def q22CosineNearDup(s: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
+  def q22CosineNearDup(s: SparkSession, dir: String): DataFrame = {
     val v = vecsD(s, dir).withColumn("nrm", nrmCol)
     v.as("x").join(v.as("y"), col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
         round(dotCol / (col("x.nrm") * col("y.nrm")), 4).as("sim"))
-      .filter($"sim" >= threshold)
+      .filter($"sim" >= NearDupCosine)
       .orderBy($"id_a", $"id_b")
   }
 
@@ -506,16 +538,16 @@ object Ops {
     * Plane components are INTEGER-valued (an LCG over the (plane, dim) index)
     * so the dot product is bit-identical across engines — round 1 used
     * sin(p*64+i), whose libm results are not portable to the oracle. */
-  def q23CosineLshTopK(s: SparkSession, dir: String, planes: Int = 6, k: Int = 5): DataFrame = {
+  def q23CosineLshTopK(s: SparkSession, dir: String): DataFrame = {
     val v = vecsD(s, dir).withColumn("nrm", nrmCol)
     // round 6: the hyperplane components are plan-time constants (the LCG
     // over (plane, dim), every value an exact small integer cast to double),
     // so each plane projection is a literal-vector dot product through the
     // codegen'd VecMath kernel — same left-to-right IEEE fold as the
     // interpreted aggregate(zip_with(...)) it replaces (guide §4)
-    val sigCols = (0 until planes).map { p =>
-      val plane = (0 until 64).map { i =>
-        ((1103515245L * (p * 64 + i + 1) + 12345L) % 1024 - 512).toDouble
+    val sigCols = (0 until LshPlanes).map { p =>
+      val plane = (0 until EmbeddingDim).map { i =>
+        ((1103515245L * (p * EmbeddingDim + i + 1) + 12345L) % 1024 - 512).toDouble
       }
       val dot = graft.functions.VecMath.dotProduct(col("v"), typedLit(plane))
       when(dot >= 0, lit(1L << p)).otherwise(lit(0L))
@@ -526,14 +558,10 @@ object Ops {
     // the cheap map; measured faster than cache+checkpoint both ways
     // (OPTIMIZATION_r06.md §6a2)
     val bucketed = v.withColumn("bucket", sigCols)
-    val pairs = bucketed.as("x").join(bucketed.as("y"),
+    topK(bucketed.as("x").join(bucketed.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("neighbor_id"),
-        round(dotCol / (col("x.nrm") * col("y.nrm")), 4).as("sim"))
-    val w = Window.partitionBy($"vec_id").orderBy($"sim".desc, $"neighbor_id".asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .orderBy($"vec_id", $"rank")
+        round(dotCol / (col("x.nrm") * col("y.nrm")), 4).as("sim")))
   }
 
   /** Embedding label stats (centroid norms per label). */
@@ -549,19 +577,17 @@ object Ops {
   /** Scale-path near-dup: drop non-discriminative shingles (doc-freq > cap)
     * before the pair join — the standard bound on join blowup for shared-
     * vocabulary corpora. Same relational shape as q15, skew-pruned. */
-  def q25NgramJaccardPruned(s: SparkSession, dir: String, threshold: Double = 0.08,
-                            maxDocFreq: Int = 50): DataFrame = {
+  def q25NgramJaccardPruned(s: SparkSession, dir: String): DataFrame = {
     // raw trigram stream — NO .distinct(): the bounded aggregate below
     // dedups doc ids per group as part of its single exchange
     val ng = documents(s, dir)
       .select($"doc_id", split($"text", " ").as("w"))
       .filter(size($"w") >= 3)
-      .select($"doc_id", explode(expr(
-        "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("ng"))
+      .select($"doc_id", wordTrigrams.as("ng"))
     // Round-5 restructure (verdict task 4): ONE full-relation exchange.
     // A bounded-distinct aggregate collapses the former distinct + df +
     // prune-join + totals passes: grouping the raw trigram stream by ng
-    // with per-group state capped at `maxDocFreq` DISTINCT doc ids (plus an
+    // with per-group state capped at MaxDocFreq DISTINCT doc ids (plus an
     // overflow bit for hot trigrams) yields, in a single shuffle with
     // map-side partial aggregation, both the df <= cap decision AND the
     // complete id list of every kept group. Everything downstream (sizes,
@@ -570,7 +596,7 @@ object Ops {
     // vocabulary — still count toward sizes (the oracle's n = the doc's
     // distinct trigrams with df <= cap) but are excluded from pair
     // expansion, where they can never intersect.
-    val bd = udaf(new BoundedDistinctIds(maxDocFreq))
+    val bd = udaf(new BoundedDistinctIds(MaxDocFreq))
     val grouped = ng.groupBy($"ng").agg(bd($"doc_id").as("bs"))
     // cache the KEPT groups only: id lists, no ng strings, no hot groups —
     // the shared intermediate for sizes + pair expansion is vocabulary-
@@ -593,23 +619,15 @@ object Ops {
           "j -> named_struct('id_a', ids[i], 'id_b', ids[j]))))")).as("p"))
       .groupBy($"p.id_a".as("id_a"), $"p.id_b".as("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val out = inter
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_ng", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_ng", "n_b"), "id_b")
-      .withColumn("jaccard", round($"n_inter".cast("double") /
-        ($"n_a" + $"n_b" - $"n_inter"), 6))
-      .filter($"jaccard" >= threshold)
-      .select($"id_a", $"id_b", $"jaccard")
-      .orderBy($"id_a", $"id_b")
-    materializeAndRelease(out, keptGroups)
+    materializeAndRelease(jaccardPairs(inter, sizes), keptGroups)
   }
 
   /** Skew pattern: two-phase salted aggregation over a hot grouping key.
     * Phase 1 aggregates (key, salt) partials; phase 2 merges per key —
     * identical result to a direct groupBy, bounded per-task state. */
-  def q26SaltedUserStats(s: SparkSession, dir: String, salts: Int = 16): DataFrame =
+  def q26SaltedUserStats(s: SparkSession, dir: String): DataFrame =
     events(s, dir)
-      .withColumn("salt", pmod(xxhash64($"event_id"), lit(salts)))
+      .withColumn("salt", pmod(xxhash64($"event_id"), lit(Salts)))
       .groupBy($"user_id", $"salt")
       .agg(count(lit(1)).as("pn"), sum($"value").as("psum"))
       .groupBy($"user_id")
@@ -619,28 +637,28 @@ object Ops {
   /** Deterministic IVF codebook: cell c, dim d -> an LCG-derived rational in
     * [-0.5, 0.5] with a power-of-two denominator, so every component is an
     * exactly-representable double on any engine. */
-  def ivfCodebook(cells: Int = 16, dim: Int = 64): Seq[Seq[Double]] =
-    (0 until cells).map { c =>
-      (0 until dim).map { d =>
-        ((2654435761L * (c * dim + d) + 40503L) % 257 - 128).toDouble / 256.0
+  def ivfCodebook: Seq[Seq[Double]] =
+    (0 until IvfCells).map { c =>
+      (0 until EmbeddingDim).map { d =>
+        ((2654435761L * (c * EmbeddingDim + d) + 40503L) % 257 - 128).toDouble / 256.0
       }
     }
 
   /** IVF ANN scale path: vectors are assigned to their nearest codebook cell
     * (16 cells, broadcast as a literal — nothing is ever collected to the
-    * driver), top-k search probes only the `nprobe` nearest cells. The probe
-    * join is a cell-key equi-join, never a cross join. The codebook here is a
-    * fixed deterministic one (portable to the oracle); `trainIvfCentroids`
-    * below is the production k-means refinement over a BOUNDED sample. */
-  def q27CosineIvfTopK(s: SparkSession, dir: String, k: Int = 5,
-                       cells: Int = 16, nprobe: Int = 2): DataFrame =
-    ivfTopK(vecsD(s, dir), ivfCodebook(cells), k, nprobe)
+    * driver), top-k search probes only the `IvfProbes` nearest cells. The
+    * probe join is a cell-key equi-join, never a cross join. The codebook
+    * here is a fixed deterministic one (portable to the oracle);
+    * `trainIvfCentroids` below is the production k-means refinement over a
+    * BOUNDED sample. */
+  def q27CosineIvfTopK(s: SparkSession, dir: String): DataFrame =
+    ivfTopK(vecsD(s, dir), ivfCodebook)
 
   /** IVF search given any codebook (fixed or k-means-trained). */
-  def ivfTopK(vecs: DataFrame, codebook: Seq[Seq[Double]], k: Int, nprobe: Int): DataFrame = {
+  def ivfTopK(vecs: DataFrame, codebook: Seq[Seq[Double]]): DataFrame = {
     val v = vecs.withColumn("nrm", nrmCol)
     val nCells = codebook.length
-    val nProbe = math.min(nprobe, nCells)
+    val nProbe = math.min(IvfProbes, nCells)
     // the codebook is a LITERAL (broadcast-free): nearest-cell ranking is
     // row-local — per-cell codegen'd SqDist kernels (graft.functions.VecMath)
     // sorted by (dist, cell) struct order inside one projection. No cross
@@ -684,33 +702,28 @@ object Ops {
     // (a separate probes->qside join would just re-shuffle the same bytes)
     val probes = ranked.select(col("vec_id").as("q_id"), col("v").as("qv"),
       col("nrm").as("qnrm"), explode_outer(slice(col("cells"), 1, nProbe)).as("cell"))
-    val pairs = probes.join(assigned, "cell")
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        round(graft.functions.VecMath.dotProduct(col("qv"), col("v")) /
-          (col("qnrm") * col("nrm")), 4).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
     // no dedup needed: each candidate lives in exactly one cell, so a query's
-    // nprobe distinct probe cells can each contribute it at most once total
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("neighbor_id"), col("sim"), col("rank"))
-      .orderBy(col("vec_id"), col("rank"))
+    // distinct probe cells can each contribute it at most once total
+    topK(probes.join(assigned, "cell")
+      .filter(col("q_id") =!= col("vec_id"))
+      .select(col("q_id").as("vec_id"), col("vec_id").as("neighbor_id"),
+        round(graft.functions.VecMath.dotProduct(col("qv"), col("v")) /
+          (col("qnrm") * col("nrm")), 4).as("sim")))
   }
 
   /** Production IVF training: deterministic k-means (seeded init, fixed Lloyd
-    * iterations) over a BOUNDED sample — only `sampleN` vectors ever reach the
-    * driver, regardless of table size; centroids are then broadcast. */
-  def trainIvfCentroids(vecs: DataFrame, cells: Int = 16, iters: Int = 5,
-                        sampleN: Int = 4096): Seq[Seq[Double]] = {
+    * iterations) over a BOUNDED sample — only `IvfSample` vectors ever
+    * reach the driver, regardless of table size; centroids are then
+    * broadcast. */
+  def trainIvfCentroids(vecs: DataFrame): Seq[Seq[Double]] = {
     import vecs.sparkSession.implicits._
     val sample = vecs.select(col("vec_id"), col("v")).orderBy(col("vec_id"))
-      .limit(sampleN).as[(Long, Seq[Double])].collect().map(_._2.toArray)
-    if (sample.isEmpty) return ivfCodebook(cells)
+      .limit(IvfSample).as[(Long, Seq[Double])].collect().map(_._2.toArray)
+    if (sample.isEmpty) return ivfCodebook
     val dim = sample.head.length
-    val nCells = math.min(cells, sample.length)
+    val nCells = math.min(IvfCells, sample.length)
     var centroids = sample.take(nCells).map(_.clone())
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until IvfIters) {
       val sums = Array.fill(nCells)(new Array[Double](dim))
       val counts = new Array[Long](nCells)
       for (v <- sample) {
@@ -767,8 +780,7 @@ object Ops {
       .filter(size($"w") >= 3)
       .select($"doc_id",
         size($"w").as("nw"), size(array_distinct($"w")).as("dw"),
-        explode(expr(
-          "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("ng"))
+        wordTrigrams.as("ng"))
       .groupBy($"doc_id", $"ng")
       .agg(count(lit(1)).as("c"), first($"nw").as("nw"), first($"dw").as("dw"))
       .groupBy($"doc_id")
@@ -992,10 +1004,7 @@ object Ops {
     * (mean word length = (chars - (n-1)) / n over single-space text, like
     * q10) so the DuckDB oracle reproduces the doubles bit-exactly. Entirely
     * map-side: the filter costs one projection at any corpus size. */
-  def q56QualityFilter(s: SparkSession, dir: String,
-                       minTokens: Int = 30, maxTokens: Int = 5000,
-                       minWordLen: Double = 3.0, maxWordLen: Double = 10.0,
-                       minTtr: Double = 0.35): DataFrame =
+  def q56QualityFilter(s: SparkSession, dir: String): DataFrame =
     documents(s, dir)
       .select($"doc_id", split($"text", " ").as("w"), length($"text").as("nc"))
       .select($"doc_id", size($"w").as("n_tokens"),
@@ -1003,10 +1012,10 @@ object Ops {
       .withColumn("mwl", ($"nc" - ($"n_tokens" - lit(1))).cast("double") / $"n_tokens")
       .withColumn("ttr_raw", $"n_distinct".cast("double") / $"n_tokens")
       .withColumn("drop_reason",
-        when($"n_tokens" < minTokens, "too_short")
-          .when($"n_tokens" > maxTokens, "too_long")
-          .when($"mwl" < minWordLen || $"mwl" > maxWordLen, "word_len")
-          .when($"ttr_raw" < minTtr, "repetitive")
+        when($"n_tokens" < MinTokens, "too_short")
+          .when($"n_tokens" > MaxTokens, "too_long")
+          .when($"mwl" < MinWordLen || $"mwl" > MaxWordLen, "word_len")
+          .when($"ttr_raw" < MinTtr, "repetitive")
           .otherwise(""))
       .select($"doc_id", $"n_tokens",
         round($"mwl", 6).as("mean_word_len"),
@@ -1015,23 +1024,22 @@ object Ops {
       .orderBy($"doc_id")
 
   /** Trained-IVF ANN (q49): the PRODUCTION path end-to-end — a k-means
-    * codebook refined from the data (deterministic: init = first `cells`
+    * codebook refined from the data (deterministic: init = first `IvfCells`
     * sample vectors by vec_id, fixed Lloyd iterations over a bounded
     * vec_id-ordered sample) feeding the same broadcast-codebook cell
     * equi-join search as q27. Every arithmetic step is an IEEE-ordered
     * fold, so the DuckDB oracle reproduces the centroids bit-exactly with
     * a recursive CTE running the same iterations in the same order. */
-  def q49IvfTrainedTopK(s: SparkSession, dir: String, k: Int = 5,
-                        nprobe: Int = 2): DataFrame = {
+  def q49IvfTrainedTopK(s: SparkSession, dir: String): DataFrame = {
     val vecs = vecsD(s, dir)
-    ivfTopK(vecs, trainIvfCentroids(vecs), k, nprobe)
+    ivfTopK(vecs, trainIvfCentroids(vecs))
   }
 
   /** 64-bit simhash near-dup pairs via pigeonhole banding (4 x 16-bit
     * chunks): the production-width companion of q20. */
-  def q29Simhash64Pairs(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
+  def q29Simhash64Pairs(s: SparkSession, dir: String): DataFrame =
     simhashBandedPairs(simhash64Core(s, dir).withColumnRenamed("simhash64", "simhash"),
-      col("simhash"), bits = 64, maxDist = maxDist)
+      col("simhash"), bits = 64)
 
   /** 64-bit SimHash (the production width; q19's 16-bit variant exists for
     * oracle portability). Four derived hash views contribute 16 genuinely
@@ -1057,9 +1065,9 @@ object Ops {
     * while the star-edge forest holds at most 10^6 edges (every scale
     * factor here), pointer-doubling min-label propagation above that —
     * O(log diameter) rounds, each round several Spark jobs under AQE. */
-  def q47NeardupComponents(s: SparkSession, dir: String, maxIters: Int = 64): DataFrame = {
+  def q47NeardupComponents(s: SparkSession, dir: String): DataFrame = {
     val nodes = documents(s, dir).select(col("doc_id"))
-    connectedComponents(nodes, lshStarEdgesOf(documents(s, dir)), maxIters)._1
+    connectedComponents(nodes, lshStarEdgesOf(documents(s, dir)))._1
       .orderBy(col("doc_id"))
   }
 
@@ -1103,7 +1111,6 @@ object Ops {
   private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0)
 
   def connectedComponents(nodes: DataFrame, edgesIn: DataFrame,
-                          maxIters: Int = 64,
                           contractAbove: Long = 1000000L,
                           localBelow: Long = 1000000L): (DataFrame, Int) = {
     import edgesIn.sparkSession.implicits._
@@ -1149,7 +1156,7 @@ object Ops {
     var edgeCount = forestEdges
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < MaxCcRounds) {
       // [1] neighbor min; the node's own label rides the union as `own` so
       // the old label survives the agg without a second join
       val step1 = curEdges.join(comp, curEdges("src") === comp("doc_id"))
@@ -1194,7 +1201,7 @@ object Ops {
         }
       }
     }
-    require(converged, s"component propagation did not converge in $maxIters rounds")
+    require(converged, s"component propagation did not converge in $MaxCcRounds rounds")
     edges.unpersist() // comp is checkpoint-materialized; safe to release
     (comp, iter)
   }

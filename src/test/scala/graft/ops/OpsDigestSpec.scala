@@ -13,7 +13,7 @@ import graft.extract.SparkTestSession
   * a query's output does. */
 class OpsDigestSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = new PlanSpec().sf // the sf0.001 tables the other ops specs read
 
   private def digest(df: DataFrame): String = {
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -165,11 +165,11 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
     import spark.implicits._
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) AS v")
-    val trained = Ops.trainIvfCentroids(vecs, cells = 16, iters = 5, sampleN = 4096)
+    val trained = Ops.trainIvfCentroids(vecs)
     assert(trained.length == 16 && trained.head.length == 64)
-    val ivf = Ops.ivfTopK(vecs, trained, k = 5, nprobe = 2)
+    val ivf = Ops.ivfTopK(vecs, trained)
       .as[(Long, Long, Double, Int)].collect()
-    val ivf2 = Ops.ivfTopK(vecs, trained, k = 5, nprobe = 2)
+    val ivf2 = Ops.ivfTopK(vecs, trained)
       .as[(Long, Long, Double, Int)].collect()
     assert(ivf.sameElements(ivf2), "nondeterministic trained ivf")
     val bruteTop = Ops.q21CosineTopK(spark, sf, limitIds = 2000).as[(Long, Long, Double, Int)]

@@ -119,7 +119,7 @@ class PlanSpec extends AnyFunSuite {
     val df = Ops.q27CosineIvfTopK(spark, sf)
     df.collect() // finalize the adaptive plan (the result is a checkpoint;
     // assert on the ranked sub-plan instead: build it the way ivfTopK does)
-    val codebook = Ops.ivfCodebook(16)
+    val codebook = Ops.ivfCodebook
     import spark.implicits._
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))

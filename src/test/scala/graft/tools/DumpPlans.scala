@@ -20,7 +20,7 @@ object DumpPlans {
 
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of the headline operators\n\n"
-    sb ++= "Generated by `sbt \"runMain graft.tools.DumpPlans\"`. What to look\n"
+    sb ++= "Generated by `sbt \"Test/runMain graft.tools.DumpPlans\"`. What to look\n"
     sb ++= "for: `PushedFilters`/`ReadSchema` at the scans (pushdown + column\n"
     sb ++= "pruning), `BroadcastHashJoin` on dimension joins, a single\n"
     sb ++= "`Exchange` in the extraction pipeline, and `WholeStageCodegen`\n"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for a set of declared queries to
   * plans/r06/<query>_<tag>.txt — the before/after evidence files for the
-  * optimization round. Usage: runMain graft.tools.ExplainQueries <tag> [q ...]
+  * optimization round. Usage: Test/runMain graft.tools.ExplainQueries <tag> [q ...]
   */
 object ExplainQueries {
   val Default: Seq[String] = Seq(

@@ -5,7 +5,7 @@ import java.util.Base64
 
 /** Regenerates the committed end-to-end goldens (url, expected markdown,
   * expected extracted text) for the deterministic synthetic corpus.
-  * Run: sbt "runMain graft.tools.GenGoldens [n] [outPath]" and commit the file.
+  * Run: sbt "Test/runMain graft.tools.GenGoldens [n] [outPath]" and commit the file.
   */
 object GenGoldens {
   val DefaultPath = "src/test/resources/goldens_seed42.tsv"

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * the residue GOLDEN_RESIDUE.md classifies (`--repair` first runs the
   * two-channel repair against long_report.pdf, as q44 does). Artifacts come
   * from ReferenceExamples (override: -Dspark.graft.referenceExamples=<dir>).
-  * Usage: runMain graft.tools.GoldenDiff [outPath] [--repair]
+  * Usage: Test/runMain graft.tools.GoldenDiff [outPath] [--repair]
   */
 object GoldenDiff {
   def main(args: Array[String]): Unit = {

@@ -15,7 +15,7 @@ import java.util.concurrent.atomic.AtomicLong
   * (max/median task duration) matters, since a giant document is a row
   * AQE cannot split.
   *
-  * Usage: runMain graft.tools.ScaleRehearsal [docs] [skew]
+  * Usage: Test/runMain graft.tools.ScaleRehearsal [docs] [skew]
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
