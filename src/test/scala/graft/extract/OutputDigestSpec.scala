@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * drifting; these constants were computed once and do not move unless the
   * engine's output does. */
 class OutputDigestSpec extends AnyFunSuite {
-  import OutputDigestSpec.crawlDoc
+  import OutputDigestSpec.{crawlDoc, linesOf, q48Payload}
+
+  private def hex(d: Array[Byte]): String = d.map(b => f"${b & 0xff}%02x").mkString
 
   private def digest(docs: Seq[(String, Array[Byte])]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -21,7 +23,7 @@ class OutputDigestSpec extends AnyFunSuite {
       md.update(row.markdown.getBytes(UTF_8)); md.update(0: Byte)
       md.update(row.text.getBytes(UTF_8)); md.update(0: Byte)
     }
-    md.digest().map(b => f"${b & 0xff}%02x").mkString
+    hex(md.digest())
   }
 
   test("extractOne output digest: 400 SyntheticPages documents, seed 42") {
@@ -34,9 +36,57 @@ class OutputDigestSpec extends AnyFunSuite {
     assert(docs.count(d => new String(d._2, 0, 8, UTF_8).startsWith("%PDF-1.5")) == 12)
     assert(digest(docs) == "ebedb752ff9c1dd0dc048479129a5dea")
   }
+
+  test("synthetic PDF writers: input-bytes digest of every layout") {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def add(bytes: Array[Byte]): Unit = { md.update(bytes); md.update(0: Byte) }
+    // string-escape cases first: parentheses and backslashes in Tj and TJ runs
+    val escapes = Seq(Seq("Venituri (nete) 50%", "cale C:\\date\\(a)"), Seq("ultima pagina)"))
+    val pageSets = escapes +: (0 until 20).map(i => linesOf(SyntheticPdfPages.pdfDoc(7L, i.toLong)._2))
+    for ((pages, k) <- pageSets.zipWithIndex) {
+      add(SyntheticPdf.pdfFor(pages))
+      add(SyntheticPdf.pdfFor(pages, spreadLetterLine = Some((1, k % 2))))
+      add(SyntheticPdf.pdfFor15(pages))
+      for (cipher <- Seq("rc4", "aesv2", "aesv3"))
+        add(SyntheticPdf.pdfForEncrypted(pages, cipher, k.toLong))
+    }
+    // the classic multi-size writer: even documents plain, odd ones Flate
+    for (i <- 0 until 200) add(SyntheticPdfPages.pdfDoc(42L, i.toLong)._1)
+    val got = hex(md.digest())
+    assert(got == "9f9789fd6f5d2939b9653ed16e4df716", s"writers digest $got")
+  }
+
+  test("extractOne output digest: q45 and q48 docling payloads of the sf0.001 driver documents") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val driver = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1).toSeq
+    val q45 = driver.map { case (id, text) =>
+      (s"doc://$id", graft.ops.ExtractOps.doclingJsonFromText(id, text).getBytes(UTF_8)) }
+    val q48 = driver.map { case (id, text) =>
+      (s"doc://$id", q48Payload(id, text).getBytes(UTF_8)) }
+    val got = (digest(q45), digest(q48))
+    assert(got == ("fe27c74dd05c82c638331660998313ac", "faa21a2370613078fc03a4791cb58b66"),
+      s"docling payload digests $got")
+  }
 }
 
 object OutputDigestSpec {
+  /** q48's text channel: one letter-spaced body text item covering page 1,
+    * written as q48 wrote it before it had a helper. */
+  private def q48Payload(id: Long, text: String): String = {
+    val phrase = text.split(" ").take(6).mkString(" ")
+    val spaced = phrase.flatMap(c => if (c == ' ') "  " else c.toString + " ").trim
+    def esc(t: String) = t.replace("\\", "\\\\").replace("\"", "\\\"")
+    s"""{"schema_name":"DoclingDocument","version":"1.8.0","name":"doc$id",
+       |"body":{"self_ref":"#/body","children":[{"$$ref":"#/texts/0"}]},
+       |"texts":[{"self_ref":"#/texts/0","children":[],"content_layer":"body",
+       | "label":"text","prov":[{"page_no":1,"bbox":{"l":0,"t":0,"r":612,"b":792,
+       | "coord_origin":"TOPLEFT"}}],"text":"${esc(spaced)}"}],
+       |"pictures":[],"tables":[],
+       |"pages":{"1":{"page_no":1,"size":{"width":612,"height":792}}}}""".stripMargin
+  }
+
   /** Page lines of a generated document for the PDF 1.5 writer: text items
     * wrapped at 52 characters, one line per table row. */
   private def linesOf(doc: Doc): Seq[Seq[String]] =
