@@ -132,7 +132,3 @@ case class PageAudit(
     dateRecall: Double,
     pdfTextLength: Long,
     mdTextLength: Long)
-
-/** Input row shape per BASELINE.json input_hint. */
-case class PageRow(url: String, warc_ts: java.sql.Timestamp, html: Array[Byte],
-                   text: String, lang: String)

@@ -2,9 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.extract.{HtmlExtract, DocTransforms, MarkdownRender, Pipeline}
+import graft.extract.{HtmlExtract, DocTransforms, MarkdownRender, Pipeline, SyntheticPdf}
+import graft.model.{Bbox, ContentLayer, Doc, DocItem, ItemKind, Label, PageDim, TableCell, TableData}
 import graft.textkit._
-import graft.sources.ReferenceExamples
+import graft.sources.{DoclingJsonExport, ReferenceExamples}
 
 /** Extraction-domain operators exposed as queries. These are the engine's
   * own semantics (HTML parse, transform battery, markdown render, audit,
@@ -128,16 +129,19 @@ object ExtractOps {
     s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"), col("lang"))
 
   /** The pages table (url, html, text, lang) of the driver documents, each
-    * wrapped in HTML by `wrap(doc_id, text, lang)`. */
-  private def htmlPages(s: SparkSession, dir: String,
-                        wrap: (Long, String, String) => String = htmlFromText): DataFrame = {
+    * document's payload written by `payload(doc_id, text, lang)`. */
+  private def payloadPages(s: SparkSession, dir: String)(
+      payload: (Long, String, String) => Array[Byte]): DataFrame = {
     import s.implicits._
     srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", wrap(id, text, lang).getBytes("UTF-8"), text, lang)
-      }
+      .map { case (id, text, lang) => (s"doc://$id", payload(id, text, lang), text, lang) }
       .toDF("url", "html", "text", "lang")
   }
+
+  /** [[payloadPages]] with each document wrapped in HTML by `wrap`. */
+  private def htmlPages(s: SparkSession, dir: String,
+                        wrap: (Long, String, String) => String): DataFrame =
+    payloadPages(s, dir)(wrap(_, _, _).getBytes("UTF-8"))
 
   /** Runs `body` over a fresh `graft-$name` temp directory and deletes the
     * directory afterwards, also when `body` fails; `body` must materialize
@@ -194,12 +198,36 @@ object ExtractOps {
   private def pdfPagesOf(text: String): Seq[Seq[String]] =
     text.split(" ").grouped(8).map(_.mkString(" ")).toSeq.grouped(12).map(_.toSeq).toSeq
 
+  /** The glyphs of `phrase` on one line — 1.0-wide chars, 0.1 kern gaps,
+    * 2.5 word gaps — and the x where the run ends (q33, q38). */
+  private def glyphRun(phrase: String): (Seq[SpacingRepair.Glyph], Double) = {
+    var x = 0.0
+    val glyphs = phrase.flatMap { ch =>
+      if (ch == ' ') { x += 2.5; None }
+      else { val g = SpacingRepair.Glyph(ch.toString, x, 0, x + 1.0, 2.0); x += 1.1; Some(g) }
+    }
+    (glyphs, x)
+  }
+
+  /** `phrase` with a space after every letter and two between words, trimmed:
+    * the letter-spaced damage q38 and q48 repair. */
+  private def letterSpaced(phrase: String): String =
+    phrase.flatMap(c => if (c == ' ') "  " else c.toString + " ").trim
+
+  /** A one-page document holding one table of `cells` (q37, q38). */
+  private def tableDoc(url: String, numRows: Int, numCols: Int, cells: Array[TableCell]): Doc =
+    Doc(url, Array(DocItem(0, ItemKind.Table, Label.Table, ContentLayer.Body, 1, None, "",
+      Some(TableData(numRows, numCols, cells)))), Array(PageDim(1, 0, 800)))
+
+  private def topLeft(l: Double, t: Double, r: Double, b: Double): Option[Bbox] =
+    Some(Bbox(l, t, r, b, Bbox.TopLeft))
+
   /** Flagship: full extraction pipeline over the documents table wrapped in
     * HTML. One shuffle (bucket repartition), parse in mapPartitions; the
     * `covered` invariant re-audits every output against its source text. */
   def extractDocuments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    extractCovered(s, htmlPages(s, dir))(
+    extractCovered(s, htmlPages(s, dir, htmlFromText))(
       $"url", $"page_count", $"item_count", $"table_count",
       length($"src_text").as("src_chars"))
   }
@@ -276,13 +304,7 @@ object ExtractOps {
       .select($"doc_id", $"text").as[(Long, String)]
       .map { case (id, text) =>
         val phrase = text.take(80)
-        // lay out glyphs: 1.0-wide chars, 0.1 kern gaps, 2.5 word gaps
-        var x = 0.0
-        val glyphs = phrase.flatMap { ch =>
-          if (ch == ' ') { x += 2.5; None }
-          else { val g = SpacingRepair.Glyph(ch.toString, x, 0, x + 1.0, 2.0); x += 1.1; Some(g) }
-        }
-        val rebuilt = SpacingRepair.reconstructFromChars(glyphs)
+        val rebuilt = SpacingRepair.reconstructFromChars(glyphRun(phrase)._1)
         (id, phrase.length, rebuilt.length, rebuilt == Py.joinSplit(phrase).strip())
       }
       .toDF("doc_id", "phrase_len", "rebuilt_len", "roundtrip_ok")
@@ -395,16 +417,12 @@ object ExtractOps {
     import s.implicits._
     srcDocs(s, dir).select($"doc_id").as[Long].map { i =>
       val cls = (i % 3).toInt
-      val cell = graft.model.TableCell(1, 2, 0, 1, 1, 1, "RON 71.371",
+      val cell = TableCell(1, 2, 0, 1, 1, 1, "RON 71.371",
         columnHeader = false, rowHeader = false, rowSection = false, fillable = false,
-        bbox = Some(graft.model.Bbox(0, 0, 50, 10, graft.model.Bbox.TopLeft)))
+        bbox = topLeft(0, 0, 50, 10))
       val spacedCell = cell.copy(startCol = 1, endCol = 2, text = "finan c iar " + i,
-        bbox = Some(graft.model.Bbox(60, 0, 110, 10, graft.model.Bbox.TopLeft)))
-      def doc(cells: Array[graft.model.TableCell]) = graft.model.Doc(s"pair://$i", Array(
-        graft.model.DocItem(0, graft.model.ItemKind.Table, graft.model.Label.Table,
-          graft.model.ContentLayer.Body, 1, None, "",
-          Some(graft.model.TableData(2, 2, cells)))),
-        Array(graft.model.PageDim(1, 0, 800)))
+        bbox = topLeft(60, 0, 110, 10))
+      def doc(cells: Array[TableCell]) = tableDoc(s"pair://$i", 2, 2, cells)
       val ocrNumeric = cls match {
         case 0 => "RON 471.371"
         case 1 => "EUR 471.371"
@@ -425,26 +443,16 @@ object ExtractOps {
     * spaced cell from synthesized positioned glyphs, verify recovery. */
   def spacingFixFlow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.textkit.SpacingRepair.Glyph
     srcDocs(s, dir)
       .select($"doc_id", $"text").as[(Long, String)]
       .map { case (id, text) =>
         val phrase = text.split(" ").take(6).mkString(" ")
-        val spaced = phrase.flatMap(c => if (c == ' ') "  " else c.toString + " ").trim
         // lay out the CLEAN phrase as glyphs; the damaged cell must recover it
-        var x = 0.0
-        val glyphs = phrase.flatMap { ch =>
-          if (ch == ' ') { x += 2.5; None }
-          else { val g = Glyph(ch.toString, x, 0, x + 1.0, 2.0); x += 1.1; Some(g) }
-        }
-        val cell = graft.model.TableCell(0, 1, 0, 1, 1, 1, spaced,
+        val (glyphs, x) = glyphRun(phrase)
+        val cell = TableCell(0, 1, 0, 1, 1, 1, letterSpaced(phrase),
           columnHeader = false, rowHeader = false, rowSection = false, fillable = false,
-          bbox = Some(graft.model.Bbox(0, 0, x + 2, 2, graft.model.Bbox.TopLeft)))
-        val doc = graft.model.Doc(s"doc://$id", Array(
-          graft.model.DocItem(0, graft.model.ItemKind.Table, graft.model.Label.Table,
-            graft.model.ContentLayer.Body, 1, None, "",
-            Some(graft.model.TableData(1, 1, Array(cell))))),
-          Array(graft.model.PageDim(1, 0, 800)))
+          bbox = topLeft(0, 0, x + 2, 2))
+        val doc = tableDoc(s"doc://$id", 1, 1, Array(cell))
         val pages = graft.extract.SpacingFix.detectSpacingPages(doc)
         val (fixed, report) = graft.extract.SpacingFix.fixSpacedItems(
           doc, Map(1 -> glyphs), pages)
@@ -472,7 +480,7 @@ object ExtractOps {
     * the url field must survive. */
   def docJson(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docSchema = org.apache.spark.sql.Encoders.product[graft.model.Doc].schema
+    val docSchema = org.apache.spark.sql.Encoders.product[Doc].schema
     srcDocs(s, dir).as[(Long, String, String)]
       .map { case (id, text, lang) =>
         (s"doc://$id", HtmlExtract.parse(s"doc://$id", htmlFromText(id, text, lang)))
@@ -510,54 +518,46 @@ object ExtractOps {
       .orderBy($"url")
   }
 
-  /** Deterministic DoclingDocument JSON for a driver text row — the
-    * reference's --export-json shape (schema_name/body/texts/tables/pages).
+  /** Deterministic DoclingDocument JSON for a driver text row, written by
+    * [[DoclingJsonExport]] (the reference's --export-json shape): a title,
+    * one text item per 12 words.
     * doc_id % 3 == 0 rows carry a grouped-header table with a split
     * "RON | 158.065.856" pair, so the collapse battery must fire on the
     * ingested payload (closed-form oracle). */
   def doclingJsonFromText(docId: Long, text: String): String = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val words = text.split(" ")
-    val paras = words.grouped(12).map(_.mkString(" ")).toSeq
-    val texts = new StringBuilder
-    val bodyRefs = new StringBuilder
-    def addText(i: Int, label: String, t: String): Unit = {
-      if (i > 0) texts += ','
-      texts ++= s"""{"self_ref":"#/texts/$i","children":[],"content_layer":"body","label":"$label","prov":[{"page_no":1,"bbox":{"l":10,"t":${20 + i * 14},"r":500,"b":${30 + i * 14},"coord_origin":"TOPLEFT"}}],"text":"${esc(t)}"}"""
-      if (bodyRefs.nonEmpty) bodyRefs += ','
-      bodyRefs ++= s"""{"$$ref":"#/texts/$i"}"""
-    }
-    addText(0, "title", s"Document $docId")
-    for ((p, i) <- paras.zipWithIndex) addText(i + 1, "text", p)
-    val hasTable = docId % 3 == 0
-    val tables = if (!hasTable) "" else {
-      if (bodyRefs.nonEmpty) bodyRefs += ','
-      bodyRefs ++= """{"$ref":"#/tables/0"}"""
-      def cell(r0: Int, r1: Int, c0: Int, c1: Int, hdr: Boolean, t: String) =
-        s"""{"bbox":{"l":${10 + c0 * 60},"t":${700 + r0 * 12},"r":${10 + c1 * 60},"b":${710 + r0 * 12},"coord_origin":"TOPLEFT"},"row_span":1,"col_span":${c1 - c0},"start_row_offset_idx":$r0,"end_row_offset_idx":$r1,"start_col_offset_idx":$c0,"end_col_offset_idx":$c1,"text":"$t","column_header":$hdr,"row_header":false,"row_section":false,"fillable":false}"""
-      s"""{"self_ref":"#/tables/0","children":[],"content_layer":"body","label":"table","prov":[{"page_no":1,"bbox":{"l":10,"t":700,"r":200,"b":730,"coord_origin":"TOPLEFT"}}],"data":{"num_rows":2,"num_cols":3,"table_cells":[
-         ${cell(0, 1, 0, 1, hdr = true, "Indicatori")},
-         ${cell(0, 1, 1, 3, hdr = true, "30/09/2025")},
-         ${cell(1, 2, 0, 1, hdr = false, "CIFRA")},
-         ${cell(1, 2, 1, 2, hdr = false, "RON")},
-         ${cell(1, 2, 2, 3, hdr = false, "158.065.856")}]}}"""
-    }
-    s"""{"schema_name":"DoclingDocument","version":"1.8.0","name":"doc$docId",
-       |"body":{"self_ref":"#/body","children":[$bodyRefs]},
-       |"texts":[$texts],"pictures":[],"tables":[$tables],
-       |"pages":{"1":{"page_no":1,"size":{"width":612,"height":792}}}}""".stripMargin
+    def textItem(i: Int, label: String, t: String) = DocItem(i, ItemKind.Text, label,
+      ContentLayer.Body, 1, topLeft(10, 20 + i * 14, 500, 30 + i * 14), t, None)
+    val paras = text.split(" ").grouped(12).map(_.mkString(" ")).toSeq
+    val texts = textItem(0, Label.Title, s"Document $docId") +:
+      paras.zipWithIndex.map { case (p, i) => textItem(i + 1, Label.Text, p) }
+    def cell(r: Int, c0: Int, c1: Int, hdr: Boolean, t: String) =
+      TableCell(r, r + 1, c0, c1, 1, c1 - c0, t, columnHeader = hdr, rowHeader = false,
+        rowSection = false, fillable = false,
+        bbox = topLeft(10 + c0 * 60, 700 + r * 12, 10 + c1 * 60, 710 + r * 12))
+    val table = if (docId % 3 != 0) Nil else Seq(DocItem(texts.length, ItemKind.Table,
+      Label.Table, ContentLayer.Body, 1, topLeft(10, 700, 200, 730), "",
+      Some(TableData(2, 3, Array(
+        cell(0, 0, 1, hdr = true, "Indicatori"), cell(0, 1, 3, hdr = true, "30/09/2025"),
+        cell(1, 0, 1, hdr = false, "CIFRA"), cell(1, 1, 2, hdr = false, "RON"),
+        cell(1, 2, 3, hdr = false, "158.065.856"))))))
+    DoclingJsonExport.write(
+      Doc(s"doc://$docId", (texts ++ table).toArray, Array(PageDim(1, 612, 792))))
   }
+
+  /** q48's damaged text channel as a DoclingDocument JSON: one body text
+    * item covering page 1 whose text is `phrase` letter-spaced. */
+  def letterSpacedDoclingJson(docId: Long, phrase: String): String =
+    DoclingJsonExport.write(Doc(s"doc://$docId", Array(DocItem(0, ItemKind.Text, Label.Text,
+      ContentLayer.Body, 1, topLeft(0, 0, 612, 792), letterSpaced(phrase), None)),
+      Array(PageDim(1, 612, 792))))
 
   /** Docling-JSON payloads through the DISTRIBUTED pipeline (q45): the
     * pages table carries the reference's native export format; payload
     * sniffing routes it to the ingest + transform battery. */
   def doclingPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", doclingJsonFromText(id, text).getBytes("UTF-8"), text, lang)
-      }
-      .toDF("url", "html", "text", "lang")
+    val pages = payloadPages(s, dir)((id, text, _) =>
+      doclingJsonFromText(id, text).getBytes("UTF-8"))
     extractCovered(s, pages)($"url", $"backend", $"page_count", $"item_count",
       $"table_count", $"markdown".contains("| RON 158.065.856 |").as("collapsed_pair"))
   }
@@ -574,20 +574,11 @@ object ExtractOps {
       .mapPartitions { it =>
         it.map { case (id, text) =>
           val phrase = text.split(" ").take(6).mkString(" ")
-          val spaced = phrase.flatMap(c => if (c == ' ') "  " else c.toString + " ").trim
-          def esc(t: String) = t.replace("\\", "\\\\").replace("\"", "\\\"")
-          // damaged text channel: one body text item covering the page
-          val json =
-            s"""{"schema_name":"DoclingDocument","version":"1.8.0","name":"doc$id",
-               |"body":{"self_ref":"#/body","children":[{"$$ref":"#/texts/0"}]},
-               |"texts":[{"self_ref":"#/texts/0","children":[],"content_layer":"body",
-               | "label":"text","prov":[{"page_no":1,"bbox":{"l":0,"t":0,"r":612,"b":792,
-               | "coord_origin":"TOPLEFT"}}],"text":"${esc(spaced)}"}],
-               |"pictures":[],"tables":[],
-               |"pages":{"1":{"page_no":1,"size":{"width":612,"height":792}}}}""".stripMargin
+          // damaged text channel: one body text item covering the page;
           // clean geometry channel: the same phrase as PDF glyphs
-          val pdf = graft.extract.SyntheticPdf.pdfFor(Seq(Seq(phrase)))
-          val doc = graft.sources.DoclingJsonIngest.parse(json, s"doc://$id")
+          val doc = graft.sources.DoclingJsonIngest.parse(
+            letterSpacedDoclingJson(id, phrase), s"doc://$id")
+          val pdf = SyntheticPdf.pdfFor(Seq(Seq(phrase)))
           val glyphs = graft.extract.PdfDoc.extractGlyphsAuto(pdf)
           val (fixed, report) = Pipeline.repairDoc(doc, glyphs)
           val md = MarkdownRender.render(DocTransforms.applyAll(fixed)._1)
@@ -652,7 +643,7 @@ object ExtractOps {
       .mapPartitions { it =>
         it.map { case (id, text) =>
           val pages = pdfPagesOf(text)
-          val pdf = graft.extract.SyntheticPdf.pdfFor(pages)
+          val pdf = SyntheticPdf.pdfFor(pages)
           val glyphs = graft.extract.PdfDoc.extractGlyphsAuto(pdf)
           val joined = (1 to pages.length)
             .map(p => SpacingRepair.reconstructFromChars(glyphs(p))).mkString(" ")
@@ -668,11 +659,7 @@ object ExtractOps {
     * with the same coverage invariant as the HTML flagship. */
   def pdfPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", graft.extract.SyntheticPdf.pdfFor(pdfPagesOf(text)), text, lang)
-      }
-      .toDF("url", "html", "text", "lang")
+    val pages = payloadPages(s, dir)((_, text, _) => SyntheticPdf.pdfFor(pdfPagesOf(text)))
     extractCovered(s, pages)($"url", $"page_count", $"item_count")
   }
 
@@ -684,11 +671,7 @@ object ExtractOps {
     * predictor decode, /Root from the stream dict) end-to-end. */
   def pdfPipeline15(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = srcDocs(s, dir).as[(Long, String, String)]
-      .map { case (id, text, lang) =>
-        (s"doc://$id", graft.extract.SyntheticPdf.pdfFor15(pdfPagesOf(text)), text, lang)
-      }
-      .toDF("url", "html", "text", "lang")
+    val pages = payloadPages(s, dir)((_, text, _) => SyntheticPdf.pdfFor15(pdfPagesOf(text)))
     extractCovered(s, pages)($"url", $"page_count", $"item_count")
   }
 
@@ -706,7 +689,7 @@ object ExtractOps {
           case 1 => "aesv2"
           case _ => "aesv3"
         }
-        (s"doc://$id", graft.extract.SyntheticPdf.pdfForEncrypted(pdfPagesOf(text), cipher, id),
+        (s"doc://$id", SyntheticPdf.pdfForEncrypted(pdfPagesOf(text), cipher, id),
           text, lang, cipher)
       }
       .toDF("url", "html", "text", "lang", "cipher")
@@ -743,8 +726,8 @@ object ExtractOps {
         sb ++= "</body></html>"
         val doc = HtmlExtract.applyBoilerpipe(
           HtmlExtract.parseDetailed(s"doc://$id", sb.result()))
-        val body = doc.items.filter(_.contentLayer == graft.model.ContentLayer.Body)
-        val furn = doc.items.filter(_.contentLayer == graft.model.ContentLayer.Furniture)
+        val body = doc.items.filter(_.contentLayer == ContentLayer.Body)
+        val furn = doc.items.filter(_.contentLayer == ContentLayer.Furniture)
         (s"doc://$id", body.length.toLong,
           furn.count(_.text.startsWith("Sectiune1")) == 2,
           furn.exists(_.text == "Citeste mai multe aici"),
@@ -949,21 +932,24 @@ object ExtractOps {
   }
 
   /** q57: streaming extraction parity. The same corpus is extracted twice —
-    * once through the batch pipeline, once through StreamingExtract's
-    * foreachBatch sink over a 4-file source
-    * drained in >= 2 micro-batches (maxFilesPerTrigger=2) — and the streamed
-    * table must hold every url exactly once with markdown byte-identical to
-    * the batch output. Both invariants have closed forms (TRUE per url) that
+    * once through the batch pipeline, once through StreamingExtract, which
+    * commits each micro-batch with the batch commit into `out/batch=<id>`,
+    * over a 4-file source drained in >= 2 micro-batches
+    * (maxFilesPerTrigger=2) — and the streamed table must hold every url
+    * exactly once with markdown byte-identical to the batch output. Both invariants have closed forms (TRUE per url) that
     * break if the streaming path loses, duplicates, or diverges on any doc. */
   def streamingParity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = htmlPages(s, dir).cache()
+    val pages = htmlPages(s, dir, htmlFromText).cache()
     withScratchDir("q57") { base =>
       pages.repartition(4).write.parquet(s"$base/src")
       val query = graft.streaming.StreamingExtract.stream(
         s, s"$base/src", s"$base/out", s"$base/chk", numBuckets = 8)
       query.awaitTermination()
-      val streamed = s.read.parquet(s"$base/out/data")
+      // every batch's data files; each batch directory is its own commit
+      // root, which Spark cannot read as one partitioned table
+      val streamed = s.read.option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet").parquet(s"$base/out")
       val streamCnt = streamed.groupBy($"url")
         .agg(count(lit(1)).as("n_stream"), max(xxhash64($"markdown")).as("h_stream"))
       val batchH = Pipeline.extract(s, pages, numBuckets = 8).toDF()
@@ -1034,7 +1020,7 @@ object ExtractOps {
     * resume breaks docs_run3, a missing commit breaks snapshots. */
   def lineageResume(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = htmlPages(s, dir).cache()
+    val pages = htmlPages(s, dir, htmlFromText).cache()
     val nB = 8
     withScratchDir("q53") { outDir =>
       // run 1: killed after committing 4 of 8 buckets
@@ -1071,11 +1057,10 @@ object ExtractOps {
     * cli.py:72-81). */
   def pageRangeImageModes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.model._
     srcDocs(s, dir).as[(Long, String, String)]
       .mapPartitions { it =>
         it.map { case (id, text, lang) =>
-          val pdf = graft.extract.SyntheticPdf.pdfFor(pdfPagesOf(text))
+          val pdf = SyntheticPdf.pdfFor(pdfPagesOf(text))
           def pageCount(opts: Pipeline.ExtractOptions): Int =
             Pipeline.extractOne(s"doc://$id", pdf, lang, 0, opts).page_count
           val full = pageCount(Pipeline.ExtractOptions())

@@ -224,17 +224,11 @@ object Ops {
       .select($"id_a", $"id_b", $"jaccard")
       .orderBy($"id_a", $"id_b")
 
-  /** Plan-audit hook (DumpPlans, ExplainQueries): skip the localCheckpoint
-    * so the full physical plan stays visible instead of a Scan ExistingRDD
-    * stub. Caches are intentionally NOT released in audit mode. */
-  private[graft] var keepPlansForAudit: Boolean = false
-
   /** Eagerly materialize `out` (localCheckpoint partitions are GC'd by the
     * ContextCleaner once the result is unreferenced — cached plans are NOT),
     * then release the shared intermediates so repeated invocations within a
     * long-lived session don't accumulate executor storage. */
   private[ops] def materializeAndRelease(out: DataFrame, caches: DataFrame*): DataFrame = {
-    if (keepPlansForAudit) return out
     val result = out.localCheckpoint()
     caches.foreach(_.unpersist())
     result

@@ -35,13 +35,16 @@ object SyntheticPdfPages {
 
   def url(i: Long): String = s"https://corpus.example/pdf/doc-$i.pdf"
 
-  /** Wrap a paragraph into ~52-char lines (deterministic). */
-  private def wrap(text: String, width: Int = 52): Seq[String] = {
+  /** Longest wrapped body line, in characters. */
+  private val WrapWidth = 52
+
+  /** Wrap a paragraph at [[WrapWidth]] characters (deterministic). */
+  private def wrap(text: String): Seq[String] = {
     val words = text.split(" ")
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     val cur = new StringBuilder
     for (w <- words) {
-      if (cur.nonEmpty && cur.length + 1 + w.length > width) {
+      if (cur.nonEmpty && cur.length + 1 + w.length > WrapWidth) {
         lines += cur.result(); cur.clear()
       }
       if (cur.nonEmpty) cur += ' '

@@ -1,43 +1,38 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Continuous extraction: the SAME per-row conversion flow the batch
   * pipeline runs, over a streaming file source of arriving page files —
   * the "crawl keeps landing" deployment shape.
   *
-  * Delivery semantics: each micro-batch writes to its own
-  * `outDir/data/batch=<id>` directory with overwrite mode, so a replay of
-  * the same batch after a crash rewrites the same directory instead of
-  * appending duplicates — idempotent sink + checkpointed source offsets =
-  * exactly-once table contents.
+  * Delivery semantics: each micro-batch is committed by the batch commit,
+  * `Pipeline.extractAndCommit`, into its own `outDir/batch=<id>` (rows
+  * under `data/bucket=N`, manifests under `_lineage`). A replay of the same
+  * batch after a crash resumes that directory bucket by bucket through its
+  * lineage manifest: committed buckets are skipped, uncommitted leftovers
+  * are deleted and re-extracted — checkpointed source offsets + a resumable
+  * commit = exactly-once table contents.
   */
 object StreamingExtract {
   /** Start a streaming extraction from `sourceDir` (parquet page files with
-    * url/html/text/lang) writing extracted rows under `outDir/data`.
-    * `schema` lets the stream start before any file exists (the production
-    * order); when None it is inferred from files already present.
+    * url/html/text/lang, at least one present: the source schema is read
+    * from them) committing extracted rows under `outDir/batch=<id>`.
     * Trigger.AvailableNow drains what is present and stops — the batch-parity
     * test shape; a production deployment uses a processing-time trigger. */
   def stream(spark: SparkSession, sourceDir: String, outDir: String,
-             checkpointDir: String, numBuckets: Int = 16,
-             schema: Option[StructType] = None): StreamingQuery = {
-    val srcSchema = schema.getOrElse(spark.read.parquet(sourceDir).schema)
-    val pages = spark.readStream
-      .schema(srcSchema)
+             checkpointDir: String, numBuckets: Int = 16): StreamingQuery =
+    spark.readStream
+      .schema(spark.read.parquet(sourceDir).schema)
       .option("maxFilesPerTrigger", "2")
       .parquet(sourceDir)
-    pages.writeStream
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.extract.Pipeline.extract(spark, batch, numBuckets = numBuckets)
-          .toDF()
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$outDir/data/batch=$batchId")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.extract.Pipeline.extractAndCommit(spark, batch, s"$outDir/batch=$batchId", numBuckets)
+        ()
       }
       .start()
-  }
 }

@@ -14,15 +14,15 @@ object Predicates {
   private val SpacedDigit = re("(?:\\b\\d\\b\\s+){3,}\\b\\d\\b")
   private val SplitWord = re("\\b(\\w{2,})\\s+(\\w)\\s+(\\w{2,})\\b")
   private val SpacedNumber = re("\\d[.,/]\\s+\\d|\\d\\s+[.,/]\\s*\\d")
-  private val RunonLetters = re("(?:[^\\W\\d_]{20,})")
-  private val RunonMergedAlnum = re("(?:[^\\W\\d_]{6,}\\d{2,}[^\\W\\d_]{2,}|\\d{2,}[^\\W\\d_]{6,})")
+  private[textkit] val RunonLetters = re("(?:[^\\W\\d_]{20,})")
+  private[textkit] val RunonMergedAlnum = re("(?:[^\\W\\d_]{6,}\\d{2,}[^\\W\\d_]{2,}|\\d{2,}[^\\W\\d_]{6,})")
   private val MultiSpace = re("(?<=\\S)[ \\t]{2,}(?=\\S)")
   private val CommonSingleLetterWords = Set("a", "A", "I", "i", "o", "O")
   private[textkit] val LetterChars = "A-Za-zĂÂÎȘȚăâîșț"
   private val ShortAlphaSeq = re(s"(?:\\b[$LetterChars]{1,2}\\b\\s+){2,}\\b[$LetterChars]{1,2}\\b")
   private val TrailingSingleAlpha = re(s"\\b[$LetterChars]{2,}\\s+[$LetterChars]{1}\\b")
   private val SoldSuffix = reI("\\bSOLD\\s+[CD]\\b")
-  private val WordToken = re("\\w+")
+  private[textkit] val WordToken = re("\\w+")
 
   /** audit_utils.py:72-119 — split-letter/digit artifact detector. */
   def isSpacedText(text: String): Boolean = {

@@ -2,6 +2,7 @@ package graft.textkit
 
 import Py._
 import Predicates.{isSpacedText, needsSpacingFix, needsTableSpacingFix}
+import Predicates.{LetterChars, RunonLetters, RunonMergedAlnum, WordToken}
 
 /** Glyph-run spacing repair kernel: 1-D 2-means gap clustering, line
   * reconstruction, badness scoring and replacement-acceptance decisions.
@@ -20,14 +21,11 @@ object SpacingRepair {
     def yCenter: Double = (y0 + y1) / 2.0
   }
 
-  private val RunonLetters = re("(?:[^\\W\\d_]{20,})")
-  private val MergedAlnum = re("(?:[^\\W\\d_]{6,}\\d{2,}[^\\W\\d_]{2,}|\\d{2,}[^\\W\\d_]{6,})")
   private val NumericOnly = re("[0-9\\s.,/%()-]+")
   private val SuspiciousNumeric = re("^[.,]?\\d[.,]?$")
-  private val TrailingAlpha = re("[A-Za-zĂÂÎăâîșșțȚȘ]$")
-  private val AlphaToken = re("[A-Za-zĂÂÎăâîșșțȚȘ]+")
+  private val TrailingAlpha = re(s"[$LetterChars]$$")
+  private val AlphaToken = re(s"[$LetterChars]+")
   private val Vowels = "aeiouAEIOUăâîĂÂÎ".toSet
-  private val WordToken = re("\\w+")
 
   /** The reconstruction's fixed ratios, the reference's defaults
     * (pymupdf_spacing_fix.py:138-208): a glyph starts a new line when its
@@ -170,7 +168,7 @@ object SpacingRepair {
     var badness = math.max(0.0, avgLen - 6.0)
     badness += longTokens * 1.5
     if (hasMatch(RunonLetters, text)) badness += 4.0
-    if (hasMatch(MergedAlnum, text)) badness += 3.0
+    if (hasMatch(RunonMergedAlnum, text)) badness += 3.0
     if (isSpacedText(text)) badness += 4.0
     badness
   }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * drifting; these constants were computed once and do not move unless the
   * engine's output does. */
 class OutputDigestSpec extends AnyFunSuite {
-  import OutputDigestSpec.{crawlDoc, linesOf, q48Payload}
+  import OutputDigestSpec.{crawlDoc, linesOf}
 
   private def hex(d: Array[Byte]): String = d.map(b => f"${b & 0xff}%02x").mkString
 
@@ -64,7 +64,8 @@ class OutputDigestSpec extends AnyFunSuite {
     val q45 = driver.map { case (id, text) =>
       (s"doc://$id", graft.ops.ExtractOps.doclingJsonFromText(id, text).getBytes(UTF_8)) }
     val q48 = driver.map { case (id, text) =>
-      (s"doc://$id", q48Payload(id, text).getBytes(UTF_8)) }
+      val phrase = text.split(" ").take(6).mkString(" ")
+      (s"doc://$id", graft.ops.ExtractOps.letterSpacedDoclingJson(id, phrase).getBytes(UTF_8)) }
     val got = (digest(q45), digest(q48))
     assert(got == ("fe27c74dd05c82c638331660998313ac", "faa21a2370613078fc03a4791cb58b66"),
       s"docling payload digests $got")
@@ -72,21 +73,6 @@ class OutputDigestSpec extends AnyFunSuite {
 }
 
 object OutputDigestSpec {
-  /** q48's text channel: one letter-spaced body text item covering page 1,
-    * written as q48 wrote it before it had a helper. */
-  private def q48Payload(id: Long, text: String): String = {
-    val phrase = text.split(" ").take(6).mkString(" ")
-    val spaced = phrase.flatMap(c => if (c == ' ') "  " else c.toString + " ").trim
-    def esc(t: String) = t.replace("\\", "\\\\").replace("\"", "\\\"")
-    s"""{"schema_name":"DoclingDocument","version":"1.8.0","name":"doc$id",
-       |"body":{"self_ref":"#/body","children":[{"$$ref":"#/texts/0"}]},
-       |"texts":[{"self_ref":"#/texts/0","children":[],"content_layer":"body",
-       | "label":"text","prov":[{"page_no":1,"bbox":{"l":0,"t":0,"r":612,"b":792,
-       | "coord_origin":"TOPLEFT"}}],"text":"${esc(spaced)}"}],
-       |"pictures":[],"tables":[],
-       |"pages":{"1":{"page_no":1,"size":{"width":612,"height":792}}}}""".stripMargin
-  }
-
   /** Page lines of a generated document for the PDF 1.5 writer: text items
     * wrapped at 52 characters, one line per table row. */
   private def linesOf(doc: Doc): Seq[Seq[String]] =

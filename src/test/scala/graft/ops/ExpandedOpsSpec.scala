@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import graft.extract.SparkTestSession
 
@@ -96,7 +98,8 @@ class StreamingExtractSpec extends org.scalatest.funsuite.AnyFunSuite with graft
     q.awaitTermination(120000)
 
     // raw row count FIRST: a replayed/duplicated micro-batch must fail here
-    val raw = spark.read.parquet(s"$out/data")
+    val raw = spark.read.option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.parquet").parquet(out)
     assert(raw.count() == 64, s"expected 64 rows, got ${raw.count()}")
     val streamed = raw
       .select($"url", $"markdown").as[(String, String)].collect().toMap
@@ -104,5 +107,12 @@ class StreamingExtractSpec extends org.scalatest.funsuite.AnyFunSuite with graft
       .toDF().select($"url", $"markdown").as[(String, String)].collect().toMap
     assert(streamed.size == 64 && batch.size == 64)
     assert(streamed == batch, "streamed and batch markdown must be byte-identical per url")
+    // each micro-batch went through the lineage commit: its own manifest,
+    // and none of the Hadoop committer's _SUCCESS or .crc files
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+    val names = try walk.iterator().asScala.map(_.getFileName.toString).toList finally walk.close()
+    assert(names.count(_.startsWith("batch=")) >= 2, names)
+    assert(names.count(_.startsWith("snapshot-")) == names.count(_.startsWith("batch=")), names)
+    assert(!names.exists(n => n == "_SUCCESS" || n.endsWith(".crc")), names)
   }
 }

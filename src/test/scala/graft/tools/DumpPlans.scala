@@ -1,10 +1,14 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dumps formatted physical plans of the headline operators to PLANS.md so
   * the optimization story (pushdown, pruning, broadcast, single exchange,
-  * whole-stage codegen spans) is reviewable without running anything. */
+  * whole-stage codegen spans) is reviewable without running anything. A
+  * query that materializes its result shows the initial plan of its
+  * checkpoint. Lambda class names, hash codes and plan ids are normalized
+  * away, so two runs over the same code write the same bytes. */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sf = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
@@ -26,10 +30,19 @@ object DumpPlans {
     sb ++= "`Exchange` in the extraction pipeline, and `WholeStageCodegen`\n"
     sb ++= "(`*(n)`) spans around the custom polyhash expression.\n"
 
-    def dump(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    val plans = new MaterializedPlans(spark)
+    def dump(title: String, query: => org.apache.spark.sql.DataFrame): Unit = {
+      val (df, qe) = plans.run(query)
       df.collect() // finalize AQE so the real executed plan prints
+      val plan = qe.executedPlan match {
+        // a checkpoint's re-plans race its stages (a join broadcasts
+        // whichever input finished first), so it shows the plan it started from
+        case a: AdaptiveSparkPlanExec if qe ne df.queryExecution =>
+          "AdaptiveSparkPlan, initial plan of its checkpoint\n" + a.initialPlan
+        case p => p.toString
+      }
       sb ++= s"\n## $title\n\n```\n"
-      sb ++= df.queryExecution.executedPlan.toString.take(7000)
+      sb ++= MaterializedPlans.normalize(plan).take(7000)
       sb ++= "\n```\n"
     }
 
@@ -57,12 +70,10 @@ object DumpPlans {
       graft.ops.Ops.q49IvfTrainedTopK(spark, sf))
     dump("q50 paragraph dedup (explode + hash, occurrence window over one exchange, no join-back)",
       graft.ops.Ops.q50ParagraphDedup(spark, sf))
-    graft.ops.Ops.keepPlansForAudit = true
     dump("q25 pruned Jaccard (round 5: ONE full-relation exchange via the " +
       "bounded-distinct aggregate; sizes + pair expansion from the cached " +
       "vocabulary-sized kept groups)",
       graft.ops.Ops.q25NgramJaccardPruned(spark, sf))
-    graft.ops.Ops.keepPlansForAudit = false
     dump("q61 canonical-url dedup (pure codegen canonicalizer, map-side " +
       "until one count groupBy)",
       graft.ops.Ops.q61UrlCanonicalDedup(spark, sf))

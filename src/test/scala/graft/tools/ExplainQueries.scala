@@ -35,14 +35,13 @@ object ExplainQueries {
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = java.nio.file.Paths.get("plans/r06")
     java.nio.file.Files.createDirectories(outDir)
-    // keep full plans visible: materializeAndRelease would replace the tree
-    // with a Scan ExistingRDD checkpoint stub
-    graft.ops.Ops.keepPlansForAudit = true
+    // a materialized query's result is a checkpoint scan: explain the plan
+    // its checkpoint ran instead
+    val plans = new MaterializedPlans(spark)
     for (name <- names) {
       try {
-        val df = graft.SparkEntry.queries(name)(spark, sf)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val (_, qe) = plans.run(graft.SparkEntry.queries(name)(spark, sf))
+        val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(outDir.resolve(s"${name}_$tag.txt"), plan)
         println(s"wrote ${name}_$tag.txt")
       } catch {
