@@ -115,4 +115,35 @@ class StreamingExtractSpec extends org.scalatest.funsuite.AnyFunSuite with graft
     assert(names.count(_.startsWith("snapshot-")) == names.count(_.startsWith("batch=")), names)
     assert(!names.exists(n => n == "_SUCCESS" || n.endsWith(".crc")), names)
   }
+
+  test("a replayed micro-batch resumes its commit instead of duplicating rows") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val src = tempDir("graft-stream-pages")
+    val out = tempDir("graft-stream-out")
+    val ckpt = tempDir("graft-stream-ckpt")
+    spark.createDataset((0L until 32L).map(i => graft.sources.SyntheticPages.page(7L, i))).toDF()
+      .repartition(2).write.mode("overwrite").parquet(src)
+    graft.streaming.StreamingExtract.stream(spark, src, out, ckpt, numBuckets = 8)
+      .awaitTermination(120000)
+    // a crash after the commit but before the stream recorded the batch: the
+    // restarted query runs the same batch again over the same files
+    val commits = Paths.get(ckpt, "commits")
+    val last = {
+      val ls = Files.list(commits)
+      try ls.iterator().asScala.map(_.getFileName.toString).filter(_.forall(_.isDigit))
+        .map(_.toLong).max finally ls.close()
+    }
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    graft.streaming.StreamingExtract.stream(spark, src, out, ckpt, numBuckets = 8)
+      .awaitTermination(120000)
+
+    val raw = spark.read.option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.parquet").parquet(out)
+    assert(raw.count() == 32 && raw.select($"url").distinct().count() == 32)
+    val manifests = Files.list(Paths.get(out, s"batch=$last", "_lineage"))
+    try assert(manifests.iterator().asScala.count(_.getFileName.toString.startsWith("snapshot-")) == 2)
+    finally manifests.close()
+  }
 }
