@@ -1,6 +1,6 @@
 package graft.textkit
 
-import graft.extract.{DocTransforms, SpacingFix}
+import graft.extract.{DocTransforms, MarkdownRender, OracleMarkdownRender, SpacingFix}
 import graft.model._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -242,6 +242,13 @@ class TransformOracleSpec extends AnyFunSuite {
     }
   }
 
+  // text items and picture texts with mojibake whose CP1252/Latin-1 round
+  // trip succeeds, meets an unmappable char (Ș, Ā, ›, €) or decodes to
+  // malformed UTF-8 (a lone Ã)
+  private val mojibakeGen: Gen[String] = Gen.chooseNum(1, 6).flatMap(n => Gen.listOfN(n, Gen.frequency(
+    3 -> Gen.oneOf("Subven", "ii pentru", " ", "profit", "RON 12%", "x"),
+    4 -> Gen.oneOf("Äƒ", "È™", "È›", "Ã¢", "Ã®", "Ã©", "Ä‚", "â€™", "â€”"),
+    2 -> Gen.oneOf("Ș", "ț", "Ā", "€", "›", "Ã", "Ãƒ", "\u0081", "�", "é", "ß", "ﬁ")))).map(_.mkString)
   private val pictureTexts = Seq(
     "31.12.2024", " 30.09.2025 ", "31/12/2024", "1.2.2024", "20 40 60 mil. RON", "Q1 Q2 Q3 2025",
     "0 20 40 60 80", "74% 9L 2025", "Evolutia indicatorului", "2024", "x",
@@ -252,7 +259,8 @@ class TransformOracleSpec extends AnyFunSuite {
     label <- Gen.frequency(6 -> Label.Text, 1 -> Label.Caption, 1 -> Label.SectionHeader)
     page <- Gen.chooseNum(0, 3)
     bbox <- Gen.frequency(3 -> Gen.some(bboxGen), 1 -> Gen.const(None))
-    text <- Gen.frequency(4 -> Gen.oneOf(pictureTexts), 1 -> cellGen, 1 -> Gen.const(null))
+    text <- Gen.frequency(4 -> Gen.oneOf(pictureTexts), 1 -> cellGen, 1 -> mojibakeGen,
+      1 -> Gen.const(null))
   } yield (kind, label, page, bbox, text)
   private val docGen: Gen[Doc] = for {
     n <- Gen.chooseNum(0, 14)
@@ -263,8 +271,58 @@ class TransformOracleSpec extends AnyFunSuite {
       if (k == ItemKind.Table) Some(TableData(1, 1, Array(cell(0, 1, 0, 1, t, None)))) else None)
   }.toArray, heights.toArray.map(p => PageDim(p, 600, 800)))
 
+  // a KPI picture whose normalized caption, in some case, occurs in a table
+  // cell, in a text item or in a furniture item, or only across two items
+  // that the plain text joins by '\n' (then it is not in the text)
+  private val kpiTexts = Seq("PROFIT NET RON 42,92 MIL. +103,61%",
+    "CIFRA DE AFACERI\nNETA ANUALA\nRON\n158,06 MIL.\n(EUR 31,08 MIL.)\n+24,66%\nvs\n9L 2024",
+    "Profitul net 12,5 mil. RON", "EBITDA ΟΔΟΣ 12,5%", "Marja İSTANBUL 15%",
+    "Venituri  30 mil. ron", "SubvenÈ›ii pentru investiÈ›ii 12%", "Rezultatul ﬁnal 7 EUR")
+  private val kpiDocGen: Gen[Doc] = for {
+    base <- docGen
+    raw <- Gen.oneOf(kpiTexts)
+    where <- Gen.oneOf("cell", "item", "furniture", "split", "none")
+    casing <- Gen.oneOf(0, 1, 2)
+    around <- Gen.oneOf(("", ""), ("Total: ", ""), ("", " (2024)"), ("x", "y"))
+    page <- Gen.chooseNum(0, 3)
+    box <- bboxGen
+    captioned <- Gen.frequency(4 -> false, 1 -> true)
+    at <- Gen.chooseNum(0, base.items.length)
+    dup <- Gen.frequency(4 -> false, 1 -> true)
+  } yield {
+    val cap = KpiAxis.normalizeKpiCaption(
+      TextNormalize.normalizeLigatures(TextNormalize.normalizeMojibakeText(raw)))
+    val shown = casing match {
+      case 0 => cap
+      case 1 => cap.toUpperCase(java.util.Locale.ROOT)
+      case _ => cap.toLowerCase(java.util.Locale.ROOT)
+    }
+    def text(t: String, layer: String = ContentLayer.Body) =
+      DocItem(0, ItemKind.Text, Label.Text, layer, page, None, t, None)
+    val holders: Seq[DocItem] = where match {
+      case "cell" => Seq(DocItem(0, ItemKind.Table, Label.Table, ContentLayer.Body, page, None, "",
+        Some(TableData(1, 2, Array(cell(0, 1, 0, 1, "a", None),
+          cell(0, 1, 1, 2, around._1 + shown + around._2, None))))))
+      case "item" => Seq(text(around._1 + shown + around._2))
+      case "furniture" => Seq(text(shown, ContentLayer.Furniture))
+      case "split" =>
+        val cut = math.max(shown.indexOf(' '), 1)
+        Seq(text(shown.substring(0, cut)), text(shown.substring(cut).strip()))
+      case _ => Seq.empty
+    }
+    val picture = DocItem(0, ItemKind.Picture, Label.Picture, ContentLayer.Body, page, Some(box), raw, None)
+    val added = Seq(picture) ++ (if (captioned) Seq(text("Sursa: raport").copy(label = Label.Caption))
+      else Seq.empty) ++ (if (dup) Seq(picture.copy(text = pictureTexts.head)) else Seq.empty)
+    val items = base.items.take(at) ++ added ++ base.items.drop(at) ++ holders
+    base.copy(items = items.zipWithIndex.map { case (i, k) => i.copy(idx = k) })
+  }
+
   test("picture passes and the KPI caption pass match the oracle") {
-    check(Prop.forAll(docGen) { d =>
+    var captioned, declined = 0
+    check(Prop.forAll(Gen.frequency(2 -> docGen, 1 -> kpiDocGen)) { d =>
+      val added = OracleDocTransforms.addPictureKpiCaptionsFromItems(d)._2
+      if (added > 0) captioned += 1
+      else if (d.items.exists(i => i.kind == ItemKind.Picture && kpiTexts.contains(i.text))) declined += 1
       def pass(name: String, f: Doc => (Doc, Int), g: Doc => (Doc, Int)) = {
         val (d1, c1) = f(d); val (d2, c2) = g(d)
         same(name, (canon(d1), c1), (canon(d2), c2), canon(d))
@@ -282,6 +340,8 @@ class TransformOracleSpec extends AnyFunSuite {
         pass("normalizeDocTableCurrencies", DocTransforms.normalizeDocTableCurrencies,
           OracleDocTransforms.normalizeDocTableCurrencies)
     })
+    // both sides of the caption pass's text lookup are exercised
+    assert(captioned > Cases / 20 && declined > Cases / 50, s"captioned $captioned, declined $declined")
   }
 
   test("applyAll matches the oracle chain on SyntheticPages documents") {
@@ -293,6 +353,57 @@ class TransformOracleSpec extends AnyFunSuite {
     }
   }
 
+  // items of every export kind and label, some of them chart text joined
+  // under a picture, on pages that come and go out of order
+  private val renderDocGen: Gen[Doc] = for {
+    base <- Gen.frequency(2 -> docGen, 1 -> kpiDocGen)
+    labels <- Gen.listOfN(base.items.length, Gen.frequency(4 -> Label.Text, 1 -> Label.Title,
+      1 -> Label.SectionHeader, 1 -> Label.ListItem, 1 -> Label.PageHeader, 1 -> Label.Footnote))
+    parents <- Gen.listOfN(base.items.length, Gen.frequency(3 -> -1, 1 -> 0, 1 -> 1))
+    layers <- Gen.listOfN(base.items.length, Gen.frequency(8 -> ContentLayer.Body,
+      1 -> ContentLayer.Furniture))
+    kv <- Gen.frequency(3 -> Gen.const(Seq.empty[DocItem]), 1 -> (for {
+      n <- Gen.chooseNum(0, 3)
+      pairs <- Gen.listOfN(n, for (k <- Gen.oneOf("", "Cod_fiscal", "CUI"); v <- Gen.oneOf("", "RO_1", "12"))
+        yield KvPair(k, v))
+      page <- Gen.chooseNum(0, 3)
+    } yield Seq(DocItem(0, ItemKind.KeyValue, Label.KeyValueRegion, ContentLayer.Body, page, None, "",
+      None, kv = Some(pairs.toArray)))))
+    table <- Gen.frequency(2 -> Gen.const(Seq.empty[DocItem]), 1 -> (for {
+      t <- tableGen; page <- Gen.chooseNum(0, 3)
+    } yield Seq(DocItem(0, ItemKind.Table, Label.Table, ContentLayer.Body, page, None, "", Some(t)))))
+    empty <- Gen.frequency(6 -> Gen.const(Seq.empty[DocItem]), 1 -> Gen.const(Seq(DocItem(0,
+      ItemKind.Table, Label.Table, ContentLayer.Body, 1, None, "", Some(TableData(0, 2, Array.empty))))))
+    pages <- Gen.oneOf(Seq.empty[Int], Seq(1, 2), Seq(2, 1), Seq(0, 3))
+  } yield {
+    val relabeled = base.items.zip(labels).zip(parents).zip(layers).map { case (((i, l), p), c) =>
+      val label = if (i.kind == ItemKind.Text) l else i.label
+      i.copy(label = label, parentIdx = p, contentLayer = c)
+    }
+    val items = (relabeled ++ kv ++ table ++ empty).zipWithIndex.map { case (i, k) => i.copy(idx = k) }
+    Doc("u", items, pages.map(p => PageDim(p, 600, 800)).toArray)
+  }
+
+  test("render, renderTable, renderPlainText and the page-1 probe match the oracle") {
+    check(Prop.forAll(renderDocGen) { d =>
+      same("render", MarkdownRender.render(d), OracleMarkdownRender.render(d), canon(d)) &&
+        same("render(referenced)", MarkdownRender.render(d, MarkdownRender.ImageMode.Referenced),
+          OracleMarkdownRender.render(d, MarkdownRender.ImageMode.Referenced), canon(d)) &&
+        same("renderPlainText", MarkdownRender.renderPlainText(d),
+          OracleMarkdownRender.renderPlainText(d), canon(d)) &&
+        same("probePage1Score", SpacingFix.probePage1Score(d),
+          OracleMarkdownRender.probePage1Score(d), canon(d))
+    })
+    check(Prop.forAll(tableGen) { t =>
+      same("renderTable", MarkdownRender.renderTable(t), OracleMarkdownRender.renderTable(t), canonT(t))
+    })
+    for (i <- 0L until 200L) {
+      val d = graft.sources.SyntheticPages.dirtyDoc(4321L, i)
+      assert(MarkdownRender.render(d) == OracleMarkdownRender.render(d) &&
+        SpacingFix.probePage1Score(d) == OracleMarkdownRender.probePage1Score(d), s"doc $i")
+    }
+  }
+
   // ---- markdown -----------------------------------------------------------
 
   private val headingTexts = Seq("Analiza rezultatelor financiare", "Profit din exploatare",
@@ -301,8 +412,14 @@ class TransformOracleSpec extends AnyFunSuite {
     4 -> (for (lvl <- Gen.chooseNum(1, 7); h <- Gen.oneOf(headingTexts); sp <- Gen.oneOf(" ", "  ", "\t", ""))
       yield "#" * lvl + sp + h),
     2 -> Gen.oneOf("<!-- page: 3 -->", "<!--page:12-->", "[//]: # (page: 2)", "**[Page 4]**",
-      "** [page: 5] **", "**bold** text"),
-    2 -> Gen.oneOf("<!-- image -->", "  <!-- image -->  ", " <!-- image -->", "\u00A0<!-- image -->", "<!--image-->x"),
+      "** [page: 5] **", "**bold** text", "***", "**", "** **", "****[Page 2]**", "**[Page]**",
+      "** [page 3]", "**[Page 4]** tail", "x **[Page 6]**"),
+    2 -> Gen.oneOf("<!-- image -->", "  <!-- image -->  ", " <!-- image -->", "\u00A0<!-- image -->", "<!--image-->x",
+      "\u2028<!-- image -->", "<!-- image -->\u00A0", "\u0085<!-- image -->\u2029", "\u202F<!--\u00A0image-->"),
+    // non-ASCII first letters, NBSP and U+2028 ahead of text, headings and markers
+    2 -> Gen.oneOf("Ședința consiliului 2024", "Țintele pentru 2025", "Î 5 RON", "ÎNDATORARE NETĂ",
+      "\u00A0Ședința", "\u00A0# Profit din exploatare", "\u2028Text după separator",
+      "\u2028## Perspective si riscuri", "\u00A012 24 36", "Ș", "É 12%"),
     3 -> Gen.oneOf("CIFRA DE AFACERI", "ACTIVE CIRCULANTE", "PROFIT NET", "# CIFRA", "A B C D E F",
       "RON 158,06 MIL. (EUR 31,08 MIL.)", "+24,66% vs 9L 2024", "vs", "3 RON", "mil 5"),
     3 -> Gen.oneOf("0 20 40 60 80", "Q1 Q2 Q3 2025", "74% 9L 2025", "31.12.2024", "2024",
@@ -312,7 +429,7 @@ class TransformOracleSpec extends AnyFunSuite {
       "Structura Costurilor Operationale Noi", "lower case words here", "Ce urmeaza?"),
     3 -> (for (n <- Gen.chooseNum(0, 3); w <- Gen.listOfN(n, Gen.oneOf(wsChars))) yield w.mkString),
     2 -> (for (l <- cellGen; a <- sepGen; b <- sepGen) yield a + l + b))
-  private val pageGen: Gen[String] = for {
+  private val fullPageGen: Gen[String] = for {
     lead <- Gen.frequency(3 -> Gen.oneOf(headingTexts).map("## " + _), 1 -> lineGen)
     n <- Gen.chooseNum(0, 8)
     lines <- Gen.listOfN(n, lineGen)
@@ -320,11 +437,20 @@ class TransformOracleSpec extends AnyFunSuite {
     tail <- Gen.frequency(4 -> Gen.const(""), 1 -> Gen.oneOf("\n", "\n\n", " ", "\u0085", "\u2028", "\u00A0",
       " \u0085", "\r\n"))
   } yield lead + lines.zip(joins).map { case (l, j) => j + l }.mkString + tail
+  // now and then a page that is empty, blank or holds only a marker
+  private val pageGen: Gen[String] = Gen.frequency(8 -> fullPageGen,
+    1 -> Gen.oneOf("", " ", "\n", "\n\n", "**[Page 7]**", "<!-- page: 1 -->", "\n\n**[Page 2]**\n\n",
+      "[//]: # (page: 4)\n", "<!-- image -->"))
   private val markdownGen: Gen[String] = for {
     pages <- Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, pageGen))
     join <- Gen.frequency(4 -> Gen.const(s"\n\n${MarkdownPost.PageBreakPlaceholder}\n\n"),
       1 -> Gen.const(MarkdownPost.PageBreakPlaceholder), 1 -> Gen.const("\n\n"))
-  } yield pages.mkString(join)
+    // a placeholder as the very first or the very last text
+    lead <- Gen.frequency(6 -> Gen.const(""), 1 -> Gen.oneOf(MarkdownPost.PageBreakPlaceholder,
+      MarkdownPost.PageBreakPlaceholder + "\n\n", "\n" + MarkdownPost.PageBreakPlaceholder))
+    tail <- Gen.frequency(6 -> Gen.const(""), 1 -> Gen.oneOf(MarkdownPost.PageBreakPlaceholder,
+      "\n\n" + MarkdownPost.PageBreakPlaceholder, MarkdownPost.PageBreakPlaceholder + "\n"))
+  } yield lead + pages.mkString(join) + tail
 
   test("each markdown post pass matches the oracle") {
     check(Prop.forAll(markdownGen) { md =>
