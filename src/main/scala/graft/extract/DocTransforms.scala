@@ -55,17 +55,6 @@ object DocTransforms {
     if (cells == null) t else t.copy(cells = cells)
   }
 
-  // (startRow, startCol, endRow, endCol) without a key tuple per comparison
-  private val CellOrder: Ordering[TableCell] = new Ordering[TableCell] {
-    def compare(a: TableCell, b: TableCell): Int = {
-      var c = Integer.compare(a.startRow, b.startRow)
-      if (c == 0) c = Integer.compare(a.startCol, b.startCol)
-      if (c == 0) c = Integer.compare(a.endRow, b.endRow)
-      if (c == 0) c = Integer.compare(a.endCol, b.endCol)
-      c
-    }
-  }
-
   /** table_fixes.py:314-337 — header row must tile columns contiguously. */
   def headerColumnGroups(table: TableData): Option[List[(Int, Int)]] = {
     val headerCells = table.cells.filter(_.startRow == 0)
@@ -93,50 +82,74 @@ object DocTransforms {
       bboxes.head.origin))
   }
 
-  /** table_fixes.py:350-412 — collapse column groups defined by header spans. */
+  /** table_fixes.py:350-412 — collapse column groups defined by header spans.
+    * Cells that merge share a key (startRow, endRow, new start column, new
+    * end column), and the merged cells come out sorted by that key, so a
+    * stable sort of the cells by key, then by start column, puts each merge
+    * group in one run, in the order its text is joined in. */
   def collapseTableHeaderGroups(table: TableData): Option[TableData] = {
     headerColumnGroups(table) match {
       case None => None
       case Some(groups) =>
         val colMap = new Array[Int](table.numCols)
-        for (((start, end), newIdx) <- groups.zipWithIndex; c <- start until end)
-          colMap(c) = newIdx
-
-        // preserve insertion order of merge keys, mirroring dict semantics
-        val merged = scala.collection.mutable.LinkedHashMap
-          .empty[(Int, Int, Int, Int), scala.collection.mutable.ArrayBuffer[(TableCell, Int)]]
-        for (cell <- table.cells) {
-          val newStart = colMap(cell.startCol)
-          val newEnd = colMap(cell.endCol - 1) + 1
-          val key = (cell.startRow, cell.endRow, newStart, newEnd)
-          merged.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer.empty) +=
-            ((cell, cell.startCol))
+        var g = 0
+        for ((start, end) <- groups) {
+          var c = start
+          while (c < end) { colMap(c) = g; c += 1 }
+          g += 1
         }
-
-        val updated = merged.map { case ((rowStart, rowEnd, colStart, colEnd), cells) =>
-          val ordered = if (cells.length == 1) cells else cells.sortBy(_._2)
-          val mergedText =
-            if (ordered.length == 1) {
-              val t = ordered(0)._1.text
-              if (t == null || t.isBlank) "" else t.strip()
-            } else ordered.map(_._1.text).filter(t => t != null && !t.isBlank)
-              .map(_.strip()).mkString(" ").strip()
-          val mergedBbox =
-            if (ordered.length == 1) ordered(0)._1.bbox
-            else mergeBboxes(ordered.flatMap(_._1.bbox).toSeq)
-          TableCell(
-            startRow = rowStart, endRow = rowEnd, startCol = colStart, endCol = colEnd,
-            rowSpan = rowEnd - rowStart, colSpan = colEnd - colStart,
-            text = mergedText,
-            columnHeader = ordered.exists(_._1.columnHeader),
-            rowHeader = ordered.exists(_._1.rowHeader),
-            rowSection = ordered.exists(_._1.rowSection),
-            fillable = ordered.exists(_._1.fillable),
-            bbox = mergedBbox)
-        }.toArray
-
-        val sortedCells = updated.sorted(CellOrder)
-        Some(TableData(table.numRows, groups.length, sortedCells))
+        def newStart(cell: TableCell) = colMap(cell.startCol)
+        def newEnd(cell: TableCell) = colMap(cell.endCol - 1) + 1
+        // read every cell's key in cell order: one outside the columns
+        // fails the pass here
+        for (cell <- table.cells) { newStart(cell); newEnd(cell) }
+        val byKey: Ordering[TableCell] = new Ordering[TableCell] {
+          def compare(a: TableCell, b: TableCell): Int = {
+            var c = Integer.compare(a.startRow, b.startRow)
+            if (c == 0) c = Integer.compare(newStart(a), newStart(b))
+            if (c == 0) c = Integer.compare(a.endRow, b.endRow)
+            if (c == 0) c = Integer.compare(newEnd(a), newEnd(b))
+            if (c == 0) c = Integer.compare(a.startCol, b.startCol)
+            c
+          }
+        }
+        val cells = table.cells.sorted(byKey)
+        val merged = Array.newBuilder[TableCell]
+        var i = 0
+        while (i < cells.length) {
+          val head = cells(i)
+          var j = i + 1
+          while (j < cells.length && cells(j).startRow == head.startRow &&
+              newStart(cells(j)) == newStart(head) && cells(j).endRow == head.endRow &&
+              newEnd(cells(j)) == newEnd(head)) j += 1
+          var mergedText = head.text
+          var mergedBbox = head.bbox
+          if (j - i == 1) mergedText = if (mergedText == null || mergedText.isBlank) "" else mergedText.strip()
+          else {
+            val run = cells.slice(i, j)
+            mergedText = run.map(_.text).filter(t => t != null && !t.isBlank).map(_.strip())
+              .mkString(" ").strip()
+            mergedBbox = mergeBboxes(run.flatMap(_.bbox).toSeq)
+          }
+          var columnHeader, rowHeader, rowSection, fillable = false
+          var k = i
+          while (k < j) {
+            columnHeader ||= cells(k).columnHeader
+            rowHeader ||= cells(k).rowHeader
+            rowSection ||= cells(k).rowSection
+            fillable ||= cells(k).fillable
+            k += 1
+          }
+          val colStart = newStart(head)
+          val colEnd = newEnd(head)
+          merged += TableCell(
+            startRow = head.startRow, endRow = head.endRow, startCol = colStart, endCol = colEnd,
+            rowSpan = head.endRow - head.startRow, colSpan = colEnd - colStart,
+            text = mergedText, columnHeader = columnHeader, rowHeader = rowHeader,
+            rowSection = rowSection, fillable = fillable, bbox = mergedBbox)
+          i = j
+        }
+        Some(TableData(table.numRows, groups.length, merged.result()))
     }
   }
 
@@ -248,34 +261,71 @@ object DocTransforms {
 
   /** date_cleanup.py:73-126 / :129-182 — delete text items overlapping
     * picture bboxes (>= InsidePictureRatio of the text bbox area). Shared
-    * geometry core. */
+    * geometry core. One scan over the items finds the pictures with a bbox;
+    * they are ordered by page (stably) and each box is put in top-left
+    * coordinates once, so a text item is tested against its page's
+    * pictures, found by a binary search, with no map of pages. */
   private def removeTextInsidePictures(doc: Doc, predicate: String => Boolean): (Doc, Int) = {
-    val picturesByPage = doc.items
-      .filter(i => i.kind == ItemKind.Picture && i.bbox.nonEmpty)
-      .groupBy(_.pageNo)
-      .map { case (p, is) => p -> is.flatMap(_.bbox) }
-    if (picturesByPage.isEmpty) return (doc, 0)
-    val pageHeights = doc.pageHeights
+    val items = doc.items
+    val pictures = items.filter(i => i.kind == ItemKind.Picture && i.bbox.nonEmpty)
+    if (pictures.isEmpty) return (doc, 0)
+    val byPage = if (pictures.length == 1) pictures else pictures.sortBy(_.pageNo)
+    // picture j: its page and its top-left box at (4j .. 4j + 3)
+    val picPage = byPage.map(_.pageNo)
+    val picBox = new Array[Double](4 * byPage.length)
+    for (j <- byPage.indices) topLeft(doc, picPage(j), byPage(j).bbox.get, picBox, 4 * j)
 
-    val toDelete = scala.collection.mutable.Set.empty[Int]
-    for (item <- doc.items) {
+    var toDelete: scala.collection.mutable.Set[Int] = null
+    val tb = new Array[Double](4)
+    for (item <- items) {
       // the geometry is tested before the text predicate: both must hold,
       // and most text items have no bbox or no picture on their page
       if (item.kind != ItemKind.Table && item.kind != ItemKind.Picture &&
           item.text != null && item.text.nonEmpty && item.bbox.nonEmpty) {
-        picturesByPage.get(item.pageNo).foreach { boxes =>
-          val h = pageHeights.get(item.pageNo)
-          val tb = h.map(item.bbox.get.toTopLeft).getOrElse(item.bbox.get)
-          val hit = boxes.exists { pb =>
-            val apb = h.map(pb.toTopLeft).getOrElse(pb)
-            KpiAxis.overlapRatio(tb.l, tb.t, tb.r, tb.b, apb.l, apb.t, apb.r, apb.b) >= InsidePictureRatio
+        var p = firstOnPage(picPage, item.pageNo)
+        var hit = false
+        if (p < picPage.length && picPage(p) == item.pageNo) {
+          topLeft(doc, item.pageNo, item.bbox.get, tb, 0)
+          while (!hit && p < picPage.length && picPage(p) == item.pageNo) {
+            val q = 4 * p
+            hit = KpiAxis.overlapRatio(tb(0), tb(1), tb(2), tb(3),
+              picBox(q), picBox(q + 1), picBox(q + 2), picBox(q + 3)) >= InsidePictureRatio
+            p += 1
           }
-          if (hit && predicate(item.text)) toDelete += item.idx
+        }
+        if (hit && predicate(item.text)) {
+          if (toDelete == null) toDelete = scala.collection.mutable.Set.empty[Int]
+          toDelete += item.idx
         }
       }
     }
-    if (toDelete.isEmpty) (doc, 0)
-    else (doc.copy(items = doc.items.filterNot(i => toDelete.contains(i.idx))), toDelete.size)
+    if (toDelete == null) (doc, 0)
+    else (doc.copy(items = items.filterNot(i => toDelete.contains(i.idx))), toDelete.size)
+  }
+
+  /** The first index of the sorted `pages` that is not below `page`. */
+  private def firstOnPage(pages: Array[Int], page: Int): Int = {
+    var lo = 0
+    var hi = pages.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (pages(mid) < page) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** Writes `b` in top-left coordinates (`Bbox.toTopLeft` with the height of
+    * page `pageNo`, the last one listed, or `b` as it is when the page is
+    * not listed) into out(at .. at + 3). */
+  private def topLeft(doc: Doc, pageNo: Int, b: Bbox, out: Array[Double], at: Int): Unit = {
+    var k = doc.pages.length - 1
+    while (k >= 0 && doc.pages(k).pageNo != pageNo) k -= 1
+    if (k < 0 || b.origin == Bbox.TopLeft) {
+      out(at) = b.l; out(at + 1) = b.t; out(at + 2) = b.r; out(at + 3) = b.b
+    } else {
+      val h = doc.pages(k).height
+      out(at) = b.l; out(at + 1) = h - b.t; out(at + 2) = b.r; out(at + 3) = h - b.b
+    }
   }
 
   def removeDateOnlyTextInsidePictures(doc: Doc): (Doc, Int) =
@@ -288,19 +338,25 @@ object DocTransforms {
 
   /** whitespace_fix.py:23-38 */
   def normalizeDocTextWhitespace(doc: Doc): (Doc, Int) = {
+    var items: Array[DocItem] = null // copied at the first change
     var updated = 0
-    val items = doc.items.map { item =>
-      if (item.kind == ItemKind.Table || item.kind == ItemKind.Picture ||
-          item.text == null || item.text.isEmpty) item
-      else {
+    var k = 0
+    while (k < doc.items.length) {
+      val item = doc.items(k)
+      if (item.kind != ItemKind.Table && item.kind != ItemKind.Picture &&
+          item.text != null && item.text.nonEmpty) {
         var normalized = Whitespace.normalizeTextWhitespace(item.text)
         normalized = TextNormalize.normalizeMojibakeText(normalized)
         normalized = TextNormalize.normalizeLigatures(normalized)
-        if (normalized != item.text) { updated += 1; item.copy(text = normalized) }
-        else item
+        if (normalized != item.text) {
+          updated += 1
+          if (items == null) items = doc.items.clone()
+          items(k) = item.copy(text = normalized)
+        }
       }
+      k += 1
     }
-    (if (updated == 0) doc else doc.copy(items = items), updated)
+    (if (items == null) doc else doc.copy(items = items), updated)
   }
 
   /** Greedy first-unused table pairing by (page, shape), then keyed cell merge.

@@ -310,8 +310,15 @@ object Pipeline {
   private[graft] case class BucketWriterSetup(serializer: Seq[Expression],
                                              conf: Map[String, String])
 
+  /** The encoders of [[extract]]'s input and output rows and of the
+    * commit's bucket stats, derived by Scala reflection once per JVM rather
+    * than on every commit. */
+  private lazy val InputEncoder = ExpressionEncoder[(String, Array[Byte], String, Int)]()
+  private lazy val RowEncoder = ExpressionEncoder[ExtractedRow]()
+  private lazy val StatsEncoder = ExpressionEncoder[(Int, Long, Long, Long, Long, Long)]()
+
   private[graft] def bucketWriterSetup(spark: SparkSession): BucketWriterSetup = {
-    val enc = ExpressionEncoder[ExtractedRow]()
+    val enc = RowEncoder
     val (fields, exprs) = enc.schema.zip(enc.serializer).filter(_._1.name != "bucket").unzip
     val job = Job.getInstance(new Configuration(false))
     new ParquetFileFormat().prepareWrite(spark, job, Map.empty, StructType(fields))
@@ -425,14 +432,14 @@ object Pipeline {
           $"bucket")
       else pruned
     placed
-      .as[(String, Array[Byte], String, Int)]
+      .as(InputEncoder)
       .mapPartitions { it =>
         // batched per-partition loop: compiled regex/state lives in JVM-static
         // textkit objects, so per-row cost is parse + transforms only
         it.map { case (url, html, lang, bucket) =>
           extractOne(url, html, lang, bucket, opts)
         }
-      }
+      }(RowEncoder)
   }
 
   /** Extraction + resumable bucketed write with a lineage manifest.
@@ -454,7 +461,6 @@ object Pipeline {
   def extractAndCommit(spark: SparkSession, pages: DataFrame, outDir: String,
                        numBuckets: Int = DefaultBuckets): (String, Long) = {
     import graft.lineage.Lineage
-    import spark.implicits._
     // one manifest read serves the resume set, the carried-over stats and
     // the id this commit's data files and manifest both get
     val latest = Lineage.latest(outDir)
@@ -483,7 +489,7 @@ object Pipeline {
     val data = dataDir.toString
     val written = extract(spark, pages, numBuckets, skipBuckets = done)
       .mapPartitions(rows => writeBuckets(rows, data, snapshot,
-        org.apache.spark.TaskContext.get().taskAttemptId(), setup))
+        org.apache.spark.TaskContext.get().taskAttemptId(), setup))(StatsEncoder)
       .collect()
     require(written.map(_._1).distinct.length == written.length,
       s"a bucket was written by more than one task: ${written.map(_._1).sorted.toSeq}")

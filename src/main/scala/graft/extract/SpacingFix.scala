@@ -181,21 +181,25 @@ object SpacingFix {
   }
 
   /** picture_kpi_extract.py:196-250 — attach KPI-like picture text as
-    * captions (max 30/doc, skipped when already present in the doc text). */
+    * captions (max 30/doc, skipped when already present in the doc text).
+    * Until the first caption is added nothing is copied: the items are
+    * copied into the new item array only then. */
   def addPictureKpiCaptions(doc: Doc, pictureText: (Int, Bbox) => String): (Doc, Int) = {
     // rendered when the first KPI candidate needs it: most pictures have no
     // KPI text, and then the document's text is never looked at
-    lazy val docText = MarkdownRender.renderPlainText(doc).toLowerCase(java.util.Locale.ROOT)
+    lazy val docText = MarkdownRender.lowerPlainText(doc)
+    val items = doc.items
+    var out: scala.collection.mutable.ArrayBuffer[DocItem] = null
+    var nextIdx = 0
     var added = 0
-    val out = scala.collection.mutable.ArrayBuffer.empty[DocItem]
-    var nextIdx = doc.items.map(_.idx).foldLeft(0)(math.max) + 1
-    for ((item, pos) <- doc.items.zipWithIndex) {
-      out += item
+    var pos = 0
+    while (pos < items.length) {
+      val item = items(pos)
+      if (out != null) out += item
       // pictures that already have a caption are skipped
       // (picture_kpi_extract.py:213 `if item.captions: continue`) — in our
       // tree a picture's caption is the immediately following caption item
-      val hasCaption = pos + 1 < doc.items.length &&
-        doc.items(pos + 1).label == Label.Caption
+      val hasCaption = pos + 1 < items.length && items(pos + 1).label == Label.Caption
       if (added < MaxKpiCaptions && item.kind == ItemKind.Picture && item.bbox.nonEmpty &&
           !hasCaption) {
         var raw = pictureText(item.pageNo, item.bbox.get)
@@ -205,6 +209,12 @@ object SpacingFix {
           if (raw.nonEmpty && KpiAxis.isKpiText(raw)) {
             val normalized = raw.toLowerCase(java.util.Locale.ROOT)
             if (normalized.nonEmpty && !docText.contains(normalized)) {
+              if (out == null) {
+                out = new scala.collection.mutable.ArrayBuffer[DocItem](items.length + 4)
+                var k = 0
+                while (k <= pos) { out += items(k); k += 1 }
+                nextIdx = items.foldLeft(0)((m, i) => math.max(m, i.idx)) + 1
+              }
               out += DocItem(nextIdx, ItemKind.Text, Label.Caption, ContentLayer.Body,
                 item.pageNo, None, raw, None)
               nextIdx += 1
@@ -213,21 +223,27 @@ object SpacingFix {
           }
         }
       }
+      pos += 1
     }
-    (if (added == 0) doc else doc.copy(items = out.toArray), added)
+    (if (out == null) doc else doc.copy(items = out.toArray), added)
   }
 
   /** addPictureKpiCaptions specialization for the pipeline: the picture
     * item's own text field carries the region text (parsed from the
     * data-picture-text channel). Active only when some picture has text —
-    * the KPI_OCR-enabled analog. */
+    * the KPI_OCR-enabled analog. A picture's text is that of the last
+    * picture with its page and bbox, found by a scan back over the
+    * pictures. */
   def addPictureKpiCaptionsFromItems(doc: Doc): (Doc, Int) = {
     if (!doc.items.exists(i => i.kind == ItemKind.Picture && i.text != null && i.text.nonEmpty))
       (doc, 0)
     else {
-      val byKey = doc.items.filter(_.kind == ItemKind.Picture)
-        .map(i => (i.pageNo, i.bbox) -> Option(i.text).getOrElse("")).toMap
-      addPictureKpiCaptions(doc, (p, b) => byKey.getOrElse((p, Some(b)), ""))
+      val pictures = doc.items.filter(_.kind == ItemKind.Picture)
+      addPictureKpiCaptions(doc, { (page, bbox) =>
+        var k = pictures.length - 1
+        while (k >= 0 && !(pictures(k).pageNo == page && pictures(k).bbox.contains(bbox))) k -= 1
+        if (k < 0 || pictures(k).text == null) "" else pictures(k).text
+      })
     }
   }
 
@@ -250,9 +266,6 @@ object SpacingFix {
   }
 
   /** Page-1 markdown quality of an already-parsed view. */
-  def probePage1Score(doc: Doc): Int = {
-    val firstPage = if (doc.pages.isEmpty) 1 else doc.pages(0).pageNo
-    val page1 = doc.copy(items = doc.items.filter(_.pageNo == firstPage))
-    Quality.scoreMarkdown(MarkdownRender.render(page1)).score
-  }
+  def probePage1Score(doc: Doc): Int =
+    Quality.scoreMarkdown(MarkdownRender.renderFirstPage(doc)).score
 }

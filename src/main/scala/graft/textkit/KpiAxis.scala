@@ -67,17 +67,45 @@ object KpiAxis {
   private val ParenOpenWs = re("\\(\\s+")
   private val WsParenClose = re("\\s+\\)")
   private val MilRon = reI("(\\b\\d[\\d.,]*\\s*mil\\.?)\\s+ron\\b")
-  /** picture_kpi_extract.py:122-134 — join multi-line caption, tighten punctuation. */
+  /** picture_kpi_extract.py:122-134 — join multi-line caption, tighten
+    * punctuation. Each substitution runs only where its pattern can match:
+    * a `\s` run that is not one ' ', a `\s` before `,.;:%`, a `(` before or
+    * a `)` after a `\s`, and an ASCII "ron" (no other char folds to r, o or
+    * n). */
   def normalizeKpiCaption(text: String): String = {
     val lines = splitLines(text).map(_.strip()).filter(_.nonEmpty)
     if (lines.isEmpty) return ""
     var joined = lines.mkString(" ")
-    joined = sub(WsRun, " ", joined).strip()
-    joined = sub(WsBeforePunct, "$1", joined)
-    joined = sub(ParenOpenWs, "(", joined)
-    joined = sub(WsParenClose, ")", joined)
-    joined = sub(MilRon, "RON $1", joined)
+    var wsRun, wsPunct, parenWs, wsParen = false
+    var i = 0
+    while (i < joined.length) {
+      val c = joined.charAt(i)
+      if (isUniWs(c)) {
+        val next = if (i + 1 < joined.length) joined.charAt(i + 1) else 'x'
+        if (c != ' ' || isUniWs(next)) wsRun = true
+        if (",.;:%".indexOf(next) >= 0) wsPunct = true
+        if (next == ')') wsParen = true
+        if (i > 0 && joined.charAt(i - 1) == '(') parenWs = true
+      }
+      i += 1
+    }
+    if (wsRun) joined = sub(WsRun, " ", joined)
+    joined = joined.strip()
+    if (wsPunct) joined = sub(WsBeforePunct, "$1", joined)
+    if (parenWs) joined = sub(ParenOpenWs, "(", joined)
+    if (wsParen) joined = sub(WsParenClose, ")", joined)
+    if (containsRon(joined)) joined = sub(MilRon, "RON $1", joined)
     joined
+  }
+
+  private def containsRon(s: String): Boolean = {
+    var i = 0
+    while (i + 3 <= s.length) {
+      if ((s.charAt(i) | 0x20) == 'r' && (s.charAt(i + 1) | 0x20) == 'o' && (s.charAt(i + 2) | 0x20) == 'n')
+        return true
+      i += 1
+    }
+    false
   }
 
   /** Geometry shared by the spatial semi-joins

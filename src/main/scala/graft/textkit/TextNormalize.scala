@@ -1,6 +1,6 @@
 package graft.textkit
 
-import java.nio.charset.{Charset, CharsetEncoder, CodingErrorAction, CharacterCodingException, StandardCharsets}
+import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 import java.nio.{ByteBuffer, CharBuffer}
 
 /** Encoding-artifact repair.
@@ -12,15 +12,27 @@ object TextNormalize {
   private val LigatureMap = List(
     "ﬁ" -> "fi", "ﬂ" -> "fl", "ﬀ" -> "ff", "ﬃ" -> "ffi", "ﬄ" -> "ffl")
 
-  // CP1252 positions with no assigned character. CPython's cp1252 codec
-  // refuses to encode these (our strict-encode mirror must too); the JDK's
-  // windows-1252 encoder would silently pass them through as C1 bytes.
-  private def isCp1252Undefined(c: Char): Boolean =
-    c == '\u0081' || c == '\u008D' || c == '\u008F' || c == '\u0090' || c == '\u009D'
+  private val Cp1252 = Charset.forName("windows-1252")
 
-  private val Attempts = Seq(
-    (Charset.forName("windows-1252"), true),
-    (StandardCharsets.ISO_8859_1, false))
+  /** The chars a strict windows-1252 encode accepts, as CPython's cp1252
+    * codec has them: the JDK's encoder also passes the five unassigned
+    * positions (U+0081, U+008D, U+008F, U+0090, U+009D) through as C1
+    * bytes, which CPython refuses. No surrogate, paired or not, is in the
+    * set. */
+  private val Cp1252Encodable: java.util.BitSet = {
+    val encoder = Cp1252.newEncoder()
+    val chars = new java.util.BitSet(0x10000)
+    var c = 0
+    while (c < 0x10000) {
+      if (encoder.canEncode(c.toChar)) chars.set(c)
+      c += 1
+    }
+    for (undefined <- Seq(0x81, 0x8D, 0x8F, 0x90, 0x9D)) chars.clear(undefined)
+    chars
+  }
+
+  /** The round trips tried, in order: CP1252 (true), then Latin-1. */
+  private val Attempts = Seq(true, false)
 
   /** text_normalize.py:16-26 */
   def mojibakeScore(text: String): Int = {
@@ -50,21 +62,24 @@ object TextNormalize {
     count
   }
 
-  /** Strict `text.encode(enc).decode('utf-8')` round trip, None on failure. */
-  private def roundTrip(text: String, charset: Charset, cp1252Mode: Boolean): Option[String] = {
-    if (cp1252Mode && text.exists(isCp1252Undefined)) return None
-    try {
-      val encoder: CharsetEncoder = charset.newEncoder()
-        .onMalformedInput(CodingErrorAction.REPORT)
-        .onUnmappableCharacter(CodingErrorAction.REPORT)
-      val bytes: ByteBuffer = encoder.encode(CharBuffer.wrap(text))
-      val decoder = StandardCharsets.UTF_8.newDecoder()
-        .onMalformedInput(CodingErrorAction.REPORT)
-        .onUnmappableCharacter(CodingErrorAction.REPORT)
-      Some(decoder.decode(bytes).toString)
-    } catch {
-      case _: CharacterCodingException => None
+  /** Strict `text.encode(enc).decode('utf-8')` round trip, null on failure.
+    * An encode that must fail is found by a scan for a char the charset
+    * lacks, so it is never tried; the decode reports malformed input as a
+    * result, not an exception. */
+  private def roundTrip(text: String, cp1252: Boolean): String = {
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (if (cp1252) !Cp1252Encodable.get(c) else c > 'ÿ') return null
+      i += 1
     }
+    val bytes = text.getBytes(if (cp1252) Cp1252 else StandardCharsets.ISO_8859_1)
+    val decoder = StandardCharsets.UTF_8.newDecoder()
+      .onMalformedInput(CodingErrorAction.REPORT)
+      .onUnmappableCharacter(CodingErrorAction.REPORT)
+    val out = CharBuffer.allocate(bytes.length)
+    if (decoder.decode(ByteBuffer.wrap(bytes), out, true).isError || decoder.flush(out).isError) null
+    else out.flip().toString
   }
 
   /** text_normalize.py:33-64 — CP1252/Latin-1 mojibake round-trip repair. */
@@ -77,19 +92,18 @@ object TextNormalize {
     var best = text
     var bestScore = baseScore
 
-    for ((cs, cpMode) <- Attempts) {
-      roundTrip(text, cs, cpMode) match {
-        case Some(candidate) if candidate != text =>
-          val candScore = mojibakeScore(candidate)
-          if (candScore < bestScore) {
-            val candDiacritics = romanianDiacriticCount(candidate)
-            val lengthOk = candidate.length >= math.max(4, (text.length * 0.9).toInt)
-            if (!(candDiacritics < baseDiacritics + 1 && candScore >= 2) && lengthOk) {
-              best = candidate
-              bestScore = candScore
-            }
+    for (cp1252 <- Attempts) {
+      val candidate = roundTrip(text, cp1252)
+      if (candidate != null && candidate != text) {
+        val candScore = mojibakeScore(candidate)
+        if (candScore < bestScore) {
+          val candDiacritics = romanianDiacriticCount(candidate)
+          val lengthOk = candidate.length >= math.max(4, (text.length * 0.9).toInt)
+          if (!(candDiacritics < baseDiacritics + 1 && candScore >= 2) && lengthOk) {
+            best = candidate
+            bestScore = candScore
           }
-        case _ =>
+        }
       }
     }
     best

@@ -344,6 +344,43 @@ class TransformOracleSpec extends AnyFunSuite {
     assert(captioned > Cases / 20 && declined > Cases / 50, s"captioned $captioned, declined $declined")
   }
 
+  test("normalizeTextWhitespace matches its two regexes run unguarded") {
+    val multiSpaceBetween = Py.re("(?<=\\S)[ \\t]{2,}(?=\\S)")
+    val trailingRatio = Py.re("\\b([A-Z])\\s+([A-Z])\\b$")
+    val ratioGen: Gen[String] = for {
+      lead <- Gen.frequency(3 -> cellGen, 1 -> Gen.oneOf("", "Gradul de indatorare", "x_", "é", "e\u0301",
+        "\uD835\uDC00", "\u00A0", "a\t\tb", "a \u00A0 b", "\n", "x  "))
+      a <- Gen.oneOf("A", "B", "a", "É", "1", "_")
+      ws <- Gen.frequency(4 -> sepGen, 1 -> Gen.const(" \t "))
+      b <- Gen.oneOf("B", "Z", "b", "Ü", "2")
+      end <- Gen.frequency(6 -> Gen.const(""), 1 -> Gen.oneOf("\n", "\r\n", "\r", "\u0085", "\u2028", " "))
+    } yield lead + Gen.oneOf(" ", "", "\u00A0").sample.getOrElse(" ") + a + ws + b + end
+    check(Prop.forAll(Gen.frequency(1 -> cellGen, 2 -> ratioGen)) { s =>
+      same("normalizeTextWhitespace", Whitespace.normalizeTextWhitespace(s),
+        Py.sub(trailingRatio, "$1/$2", Py.sub(multiSpaceBetween, " ", s)), s)
+    })
+  }
+
+  test("normalizeKpiCaption matches its regex chain run unguarded") {
+    def unguarded(text: String): String = {
+      val lines = Py.splitLines(text).map(_.strip()).filter(_.nonEmpty)
+      if (lines.isEmpty) return ""
+      var joined = lines.mkString(" ")
+      joined = Py.sub(Py.re("\\s+"), " ", joined).strip()
+      joined = Py.sub(Py.re("\\s+([,.;:%])"), "$1", joined)
+      joined = Py.sub(Py.re("\\(\\s+"), "(", joined)
+      joined = Py.sub(Py.re("\\s+\\)"), ")", joined)
+      Py.sub(Py.reI("(\\b\\d[\\d.,]*\\s*mil\\.?)\\s+ron\\b"), "RON $1", joined)
+    }
+    val captionGen: Gen[String] = Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      4 -> Gen.oneOf(kpiTexts), 3 -> Gen.oneOf("(", ")", ",", ".", ";", ":", "%", "( ", " )", " ,", "12 mil",
+        "12,5 MIL.", "ron", "Ron", "RONx", "rOn", "\u0280on", "mil.", "\n"),
+      2 -> sepGen, 2 -> cellGen))).map(_.mkString)
+    check(Prop.forAll(captionGen) { s =>
+      same("normalizeKpiCaption", KpiAxis.normalizeKpiCaption(s), unguarded(s), s)
+    })
+  }
+
   test("applyAll matches the oracle chain on SyntheticPages documents") {
     for (i <- 0L until 300L) {
       val d = graft.sources.SyntheticPages.dirtyDoc(1234L, i)

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Per-layer CPU shares from a JFR recording of the extraction engine.
+"""Per-layer CPU and allocation shares from a JFR recording of the
+extraction engine.
 
 Usage:
   python3 tools/jfr_layers.py <recording.jfr>
@@ -7,8 +8,13 @@ Usage:
 Reads the recording's jdk.ExecutionSample events through
 `jfr print --json --stack-depth 1024 --events jdk.ExecutionSample` and prints,
 for each layer, the share of executor-thread samples whose stack holds one of
-the layer's frames. Layers nest (a cell-clean sample also counts towards
-`transforms` and `extract_one`), so the shares do not add up to 100%.
+the layer's frames. Next to it goes the layer's share of executor-thread
+allocation: the summed `weight` (bytes the sampler stands for) of the
+jdk.ObjectAllocationSample events whose stack holds one of the layer's
+frames, over the summed weight of all such events on executor threads (the
+`profile` settings record them). Layers nest (a cell-clean sample also
+counts towards `transforms` and `extract_one`), so neither column adds up to
+100%.
 It then counts the recording's jdk.ProcessStart events on executor threads
 per command: Hadoop's local filesystem without its native library starts a
 `chmod` process for every file and directory it creates. Last, it prints the
@@ -132,43 +138,60 @@ def frame_key(frame):
     return cls, method.get("name") or ""
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("recording")
-    a = ap.parse_args()
+def layer_weights(recording, event, thread_field, weight):
+    """Sums `weight(values)` over the executor-thread events of one type,
+    in total and per layer whose frame the event's stack holds; returns
+    (events, truncated stacks, total, {layer: sum})."""
     proc = subprocess.Popen(
-        ["jfr", "print", "--json", "--stack-depth", "1024", "--events", "jdk.ExecutionSample",
-         a.recording], stdout=subprocess.PIPE, text=True)
-    total = 0
+        ["jfr", "print", "--json", "--stack-depth", "1024", "--events", event, recording],
+        stdout=subprocess.PIPE, text=True)
+    count = 0
     truncated = 0
-    hits = {name: 0 for name, _, _ in LAYERS}
+    total = 0
+    sums = {name: 0 for name, _, _ in LAYERS}
     keys_seen = {}
     for ev in events(proc.stdout):
         vals = ev.get("values") or {}
-        name = ((vals.get("sampledThread") or {}).get("javaName")) or ""
+        name = ((vals.get(thread_field) or {}).get("javaName")) or ""
         if not EXECUTOR_THREADS.match(name):
             continue
         stack = vals.get("stackTrace") or {}
-        total += 1
+        w = weight(vals)
+        count += 1
+        total += w
         truncated += bool(stack.get("truncated"))
         keys = {frame_key(f) for f in stack.get("frames") or []}
         for layer, cre, mre in COMPILED:
-            hit = False
             for k in keys:
                 memo = keys_seen.get((layer, k))
                 if memo is None:
                     memo = bool(cre.match(k[0]) and mre.match(k[1]))
                     keys_seen[(layer, k)] = memo
                 if memo:
-                    hit = True
+                    sums[layer] += w
                     break
-            hits[layer] += hit
     if proc.wait() != 0:
         sys.exit(f"jfr print failed with exit code {proc.returncode}")
-    print(f"executor-thread samples: {total} (truncated stacks: {truncated})")
+    return count, truncated, total, sums
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("recording")
+    a = ap.parse_args()
+    total, truncated, _, hits = layer_weights(a.recording, "jdk.ExecutionSample",
+                                              "sampledThread", lambda _: 1)
+    allocs, alloc_truncated, alloc_bytes, alloc = layer_weights(
+        a.recording, "jdk.ObjectAllocationSample", "eventThread",
+        lambda vals: byte_count(vals.get("weight")))
+    print(f"executor-thread samples: {total} (truncated stacks: {truncated}); "
+          f"allocation samples: {allocs} standing for {alloc_bytes / 1048576:.0f} MB "
+          f"(truncated stacks: {alloc_truncated})")
+    print(f"{'layer':28s} {'cpu':>7s} {'samples':>8s} {'alloc':>7s}")
     for layer, _, _ in LAYERS:
         share = hits[layer] / total if total else 0.0
-        print(f"{layer:28s} {share * 100:6.1f}%  {hits[layer]:7d}")
+        alloc_share = alloc[layer] / alloc_bytes if alloc_bytes else 0.0
+        print(f"{layer:28s} {share * 100:6.1f}%  {hits[layer]:7d} {alloc_share * 100:6.1f}%")
 
     proc = subprocess.Popen(
         ["jfr", "print", "--json", "--stack-depth", "1", "--events", "jdk.ProcessStart",
@@ -198,6 +221,19 @@ def main():
               f"compiler threads ({len(spent)} jdk.CompilerStatistics events)")
     else:
         print("JIT compile time: fewer than two jdk.CompilerStatistics events")
+
+
+def byte_count(value):
+    """A jfr JSON data amount in bytes: a number, or a string such as
+    "1.5 MB" or "812 bytes"."""
+    if isinstance(value, (int, float)):
+        return float(value)
+    m = re.fullmatch(r"([\d.]+)\s*(bytes|byte|[kMGT]i?B)?", (value or "").strip())
+    if not m:
+        return 0.0
+    scale = {None: 1, "bytes": 1, "byte": 1, "kB": 1e3, "MB": 1e6, "GB": 1e9, "TB": 1e12,
+             "kiB": 1024, "KiB": 1024, "MiB": 1024 ** 2, "GiB": 1024 ** 3, "TiB": 1024 ** 4}
+    return float(m.group(1)) * scale.get(m.group(2), 1)
 
 
 def millis(value):
