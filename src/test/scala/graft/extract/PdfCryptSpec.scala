@@ -93,6 +93,19 @@ class PdfCryptSpec extends AnyFunSuite {
     assert(textOf(rc4Pdf("")) == "SECRET")
   }
 
+  test("/Encrypt and /ID in only one of two trailers still decrypt") {
+    val pdf = new String(rc4Pdf(""), ISO_8859_1)
+    val t = pdf.lastIndexOf("trailer")
+    val full = pdf.substring(t, pdf.indexOf(">>", t) + 2)
+    val bare = "trailer\n<< /Size 7 /Root 1 0 R >>"
+    // an incremental update whose trailer repeats neither entry
+    val later = pdf + bare + "\n%%EOF\n"
+    assert(textOf(later.getBytes(ISO_8859_1)) == "SECRET")
+    // the first trailer holds neither entry, the second holds both
+    val earlier = pdf.substring(0, t) + bare + "\n" + pdf.substring(t)
+    assert(textOf(earlier.getBytes(ISO_8859_1)) == "SECRET")
+  }
+
   test("RC4 with a REAL user password degrades to no text, never throws") {
     val pdf = rc4Pdf("secret")
     assert(textOf(pdf).isEmpty)

@@ -402,4 +402,31 @@ class PdfDocSpec extends AnyFunSuite {
     assert(new PdfDoc.Document(image).pages.map(p => (p.width, p.height, p.pseudo)) ==
       Seq((300.0, 200.0, false)))
   }
+
+  test("two classic trailers with different /Root: the last trailer's page tree is read") {
+    def pdf(objs: String*): String = "%PDF-1.4\n" + objs.zipWithIndex.map {
+      case (o, i) => s"${i + 1} 0 obj\n$o\nendobj\n"
+    }.mkString
+    def stream(body: String) = s"<< /Length ${body.length} >>\nstream\n$body\nendstream"
+    def page(parent: Int, w: Int, contents: Int) =
+      s"<< /Type /Page /Parent $parent 0 R /MediaBox [ 0 0 $w 200 ] " +
+        s"/Contents $contents 0 R /Resources << /Font << /F1 9 0 R >> >> >>"
+    val body = pdf(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Count 1 /Kids [ 3 0 R ] >>", page(2, 300, 4),
+      stream("BT /F1 12 Tf 10 150 Td (Old) Tj ET"),
+      "<< /Type /Catalog /Pages 6 0 R >>",
+      "<< /Type /Pages /Count 1 /Kids [ 7 0 R ] >>", page(6, 400, 8),
+      stream("BT /F1 12 Tf 10 150 Td (New) Tj ET"),
+      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    def withTrailers(roots: Int*): Array[Byte] = (body + roots.map(r =>
+      s"trailer\n<< /Size 10 /Root $r 0 R >>\n%%EOF\n").mkString).getBytes(ISO_8859_1)
+    val updated = withTrailers(1, 5)
+    assert(new PdfDoc.Document(updated).pages.map(p => (p.pageNo, p.width)) == Seq((1, 400.0)))
+    assert(PdfDoc.extractGlyphsAuto(updated)(1).map(_.c).mkString == "New")
+    // the order of the trailers decides, not which catalog comes first
+    val reverted = withTrailers(5, 1)
+    assert(new PdfDoc.Document(reverted).pages.map(p => (p.pageNo, p.width)) == Seq((1, 300.0)))
+    assert(PdfDoc.extractGlyphsAuto(reverted)(1).map(_.c).mkString == "Old")
+  }
 }

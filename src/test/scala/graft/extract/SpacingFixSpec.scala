@@ -53,6 +53,93 @@ class SpacingFixSpec extends AnyFunSuite {
     assert(fixed.items(0).text == phrase)
   }
 
+  private def cell(col: Int, text: String, bbox: Option[Bbox]): TableCell =
+    TableCell(0, 1, col, col + 1, 1, 1, text,
+      columnHeader = false, rowHeader = false, rowSection = false, fillable = false, bbox = bbox)
+
+  private def tableOf(cells: TableCell*): Doc =
+    Doc("u", Array(DocItem(0, ItemKind.Table, Label.Table, ContentLayer.Body, 1, None, "",
+      Some(TableData(1, cells.length, cells.toArray)))), Array(PageDim(1, 0, 800)))
+
+  private def cellTexts(doc: Doc): Seq[String] =
+    doc.items.toSeq.flatMap(_.table).flatMap(_.cells.map(_.text))
+
+  /** `phrase` laid out as glyphs from x = `x0`, with its clip box. */
+  private def layOutAt(phrase: String, x0: Double): (Seq[Glyph], Bbox) = {
+    val (glyphs, bbox) = layOut(phrase)
+    (glyphs.map(g => g.copy(x0 = g.x0 + x0, x1 = g.x1 + x0)),
+      bbox.copy(l = bbox.l + x0, r = bbox.r + x0))
+  }
+
+  test("fillCellsFromGlyphs restores an empty cell from the page's glyphs") {
+    val (glyphs, bbox) = layOut("Total")
+    val (out, n) = SpacingFix.fillCellsFromGlyphs(tableOf(cell(0, "", Some(bbox))), Map(1 -> glyphs))
+    assert(n == 1)
+    assert(cellTexts(out) == Seq("Total"))
+  }
+
+  test("fillCellsFromGlyphs restores a lone dash just outside the box through the 3x pad retry") {
+    // the dash's centre sits 2 points right of the box: outside the 1-point
+    // pad, inside the 3-point one
+    val dash = Glyph("-", 11.5, 0, 12.5, 2.0)
+    val bbox = Bbox(0, 0, 10, 2, Bbox.TopLeft)
+    val (out, n) = SpacingFix.fillCellsFromGlyphs(tableOf(cell(0, "", Some(bbox))), Map(1 -> Seq(dash)))
+    assert(n == 1)
+    assert(cellTexts(out) == Seq("-"))
+    // without the retry's reach the cell stays empty
+    val far = dash.copy(x0 = 13.5, x1 = 14.5)
+    val (kept, k) = SpacingFix.fillCellsFromGlyphs(tableOf(cell(0, "", Some(bbox))), Map(1 -> Seq(far)))
+    assert(k == 0)
+    assert(cellTexts(kept) == Seq(""))
+  }
+
+  test("fillCellsFromGlyphs replaces a suspect currency cell and keeps a valid one") {
+    val (suspectGlyphs, suspectBox) = layOutAt("EUR 6.961.310", 0)
+    val (validGlyphs, validBox) = layOutAt("RON 12.345", 100)
+    val doc = tableOf(cell(0, "EUR .961.31", Some(suspectBox)), cell(1, "RON 71.371", Some(validBox)))
+    val (out, n) = SpacingFix.fillCellsFromGlyphs(doc, Map(1 -> (suspectGlyphs ++ validGlyphs)))
+    assert(n == 1)
+    assert(cellTexts(out) == Seq("EUR 6.961.310", "RON 71.371"))
+  }
+
+  test("fillCellsFromGlyphs declines a spaced reconstruction for an empty cell") {
+    val (glyphs, bbox) = layOut("x y z w")
+    assert(graft.textkit.Predicates.isSpacedText(
+      graft.textkit.SpacingRepair.reconstructFromChars(glyphs)))
+    val (out, n) = SpacingFix.fillCellsFromGlyphs(tableOf(cell(0, "", Some(bbox))), Map(1 -> glyphs))
+    assert(n == 0)
+    assert(cellTexts(out) == Seq(""))
+  }
+
+  test("fillCellsFromGlyphs leaves a cell with no bbox and a page with no glyphs untouched") {
+    val (glyphs, bbox) = layOut("Total")
+    val (noBox, n1) = SpacingFix.fillCellsFromGlyphs(tableOf(cell(0, "", None)), Map(1 -> glyphs))
+    assert(n1 == 0)
+    assert(cellTexts(noBox) == Seq(""))
+    for (pageGlyphs <- Seq(Map(1 -> Seq.empty[Glyph]), Map(2 -> glyphs), Map.empty[Int, Seq[Glyph]])) {
+      val (out, n) = SpacingFix.fillCellsFromGlyphs(tableOf(cell(0, "", Some(bbox))), pageGlyphs)
+      assert(n == 0)
+      assert(cellTexts(out) == Seq(""))
+    }
+  }
+
+  test("fillCellsFromGlyphs returns the number of cells it filled, over every table") {
+    val (totalGlyphs, totalBox) = layOutAt("Total", 0)
+    val (suspectGlyphs, suspectBox) = layOutAt("EUR 6.961.310", 100)
+    val (validGlyphs, validBox) = layOutAt("RON 12.345", 200)
+    val first = tableOf(cell(0, "", Some(totalBox)), cell(1, "EUR .961.31", Some(suspectBox)),
+      cell(2, "RON 71.371", Some(validBox)), cell(3, "", None))
+    val second = first.items(0).copy(idx = 1)
+    val doc = first.copy(items = Array(first.items(0), second))
+    val (out, n) = SpacingFix.fillCellsFromGlyphs(doc,
+      Map(1 -> (totalGlyphs ++ suspectGlyphs ++ validGlyphs)))
+    assert(n == 4)
+    assert(cellTexts(out) ==
+      Seq("Total", "EUR 6.961.310", "RON 71.371", "", "Total", "EUR 6.961.310", "RON 71.371", ""))
+    // the input document is not changed
+    assert(cellTexts(doc) == Seq("", "EUR .961.31", "RON 71.371", "", "", "EUR .961.31", "RON 71.371", ""))
+  }
+
   test("addPictureKpiCaptions attaches KPI text, dedupes against doc text, caps at max") {
     val pic = DocItem(0, ItemKind.Picture, Label.Picture, ContentLayer.Body, 1,
       Some(Bbox(0, 0, 100, 100, Bbox.TopLeft)), "", None)
