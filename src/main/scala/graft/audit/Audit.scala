@@ -61,7 +61,7 @@ object Audit {
       tableCellsPdf = tableCellsPdf,
       headingCountPdf = headingCountPdf, headingCountMd = headingCountMd,
       pdfTextLength = pdfText.length, mdTextLength = markdown.length,
-      spacedTableCells = damage.spacedCells, totalTableCells = damage.totalCells,
+      spacedTableCells = damage.spacedTableCells, totalTableCells = damage.totalTableCells,
       spacedTextItems = damage.spacedTextItems, multiSpaceTextItems = damage.multiSpaceTextItems,
       totalTextItems = damage.totalTextItems)
   }

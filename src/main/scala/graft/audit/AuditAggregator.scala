@@ -16,15 +16,12 @@ object AuditAggregator {
   case class ItemSlice(isTable: Boolean, tocLike: Boolean,
                        cellTexts: Array[String], text: String)
 
-  case class Buf(
-      var spacedCells: Long, var totalCells: Long,
+  /** The counters, under [[AuditMetrics]]' names: the fold's buffer and
+    * the aggregator's result. */
+  case class DamageCounters(
+      var spacedTableCells: Long, var totalTableCells: Long,
       var spacedTextItems: Long, var multiSpaceTextItems: Long,
       var totalTextItems: Long, var tableCount: Long)
-
-  case class DamageCounters(
-      spacedTableCells: Long, totalTableCells: Long,
-      spacedTextItems: Long, multiSpaceTextItems: Long,
-      totalTextItems: Long, tableCount: Long)
 
   /** One item's audit inputs. A null text reads as "", so a null cell
     * counts as a cell but never as a spaced one. */
@@ -37,13 +34,13 @@ object AuditAggregator {
   }
 
   /** Adds one item's counts to `b`. */
-  def add(b: Buf, s: ItemSlice): Buf = {
+  def add(b: DamageCounters, s: ItemSlice): DamageCounters = {
     if (s.isTable) {
       b.tableCount += 1
       if (!s.tocLike) {
         for (text <- s.cellTexts) {
-          b.totalCells += 1
-          if (Predicates.isSpacedText(text)) b.spacedCells += 1
+          b.totalTableCells += 1
+          if (Predicates.isSpacedText(text)) b.spacedTableCells += 1
         }
       }
     } else if (s.text.nonEmpty) {
@@ -59,29 +56,27 @@ object AuditAggregator {
   }
 
   /** The doc-local fold of [[add]] over `items`. */
-  def damage(items: IterableOnce[DocItem]): Buf = {
-    val b = Buf(0, 0, 0, 0, 0, 0)
+  def damage(items: IterableOnce[DocItem]): DamageCounters = {
+    val b = DamageCounters(0, 0, 0, 0, 0, 0)
     items.iterator.foreach(item => add(b, fromItem(item)))
     b
   }
 
-  val agg: Aggregator[ItemSlice, Buf, DamageCounters] =
-    new Aggregator[ItemSlice, Buf, DamageCounters] {
-      def zero: Buf = Buf(0, 0, 0, 0, 0, 0)
+  val agg: Aggregator[ItemSlice, DamageCounters, DamageCounters] =
+    new Aggregator[ItemSlice, DamageCounters, DamageCounters] {
+      def zero: DamageCounters = DamageCounters(0, 0, 0, 0, 0, 0)
 
-      def reduce(b: Buf, s: ItemSlice): Buf = add(b, s)
+      def reduce(b: DamageCounters, s: ItemSlice): DamageCounters = add(b, s)
 
-      def merge(a: Buf, b: Buf): Buf = Buf(
-        a.spacedCells + b.spacedCells, a.totalCells + b.totalCells,
+      def merge(a: DamageCounters, b: DamageCounters): DamageCounters = DamageCounters(
+        a.spacedTableCells + b.spacedTableCells, a.totalTableCells + b.totalTableCells,
         a.spacedTextItems + b.spacedTextItems,
         a.multiSpaceTextItems + b.multiSpaceTextItems,
         a.totalTextItems + b.totalTextItems, a.tableCount + b.tableCount)
 
-      def finish(b: Buf): DamageCounters = DamageCounters(
-        b.spacedCells, b.totalCells, b.spacedTextItems,
-        b.multiSpaceTextItems, b.totalTextItems, b.tableCount)
+      def finish(b: DamageCounters): DamageCounters = b
 
-      def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-      def outputEncoder: Encoder[DamageCounters] = Encoders.product[DamageCounters]
+      def bufferEncoder: Encoder[DamageCounters] = Encoders.product[DamageCounters]
+      def outputEncoder: Encoder[DamageCounters] = bufferEncoder
     }
 }

@@ -14,46 +14,56 @@ import graft.textkit._
   */
 object DocTransforms {
 
-  /** `doc` with each table replaced by `f(table)`; a pass that changes
-    * nothing returns `doc` itself, and only changed items are copied. */
-  private def mapTables(doc: Doc)(f: TableData => TableData): Doc = {
-    var items: Array[DocItem] = null
+  /** The one copy-on-change walk of every item and cell rewrite: `xs` with
+    * each element replaced by `f(x)`. When `f` returns every element itself
+    * the result is `xs`; otherwise `xs` is copied once, at the first change. */
+  private def mapChanged[A <: AnyRef](xs: Array[A])(f: A => A): Array[A] = {
+    var out: Array[A] = null
     var k = 0
-    while (k < doc.items.length) {
-      val item = doc.items(k)
-      if (item.table.nonEmpty) {
-        val t = item.table.get
-        val nt = f(t)
-        if (nt ne t) {
-          if (items == null) items = doc.items.clone()
-          items(k) = item.copy(table = Some(nt))
-        }
+    while (k < xs.length) {
+      val x = xs(k)
+      val y = f(x)
+      if (y ne x) {
+        if (out == null) out = xs.clone()
+        out(k) = y
       }
       k += 1
     }
-    if (items == null) doc else doc.copy(items = items)
+    if (out == null) xs else out
   }
 
-  /** `t` with each cell for which `want` holds replaced by `f(cell.text)`
-    * where that differs; `onChange` runs once per changed cell. */
-  private def mapCellTexts(t: TableData, want: TableCell => Boolean, f: String => String)
-                          (onChange: => Unit): TableData = {
-    var cells: Array[TableCell] = null
-    var k = 0
-    while (k < t.cells.length) {
-      val cell = t.cells(k)
-      if (want(cell)) {
-        val text = f(cell.text)
-        if (text != cell.text) {
-          onChange
-          if (cells == null) cells = t.cells.clone()
-          cells(k) = cell.copy(text = text)
-        }
-      }
-      k += 1
-    }
-    if (cells == null) t else t.copy(cells = cells)
+  /** `doc` with each item replaced by `f(item)`; `doc` itself when no item
+    * changes. */
+  private[extract] def mapItems(doc: Doc)(f: DocItem => DocItem): Doc = {
+    val items = mapChanged(doc.items)(f)
+    if (items eq doc.items) doc else doc.copy(items = items)
   }
+
+  /** `doc` with each table replaced by `f(item, table)`. */
+  private[extract] def mapTables(doc: Doc)(f: (DocItem, TableData) => TableData): Doc =
+    mapItems(doc) { item =>
+      if (item.table.isEmpty) item
+      else {
+        val t = item.table.get
+        val nt = f(item, t)
+        if (nt eq t) item else item.copy(table = Some(nt))
+      }
+    }
+
+  /** `t` with each cell replaced by `f(cell)`; `t` itself when no cell
+    * changes. */
+  private[extract] def mapCells(t: TableData)(f: TableCell => TableCell): TableData = {
+    val cells = mapChanged(t.cells)(f)
+    if (cells eq t.cells) t else t.copy(cells = cells)
+  }
+
+  /** `t` with each cell's text replaced by `f(cell)` where that differs;
+    * `onChange` runs once per changed cell. */
+  private def mapCellTexts(t: TableData)(f: TableCell => String)(onChange: => Unit): TableData =
+    mapCells(t) { cell =>
+      val text = f(cell)
+      if (text == cell.text) cell else { onChange; cell.copy(text = text) }
+    }
 
   /** table_fixes.py:314-337 — header row must tile columns contiguously. */
   def headerColumnGroups(table: TableData): Option[List[(Int, Int)]] = {
@@ -156,7 +166,7 @@ object DocTransforms {
   /** table_fixes.py:415-421 */
   def collapseDocTableGroups(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val out = mapTables(doc) { t =>
+    val out = mapTables(doc) { (_, t) =>
       collapseTableHeaderGroups(t) match {
         case Some(newTable) => updated += 1; newTable
         case None => t
@@ -168,15 +178,19 @@ object DocTransforms {
   /** table_fixes.py:586-605 — header label normalization. */
   def normalizeDocTableHeaders(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val out = mapTables(doc)(
-      mapCellTexts(_, _.startRow == 0, CellClean.cleanHeaderText)(updated += 1))
+    val out = mapTables(doc) { (_, t) =>
+      mapCellTexts(t)(c => if (c.startRow == 0) CellClean.cleanHeaderText(c.text) else c.text)(
+        updated += 1)
+    }
     (out, updated)
   }
 
   /** table_fixes.py:608-618 — cell-clean chain over all cells. */
   def cleanDocTableCells(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val out = mapTables(doc)(mapCellTexts(_, _ => true, CellClean.cleanTableCellText)(updated += 1))
+    val out = mapTables(doc) { (_, t) =>
+      mapCellTexts(t)(c => CellClean.cleanTableCellText(c.text))(updated += 1)
+    }
     (out, updated)
   }
 
@@ -213,31 +227,19 @@ object DocTransforms {
       }
     }
     var updated = 0
-    var cells: Array[TableCell] = null
-    var k = 0
-    while (k < table.cells.length) {
-      val cell = table.cells(k)
-      if (voting(cell) && dominant(cell.startCol) != null) {
-        val desired = dominant(cell.startCol)
-        val cur = CellClean.firstCurrencyToken(cell.text)
-        if (cur != null && cur != desired) {
-          val newText = Py.sub(CellClean.CurrencyToken, desired, cell.text)
-          if (newText != cell.text) {
-            updated += 1
-            if (cells == null) cells = table.cells.clone()
-            cells(k) = cell.copy(text = newText)
-          }
-        }
-      }
-      k += 1
-    }
-    (if (cells == null) table else table.copy(cells = cells), updated)
+    val out = mapCellTexts(table) { cell =>
+      val desired = if (voting(cell)) dominant(cell.startCol) else null
+      val cur = if (desired == null) null else CellClean.firstCurrencyToken(cell.text)
+      if (cur == null || cur == desired) cell.text
+      else Py.sub(CellClean.CurrencyToken, desired, cell.text)
+    }(updated += 1)
+    (out, updated)
   }
 
   /** table_fixes.py:672-678 */
   def normalizeDocTableCurrencies(doc: Doc): (Doc, Int) = {
     var updated = 0
-    val out = mapTables(doc) { t =>
+    val out = mapTables(doc) { (_, t) =>
       val (nt, n) = normalizeTableCurrencyColumns(t)
       updated += n
       nt
@@ -263,20 +265,17 @@ object DocTransforms {
     * picture bboxes (>= InsidePictureRatio of the text bbox area). Shared
     * geometry core. One scan over the items finds the pictures with a bbox;
     * they are ordered by page (stably) and each box is put in top-left
-    * coordinates once, so a text item is tested against its page's
-    * pictures, found by a binary search, with no map of pages. */
+    * coordinates once ([[Doc.topLeft]]), so a text item is tested against
+    * its page's pictures, found by a binary search, with no map of pages. */
   private def removeTextInsidePictures(doc: Doc, predicate: String => Boolean): (Doc, Int) = {
     val items = doc.items
     val pictures = items.filter(i => i.kind == ItemKind.Picture && i.bbox.nonEmpty)
     if (pictures.isEmpty) return (doc, 0)
     val byPage = if (pictures.length == 1) pictures else pictures.sortBy(_.pageNo)
-    // picture j: its page and its top-left box at (4j .. 4j + 3)
     val picPage = byPage.map(_.pageNo)
-    val picBox = new Array[Double](4 * byPage.length)
-    for (j <- byPage.indices) topLeft(doc, picPage(j), byPage(j).bbox.get, picBox, 4 * j)
+    val picBox = byPage.map(p => doc.topLeft(p.pageNo, p.bbox.get))
 
     var toDelete: scala.collection.mutable.Set[Int] = null
-    val tb = new Array[Double](4)
     for (item <- items) {
       // the geometry is tested before the text predicate: both must hold,
       // and most text items have no bbox or no picture on their page
@@ -285,11 +284,11 @@ object DocTransforms {
         var p = firstOnPage(picPage, item.pageNo)
         var hit = false
         if (p < picPage.length && picPage(p) == item.pageNo) {
-          topLeft(doc, item.pageNo, item.bbox.get, tb, 0)
+          val tb = doc.topLeft(item.pageNo, item.bbox.get)
           while (!hit && p < picPage.length && picPage(p) == item.pageNo) {
-            val q = 4 * p
-            hit = KpiAxis.overlapRatio(tb(0), tb(1), tb(2), tb(3),
-              picBox(q), picBox(q + 1), picBox(q + 2), picBox(q + 3)) >= InsidePictureRatio
+            val pb = picBox(p)
+            hit = KpiAxis.overlapRatio(tb.l, tb.t, tb.r, tb.b, pb.l, pb.t, pb.r, pb.b) >=
+              InsidePictureRatio
             p += 1
           }
         }
@@ -314,20 +313,6 @@ object DocTransforms {
     lo
   }
 
-  /** Writes `b` in top-left coordinates (`Bbox.toTopLeft` with the height of
-    * page `pageNo`, the last one listed, or `b` as it is when the page is
-    * not listed) into out(at .. at + 3). */
-  private def topLeft(doc: Doc, pageNo: Int, b: Bbox, out: Array[Double], at: Int): Unit = {
-    var k = doc.pages.length - 1
-    while (k >= 0 && doc.pages(k).pageNo != pageNo) k -= 1
-    if (k < 0 || b.origin == Bbox.TopLeft) {
-      out(at) = b.l; out(at + 1) = b.t; out(at + 2) = b.r; out(at + 3) = b.b
-    } else {
-      val h = doc.pages(k).height
-      out(at) = b.l; out(at + 1) = h - b.t; out(at + 2) = b.r; out(at + 3) = h - b.b
-    }
-  }
-
   def removeDateOnlyTextInsidePictures(doc: Doc): (Doc, Int) =
     removeTextInsidePictures(doc, KpiAxis.dateOnly)
 
@@ -338,73 +323,61 @@ object DocTransforms {
 
   /** whitespace_fix.py:23-38 */
   def normalizeDocTextWhitespace(doc: Doc): (Doc, Int) = {
-    var items: Array[DocItem] = null // copied at the first change
     var updated = 0
-    var k = 0
-    while (k < doc.items.length) {
-      val item = doc.items(k)
-      if (item.kind != ItemKind.Table && item.kind != ItemKind.Picture &&
-          item.text != null && item.text.nonEmpty) {
+    val out = mapItems(doc) { item =>
+      if (item.kind == ItemKind.Table || item.kind == ItemKind.Picture ||
+          item.text == null || item.text.isEmpty) item
+      else {
         var normalized = Whitespace.normalizeTextWhitespace(item.text)
         normalized = TextNormalize.normalizeMojibakeText(normalized)
         normalized = TextNormalize.normalizeLigatures(normalized)
-        if (normalized != item.text) {
-          updated += 1
-          if (items == null) items = doc.items.clone()
-          items(k) = item.copy(text = normalized)
-        }
+        if (normalized == item.text) item else { updated += 1; item.copy(text = normalized) }
       }
-      k += 1
     }
-    (if (items == null) doc else doc.copy(items = items), updated)
+    (out, updated)
   }
 
   /** Greedy first-unused table pairing by (page, shape), then keyed cell merge.
     * table_fixes.py:695-782 (suspect variant) and :785-884 (spaced variant).
     * Order-sensitive: implemented as a doc-local fold over item order. */
   def mergeTableCellsWithOcr(base: Doc, ocr: Doc, spacedMode: Boolean): (Doc, Int) = {
-    val baseTables = base.items.zipWithIndex.collect {
-      case (i, pos) if i.table.nonEmpty => (pos, i)
-    }
     val ocrTables = ocr.items.filter(_.table.nonEmpty)
     val ocrByPage = ocrTables.groupBy(_.pageNo)
 
     var replaced = 0
-    val newItems = base.items.clone()
+    def wanted(cell: TableCell): Boolean =
+      if (spacedMode) Predicates.isSpacedText(cell.text)
+      else cell.text != null && cell.text.nonEmpty
+    def take(cell: TableCell, text: String): TableCell = { replaced += 1; cell.copy(text = text) }
 
-    // phase 1: shape-matched tables, keyed cell join
-    for ((pageNo, basePage) <- baseTables.groupBy(_._2.pageNo).toSeq.sortBy(_._1)) {
-      val ocrPage = ocrByPage.getOrElse(pageNo, Array.empty[DocItem])
-      if (ocrPage.nonEmpty) {
-        val used = scala.collection.mutable.Set.empty[Int]
-        for ((pos, baseItem) <- basePage) {
-          val bt = newItems(pos).table.get
-          val matchIdx = ocrPage.indices.find { idx =>
-            !used.contains(idx) &&
-              bt.numRows == ocrPage(idx).table.get.numRows &&
-              bt.numCols == ocrPage(idx).table.get.numCols
-          }
-          matchIdx.foreach { idx =>
-            used += idx
-            val ocrCells = ocrPage(idx).table.get.cells
-              .map(c => (c.startRow, c.endRow, c.startCol, c.endCol) -> c.text).toMap
-            val cells = bt.cells.map { cell =>
-              val want =
-                if (spacedMode) Predicates.isSpacedText(cell.text)
-                else cell.text != null && cell.text.nonEmpty
-              if (!want) cell
-              else ocrCells.get((cell.startRow, cell.endRow, cell.startCol, cell.endCol)) match {
-                case Some(ocrText) if ocrText != null && ocrText.nonEmpty =>
-                  val accept =
-                    if (spacedMode) !Predicates.isSpacedText(ocrText)
-                    else CellClean.shouldReplaceNumericCell(cell.text, ocrText)
-                  if (accept) { replaced += 1; cell.copy(text = ocrText) } else cell
-                case _ => cell
-              }
+    // phase 1: shape-matched tables, keyed cell join. Each base table, in
+    // item order, pairs with the first unused OCR table of its page that
+    // has its shape; pages pair independently.
+    val usedByPage = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Set[Int]]
+    val keyed = mapTables(base) { (item, bt) =>
+      val ocrPage = ocrByPage.getOrElse(item.pageNo, Array.empty[DocItem])
+      val used = usedByPage.getOrElseUpdate(item.pageNo, scala.collection.mutable.Set.empty[Int])
+      ocrPage.indices.find { idx =>
+        !used.contains(idx) &&
+          bt.numRows == ocrPage(idx).table.get.numRows &&
+          bt.numCols == ocrPage(idx).table.get.numCols
+      } match {
+        case None => bt
+        case Some(idx) =>
+          used += idx
+          val ocrCells = ocrPage(idx).table.get.cells
+            .map(c => (c.startRow, c.endRow, c.startCol, c.endCol) -> c.text).toMap
+          mapCells(bt) { cell =>
+            if (!wanted(cell)) cell
+            else ocrCells.get((cell.startRow, cell.endRow, cell.startCol, cell.endCol)) match {
+              case Some(ocrText) if ocrText != null && ocrText.nonEmpty =>
+                val accept =
+                  if (spacedMode) !Predicates.isSpacedText(ocrText)
+                  else CellClean.shouldReplaceNumericCell(cell.text, ocrText)
+                if (accept) take(cell, ocrText) else cell
+              case _ => cell
             }
-            newItems(pos) = newItems(pos).copy(table = Some(bt.copy(cells = cells)))
           }
-        }
       }
     }
 
@@ -413,54 +386,47 @@ object DocTransforms {
     // spaced flag is precomputed once — the reference recomputes it inside
     // the O(baseCells x ocrCells) loop (table_fixes.py:761)
     val ocrCellsByPage: Map[Int, Array[(Bbox, String, Boolean)]] =
-      ocrTables.groupBy(_.pageNo).map { case (p, items) =>
+      ocrByPage.map { case (p, items) =>
         p -> items.flatMap(_.table.get.cells.flatMap(c => c.bbox.map(b =>
           (b, c.text, c.text != null && c.text.nonEmpty && Predicates.isSpacedText(c.text)))))
       }
-    for ((pos, _) <- baseTables) {
-      val item = newItems(pos)
+    val merged = mapTables(keyed) { (item, bt) =>
       val ocrCells = ocrCellsByPage.getOrElse(item.pageNo, Array.empty)
-      if (ocrCells.nonEmpty) {
-        val bt = item.table.get
-        val cells = bt.cells.map { cell =>
-          val want =
-            if (spacedMode) Predicates.isSpacedText(cell.text)
-            else cell.text != null && cell.text.nonEmpty
-          if (!want || cell.bbox.isEmpty) cell
+      if (ocrCells.isEmpty) bt
+      else mapCells(bt) { cell =>
+        if (!wanted(cell) || cell.bbox.isEmpty) cell
+        else {
+          val bb = cell.bbox.get
+          val baseArea = bb.area
+          if (baseArea <= 0) cell
           else {
-            val bb = cell.bbox.get
-            val baseArea = bb.area
-            if (baseArea <= 0) cell
-            else {
-              var bestText = ""
-              var bestScore = 0.0
-              for ((ob, otext, ospaced) <- ocrCells) {
-                if (otext != null && otext.nonEmpty && !ospaced) {
-                  val inter = KpiAxis.bboxIntersectionArea(bb.l, bb.t, bb.r, bb.b, ob.l, ob.t, ob.r, ob.b)
-                  if (inter > 0) {
-                    val ocrArea = ob.area
-                    if (ocrArea > 0) {
-                      val baseCover = inter / baseArea
-                      val ocrCover = inter / ocrArea
-                      if (baseCover >= 0.5 && ocrCover >= 0.15) {
-                        val score = baseCover * 0.7 + ocrCover * 0.3
-                        if (score > bestScore) { bestScore = score; bestText = otext }
-                      }
+            var bestText = ""
+            var bestScore = 0.0
+            for ((ob, otext, ospaced) <- ocrCells) {
+              if (otext != null && otext.nonEmpty && !ospaced) {
+                val inter = KpiAxis.bboxIntersectionArea(bb.l, bb.t, bb.r, bb.b, ob.l, ob.t, ob.r, ob.b)
+                if (inter > 0) {
+                  val ocrArea = ob.area
+                  if (ocrArea > 0) {
+                    val baseCover = inter / baseArea
+                    val ocrCover = inter / ocrArea
+                    if (baseCover >= 0.5 && ocrCover >= 0.15) {
+                      val score = baseCover * 0.7 + ocrCover * 0.3
+                      if (score > bestScore) { bestScore = score; bestText = otext }
                     }
                   }
                 }
               }
-              val accept = bestText.nonEmpty &&
-                (if (spacedMode) true else CellClean.shouldReplaceNumericCell(cell.text, bestText))
-              if (accept) { replaced += 1; cell.copy(text = bestText) } else cell
             }
+            val accept = bestText.nonEmpty &&
+              (if (spacedMode) true else CellClean.shouldReplaceNumericCell(cell.text, bestText))
+            if (accept) take(cell, bestText) else cell
           }
         }
-        newItems(pos) = item.copy(table = Some(bt.copy(cells = cells)))
       }
     }
 
-    (base.copy(items = newItems), replaced)
+    (merged, replaced)
   }
 
   /** Full reference pass order (conversion_utils.py:490-499). Returns the

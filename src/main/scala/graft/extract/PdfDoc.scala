@@ -573,6 +573,19 @@ object PdfDoc {
       m.toMap
     }
 
+    /** The dictionary after each `trailer` keyword in the file, in file
+      * order (a keyword followed by anything else is skipped). */
+    private lazy val trailers: Seq[Map[String, P]] = {
+      val tRe = java.util.regex.Pattern.compile("trailer").matcher(s)
+      val out = Seq.newBuilder[Map[String, P]]
+      while (tRe.find()) {
+        val p = new ObjParser(s, tRe.end())
+        try p.value() match { case PDict(mm) => out += mm; case _ => }
+        catch { case _: Exception => }
+      }
+      out.result()
+    }
+
     /** Locate /Encrypt (classic trailer dicts + xref-stream dicts) and the
       * first /ID string, and build the stream decryptor for the empty-user-
       * password case. Locked or unsupported handlers leave encryptedLocked
@@ -590,12 +603,7 @@ object PdfDoc {
           case _ =>
         }
       }
-      val tRe = java.util.regex.Pattern.compile("trailer").matcher(s)
-      while (tRe.find()) {
-        val p = new ObjParser(s, tRe.end())
-        try p.value() match { case PDict(mm) => takeFrom(mm); case _ => }
-        catch { case _: Exception => }
-      }
+      trailers.foreach(takeFrom)
       m.values.foreach {
         case PStream(d, _) if d.v.get("Type").contains(PName("XRef")) =>
           takeFrom(d.v)
@@ -848,25 +856,16 @@ object PdfDoc {
 
     /** Pages in tree order with inherited Resources/MediaBox. */
     private def treePages: Seq[Page] = {
-      val trailerRoot: Option[P] = {
-        val tRe = java.util.regex.Pattern.compile("trailer").matcher(s)
-        var root: Option[P] = None
-        while (tRe.find()) {
-          val p = new ObjParser(s, tRe.end())
-          try p.value() match {
-            case PDict(m) => m.get("Root").foreach(r => root = Some(r))
-            case _ =>
-          } catch { case _: Exception => }
-        }
-        // xref-stream-only files carry /Root in the stream dict, not a
-        // classic trailer; the bare Catalog scan stays as the last resort
-        root.orElse(objects.values.collectFirst {
+      // the last classic trailer with a /Root wins; xref-stream-only files
+      // carry /Root in the stream dict, not a classic trailer; the bare
+      // Catalog scan stays as the last resort
+      val trailerRoot: Option[P] = trailers.reverseIterator.flatMap(_.get("Root")).nextOption()
+        .orElse(objects.values.collectFirst {
           case PStream(d, _) if d.v.get("Type").contains(PName("XRef")) &&
             d.v.contains("Root") => d.v("Root")
         }).orElse(objects.collectFirst {
           case (n, PDict(m)) if m.get("Type").contains(PName("Catalog")) => PRef(n)
         })
-      }
       val out = mutable.ArrayBuffer.empty[Page]
       val seen = mutable.HashSet.empty[Int]
       def walk(node: P, inhRes: Map[String, P], inhBox: Option[Vector[Double]]): Unit = {

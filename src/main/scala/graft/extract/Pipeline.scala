@@ -129,7 +129,7 @@ object Pipeline {
     * acceptance rule. The audit's damage fold over the table items only. */
   private def spacedCellRatio(doc: Doc): Double = {
     val d = graft.audit.AuditAggregator.damage(doc.items.iterator.filter(_.table.nonEmpty))
-    if (d.totalCells > 0) d.spacedCells.toDouble / d.totalCells else 0.0
+    if (d.totalTableCells > 0) d.spacedTableCells.toDouble / d.totalTableCells else 0.0
   }
 
   /** Parse + transform + render one document. Pure; called per row inside

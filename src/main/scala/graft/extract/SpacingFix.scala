@@ -76,60 +76,54 @@ object SpacingFix {
     if (pagesToFix.exists(_.isEmpty)) return (doc, Report(0, 0, 0))
     var tableReplaced = 0
     var textReplaced = 0
-    val pageHeights = doc.pageHeights
 
     def pageWanted(p: Int): Boolean = pagesToFix.forall(_.contains(p))
 
-    val items = doc.items.map { item =>
-      item.table match {
-        case Some(t) if pageWanted(item.pageNo) =>
-          pageGlyphs.get(item.pageNo) match {
-            case None => item
-            case Some(glyphs) =>
-              val cells = t.cells.map { cell =>
-                if (cell.bbox.isEmpty || !SpacingRepair.needsTableCellRepair(cell.text)) cell
-                else {
-                  val bb = pageHeights.get(item.pageNo)
-                    .map(cell.bbox.get.toTopLeft).getOrElse(cell.bbox.get)
-                  var reconstructed = reconstruct(glyphs, bb, Pad)
-                  if (reconstructed.nonEmpty)
-                    reconstructed = expandSuffix(glyphs, bb, reconstructed)
-                  if (reconstructed.nonEmpty &&
-                      SpacingRepair.shouldReplaceText(cell.text, reconstructed, tableMode = true)) {
-                    tableReplaced += 1
-                    cell.copy(text = reconstructed)
-                  } else if (SpacingRepair.needsSuffixCompletion(cell.text)) {
-                    val widened = expandSuffix(glyphs, bb, cell.text)
-                    if (widened != cell.text &&
-                        SpacingRepair.shouldReplaceText(cell.text, widened, tableMode = true)) {
-                      tableReplaced += 1
-                      cell.copy(text = widened)
-                    } else cell
-                  } else cell
-                }
-              }
-              item.copy(table = Some(t.copy(cells = cells)))
+    val tablesFixed = DocTransforms.mapTables(doc) { (item, t) =>
+      if (!pageWanted(item.pageNo)) t
+      else pageGlyphs.get(item.pageNo) match {
+        case None => t
+        case Some(glyphs) => DocTransforms.mapCells(t) { cell =>
+          if (cell.bbox.isEmpty || !SpacingRepair.needsTableCellRepair(cell.text)) cell
+          else {
+            val bb = doc.topLeft(item.pageNo, cell.bbox.get)
+            var reconstructed = reconstruct(glyphs, bb, Pad)
+            if (reconstructed.nonEmpty)
+              reconstructed = expandSuffix(glyphs, bb, reconstructed)
+            if (reconstructed.nonEmpty &&
+                SpacingRepair.shouldReplaceText(cell.text, reconstructed, tableMode = true)) {
+              tableReplaced += 1
+              cell.copy(text = reconstructed)
+            } else if (SpacingRepair.needsSuffixCompletion(cell.text)) {
+              val widened = expandSuffix(glyphs, bb, cell.text)
+              if (widened != cell.text &&
+                  SpacingRepair.shouldReplaceText(cell.text, widened, tableMode = true)) {
+                tableReplaced += 1
+                cell.copy(text = widened)
+              } else cell
+            } else cell
           }
-        case None if item.kind == ItemKind.Text && item.text != null &&
-            item.text.nonEmpty && Predicates.needsSpacingFix(item.text) &&
-            pageWanted(item.pageNo) && item.bbox.nonEmpty =>
-          pageGlyphs.get(item.pageNo) match {
-            case None => item
-            case Some(glyphs) =>
-              val bb = pageHeights.get(item.pageNo)
-                .map(item.bbox.get.toTopLeft).getOrElse(item.bbox.get)
-              val reconstructed = reconstruct(glyphs, bb, Pad)
-              if (reconstructed.nonEmpty &&
-                  SpacingRepair.shouldReplaceText(item.text, reconstructed)) {
-                textReplaced += 1
-                item.copy(text = reconstructed)
-              } else item
-          }
-        case _ => item
+        }
       }
     }
+    val fixed = DocTransforms.mapItems(tablesFixed) { item =>
+      if (item.table.isEmpty && item.kind == ItemKind.Text && item.text != null &&
+          item.text.nonEmpty && Predicates.needsSpacingFix(item.text) &&
+          pageWanted(item.pageNo) && item.bbox.nonEmpty) {
+        pageGlyphs.get(item.pageNo) match {
+          case None => item
+          case Some(glyphs) =>
+            val reconstructed = reconstruct(glyphs, doc.topLeft(item.pageNo, item.bbox.get), Pad)
+            if (reconstructed.nonEmpty &&
+                SpacingRepair.shouldReplaceText(item.text, reconstructed)) {
+              textReplaced += 1
+              item.copy(text = reconstructed)
+            } else item
+        }
+      } else item
+    }
     val pagesProcessed = pagesToFix.map(_.size).getOrElse(0)
-    (doc.copy(items = items), Report(tableReplaced, textReplaced, pagesProcessed))
+    (fixed, Report(tableReplaced, textReplaced, pagesProcessed))
   }
 
   /** Text-layer cell restoration: the engine's counterpart of the
@@ -143,41 +137,36 @@ object SpacingFix {
     * table_fixes.py:548-583; non-spaced non-empty for empty cells). */
   def fillCellsFromGlyphs(doc: Doc, pageGlyphs: Map[Int, Seq[Glyph]]): (Doc, Int) = {
     var filled = 0
-    val pageHeights = doc.pageHeights
-    val items = doc.items.map { item =>
-      item.table match {
-        case Some(t) if pageGlyphs.get(item.pageNo).exists(_.nonEmpty) =>
-          val glyphs = pageGlyphs(item.pageNo)
-          val cells = t.cells.map { cell =>
-            if (cell.bbox.isEmpty) cell
-            else {
-              // every cell is a candidate, mirroring merge_suspect_table_cells
-              // (table_fixes.py:695-743 tries ALL non-empty cells, gated only
-              // by the _should_replace_numeric_cell acceptance); empty cells
-              // additionally restore from the layer when the region holds
-              // real non-spaced text the first parse dropped
-              val base = Option(cell.text).getOrElse("")
-              val empty = base.trim.isEmpty
-              val bb = pageHeights.get(item.pageNo)
-                .map(cell.bbox.get.toTopLeft).getOrElse(cell.bbox.get)
-              var rec = reconstruct(glyphs, bb, Pad)
-              // detector bboxes can undershoot a lone glyph (a "-" dash sits
-              // a point or two outside): for EMPTY cells only, retry with a
-              // wider clip before giving up
-              if (empty && rec.isEmpty) rec = reconstruct(glyphs, bb, Pad * 3)
-              val accept =
-                if (empty)
-                  rec.nonEmpty && rec.length <= 80 && !Predicates.isSpacedText(rec)
-                else rec.nonEmpty && rec != base &&
-                  CellClean.shouldReplaceNumericCell(base, rec)
-              if (accept) { filled += 1; cell.copy(text = rec) } else cell
-            }
+    val out = DocTransforms.mapTables(doc) { (item, t) =>
+      pageGlyphs.get(item.pageNo) match {
+        case Some(glyphs) if glyphs.nonEmpty => DocTransforms.mapCells(t) { cell =>
+          if (cell.bbox.isEmpty) cell
+          else {
+            // every cell is a candidate, mirroring merge_suspect_table_cells
+            // (table_fixes.py:695-743 tries ALL non-empty cells, gated only
+            // by the _should_replace_numeric_cell acceptance); empty cells
+            // additionally restore from the layer when the region holds
+            // real non-spaced text the first parse dropped
+            val base = Option(cell.text).getOrElse("")
+            val empty = base.trim.isEmpty
+            val bb = doc.topLeft(item.pageNo, cell.bbox.get)
+            var rec = reconstruct(glyphs, bb, Pad)
+            // detector bboxes can undershoot a lone glyph (a "-" dash sits
+            // a point or two outside): for EMPTY cells only, retry with a
+            // wider clip before giving up
+            if (empty && rec.isEmpty) rec = reconstruct(glyphs, bb, Pad * 3)
+            val accept =
+              if (empty)
+                rec.nonEmpty && rec.length <= 80 && !Predicates.isSpacedText(rec)
+              else rec.nonEmpty && rec != base &&
+                CellClean.shouldReplaceNumericCell(base, rec)
+            if (accept) { filled += 1; cell.copy(text = rec) } else cell
           }
-          item.copy(table = Some(t.copy(cells = cells)))
-        case _ => item
+        }
+        case _ => t
       }
     }
-    (doc.copy(items = items), filled)
+    (out, filled)
   }
 
   /** picture_kpi_extract.py:196-250 — attach KPI-like picture text as

@@ -102,6 +102,14 @@ case class PageDim(pageNo: Int, width: Double, height: Double)
 /** One document: the unit of processing. `url` is the primary key. */
 case class Doc(url: String, items: Array[DocItem], pages: Array[PageDim]) {
   def pageHeights: Map[Int, Double] = pages.map(p => p.pageNo -> p.height).toMap
+
+  /** `b` in top-left coordinates of page `pageNo` (the last one listed), or
+    * `b` itself when that page is not listed. */
+  def topLeft(pageNo: Int, b: Bbox): Bbox = {
+    var k = pages.length - 1
+    while (k >= 0 && pages(k).pageNo != pageNo) k -= 1
+    if (k < 0) b else b.toTopLeft(pages(k).height)
+  }
 }
 
 /** Per-document audit metrics (audit_utils.py:20-36). */

@@ -40,12 +40,7 @@ object EventStream {
     * would grow forever on a continuous feed. */
   def dedupStream(spark: SparkSession, sourceDir: String,
                   sinkTable: String): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    val events = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(sourceDir)
-    events
+    FileStream.parquet(spark, sourceDir, maxFilesPerTrigger = 4)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("event_id")
@@ -61,11 +56,7 @@ object EventStream {
   /** Streaming form over a file source; returns the started query writing to
     * an in-memory table named `sinkTable`. */
   def stream(spark: SparkSession, sourceDir: String, sinkTable: String): StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    val events = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(sourceDir)
+    val events = FileStream.parquet(spark, sourceDir, maxFilesPerTrigger = 4)
     windowedCounts(events.withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "2 hours"))
       .writeStream

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Gap-based sessionization — the custom-state streaming operator the
   * north-star's streaming bullet names (`KeyValueGroupedDataset
@@ -110,25 +110,15 @@ object Sessionize {
   def stream(spark: SparkSession, sourceDir: String, outDir: String,
              checkpointDir: String, gapMinutes: Int): StreamingQuery = {
     import spark.implicits._
-    val schema = spark.read.parquet(sourceDir).schema
     val gapUs = gapMinutes * 60000000L
-    val sessions: Dataset[Session] = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(sourceDir)
+    val sessions: Dataset[Session] = FileStream.parquet(spark, sourceDir, maxFilesPerTrigger = 1)
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("value"))
       .withWatermark("ts", "10 minutes")
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         fold(gapUs))
-    sessions.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Session], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    FileStream.drain(sessions, checkpointDir, outDir)((batch, dir) =>
+      batch.write.mode("overwrite").parquet(dir))
   }
 }

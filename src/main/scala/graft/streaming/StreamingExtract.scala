@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous extraction: the SAME per-row conversion flow the batch
   * pipeline runs, over a streaming file source of arriving page files —
@@ -23,16 +23,9 @@ object StreamingExtract {
     * test shape; a production deployment uses a processing-time trigger. */
   def stream(spark: SparkSession, sourceDir: String, outDir: String,
              checkpointDir: String, numBuckets: Int = 16): StreamingQuery =
-    spark.readStream
-      .schema(spark.read.parquet(sourceDir).schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.extract.Pipeline.extractAndCommit(spark, batch, s"$outDir/batch=$batchId", numBuckets)
-        ()
-      }
-      .start()
+    FileStream.drain(FileStream.parquet(spark, sourceDir, maxFilesPerTrigger = 2),
+        checkpointDir, outDir) { (batch, dir) =>
+      graft.extract.Pipeline.extractAndCommit(spark, batch, dir, numBuckets)
+      ()
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.ops.Ops
 
 /** Streaming MinHash-LSH candidate pairs — the incremental twin of the
@@ -67,11 +67,7 @@ object StreamingLsh {
              checkpointDir: String,
              maxBucketSize: Int = DefaultMaxBucketSize): StreamingQuery = {
     import spark.implicits._
-    val schema = spark.read.parquet(sourceDir).schema
-    val pairs: Dataset[CandidatePair] = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(sourceDir)
+    val pairs: Dataset[CandidatePair] = FileStream.parquet(spark, sourceDir, maxFilesPerTrigger = 1)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
@@ -81,13 +77,7 @@ object StreamingLsh {
       .groupByKey(_.band_key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         fold(maxBucketSize))
-    pairs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[CandidatePair], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    FileStream.drain(pairs, checkpointDir, outDir)((batch, dir) =>
+      batch.write.mode("overwrite").parquet(dir))
   }
 }

@@ -10,8 +10,12 @@ import Py._
   * must be bit-exact.
   */
 object Predicates {
-  private val SpacedText = re("(?:\\b\\w\\b\\s+){1,}\\b\\w\\b")
-  private val SpacedDigit = re("(?:\\b\\d\\b\\s+){3,}\\b\\d\\b")
+  // SpacedText, SpacedDigit and ShortAlphaSeq: the reference's greedy token
+  // runs as possessive loops that take a token only when another follows.
+  // They match the same spans, and java.util.regex runs them without the
+  // per-token recursion that overflows the stack on long one-char runs
+  private[textkit] val SpacedText = re("(?:\\b\\w\\b\\s+(?=\\w\\b))++\\b\\w\\b")
+  private[textkit] val SpacedDigit = re("(?:\\b\\d\\b\\s+(?=\\d\\b)){3,}+\\b\\d\\b")
   private val SplitWord = re("\\b(\\w{2,})\\s+(\\w)\\s+(\\w{2,})\\b")
   private val SpacedNumber = re("\\d[.,/]\\s+\\d|\\d\\s+[.,/]\\s*\\d")
   private[textkit] val RunonLetters = re("(?:[^\\W\\d_]{20,})")
@@ -19,7 +23,8 @@ object Predicates {
   private val MultiSpace = re("(?<=\\S)[ \\t]{2,}(?=\\S)")
   private val CommonSingleLetterWords = Set("a", "A", "I", "i", "o", "O")
   private[textkit] val LetterChars = "A-Za-zĂÂÎȘȚăâîșț"
-  private val ShortAlphaSeq = re(s"(?:\\b[$LetterChars]{1,2}\\b\\s+){2,}\\b[$LetterChars]{1,2}\\b")
+  private[textkit] val ShortAlphaSeq =
+    re(s"(?:\\b[$LetterChars]{1,2}\\b\\s+(?=[$LetterChars]{1,2}\\b)){2,}+\\b[$LetterChars]{1,2}\\b")
   private val TrailingSingleAlpha = re(s"\\b[$LetterChars]{2,}\\s+[$LetterChars]{1}\\b")
   private val SoldSuffix = reI("\\bSOLD\\s+[CD]\\b")
   private[textkit] val WordToken = re("\\w+")
