@@ -104,6 +104,10 @@ class PdfCryptSpec extends AnyFunSuite {
     // the first trailer holds neither entry, the second holds both
     val earlier = pdf.substring(0, t) + bare + "\n" + pdf.substring(t)
     assert(textOf(earlier.getBytes(ISO_8859_1)) == "SECRET")
+    // a later trailer with another /ID: the first /ID keys the file
+    val otherId = hex((101 to 116).map(_.toByte).toArray)
+    val reId = pdf + s"trailer\n<< /Size 7 /Root 1 0 R /Encrypt 6 0 R /ID [ <$otherId> <$otherId> ] >>\n%%EOF\n"
+    assert(textOf(reId.getBytes(ISO_8859_1)) == "SECRET")
   }
 
   test("RC4 with a REAL user password degrades to no text, never throws") {

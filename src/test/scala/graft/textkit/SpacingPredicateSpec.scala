@@ -61,8 +61,8 @@ class SpacingPredicateSpec extends AnyFunSuite {
     })
   }
 
-  /** Runs `body` on a thread with a 1 MiB stack and returns its result,
-    * rethrowing whatever it threw (a StackOverflowError included). */
+  /** Runs `body` on a thread with a 1 MiB stack and returns its result; a
+    * throw (a StackOverflowError included) fails the test. */
   private def onSmallStack[T](body: => T): T = {
     var result: Either[Throwable, T] = null
     val t = new Thread(null, () => {
@@ -70,7 +70,7 @@ class SpacingPredicateSpec extends AnyFunSuite {
     }, "small-stack", 1L << 20)
     t.start()
     t.join()
-    result.fold(e => throw e, identity)
+    result.fold(e => fail(s"threw $e", e), identity)
   }
 
   test("the spacing predicates return on long one-token runs with a 1 MiB stack") {
